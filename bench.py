@@ -5,10 +5,10 @@ minimal JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 
 Each query is materialized with a noop-format write (full execution, no
 driver collect overhead, no disk write skew). A tiny warmup action runs
-first so JVM/codegen startup isn't billed to the first query; the dedup
-family's shared signature cache is also materialized in warmup (its
-~seconds-scale cold build used to be billed to whichever family member
-ran first) and reported as its own line item in BENCH_LOCAL.json.
+first so JVM/codegen startup isn't billed to the first query; the
+session fixtures of ``registry.fixtures()`` are also built in warmup,
+each reported as its own ``warmup_<name>_sec`` line item in
+BENCH_LOCAL.json.
 
 Driver-parse contract (the round driver JSON-parses bench stdout):
 - The JSON line is the LAST, LONE line on stdout; all Spark logging and
@@ -113,113 +113,19 @@ def main() -> None:
     except Exception:  # noqa: BLE001
         traceback.print_exc(file=sys.stderr)
 
-    # Named warmup for the dedup family's shared signature cache: its
-    # cold build (shingle + minhash over the documents table, persisted
-    # once per session) was previously billed to whichever dedup-family
-    # query happened to run first (near_dup_clusters showed 4.04 s in
-    # r03 of which most was this). Build it here, report it separately.
-    from pyspark_unload_to_gcs_spark import registry_extensions
-
-    t0 = time.perf_counter()
-    try:
-        registry_extensions._shared_signatures(spark, sf_dir)
-    except Exception:  # noqa: BLE001 — cold cost falls to the first consumer
-        traceback.print_exc(file=sys.stderr)
-    warmup_shared_sig_sec = round(time.perf_counter() - t0, 3)
-
-    # Same treatment for the bucketed-layout tables: writing orders +
-    # customer as bucketed catalog tables is the one-time layout cost
-    # that every later co-located join amortizes (the whole point of
-    # bucketing); billed to the query it made bucketed_colocated_join
-    # read as ~2 s when the join itself is ~0.5 s.
-    from pyspark_unload_to_gcs_spark import registry_scale
-
-    t0 = time.perf_counter()
-    try:
-        registry_scale._bucketed_tables(spark, sf_dir)
-    except Exception:  # noqa: BLE001 — cold cost falls to the first consumer
-        traceback.print_exc(file=sys.stderr)
-    warmup_bucketed_layout_sec = round(time.perf_counter() - t0, 3)
-
-    # And for the exact >=0.8 pair frame (r=1 banding + binomial
-    # pre-filter, localCheckpointed once per session, shared by
-    # near_dedup_pairs_exact / near_dup_clusters_exact /
-    # dedup_keep_best_exact / near_dedup_minhash_recall): in the r05
-    # window order dedup_keep_best_exact runs first and was billed the
-    # ~2-3 s cold build that near_dedup_pairs_exact used to absorb.
-    t0 = time.perf_counter()
-    try:
-        registry_extensions._shared_exact_pairs(spark, sf_dir)
-    except Exception:  # noqa: BLE001 — cold cost falls to the first consumer
-        traceback.print_exc(file=sys.stderr)
-    warmup_exact_pairs_sec = round(time.perf_counter() - t0, 3)
-
-    # And for the PQ/IVF vector index: coarse-assign + PQ-encode the
-    # embedding corpus once (persisted per session) — the encode-once-
-    # query-many index build both PQ queries read (r07). Billing it to
-    # whichever of vector_topk_pq / vector_topk_ivfpq runs first hid
-    # ~6 s of one-time index cost inside a per-query number.
-    from pyspark_unload_to_gcs_spark import registry_staged
-
-    t0 = time.perf_counter()
-    try:
-        registry_staged._pq_shared(spark, sf_dir)
-    except Exception:  # noqa: BLE001 — cold cost falls to the first consumer
-        traceback.print_exc(file=sys.stderr)
-    warmup_pq_index_sec = round(time.perf_counter() - t0, 3)
-
-    # And for the INCREMENTAL index row (r10, cost split widened r14):
-    # quantizer derivation, the base on-disk index, AND the one-time
-    # bulk-backfill append + touched-cell compaction (same encode-once
-    # economics as _pq_shared — VERDICT r13 perf #1); the row itself
-    # times the steady-state lifecycle — single-vector append + serve.
-    t0 = time.perf_counter()
-    try:
-        registry_staged._pq_incr_base(spark, sf_dir)
-    except Exception:  # noqa: BLE001 — cold cost falls to the first consumer
-        traceback.print_exc(file=sys.stderr)
-    warmup_pq_incr_base_sec = round(time.perf_counter() - t0, 3)
-
-    # And for the shared 3-commit versioned-orders FIXTURE (r14): five
-    # registered rows (snapshot_at / change_feed / datasource_snapshot /
-    # stream_replay / cdf_merge_stream_replay) read the same memoized
-    # table; constructing it is ~3-5 s of commit_version writes that the
-    # loop's first versioned row used to absorb. In production the
-    # table EXISTS — the rows' work is snapshot resolution / CDF
-    # derivation / stream drain, which stays in the rows.
-    t0 = time.perf_counter()
-    try:
-        registry_staged._versioned_orders(spark, sf_dir)
-    except Exception:  # noqa: BLE001 — cold cost falls to the first consumer
-        traceback.print_exc(file=sys.stderr)
-    warmup_versioned_fixture_sec = round(time.perf_counter() - t0, 3)
-
-    # And for the frozen containment index (r14, promoted with
-    # containment_stream_replay): a live decontamination stream
-    # freezes the corpus gram structures ONCE and folds every batch
-    # against them — the ~20 s bootstrap is index-build economics
-    # (_pq_shared), not per-batch work; the replay row times the
-    # folds + commit-gated readback.
-    t0 = time.perf_counter()
-    try:
-        registry_staged._containment_frozen_index(spark, sf_dir)
-    except Exception:  # noqa: BLE001 — cold cost falls to the first consumer
-        traceback.print_exc(file=sys.stderr)
-    warmup_containment_index_sec = round(time.perf_counter() - t0, 3)
-
-    # And for the 3-commit Delta-log FIXTURE, but ONLY once its three
-    # rows are live (the r16 promotion plan, registry.py): same
-    # economics as the versioned-orders fixture — in production the
-    # table EXISTS; the rows' work is log replay / feed derivation.
-    # Gated on registration so the staged era bills nothing here.
-    warmup_delta_fixture_sec = 0.0
-    if "delta_time_travel_snapshot" in registry.queries():
+    # Named fixture warmups (registry.fixtures()): each session-shared
+    # index or table build is timed on its own and reported as
+    # warmup_<name>_sec, instead of being billed to whichever query
+    # first reads it. In production these structures exist before the
+    # queries run; the rows time the work done against them.
+    warmups: dict[str, float] = {}
+    for fixture, build in registry.fixtures():
         t0 = time.perf_counter()
         try:
-            registry_staged._delta_orders(spark, sf_dir)
+            build(spark, sf_dir)
         except Exception:  # noqa: BLE001 — cold cost falls to the first consumer
             traceback.print_exc(file=sys.stderr)
-        warmup_delta_fixture_sec = round(time.perf_counter() - t0, 3)
+        warmups[f"warmup_{fixture}_sec"] = round(time.perf_counter() - t0, 3)
 
     # Per-query noop floor (VERDICT r05 #8): every query pays a fixed
     # job-submission + noop-write cost regardless of its plan. Measured
@@ -352,28 +258,10 @@ def main() -> None:
         "production_total_sec": round(total - pins_total - replays_total, 3),
         "n_pin_queries": sum(1 for n in timings if _is_pin(n)),
         "n_replay_queries": sum(1 for n in timings if _is_replay(n)),
-        "warmup_shared_signatures_sec": warmup_shared_sig_sec,
-        "warmup_bucketed_layout_sec": warmup_bucketed_layout_sec,
-        "warmup_exact_pairs_sec": warmup_exact_pairs_sec,
-        "warmup_pq_index_sec": warmup_pq_index_sec,
-        "warmup_pq_incr_base_sec": warmup_pq_incr_base_sec,
-        "warmup_versioned_fixture_sec": warmup_versioned_fixture_sec,
-        "warmup_containment_index_sec": warmup_containment_index_sec,
-        "warmup_delta_fixture_sec": warmup_delta_fixture_sec,
+        **warmups,
         # one line the skeptical reader can check against the budget in
-        # BASELINE.md (warmup_total <= 50% of the counted total): the
-        # named one-time fixture/index builds, summed (VERDICT r14 #5)
-        "warmup_total_sec": round(
-            warmup_shared_sig_sec
-            + warmup_bucketed_layout_sec
-            + warmup_exact_pairs_sec
-            + warmup_pq_index_sec
-            + warmup_pq_incr_base_sec
-            + warmup_versioned_fixture_sec
-            + warmup_containment_index_sec
-            + warmup_delta_fixture_sec,
-            3,
-        ),
+        # BASELINE.md (warmup_total <= 50% of the counted total)
+        "warmup_total_sec": round(sum(warmups.values()), 3),
         "noop_floor_sec_per_query": noop_floor_sec,
         "noop_floor_end_sec_per_query": noop_floor_end_sec,
         "host_steal_pct": steal_pct,

@@ -13,31 +13,33 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from pyspark_unload_to_gcs_spark.timeutil import exclusive_start_ms
 
 
-def non_null_condition(columns: Sequence[str]) -> Column | None:
-    """AND-joined ``col IS NOT NULL AND col != ''`` over columns.
+def non_null_filter(df: DataFrame, columns: Sequence[str]) -> DataFrame:
+    """Drop rows where any listed column is NULL or empty-string (P4).
 
-    Parity with reference export.py:19-28 including the quirk that the
-    ``!= ''`` comparison is applied to every listed column regardless of
-    type (for non-string columns Spark casts ``''``, which yields NULL
-    and drops all rows — same behavior as the reference SQL). Callers
-    that want safe semantics for non-strings should list only string
-    columns, as the reference's users must.
+    Every listed column must be ``IS NOT NULL``; string-typed columns
+    (read from ``df.schema``) must also be ``!= ''``, as in reference
+    export.py:19-28. The reference compares every column with ``''``;
+    for a non-string column that casts the empty string, which fails
+    with CAST_INVALID_INPUT under ANSI mode (and, without ANSI, yields
+    NULL and drops every row), so such a column gets only the null
+    check. Empty column names are ignored.
     """
     cols = [c for c in columns if c]
     if not cols:
-        return None
-    conds = [F.col(c).isNotNull() & (F.col(c) != F.lit("")) for c in cols]
-    return reduce(and_, conds)
+        return df
+    types = {f.name.lower(): f.dataType for f in df.schema.fields}
 
+    def keep(c: str) -> Column:
+        dtype = types.get(c.lower()) or df.select(c).schema.fields[0].dataType
+        cond = F.col(c).isNotNull()
+        return cond & (F.col(c) != F.lit("")) if isinstance(dtype, StringType) else cond
 
-def non_null_filter(df: DataFrame, columns: Sequence[str]) -> DataFrame:
-    """Drop rows where any listed column is NULL or empty-string (P4)."""
-    cond = non_null_condition(columns)
-    return df if cond is None else df.filter(cond)
+    return df.filter(reduce(and_, map(keep, cols)))
 
 
 def time_window_filter(

@@ -155,17 +155,17 @@ def pagerank(
     (|V| up to ~9e7 at the default scale).
 
     Plan (100 TB posture): edges carry their out-degree (computed once,
-    one shuffle) and are repartitioned by src and persisted — every
-    iteration's rank join then reuses that partitioning. The rank
-    frame is |V| rows — orders of magnitude smaller than the edge list
-    on real graphs — so when |V| fits a broadcast
-    (``broadcast_node_limit``, known exactly after the one nodes
-    count), each iteration joins edges against BROADCAST ranks: one
-    shuffle per iteration (the groupBy(dst) in-flow sum, which also
-    absorbs one zero row per node so dangling nodes surface without a
-    second join or an in-flow broadcast — opt r15). Above the limit
-    the rank join degrades to a sort-merge join that reuses edged's
-    src partitioning. Ranks checkpoint only every ``checkpoint_interval``
+    one shuffle) and are ``localCheckpoint``ed once, with the node set,
+    since every iteration reads them. The rank frame is |V| rows —
+    orders of magnitude smaller than the edge list on real graphs — so
+    when |V| fits a broadcast (``broadcast_node_limit``, known exactly
+    after the one nodes count), each iteration joins the edges as they
+    are against BROADCAST ranks: one shuffle per iteration (the
+    groupBy(dst) in-flow sum, which also absorbs one zero row per node
+    so dangling nodes surface without a second join or an in-flow
+    broadcast). Only above the limit are the edges repartitioned by
+    src, once, so the sort-merge rank join of every iteration reuses
+    that partitioning. Ranks checkpoint only every ``checkpoint_interval``
     rounds: an eager barrier per round costs a blocking job each (~3x
     wall clock at 5 iterations measured), while the lineage of a
     handful of rounds is shallow enough to run as one composite plan —

@@ -42,29 +42,21 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-# Session-scoped fixture-table catalog (opt r16, guide §6/§7.3): every
-# _t call paid load_parquet's pyarrow footer probe + spark.read schema
-# inference fresh (~110 ms/call measured), and the suite makes ~270+
-# such calls — tens of seconds of pure per-query DRIVER overhead. The
-# memo returns the same immutable DataFrame handle per (session,
-# sf_dir, table) — exactly what a metastore/catalog provides at scale:
-# schema and file listing resolved once, every action still scans the
-# parquet. No data or results are cached (no persist; the plan is a
-# bare scan), and the key includes the session token so a new session
-# (new JVM, possibly changed fixtures) re-resolves from disk.
-_TABLE_MEMO: dict = {}
-
-
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from pyspark_unload_to_gcs_spark.session import session_token
+    """The fixture table ``name`` under ``sf_dir``, resolved once per
+    session: the same immutable DataFrame handle per (session, sf_dir,
+    table), as a metastore would hand out — schema and file listing
+    resolved once (load_parquet's footer probe and schema inference
+    cost ~110 ms per call), every action still scans the parquet. No
+    data is cached; a new session re-resolves from disk."""
+    from pyspark_unload_to_gcs_spark.session import session_memo
     from pyspark_unload_to_gcs_spark.sources.catalog import load_parquet
 
-    key = (session_token(spark), os.path.abspath(sf_dir), name)
-    df = _TABLE_MEMO.get(key)
-    if df is None:
-        df = load_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
-        _TABLE_MEMO[key] = df
-    return df
+    return session_memo(
+        spark,
+        ("table", os.path.abspath(sf_dir), name),
+        lambda: load_parquet(spark, os.path.join(sf_dir, f"{name}.parquet")),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -829,3 +821,25 @@ def queries() -> dict[str, QueryFn]:
 def oracle_sql() -> dict[str, str]:
     _load_extensions()
     return _reorder(dict(_ORACLES))
+
+
+def fixtures() -> list[tuple[str, Callable[[SparkSession, str], object]]]:
+    """The session fixtures registered rows share, in build order: each
+    ``(name, build)`` builds one index or table per session via
+    ``build(spark, sf_dir)``. Harnesses build them before timing queries,
+    so a fixture's one-time cost is not billed to whichever row first
+    reads it."""
+    from pyspark_unload_to_gcs_spark import registry_extensions as ext
+    from pyspark_unload_to_gcs_spark import registry_scale as scale
+    from pyspark_unload_to_gcs_spark import registry_staged as staged
+
+    return [
+        ("shared_signatures", ext._shared_signatures),
+        ("bucketed_layout", scale._bucketed_tables),
+        ("exact_pairs", ext._shared_exact_pairs),
+        ("pq_index", staged._pq_shared),
+        ("pq_incr_base", staged._pq_incr_base),
+        ("versioned_fixture", staged._versioned_orders),
+        ("containment_index", staged._containment_frozen_index),
+        ("delta_fixture", staged._delta_orders),
+    ]

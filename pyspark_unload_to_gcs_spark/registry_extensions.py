@@ -16,7 +16,7 @@ from pyspark_unload_to_gcs_spark.operators import dedup as D
 from pyspark_unload_to_gcs_spark.operators import similarity as S
 from pyspark_unload_to_gcs_spark.operators import text as T
 from pyspark_unload_to_gcs_spark.operators.dedup import ensure_parallelism
-from pyspark_unload_to_gcs_spark.session import session_token
+from pyspark_unload_to_gcs_spark.session import session_memo
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -26,26 +26,20 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ensure_parallelism(_t(spark, sf_dir, "documents"))
 
 
-_PAIRS_MEMO: dict[tuple, DataFrame] = {}
-_SIG_MEMO: dict[tuple, DataFrame] = {}
-_PAIRS_EXACT_MEMO: dict[tuple, DataFrame] = {}
-_FUZZY_SIG_MEMO: dict[tuple, DataFrame] = {}
-
-
 def _shared_fuzzy_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE side-tagged union signature frame per (session, sf_dir) for
     the fuzzy-join family (production b=8 query, r=1 exact query, and
     the r05 recall pin all re-band this instead of re-shingling the
     union per configuration — same sharing rationale as
     _shared_signatures)."""
-    key = (session_token(spark), sf_dir)
-    if key not in _FUZZY_SIG_MEMO:
+    def build():
         docs = _t(spark, sf_dir, "documents")
-        _FUZZY_SIG_MEMO[key] = D.fuzzy_union_signatures(
+        return D.fuzzy_union_signatures(
             docs.filter(F.col("doc_id") % 3 == 0),
             docs.filter(F.col("doc_id") % 3 != 0),
         )
-    return _FUZZY_SIG_MEMO[key]
+
+    return session_memo(spark, ("fuzzy_sig", sf_dir), build)
 
 
 def _shared_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -55,14 +49,14 @@ def _shared_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     16-band high-recall ngram dedup) — the shingling is ~all the cost.
     Persist+count here IS the materialization barrier the signature
     frame's contract requires."""
-    key = (session_token(spark), sf_dir)
-    if key not in _SIG_MEMO:
+    def build():
         sig = D.minhash_signatures(
             _t(spark, sf_dir, "documents"), "doc_id", "text"
         ).persist()
         sig.count()
-        _SIG_MEMO[key] = sig
-    return _SIG_MEMO[key]
+        return sig
+
+    return session_memo(spark, ("sig", sf_dir), build)
 
 
 def _shared_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -70,9 +64,8 @@ def _shared_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     + binomial-pre-filtered pair set shared by near_dedup_pairs_exact
     and near_dup_clusters_exact (same sharing rationale as
     _shared_minhash_pairs: share the OBJECT, not an equal plan)."""
-    key = (session_token(spark), sf_dir)
-    if key not in _PAIRS_EXACT_MEMO:
-        _PAIRS_EXACT_MEMO[key] = D.minhash_candidate_pairs(
+    def build():
+        return D.minhash_candidate_pairs(
             _t(spark, sf_dir, "documents"),
             "doc_id",
             "text",
@@ -82,7 +75,8 @@ def _shared_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             signatures=_shared_signatures(spark, sf_dir),
             min_matching_bands=12,
         ).localCheckpoint(eager=True)
-    return _PAIRS_EXACT_MEMO[key]
+
+    return session_memo(spark, ("pairs_exact", sf_dir), build)
 
 
 def _exact_pairs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -113,15 +107,15 @@ def _shared_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted signature frame, so reuse cannot depend on Spark's plan-
     canonicalization cache lookup (observed to miss across a long
     session, recomputing the 4x-cost signature pipeline)."""
-    key = (session_token(spark), sf_dir)
-    if key not in _PAIRS_MEMO:
-        _PAIRS_MEMO[key] = D.minhash_candidate_pairs(
+    def build():
+        return D.minhash_candidate_pairs(
             _t(spark, sf_dir, "documents"),
             "doc_id",
             "text",
             signatures=_shared_signatures(spark, sf_dir),
         )
-    return _PAIRS_MEMO[key]
+
+    return session_memo(spark, ("pairs", sf_dir), build)
 
 # ---------------------------------------------------------------------------
 # text analysis

@@ -23,7 +23,7 @@ from pyspark_unload_to_gcs_spark.operators import dedup as D
 from pyspark_unload_to_gcs_spark.operators import similarity as S
 from pyspark_unload_to_gcs_spark.operators import text as T
 from pyspark_unload_to_gcs_spark.registry import _t, register
-from pyspark_unload_to_gcs_spark.session import session_token
+from pyspark_unload_to_gcs_spark.session import session_memo
 from pyspark_unload_to_gcs_spark.registry_extensions import (
     _docs,
     _DOT,
@@ -323,9 +323,6 @@ def rolling_actives_approx_accuracy(spark: SparkSession, sf_dir: str) -> DataFra
 
 _STREAM_BUDGET = 12000  # same operating point as token_budget_select
 _N_BATCHES = 4
-# Eager-side-effect replay memo — see streaming/replay.py for why.
-_STREAM_REPLAY_MEMO: dict[tuple, DataFrame] = {}
-
 
 _STREAM_REPLAY_SQL = rf"""
 WITH RECURSIVE scored AS (
@@ -382,8 +379,8 @@ def token_budget_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % _N_BATCHES).cast("long").alias("batch_id"),
     )
     out = replay_batches(
-        _STREAM_REPLAY_MEMO,
-        (session_token(spark), sf_dir),
+        spark,
+        ("stream_replay", sf_dir),
         [scored.filter(F.col("batch_id") == b) for b in range(_N_BATCHES)],
         lambda frame, b, state: admit_batch(
             frame,
@@ -611,8 +608,6 @@ def near_dedup_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # under a driver row instead of local-test-only)
 # ---------------------------------------------------------------------------
 
-_EXPORT_ROUNDTRIP_MEMO: dict = {}
-
 _EXPORT_ROUNDTRIP_SQL = """
 SELECT c_custkey, c_name, c_mktsegment,
        md5(to_json(struct_pack(
@@ -646,8 +641,7 @@ def export_roundtrip_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_unload_to_gcs_spark.operators.hashing import content_hash
     from pyspark_unload_to_gcs_spark.sinks.writers import write_export
 
-    key = (session_token(spark), sf_dir)
-    if key not in _EXPORT_ROUNDTRIP_MEMO:
+    def build():
         df = non_null_filter(
             _t(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_mktsegment"),
             ["c_name", "c_mktsegment"],
@@ -664,7 +658,9 @@ def export_roundtrip_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 max_records_per_file=500,
             ),
         )
-        _EXPORT_ROUNDTRIP_MEMO[key] = out_dir
+        return out_dir
+
+    out_dir = session_memo(spark, ("export_roundtrip", sf_dir), build)
     return spark.read.schema(
         "c_custkey bigint, c_name string, c_mktsegment string, row_hash string"
-    ).json(f"file:{_EXPORT_ROUNDTRIP_MEMO[key]}")
+    ).json(f"file:{out_dir}")

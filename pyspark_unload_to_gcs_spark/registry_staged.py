@@ -32,7 +32,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark_unload_to_gcs_spark.session import session_token
+from pyspark_unload_to_gcs_spark.session import session_memo
 
 from pyspark_unload_to_gcs_spark.registry import _t, register
 
@@ -389,9 +389,6 @@ def dedup_keep_best_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # algebra) carries a driver value oracle. Scaffold + memo rationale:
 # streaming/replay.py.
 
-_MERGE_REPLAY_MEMO: dict = {}
-_ROLLUP_REPLAY_MEMO: dict = {}
-
 _MERGE_REPLAY_SQL = """
 SELECT o_orderkey, o_orderstatus,
        CASE WHEN o_orderkey % 3 = 0
@@ -474,8 +471,8 @@ def merge_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(change(upd2, INSERT, 20))
     )
     snap = replay_batches(
-        _MERGE_REPLAY_MEMO,
-        (session_token(spark), sf_dir),
+        spark,
+        ("merge_replay", sf_dir),
         (b0, b1, b2),
         lambda frame, i, state: merge_batch(
             frame,
@@ -520,8 +517,8 @@ def rollup_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", "value", (F.col("event_id") % 4).alias("__b")
     )
     final = replay_batches(
-        _ROLLUP_REPLAY_MEMO,
-        (session_token(spark), sf_dir),
+        spark,
+        ("rollup_replay", sf_dir),
         [ev.filter(F.col("__b") == b).drop("__b") for b in range(4)],
         lambda frame, b, state: fold_batch(
             frame,
@@ -539,8 +536,6 @@ def rollup_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Incremental sessionization replay (r07 staged cohort)
 # --------------------------------------------------------------------------
-
-_SESSION_REPLAY_MEMO: dict = {}
 
 _SESSION_REPLAY_SQL = """
 WITH ts AS (
@@ -598,16 +593,14 @@ def sessionize_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("ts") >= bound),
     ]
     return replay_batches(
-        _SESSION_REPLAY_MEMO,
-        (session_token(spark), sf_dir),
+        spark,
+        ("session_replay", sf_dir),
         batches,
         lambda frame, b, state: fold_batch(frame, b, state_path=state),
         lambda state: read_sessions(spark, state),
         prefix="sessionize_stream_replay_",
     )
 
-
-_RETENTION_REPLAY_MEMO: dict = {}
 
 _RETENTION_REPLAY_SQL = """
 WITH per AS (
@@ -645,8 +638,8 @@ def retention_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "ts", (F.col("event_id") % 4).alias("__b")
     )
     return replay_batches(
-        _RETENTION_REPLAY_MEMO,
-        (session_token(spark), sf_dir),
+        spark,
+        ("retention_replay", sf_dir),
         [ev.filter(F.col("__b") == b).drop("__b") for b in range(4)],
         lambda frame, b, state: fold_periods_batch(frame, b, state_path=state),
         lambda state: current_retention_matrix(spark, state),
@@ -694,9 +687,6 @@ FROM kept
 """
 
 
-_SPAN_DEDUP_MEMO: dict = {}
-
-
 @register("repeated_span_dedup", oracle=_SPAN_DEDUP_SQL)
 def repeated_span_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide exact repeated-span removal (operators/dedup.py
@@ -715,16 +705,16 @@ def repeated_span_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # memoized per (session, sf_dir): the operator persists its staged
     # token frame for the session (materialization contract), so plan
     # probes / audits / repeated driver calls must share ONE cached
-    # frame instead of leaking one per invocation (r06 review; same
-    # precedent as _shared_signatures)
-    key = (session_token(spark), sf_dir)
-    if key not in _SPAN_DEDUP_MEMO:
-        _SPAN_DEDUP_MEMO[key] = repeated_span_dedup(
+    # frame instead of leaking one per invocation
+    return session_memo(
+        spark,
+        ("span_dedup", sf_dir),
+        lambda: repeated_span_dedup(
             _t(spark, sf_dir, "documents"),
             span_tokens=_SPAN_K,
             min_repeats=_SPAN_M,
-        )
-    return _SPAN_DEDUP_MEMO[key]
+        ),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -816,25 +806,23 @@ FROM documents d LEFT JOIN per_doc p USING (doc_id)
 """
 
 
-_BPE_MERGES_MEMO: dict = {}
-
-
 def _trained_merges(spark: SparkSession, sf_dir: str) -> list:
     """Train once per (session, sf_dir) and share between the two BPE
     queries — the merge table is the whole point of the memo precedent
     (_shared_signatures): both queries must see the SAME trained state,
     and training is the expensive half."""
-    key = (session_token(spark), sf_dir)
-    if key not in _BPE_MERGES_MEMO:
-        from pyspark_unload_to_gcs_spark.operators.bpe import bpe_train
+    from pyspark_unload_to_gcs_spark.operators.bpe import bpe_train
 
-        _BPE_MERGES_MEMO[key] = bpe_train(
+    return session_memo(
+        spark,
+        ("bpe_merges", sf_dir),
+        lambda: bpe_train(
             _t(spark, sf_dir, "documents"),
             text_column="text",
             num_merges=_BPE_MERGES,
             with_counts=True,
-        )
-    return _BPE_MERGES_MEMO[key]
+        ),
+    )
 
 
 @register("bpe_train_merges", oracle=_BPE_TRAIN_SQL)
@@ -1197,9 +1185,6 @@ def bmp_decode_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PQ_M, _PQ_K, _PQ_SUB = 4, 16, 16  # m subspaces, k codes, dim 64 -> sub 16
 
-_PQ_SHARED_MEMO: dict = {}
-
-
 def _pq_shared(spark: SparkSession, sf_dir: str):
     """Session-shared PQ/IVF index build: the corpus coarse-assigned to
     16 IVF cells AND encoded to m=4 PQ codes, persisted once per
@@ -1213,8 +1198,7 @@ def _pq_shared(spark: SparkSession, sf_dir: str):
     centroids, codebooks, query_vector)."""
     from pyspark_unload_to_gcs_spark.operators import similarity as S
 
-    key = (session_token(spark), sf_dir)
-    if key not in _PQ_SHARED_MEMO:
+    def build():
         emb = _t(spark, sf_dir, "embeddings")
         corpus = emb.filter(F.col("vec_id") != 0)
         q = [
@@ -1227,8 +1211,9 @@ def _pq_shared(spark: SparkSession, sf_dir: str):
         )
         enc = S.pq_encode(S.ivf_assign(corpus, centroids), codebooks).persist()
         enc.count()
-        _PQ_SHARED_MEMO[key] = (enc, centroids, codebooks, q)
-    return _PQ_SHARED_MEMO[key]
+        return enc, centroids, codebooks, q
+
+    return session_memo(spark, ("pq_shared", sf_dir), build)
 
 
 
@@ -1641,8 +1626,6 @@ def unicode_normalize_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MANIFEST_ROUNDTRIP_MEMO: dict = {}
-
 _MANIFEST_ROUNDTRIP_SQL = """
 SELECT o_orderkey, o_orderstatus, o_orderpriority,
        md5(to_json(struct_pack(
@@ -1683,8 +1666,7 @@ def export_manifest_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_manifest,
     )
 
-    key = (session_token(spark), sf_dir)
-    if key not in _MANIFEST_ROUNDTRIP_MEMO:
+    def build():
         df = non_null_filter(
             _t(spark, sf_dir, "orders").select(
                 "o_orderkey", "o_orderstatus", "o_orderpriority"
@@ -1710,8 +1692,9 @@ def export_manifest_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         write_manifest(uri)
-        _MANIFEST_ROUNDTRIP_MEMO[key] = uri
-    uri = _MANIFEST_ROUNDTRIP_MEMO[key]
+        return uri
+
+    uri = session_memo(spark, ("manifest_roundtrip", sf_dir), build)
     # consumer-side validation on EVERY read: a part file that went
     # missing or changed since the write fails here, before any row
     # is served (raises ValueError -> driver red)
@@ -1720,8 +1703,6 @@ def export_manifest_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey bigint, o_orderstatus string, o_orderpriority string, row_hash string"
     ).json(uri).withColumn("manifest_ok", F.lit(True))
 
-
-_XML_ROUNDTRIP_MEMO: dict = {}
 
 _XML_ROUNDTRIP_SQL = """
 SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey,
@@ -1744,8 +1725,7 @@ def xml_ingest_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark_unload_to_gcs_spark.sources.catalog import load_xml
 
-    key = (session_token(spark), sf_dir)
-    if key not in _XML_ROUNDTRIP_MEMO:
+    def build():
         out_dir = tempfile.mkdtemp(prefix="xml_roundtrip_")
         (
             _t(spark, sf_dir, "nation")
@@ -1761,10 +1741,11 @@ def xml_ingest_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .mode("overwrite")
             .save(out_dir)
         )
-        _XML_ROUNDTRIP_MEMO[key] = out_dir
+        return out_dir
+
     return load_xml(
         spark,
-        _XML_ROUNDTRIP_MEMO[key],
+        session_memo(spark, ("xml_roundtrip", sf_dir), build),
         row_tag="nation",
         schema="n_nationkey bigint, n_name string, n_regionkey bigint",
     )
@@ -2029,8 +2010,6 @@ def heavy_hitters_daily_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # binaryFile media ingestion + ORC ingestion roundtrips (staged r08)
 # --------------------------------------------------------------------------
 
-_BINFILE_WAV_MEMO: dict = {}
-
 _BINFILE_WAV_SQL = """
 WITH params AS (
   SELECT doc_id,
@@ -2090,8 +2069,7 @@ def binaryfile_wav_ingest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_wav_pcm16,
     )
 
-    key = (session_token(spark), sf_dir)
-    if key not in _BINFILE_WAV_MEMO:
+    def build():
         master = spark.sparkContext.master or ""
         if not master.startswith("local"):
             raise RuntimeError(
@@ -2130,12 +2108,11 @@ def binaryfile_wav_ingest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         # count() drives the distributed write to completion before
         # the directory is listed (write-then-read barrier)
         docs.mapInPandas(write_files, "doc_id long").count()
-        _BINFILE_WAV_MEMO[key] = out_dir
+        return out_dir
 
+    out_dir = session_memo(spark, ("binfile_wav", sf_dir), build)
     binary = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wav")
-        .load(_BINFILE_WAV_MEMO[key])
+        spark.read.format("binaryFile").option("pathGlobFilter", "*.wav").load(out_dir)
     )
     payloads = binary.select(
         F.regexp_extract(F.col("path"), r"doc_(\d+)\.wav$", 1)
@@ -2145,8 +2122,6 @@ def binaryfile_wav_ingest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return decode_wav(payloads)
 
-
-_ORC_ROUNDTRIP_MEMO: dict = {}
 
 _ORC_ROUNDTRIP_SQL = """
 SELECT c_custkey, c_name, c_mktsegment, CAST(c_acctbal AS DOUBLE) AS acctbal
@@ -2164,8 +2139,7 @@ def orc_ingest_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     memoized per (session, sf_dir)."""
     import tempfile
 
-    key = (session_token(spark), sf_dir)
-    if key not in _ORC_ROUNDTRIP_MEMO:
+    def build():
         out_dir = tempfile.mkdtemp(prefix="orc_roundtrip_")
         (
             _t(spark, sf_dir, "customer")
@@ -2179,10 +2153,12 @@ def orc_ingest_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .mode("overwrite")
             .save(out_dir)
         )
-        _ORC_ROUNDTRIP_MEMO[key] = out_dir
+        return out_dir
+
+    out_dir = session_memo(spark, ("orc_roundtrip", sf_dir), build)
     return spark.read.schema(
         "c_custkey bigint, c_name string, c_mktsegment string, acctbal double"
-    ).orc(_ORC_ROUNDTRIP_MEMO[key])
+    ).orc(out_dir)
 
 
 # --------------------------------------------------------------------------
@@ -2299,8 +2275,6 @@ def name_typo_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Exactly-once ingestion dedup stream replay (staged r08)
 # --------------------------------------------------------------------------
 
-_DEDUP_REPLAY_MEMO: dict = {}
-
 _DEDUP_REPLAY_SQL = """
 SELECT event_id, user_id, event_type, value, epoch_ms(ts) AS ts_ms
 FROM events
@@ -2377,8 +2351,8 @@ def dedup_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         tag(poison(b1_rows.filter(F.col("event_id") % 5 == 0)), 1)
     )
     return replay_batches(
-        _DEDUP_REPLAY_MEMO,
-        (session_token(spark), sf_dir),
+        spark,
+        ("dedup_replay", sf_dir),
         (b0, b1, b2),
         lambda frame, i, state: dedup_batch(
             frame,
@@ -2502,8 +2476,6 @@ def variant_props_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming heavy-hitters sketch fold (staged r08)
 # --------------------------------------------------------------------------
 
-_HH_STREAM_MEMO: dict = {}
-
 
 @register("heavy_hitters_stream_replay", oracle=_HH_SQL)
 def heavy_hitters_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2532,8 +2504,8 @@ def heavy_hitters_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame
         ev.filter(F.col("ts") >= bounds[1]),
     ]
     return replay_batches(
-        _HH_STREAM_MEMO,
-        (session_token(spark), sf_dir),
+        spark,
+        ("hh_stream", sf_dir),
         batches,
         lambda frame, b, state: fold_topk_batch(
             frame,
@@ -2690,8 +2662,6 @@ def asof_forward_tolerance_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Incremental on-disk IVF-PQ index maintenance (staged r10; VERDICT r08 #8)
 # --------------------------------------------------------------------------
 
-_PQ_INCR_MEMO: dict = {}
-
 
 def _pq_incr_oracle() -> str:
     """The vector_topk_pq LUT replay, parameterized two ways: codebooks
@@ -2808,8 +2778,7 @@ def pq_index_incremental_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     path-agnostic)."""
     from pyspark_unload_to_gcs_spark.operators import similarity as S
 
-    key = (session_token(spark), sf_dir)
-    if key not in _PQ_INCR_MEMO:
+    def build():
         path, centroids, codebooks, q = _pq_incr_base(spark, sf_dir)
         # the planted probe (query + 0.0005) arrives as a single-row
         # local frame — no corpus rescan; arrow assignment/encode arm
@@ -2825,8 +2794,9 @@ def pq_index_incremental_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, path, probe, centroids, codebooks, compact=False,
             method="arrow",
         )
-        _PQ_INCR_MEMO[key] = (path, codebooks, q)
-    path, codebooks, q = _PQ_INCR_MEMO[key]
+        return (path, codebooks, q)
+
+    path, codebooks, q = session_memo(spark, ("pq_incr", sf_dir), build)
     index = spark.read.parquet(path)
     out = S.pq_topk(index.drop("ivf_cell"), q, k=10, codebooks=codebooks)
     return out.select("vec_id", F.round("pq_score", 6).alias("pq_score_r"))
@@ -2847,8 +2817,7 @@ def _pq_incr_base(spark: SparkSession, sf_dir: str):
 
     from pyspark_unload_to_gcs_spark.operators import similarity as S
 
-    key = (session_token(spark), sf_dir, "base")
-    if key not in _PQ_INCR_MEMO:
+    def build():
         emb = _t(spark, sf_dir, "embeddings")
         corpus = emb.select(
             "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
@@ -2870,8 +2839,9 @@ def _pq_incr_base(spark: SparkSession, sf_dir: str):
             spark, path, bulk, centroids, codebooks, compact=True,
             method="arrow",
         )
-        _PQ_INCR_MEMO[key] = (path, centroids, codebooks, q)
-    return _PQ_INCR_MEMO[key]
+        return (path, centroids, codebooks, q)
+
+    return session_memo(spark, ("pq_incr", sf_dir, "base"), build)
 
 
 # --------------------------------------------------------------------------
@@ -2993,8 +2963,6 @@ def image_ahash_dup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # S2-S4 semantics while delta-spark stays env-blocked)
 # --------------------------------------------------------------------------
 
-_VERSIONED_MEMO: dict = {}
-
 
 def _versioned_orders(spark: SparkSession, sf_dir: str) -> str:
     """Three-commit versioned table from orders (memoized per session):
@@ -3004,8 +2972,7 @@ def _versioned_orders(spark: SparkSession, sf_dir: str) -> str:
     both probes replay in closed form from the orders table."""
     from pyspark_unload_to_gcs_spark.sources.versioned import commit_version
 
-    key = (session_token(spark), sf_dir)
-    if key not in _VERSIONED_MEMO:
+    def build():
         import tempfile
 
         path = tempfile.mkdtemp(prefix="versioned_orders_") + "/t"
@@ -3022,8 +2989,23 @@ def _versioned_orders(spark: SparkSession, sf_dir: str) -> str:
         commit_version(base.filter(F.col("o_orderkey") % 2 == 0), path, 1000)
         commit_version(v1, path, 2000)
         commit_version(v1.filter(F.col("o_orderkey") % 7 != 0), path, 3000)
-        _VERSIONED_MEMO[key] = path
-    return _VERSIONED_MEMO[key]
+        return path
+
+    return session_memo(spark, ("versioned", sf_dir), build)
+
+
+def _register_versioned_commits(spark: SparkSession) -> None:
+    """Register the ``versioned_commits`` Python DataSource once per
+    session."""
+    from pyspark_unload_to_gcs_spark.sources.versioned_stream import (
+        VersionedCommitsDataSource,
+    )
+
+    session_memo(
+        spark,
+        "versioned_commits_registered",
+        lambda: spark.dataSource.register(VersionedCommitsDataSource),
+    )
 
 
 _VERSIONED_SNAPSHOT_SQL = """
@@ -3164,15 +3146,8 @@ def versioned_datasource_snapshot_q(spark: SparkSession, sf_dir: str) -> DataFra
     form as versioned_snapshot_at plus the stamp columns. Any drift in
     ledger gating, AS-OF resolution, arrow type mapping, or stamp
     plumbing flips rows or schema."""
-    from pyspark_unload_to_gcs_spark.sources.versioned_stream import (
-        VersionedCommitsDataSource,
-    )
-
     path = _versioned_orders(spark, sf_dir)
-    key = (session_token(spark), "versioned_commits_registered")
-    if key not in _VERSIONED_MEMO:
-        spark.dataSource.register(VersionedCommitsDataSource)
-        _VERSIONED_MEMO[key] = True
+    _register_versioned_commits(spark)
     return (
         spark.read.format("versioned_commits")
         .option("path", path)
@@ -3218,17 +3193,10 @@ def versioned_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     form from orders."""
     import tempfile
 
-    from pyspark_unload_to_gcs_spark.sources.versioned_stream import (
-        VersionedCommitsDataSource,
-    )
-
     path = _versioned_orders(spark, sf_dir)
-    key = (session_token(spark), sf_dir, "stream_drain")
-    if key not in _VERSIONED_MEMO:
-        reg_key = (session_token(spark), "versioned_commits_registered")
-        if reg_key not in _VERSIONED_MEMO:
-            spark.dataSource.register(VersionedCommitsDataSource)
-            _VERSIONED_MEMO[reg_key] = True
+
+    def build():
+        _register_versioned_commits(spark)
         out_dir = tempfile.mkdtemp(prefix="versioned_stream_replay_") + "/rows"
         ckpt = tempfile.mkdtemp(prefix="versioned_stream_replay_ckpt_")
         stream = (
@@ -3255,8 +3223,11 @@ def versioned_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "versioned_stream_replay: availableNow drain did not "
                 f"finish within 300s (stream exception: {exc})"
             )
-        _VERSIONED_MEMO[key] = out_dir
-    return spark.read.parquet(_VERSIONED_MEMO[key])
+        return out_dir
+
+    return spark.read.parquet(
+        session_memo(spark, ("versioned", sf_dir, "stream_drain"), build)
+    )
 
 
 # --- r11 cohort (staged in r11, PROMOTED to live ``@register`` in r12:
@@ -3288,21 +3259,15 @@ def versioned_cdf_merge_stream_replay_q(spark: SparkSession, sf_dir: str) -> Dat
     and the stream runner all sit inside the value hash."""
     import tempfile
 
-    from pyspark_unload_to_gcs_spark.sources.versioned_stream import (
-        VersionedCommitsDataSource,
-    )
     from pyspark_unload_to_gcs_spark.streaming.cdc_stream import (
         start_versioned_cdf_merge,
     )
     from pyspark_unload_to_gcs_spark.streaming.merge import read_snapshot
 
     path = _versioned_orders(spark, sf_dir)
-    key = (session_token(spark), sf_dir, "cdf_merge")
-    if key not in _VERSIONED_MEMO:
-        reg_key = (session_token(spark), "versioned_commits_registered")
-        if reg_key not in _VERSIONED_MEMO:
-            spark.dataSource.register(VersionedCommitsDataSource)
-            _VERSIONED_MEMO[reg_key] = True
+
+    def build():
+        _register_versioned_commits(spark)
         state = tempfile.mkdtemp(prefix="versioned_cdf_merge_state_")
         ckpt = tempfile.mkdtemp(prefix="versioned_cdf_merge_ckpt_")
         q = start_versioned_cdf_merge(
@@ -3319,8 +3284,11 @@ def versioned_cdf_merge_stream_replay_q(spark: SparkSession, sf_dir: str) -> Dat
                 "versioned_cdf_merge_stream_replay: availableNow drain did not "
                 f"finish within 300s (stream exception: {exc})"
             )
-        _VERSIONED_MEMO[key] = state
-    snap = read_snapshot(spark, _VERSIONED_MEMO[key])
+        return state
+
+    snap = read_snapshot(
+        spark, session_memo(spark, ("versioned", sf_dir, "cdf_merge"), build)
+    )
     assert snap is not None
     return snap
 
@@ -3472,8 +3440,6 @@ FROM orders, w
 GROUP BY bkt
 """
 
-_SCAN_PRUNE_MEMO: dict = {}
-
 
 @register("scan_prune_preflight", oracle=_SCAN_PRUNE_SQL)
 def scan_prune_preflight_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3491,8 +3457,7 @@ def scan_prune_preflight_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark_unload_to_gcs_spark.operators.diagnostics import scan_prune_plan
 
-    key = (session_token(spark), sf_dir)
-    if key not in _SCAN_PRUNE_MEMO:
+    def build():
         orders = _t(spark, sf_dir, "orders")
         # 8 key-range buckets at EVERY scale (bounded 1-value collect):
         # width = (max_key + 8) div 8, pure integer arithmetic the
@@ -3513,10 +3478,11 @@ def scan_prune_preflight_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.partitionBy("bkt")
             .parquet(path)
         )
-        _SCAN_PRUNE_MEMO[key] = path
+        return path
+
     plan = scan_prune_plan(
         spark,
-        _SCAN_PRUNE_MEMO[key],
+        session_memo(spark, ("scan_prune", sf_dir), build),
         "o_orderkey",
         lower=250,
         upper=710,
@@ -3543,8 +3509,6 @@ FROM documents d LEFT JOIN per_doc p USING (doc_id)
 WHERE d.doc_id % 10 = 7
 """
 
-_DSIR_INCR_MEMO: dict = {}
-
 
 @register("dsir_incremental_scores", oracle=_DSIR_INCR_SQL)
 def dsir_incremental_scores_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3562,8 +3526,7 @@ def dsir_incremental_scores_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         dsir_score_batch,
     )
 
-    key = (session_token(spark), sf_dir)
-    if key not in _DSIR_INCR_MEMO:
+    def build():
         import tempfile
 
         path = tempfile.mkdtemp(prefix="dsir_ratio_") + "/t"
@@ -3573,11 +3536,11 @@ def dsir_incremental_scores_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             path,
             num_buckets=_DSIR_BUCKETS,
         )
-        _DSIR_INCR_MEMO[key] = path
+        return path
+
     batch = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 7)
-    return dsir_score_batch(
-        spark, batch, _DSIR_INCR_MEMO[key], num_buckets=_DSIR_BUCKETS
-    )
+    path = session_memo(spark, ("dsir_incr", sf_dir), build)
+    return dsir_score_batch(spark, batch, path, num_buckets=_DSIR_BUCKETS)
 
 
 _ALIGN_K = 4
@@ -3722,8 +3685,6 @@ def margin_align_mining_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-_ALIGN_AUTO_MEMO: dict = {}
-
 
 def _margin_align_auto_raw(
     spark: SparkSession, sf_dir: str, assign_method: str
@@ -3767,12 +3728,12 @@ def margin_align_auto_with_method(
     pays the mine once, the others read the (small, above-threshold)
     pair frame back — the _shared_signatures precedent, with the build
     cost landing honestly inside the first consumer's bench row."""
-    key = (session_token(spark), sf_dir, assign_method)
-    if key not in _ALIGN_AUTO_MEMO:
-        _ALIGN_AUTO_MEMO[key] = _margin_align_auto_raw(
+    def build():
+        return _margin_align_auto_raw(
             spark, sf_dir, assign_method
         ).localCheckpoint(eager=False)
-    return _ALIGN_AUTO_MEMO[key]
+
+    return session_memo(spark, ("align_auto", sf_dir, assign_method), build)
 
 
 # Plan twins: for a registered query whose frame is memoized behind a
@@ -4339,7 +4300,6 @@ def temperature_mix_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quota_temperature_mix(docs, "lang", "doc_id", tau=0.5)
 
 
-_RTBF_MEMO: dict = {}
 _RTBF_BAL = -700
 
 
@@ -4354,8 +4314,7 @@ def _rtbf_table(spark: SparkSession, sf_dir: str) -> str:
     from pyspark_unload_to_gcs_spark.operators.joins import bucket_bloom_anti_join
     from pyspark_unload_to_gcs_spark.sources.versioned import commit_version
 
-    key = (session_token(spark), sf_dir)
-    if key not in _RTBF_MEMO:
+    def build():
         import tempfile
 
         path = tempfile.mkdtemp(prefix="rtbf_orders_") + "/t"
@@ -4379,8 +4338,9 @@ def _rtbf_table(spark: SparkSession, sf_dir: str) -> str:
         )
         commit_version(base, path, 1000)
         commit_version(survivors, path, 2000)
-        _RTBF_MEMO[key] = path
-    return _RTBF_MEMO[key]
+        return path
+
+    return session_memo(spark, ("rtbf", sf_dir), build)
 
 
 _RTBF_SQL = f"""
@@ -4621,7 +4581,6 @@ def event_drift_psi_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_QMIX_MEMO: dict = {}
 _QMIX_BATCHES = 3
 
 
@@ -4710,8 +4669,8 @@ def quota_mix_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         for b in range(_QMIX_BATCHES)
     )
     return replay_batches(
-        _QMIX_MEMO,
-        (session_token(spark), sf_dir),
+        spark,
+        ("qmix", sf_dir),
         batches,
         lambda frame, b, state: quota_mix_batch(
             frame,
@@ -4828,7 +4787,6 @@ def hard_negative_mining_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DRIFT_REPLAY_MEMO: dict = {}
 _DRIFT_DAY0 = 19723  # floor(1704067200000 / 86400000): 2024-01-01
 
 
@@ -4899,8 +4857,8 @@ def drift_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(day >= 20),
     )
     return replay_batches(
-        _DRIFT_REPLAY_MEMO,
-        (session_token(spark), sf_dir),
+        spark,
+        ("drift_replay", sf_dir),
         batches,
         lambda frame, b, state: drift_batch(
             frame, b, category_column="event_type", state_path=state
@@ -5280,8 +5238,6 @@ def shard_balance_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- exactly-once ingestion dedup, key-index/append-only arm ----------------
 
-_IDX_DEDUP_REPLAY_MEMO: dict = {}
-
 
 @register("indexed_dedup_stream_replay", oracle=_DEDUP_REPLAY_SQL)
 def indexed_dedup_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5333,8 +5289,8 @@ def indexed_dedup_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame
         tag(poison(b1_rows.filter(F.col("event_id") % 5 == 0)), 1)
     )
     return replay_batches(
-        _IDX_DEDUP_REPLAY_MEMO,
-        (session_token(spark), sf_dir),
+        spark,
+        ("idx_dedup_replay", sf_dir),
         (b0, b1, b2),
         lambda frame, i, state: dedup_batch_indexed(
             frame,
@@ -5349,8 +5305,6 @@ def indexed_dedup_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # -- streaming ingest decontamination against a frozen gram index -----------
-
-_CONTAIN_REPLAY_MEMO: dict = {}
 
 
 def _containment_replay_oracle() -> str:
@@ -5464,8 +5418,8 @@ def containment_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return replay_batches(
-        _CONTAIN_REPLAY_MEMO,
-        (session_token(spark), sf_dir),
+        spark,
+        ("contain_replay", sf_dir),
         (b0, b1),
         fold,
         lambda state: read_matches(spark, state),
@@ -5495,16 +5449,16 @@ def _containment_frozen_index(spark: SparkSession, sf_dir: str) -> str:
         containment_index_build,
     )
 
-    key = (session_token(spark), sf_dir, "frozen_index")
-    if key not in _CONTAIN_REPLAY_MEMO:
+    def build():
         docs = _contain_docs(spark, sf_dir)
         index = docs.filter(F.col("doc_id") % 5 != 4)
         path = tempfile.mkdtemp(prefix="containment_frozen_index_")
         containment_index_build(
             index, "doc_id", path, shingle_n=3, threshold_pct=80
         )
-        _CONTAIN_REPLAY_MEMO[key] = path
-    return _CONTAIN_REPLAY_MEMO[key]
+        return path
+
+    return session_memo(spark, ("contain_replay", sf_dir, "frozen_index"), build)
 
 
 # -- CCNet-shaped bigram LM quality gate -------------------------------------
@@ -7222,8 +7176,6 @@ def mime_sniff_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # two storage backends pin each other.
 # --------------------------------------------------------------------------
 
-_DELTA_LOG_MEMO: dict = {}
-
 
 def _delta_orders(spark: SparkSession, sf_dir: str) -> str:
     """3-commit OPEN-FORMAT Delta table from orders (memoized per
@@ -7236,8 +7188,7 @@ def _delta_orders(spark: SparkSession, sf_dir: str) -> str:
 
     from pyspark_unload_to_gcs_spark.sources import delta_log as DL
 
-    key = (session_token(spark), sf_dir)
-    if key not in _DELTA_LOG_MEMO:
+    def build():
         path = tempfile.mkdtemp(prefix="delta_orders_") + "/t"
         base = _t(spark, sf_dir, "orders").select(
             "o_orderkey",
@@ -7262,8 +7213,9 @@ def _delta_orders(spark: SparkSession, sf_dir: str) -> str:
             mode="overwrite",
         )
         DL.write_checkpoint(spark, path, 1)
-        _DELTA_LOG_MEMO[key] = path
-    return _DELTA_LOG_MEMO[key]
+        return path
+
+    return session_memo(spark, ("delta_log", sf_dir), build)
 
 
 @register("delta_time_travel_snapshot", oracle=_VERSIONED_SNAPSHOT_SQL)

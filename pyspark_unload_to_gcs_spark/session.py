@@ -8,30 +8,34 @@ test runs. Everything here is plain public Spark configuration.
 from __future__ import annotations
 
 import os
-import uuid as _uuid
+from collections.abc import Callable, Hashable
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
+T = TypeVar("T")
 
-def session_token(spark: SparkSession) -> str:
-    """Stable identity for per-session memo keys. ``id(spark)`` alone
-    is unsafe: a stopped session's address can be reused by a new
-    SparkSession, handing the memo a DataFrame bound to the dead
-    session (ADVICE r05). ``applicationId`` alone is also not enough:
-    ``SparkSession.newSession()`` siblings share one SparkContext and
-    would share memos despite being distinct sessions with their own
-    conf/temp-view state (ADVICE r06). So the token is applicationId
-    plus a UUID stamped on the Python session object on first use —
-    unique per live SparkSession, stable for its lifetime, and
-    unforgeable by address recycling (a recycled address is a NEW
-    object without the attribute, so it mints a fresh token)."""
-    tok = getattr(spark, "_pyspark_gcs_session_token", None)
-    if tok is None:
-        tok = f"{spark.sparkContext.applicationId}-{_uuid.uuid4().hex}"
-        spark._pyspark_gcs_session_token = tok
-    return tok
+
+def session_memo(
+    spark: SparkSession, key: Hashable, build: Callable[[], T] | None
+) -> T:
+    """Return the value memoized under ``key`` for this session, calling
+    ``build()`` on the first request.
+
+    Entries live in a dict on the ``SparkSession`` Python object itself,
+    so each session (``newSession()`` siblings included) has its own
+    entries, a new session object never sees a dead one's, and the
+    entries become unreachable with the session. ``build`` may itself
+    call ``session_memo``; a ``build`` that raises stores nothing.
+    ``session_memo(spark, key, None)`` drops the entry instead."""
+    memo = spark.__dict__.setdefault("_pyspark_gcs_memo", {})
+    if build is None:
+        return memo.pop(key, None)
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]
 
 
 def get_spark(

@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyspark_unload_to_gcs_spark.session import session_memo
+
 _META_COLS = ("shingle_n", "n_buckets", "threshold_pct")
 
 # broadcast-hint gates for containment_match_batch (ADVICE r14): a
@@ -56,21 +58,6 @@ _META_COLS = ("shingle_n", "n_buckets", "threshold_pct")
 # docs, conservatively, since width scales with doc length.
 _BROADCAST_PREFIX_ROW_CAP = 2_000_000
 _BROADCAST_DOC_CAP = 100_000
-
-# (session token, NORMALIZED index root) -> meta Row. The meta is
-# FROZEN with the index (one write at bootstrap), so reading it once
-# per session is exact — re-reading it per micro-batch billed one
-# small Spark job to EVERY fold (opt r15, guide §1.2: don't recompute
-# what cannot change). ``containment_index_build`` invalidates on
-# (re)build; the key is the Hadoop-FS-qualified root (ADVICE r15: raw
-# path strings let a same-session rebuild referenced via a textually
-# different but equivalent spelling — trailing slash, file: scheme —
-# serve a stale row past the invalidation). Cross-PROCESS freshness is
-# deliberately traded away for the per-fold job: a rebuild by another
-# process is not observed for this session's lifetime (the meta is
-# frozen-by-design; rebuilding an index under a live consumer was
-# never supported).
-_META_MEMO: dict = {}
 
 
 def _memo_root(path: str) -> str:
@@ -99,12 +86,19 @@ def _index_dir(state_path: str, name: str) -> str:
 
 
 def _read_meta(spark: SparkSession, index_root: str):
-    from pyspark_unload_to_gcs_spark.session import session_token
-
-    key = (session_token(spark), _memo_root(index_root))
-    if key not in _META_MEMO:
-        _META_MEMO[key] = spark.read.parquet(_index_dir(index_root, "meta")).first()
-    return _META_MEMO[key]
+    """The index's meta Row, read once per (session, index) and dropped
+    with the session. The meta is frozen with the index, so one read per
+    session is exact and spares every fold a small Spark job.
+    ``containment_index_build`` drops the rebuilding session's entry;
+    the key is the qualified root (``_memo_root``), so no equivalent
+    spelling of the path can serve a stale Row past that drop. A
+    rebuild by another process or session is not observed: rebuilding
+    an index under a live consumer is not supported."""
+    return session_memo(
+        spark,
+        ("containment_meta", _memo_root(index_root)),
+        lambda: spark.read.parquet(_index_dir(index_root, "meta")).first(),
+    )
 
 
 def containment_index_build(
@@ -188,9 +182,8 @@ def containment_index_build(
     ).coalesce(1).write.mode("overwrite").parquet(
         _index_dir(state_path, "meta")
     )
-    from pyspark_unload_to_gcs_spark.session import session_token
-
-    _META_MEMO.pop((session_token(spark), _memo_root(state_path)), None)
+    # drop this session's meta entry: a rebuild must not serve the old Row
+    session_memo(spark, ("containment_meta", _memo_root(state_path)), None)
 
 
 def containment_match_batch(

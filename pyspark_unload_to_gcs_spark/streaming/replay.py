@@ -3,25 +3,27 @@
 The streaming twins' fold functions (token-budget admission, MERGE
 snapshot maintenance, incremental rollup) are exercised by registered
 queries that replay a fixed batch sequence against versioned parquet
-state in a temp dir. The scaffold is shared here (r05 review: three
-near-identical copies): memoize per (session, sf_dir) because the folds
-are EAGER side effects — plan-only probes (test_plan_lint, the plan
-digest) must replay once and reread the same state, not re-fold and
-leak a fresh temp dir per invocation. The temp dir intentionally lives
-for the session: the memoized DataFrame reads it lazily.
+state in a temp dir. The folds are EAGER side effects, so a replay runs
+once per (session, key) and its read-back frame is memoized through
+``session.session_memo``: plan-only probes (test_plan_lint, the plan
+digest) reread the same state instead of re-folding into a fresh temp
+dir. One entry per session, dropped with it; the temp dir lives as
+long as the entry, because the memoized DataFrame reads it lazily.
 """
 
 from __future__ import annotations
 
 import tempfile
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Hashable, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+
+from pyspark_unload_to_gcs_spark.session import session_memo
 
 
 def replay_batches(
-    memo: dict,
-    key: tuple,
+    spark: SparkSession,
+    key: Hashable,
     batches: Sequence[DataFrame],
     fold_one: Callable[[DataFrame, int, str], None],
     read_state: Callable[[str], DataFrame],
@@ -29,23 +31,23 @@ def replay_batches(
     prefix: str,
 ) -> DataFrame:
     """Fold ``batches`` in order into fresh versioned state via
-    ``fold_one(frame, batch_id, state_path)``, memoize
-    ``read_state(state_path)`` under ``memo[key]``, and return it.
+    ``fold_one(frame, batch_id, state_path)`` and return
+    ``read_state(state_path)``, memoized for ``spark`` under ``key``.
 
-    The whole invocation runs under the per-invocation read-back
-    schema memo (streaming/rollup.py ``replay_readback_memo``, opt
-    r16): every fold still re-reads the newest COMMITTED state — the
-    exactly-once semantics the rows pin — but the state schema, a
-    constant across one replay's versions, is inferred once instead of
-    per fold (~130-200 ms of footer inference per fold measured)."""
+    The folds run under the read-back schema memo
+    (streaming/rollup.py ``replay_readback_memo``): every fold still
+    re-reads the newest COMMITTED state — the exactly-once semantics
+    the rows pin — but the state schema, a constant across one replay's
+    versions, is inferred once instead of per fold."""
     from pyspark_unload_to_gcs_spark.streaming.rollup import (
         replay_readback_memo,
     )
 
-    if key not in memo:
+    def build() -> DataFrame:
         state = tempfile.mkdtemp(prefix=prefix)
         with replay_readback_memo():
             for b, frame in enumerate(batches):
                 fold_one(frame, b, state)
-            memo[key] = read_state(state)
-    return memo[key]
+            return read_state(state)
+
+    return session_memo(spark, key, build)

@@ -40,6 +40,21 @@ def test_non_null_filter_multi_column_and(spark):
     assert [r.id for r in non_null_filter(df, ["a", "b"]).collect()] == [1]
 
 
+def test_non_null_filter_non_string_column_gets_null_check_only(spark):
+    # comparing an int column with '' casts the empty string, which
+    # fails with CAST_INVALID_INPUT under ANSI mode
+    df = spark.createDataFrame(
+        [(1, 10, "a"), (2, None, "b"), (3, 0, "")], "id long, n int, s string"
+    )
+    prior = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        assert sorted(r.id for r in non_null_filter(df, ["n"]).collect()) == [1, 3]
+        assert [r.id for r in non_null_filter(df, ["N", "s"]).collect()] == [1]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prior)
+
+
 # --- time_window_filter (P5-P7): sargable == compat -------------------------
 
 

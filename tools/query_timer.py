@@ -9,8 +9,8 @@ same sitting class).
     python tools/query_timer.py --top 30          # slowest from BENCH_LOCAL
     python tools/query_timer.py --all             # every registered query
 
-Runs the same named warmups bench.py runs (shared fixtures/indexes) so
-first-execution family costs are not billed to the row under study.
+Builds the same session fixtures bench.py warms (``registry.fixtures()``)
+so first-execution family costs are not billed to the row under study.
 Output: one JSON line per query on stdout.
 """
 
@@ -53,21 +53,11 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from pyspark_unload_to_gcs_spark import registry_extensions, registry_scale, registry_staged
-
-    for warm in (
-        registry_extensions._shared_signatures,
-        registry_scale._bucketed_tables,
-        registry_extensions._shared_exact_pairs,
-        registry_staged._pq_shared,
-        registry_staged._pq_incr_base,
-        registry_staged._versioned_orders,
-        registry_staged._containment_frozen_index,
-    ):
+    for fixture, build in registry.fixtures():
         try:
-            warm(spark, args.sf)
+            build(spark, args.sf)
         except Exception as exc:  # noqa: BLE001
-            print(f"warmup {warm.__name__}: {exc}", file=sys.stderr)
+            print(f"warmup {fixture}: {exc}", file=sys.stderr)
 
     qs = registry.queries()
     names = list(args.names)

@@ -171,34 +171,15 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     build_scaled(spark, args.base, args.out, args.multiplier)
 
-    # same named warmups as bench.py: the one-time shared caches are
-    # layout/session costs, not query costs (and BENCH_LOCAL's per-query
-    # baseline excludes them too — the comparison must as well)
-    from pyspark_unload_to_gcs_spark import registry_extensions, registry_scale
-
+    # same fixture warmups as bench.py (registry.fixtures()): the
+    # one-time shared builds are layout/session costs, not query costs,
+    # and BENCH_LOCAL's per-query baseline excludes them too — without
+    # them the first consumer absorbs a cold build and reads as a fake
+    # superlinear ratio against the warmed base
     t0 = time.perf_counter()
-    registry_extensions._shared_signatures(spark, args.out)
-    registry_scale._bucketed_tables(spark, args.out)
-    # the exact >=0.8 pair frame is ALSO a bench-named warmup — without
-    # it here, whichever exact-pairs consumer runs first absorbs its
-    # cold build and reads as a fake superlinear ratio vs the warmed
-    # sf0.1 base (observed: near_dedup_pairs_exact "x69" = 3.2 s cold
-    # build vs 0.05 s warmed read)
-    registry_extensions._shared_exact_pairs(spark, args.out)
-    # the PQ/IVF shared index is ALSO a bench-named warmup (r07): build
-    # it here or the first PQ consumer absorbs the cold index build and
-    # reads as fake superlinear vs the warmed sf0.1 base
-    from pyspark_unload_to_gcs_spark import registry_staged
-
-    registry_staged._pq_shared(spark, args.out)
-    # the incremental-index base build is ALSO a bench-named warmup
-    # (r10) — same reasoning as _pq_shared
-    registry_staged._pq_incr_base(spark, args.out)
-    # r14 bench-named warmups: the frozen containment index and the
-    # 3-commit versioned fixture — same one-time-build reasoning
-    registry_staged._containment_frozen_index(spark, args.out)
-    registry_staged._versioned_orders(spark, args.out)
-    print(f"warmup (shared sigs + bucketed layout + exact pairs): "
+    for _name, build in registry.fixtures():
+        build(spark, args.out)
+    print(f"warmup (session fixtures): "
           f"{round(time.perf_counter() - t0, 1)}s", file=sys.stderr)
 
     base_times = {}
