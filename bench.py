@@ -232,9 +232,9 @@ def main() -> None:
     # driver-parsed headline is unchanged.
     # pins are identified by the repo's naming CONVENTION (recall pins
     # end in _recall, accuracy pins in _accuracy) rather than a frozen
-    # name list, so newly promoted pins (e.g. the staged
-    # theta_overlap_estimate_accuracy) classify themselves (review
-    # finding: a hardcoded set silently drifts as rotations promote)
+    # name list, so a newly registered pin (e.g.
+    # theta_overlap_estimate_accuracy) classifies itself; a hardcoded
+    # set would silently drift as rows are added
     def _is_pin(name: str) -> bool:
         return name.endswith(("_recall", "_accuracy"))
 

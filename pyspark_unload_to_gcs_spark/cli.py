@@ -129,7 +129,7 @@ def run_query_mode(argv: list[str]) -> int:
     lines (bounded by ``--limit``), or the full result is written as
     gzip JSON-lines when ``--output_uri`` is given (no driver collect on
     the full-result path)."""
-    from pyspark_unload_to_gcs_spark import registry, registry_staged
+    from pyspark_unload_to_gcs_spark import registry
 
     p = argparse.ArgumentParser(description="registered-query runner")
     p.add_argument("--run_query", default="")
@@ -140,17 +140,11 @@ def run_query_mode(argv: list[str]) -> int:
     p.add_argument("--explain", action="store_true")
     args = p.parse_args(argv)
 
-    # staged (next-window) queries are finished capabilities — expose
-    # them to users too (registry_staged.all_queries: live wins a
-    # collision, of which there are none by test)
-    queries = registry_staged.all_queries()
+    queries = registry.queries()
     if args.list_queries:
-        live = set(registry.queries())
-        oracles = {**registry_staged.staged_oracle_sql(), **registry.oracle_sql()}
+        oracles = registry.oracle_sql()
         for name in sorted(queries):
-            mark = " *" if name in oracles else ""
-            mark += "" if name in live else " (staged)"
-            print(f"{name}{mark}")
+            print(f"{name} *" if name in oracles else name)
         return 0
     if args.run_query not in queries:
         close = [n for n in sorted(queries) if args.run_query in n]

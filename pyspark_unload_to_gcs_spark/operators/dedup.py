@@ -161,19 +161,6 @@ def exact_dedup(
 # ---------------------------------------------------------------------------
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of normalized text. Documents with
-    fewer than ``n`` tokens contribute their whole token string as the
-    single shingle (so short docs can still collide)."""
-    toks = tokens_col(normalize_text(text))
-    k = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(k - (n - 1), F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-    )
-    return F.array_distinct(F.when(k > 0, grams).otherwise(F.array().cast("array<string>")))
-
-
 def token_hashes(text: Column) -> Column:
     """64-bit hash per token of the normalized text (xxhash64, JVM-side)."""
     return F.transform(tokens_col(normalize_text(text)), lambda t: F.xxhash64(t))
@@ -1513,7 +1500,7 @@ def containment_join(
             # so it runs once at the caller's first action (the
             # margin_align_pairs rationale; blocks freed by the
             # ContextCleaner). Plan-lint consumers screen the
-            # un-checkpointed arm via PLAN_TWINS.
+            # un-checkpointed arm via registry_pipeline.PLAN_TWINS.
             g = g.localCheckpoint(eager=False)
         return g
 

@@ -299,9 +299,10 @@ def dsir_shift_report(
     # materialize the bucket-count frame (num_buckets rows) and the
     # (<= k)-row selection once: each is referenced more than once, and
     # each lazy reference would re-run a full corpus pass
-    # checkpoint=False is the plan-twin arm (registry_staged.
-    # PLAN_TWINS): the eager checkpoint renders 'Scan ExistingRDD' and
-    # would hide the selection pipeline from the plan screens
+    # checkpoint=False is the plan-twin arm
+    # (registry_pipeline.PLAN_TWINS): the eager checkpoint renders
+    # 'Scan ExistingRDD' and would hide the selection pipeline from the
+    # plan screens
     counts_rt = dsir_bucket_counts(
         df, target, num_buckets=num_buckets, text_column=text_column
     )

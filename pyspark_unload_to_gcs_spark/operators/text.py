@@ -73,24 +73,11 @@ def adjacent_pairs(tokens: Column) -> Column:
     return F.when(n >= 2, zipped).otherwise(empty)
 
 
-def char_count(text: Column) -> Column:
-    return F.length(text)
-
-
 def punct_ratio(text: Column) -> Column:
     """Fraction of characters that are punctuation/symbols."""
     n = F.length(text)
     punct = n - F.length(F.regexp_replace(text, PUNCT_PATTERN, ""))
     return F.when(n > 0, punct.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
-
-
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    """Fraction of tokens that are stopwords for ``lang``."""
-    toks = tokens_col(F.lower(text))
-    stop = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    hit_count = F.size(F.filter(toks, lambda t: F.array_contains(stop, t)))
-    n = F.size(toks)
-    return F.when(n > 0, hit_count.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
 
 
 def quality_score(text: Column) -> Column:
@@ -137,20 +124,6 @@ def fingerprint(text: Column) -> Column:
     (A rolling/shingle-based fingerprint for near-dup detection lives in
     operators/dedup.py; this one is the exact-content key.)"""
     return F.md5(normalize_text(text))
-
-
-def text_profile(df: DataFrame, text_column: str = "text") -> DataFrame:
-    """Append the full per-document analysis column set."""
-    t = F.col(text_column)
-    return (
-        df.withColumn("n_tokens", token_count(t))
-        .withColumn("n_pieces", bpe_ish_token_count(t))
-        .withColumn("punct_ratio", punct_ratio(t))
-        .withColumn("stopword_ratio_en", stopword_ratio(t, "en"))
-        .withColumn("quality", quality_score(t))
-        .withColumn("lang_guess", lang_id(t))
-        .withColumn("fingerprint", fingerprint(t))
-    )
 
 
 def chunk_documents(

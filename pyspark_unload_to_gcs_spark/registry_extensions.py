@@ -82,7 +82,7 @@ def _shared_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _exact_pairs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exact >=0.8 pair pipeline WITHOUT persist/localCheckpoint —
     signatures built inline, nothing materialized. Exists ONLY as the
-    plan twin for the lint/digest screens (registry_staged.PLAN_TWINS):
+    plan twin for the lint/digest screens (registry_pipeline.PLAN_TWINS):
     the shared memoized frame renders as 'Scan ExistingRDD'/
     'InMemoryTableScan', which would hide the whole minhash pipeline
     from the BatchEvalPython/CartesianProduct screens (review r12)."""
@@ -1222,7 +1222,7 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # recursive-CTE transitive closure; cluster_id = min reachable id, own
 # id when unpaired — mirroring operators/graph.py exactly. F-string-
 # shared by near_dup_clusters_exact and the leakage-safe split oracle
-# (registry_staged) so the closure can never desync between them.
+# (registry_pipeline) so the closure can never desync between them.
 _CLUSTERS_CTE = f"""RECURSIVE {_SHINGLE_CTE},
     pairs AS (
       SELECT a.doc_id AS u, b.doc_id AS v
@@ -1695,8 +1695,8 @@ def incremental_semantic_match_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _incremental_semantic_match_frame(
     spark: SparkSession, sf_dir: str, *, checkpoint: bool, verify_method: str = "fold"
 ) -> DataFrame:
-    """checkpoint=False is the PLAN TWIN arm (registry_staged.
-    PLAN_TWINS): the eager index checkpoint renders as
+    """checkpoint=False is the PLAN TWIN arm
+    (registry_pipeline.PLAN_TWINS): the eager index checkpoint renders as
     'Scan ExistingRDD' and would hide the ivf_assign pipeline from the
     plan screens (review r12); the registered query keeps
     checkpoint=True (three consumers of the index frame in one plan)."""

@@ -1,24 +1,16 @@
-"""Staging area for registry entries awaiting a driver-window slot.
+"""Registered training-data pipeline, stream-replay and
+versioned/Delta-source rows.
 
-The driver's first-50 correctness window can't always fit new
-registrations in the round they're written; entries land here with
-finished Spark sides, DuckDB oracles, and local parity tests
-(tests/test_staged_queries.py), then rotate into the LIVE ``register``
-in a later round's window plan. The r04 cohort (gopher quality
-profile, C4 page cleaning, gopher repetition, quality-aware keep-best
-dedup) was PROMOTED in r05; the r06 cohort (merge_stream_replay,
-rollup_stream_replay) in r06; and the fifteen-query r07 cohort
-(sessionize/retention stream replays, repeated_span_dedup, the BPE
-tokenizer pair, quality_classifier_margin, n-gram diversity + its
-accuracy pin, WAV/BMP decode, PQ + IVF·PQ top-k, and the KLL/theta
-sketch rollups) was PROMOTED in r07; the fifteen-query r08 cohort
-(unicode/manifest/XML/ORC roundtrips, theta-overlap accuracy pin,
-interval overlap, heavy-hitters batch + stream replay, binaryFile WAV
-ingest, join skew/cardinality diagnostics, FastSS typo pairs, dedup
-stream replay, VARIANT props, as-of nearest click) in r09 — every
-``@register`` below this docstring is LIVE; the module keeps its name
-and the ``register_staged`` hook for future cohorts. Entries staged
-for r10 (if any) sit at the bottom under ``@register_staged``.
+The rows here cover the corpus side of the engine: quality filters,
+dedup, tokenizers, classifiers, sampling and mixture planning, media
+decode, vector/ANN indexes, sketches; micro-batch stream replays
+(sessionize, merge/rollup, heavy hitters, dedup, drift, containment)
+folded through ``streaming/replay.replay_batches``; and the versioned
+and open-protocol Delta table sources (time travel, change feed, the
+Python DataSource and Structured Streaming drains). Every row is a
+plain ``@register`` entry of the one registry in registry.py.
+``PLAN_TWINS`` maps the rows whose registered frame is checkpointed to
+the un-checkpointed plan the lint/digest screens read instead.
 
 Oracle-parity rules honored here (NOTES.md lore #6/#8/#14): every
 computed column aliased identically on both sides, integer aggregates
@@ -35,41 +27,6 @@ from pyspark.sql import functions as F
 from pyspark_unload_to_gcs_spark.session import session_memo
 
 from pyspark_unload_to_gcs_spark.registry import _t, register
-
-_STAGED: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-_STAGED_ORACLES: dict[str, str] = {}
-
-
-def register_staged(name: str, oracle: str | None = None):
-    def deco(fn):
-        _STAGED[name] = fn
-        if oracle is not None:
-            _STAGED_ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-def staged_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return dict(_STAGED)
-
-
-def staged_oracle_sql() -> dict[str, str]:
-    return dict(_STAGED_ORACLES)
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Live + staged queries in ONE view, live winning a name collision
-    (there are none — tests/test_staged_queries.py pins that). The one
-    maintained spelling of the merge rule, shared by the CLI runner and
-    the plan-lint suite (review r11: the rule had drifted into two
-    copies)."""
-    from pyspark_unload_to_gcs_spark import registry
-
-    merged = dict(registry.queries())
-    for name, fn in _STAGED.items():
-        merged.setdefault(name, fn)
-    return merged
 
 
 # --------------------------------------------------------------------------
@@ -534,7 +491,7 @@ def rollup_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Incremental sessionization replay (r07 staged cohort)
+# Incremental sessionization replay
 # --------------------------------------------------------------------------
 
 _SESSION_REPLAY_SQL = """
@@ -648,7 +605,7 @@ def retention_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Corpus-wide repeated-span removal (r07 staged cohort)
+# Corpus-wide repeated-span removal
 # --------------------------------------------------------------------------
 
 _SPAN_K, _SPAN_M = 10, 2
@@ -718,7 +675,7 @@ def repeated_span_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# BPE tokenizer: training replay + corpus tokenization (r07 staged cohort)
+# BPE tokenizer: training replay + corpus tokenization
 # --------------------------------------------------------------------------
 
 _BPE_MERGES = 8  # unrolled-CTE depth in the oracle; keep train/oracle in sync
@@ -868,7 +825,7 @@ def bpe_tokenize_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Hashed-feature linear classifier scoring (r07 staged cohort)
+# Hashed-feature linear classifier scoring
 # --------------------------------------------------------------------------
 
 _CLS_BUCKETS = 4096
@@ -936,7 +893,7 @@ def quality_classifier_margin_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# n-gram diversity profile (r07 staged cohort)
+# n-gram diversity profile
 # --------------------------------------------------------------------------
 
 _DIVERSITY_SQL = """
@@ -1040,7 +997,7 @@ def ngram_diversity_approx_accuracy_q(spark: SparkSession, sf_dir: str) -> DataF
 
 
 # --------------------------------------------------------------------------
-# REAL media decode under a closed-form oracle (r07 staged cohort)
+# REAL media decode under a closed-form oracle
 # --------------------------------------------------------------------------
 #
 # The decode capability for uncompressed formats is REAL in this
@@ -1180,7 +1137,7 @@ def bmp_decode_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Product-quantization ANN top-k (r07 staged cohort)
+# Product-quantization ANN top-k
 # --------------------------------------------------------------------------
 
 _PQ_M, _PQ_K, _PQ_SUB = 4, 16, 16  # m subspaces, k codes, dim 64 -> sub 16
@@ -1449,7 +1406,7 @@ def vector_topk_ivfpq_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Mergeable sketch rollups (r07 staged cohort)
+# Mergeable sketch rollups
 # --------------------------------------------------------------------------
 
 _KLL_SQL = """
@@ -1557,11 +1514,9 @@ def theta_user_day_overlap_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# r08 STAGED cohort: driver rows for the round-6 third-wave capabilities
-# (VERDICT r06 #3) — Unicode normalization over PLANTED non-ASCII text,
-# the manifest-validated export roundtrip, and the XML ingestion
-# roundtrip. Staged because the r07 window is full; the r08 rotation
-# plan in registry.py promotes them.
+# Ingestion/export roundtrips: Unicode normalization over PLANTED
+# non-ASCII text, the manifest-validated export roundtrip, and the XML
+# ingestion roundtrip.
 # --------------------------------------------------------------------------
 
 # Planted suffixes: the driver fixtures are pure ASCII, so a
@@ -1858,7 +1813,7 @@ def theta_overlap_estimate_accuracy_q(spark: SparkSession, sf_dir: str) -> DataF
 
 
 # --------------------------------------------------------------------------
-# Interval-overlap join (engine addition; staged r08)
+# Interval-overlap join
 # --------------------------------------------------------------------------
 
 _IVL_DAY = 86_400_000
@@ -1955,7 +1910,7 @@ def activity_window_overlap_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Frequent-items heavy-hitter rollup (approx_top_k family; staged r08)
+# Frequent-items heavy-hitter rollup (approx_top_k family)
 # --------------------------------------------------------------------------
 
 _HH_SQL = """
@@ -2007,7 +1962,7 @@ def heavy_hitters_daily_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# binaryFile media ingestion + ORC ingestion roundtrips (staged r08)
+# binaryFile media ingestion + ORC ingestion roundtrips
 # --------------------------------------------------------------------------
 
 _BINFILE_WAV_SQL = """
@@ -2162,7 +2117,7 @@ def orc_ingest_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Join-key skew diagnostics (staged r08)
+# Join-key skew diagnostics
 # --------------------------------------------------------------------------
 
 _SKEW_SQL = """
@@ -2220,7 +2175,7 @@ def join_key_skew_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Edit-distance dedup (FastSS deletion neighborhood; staged r08)
+# Edit-distance dedup (FastSS deletion neighborhood)
 # --------------------------------------------------------------------------
 
 _TYPO_SQL = """
@@ -2272,99 +2227,8 @@ def name_typo_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Exactly-once ingestion dedup stream replay (staged r08)
+# Join cardinality diagnostics
 # --------------------------------------------------------------------------
-
-_DEDUP_REPLAY_SQL = """
-SELECT event_id, user_id, event_type, value, epoch_ms(ts) AS ts_ms
-FROM events
-"""
-
-
-@register_staged("dedup_stream_replay", oracle=_DEDUP_REPLAY_SQL)
-def dedup_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-write-wins ingestion dedup (streaming/dedup.py
-    ``dedup_batch``) replayed over three micro-batches that simulate
-    at-least-once delivery with PAYLOAD-MUTATING retries.
-
-    DEMOTED to staged in r15 (VERDICT r14 #1): this is the FULL-REWRITE
-    state protocol — every fold rewrites the accumulated accepted set —
-    whose 100 TB posture was deliberately replaced by the key-indexed
-    arm. ``indexed_dedup_stream_replay`` (driver-green r14) pins the
-    SAME poisoned-replay semantics on the same batches with O(keys +
-    batch) state I/O per fold; keeping both in the live bench cost
-    14.7 s to prove one thing twice. The operator, its oracle, and its
-    protocol tests (tests/test_streaming.py) all remain; only the
-    bench/driver row is retired.
-
-    Original replay shape:
-
-    - batch 0: events from the first 10 days (original payloads,
-      seq 0);
-    - batch 1: the next 10 days PLUS a redelivery of every
-      event_id % 4 == 0 row from batch 0 with value poisoned (+1000,
-      seq 1) PLUS a poisoned within-batch duplicate of its own
-      event_id % 9 == 0 rows (seq 1 vs the original's seq 0);
-    - batch 2: the remaining days plus a poisoned redelivery of
-      batch 1's event_id % 5 == 0 rows.
-
-    The accepted set must equal the ORIGINAL events table exactly —
-    any duplicate admitted, any poisoned payload kept, or any
-    first-occurrence dropped flips row count or value hash. Cross-
-    batch admission is an anti-join on the accumulated state's keys;
-    within-batch collapse keeps the lowest sequence; retries rewrite
-    version ``v=batch_id`` idempotently (exactly-once posture shared
-    with merge/rollup replays)."""
-    from pyspark_unload_to_gcs_spark.functions.timestamps import (
-        epoch_ms as epoch_ms_col,
-    )
-    from pyspark_unload_to_gcs_spark.streaming.dedup import (
-        dedup_batch,
-        read_deduped,
-    )
-    from pyspark_unload_to_gcs_spark.streaming.replay import replay_batches
-
-    ev = _t(spark, sf_dir, "events")
-    base = ev.select(
-        "event_id",
-        "user_id",
-        "event_type",
-        "value",
-        epoch_ms_col(ev, "ts").alias("ts_ms"),
-    )
-    day = F.floor(F.col("ts_ms") / 86_400_000) - F.floor(
-        F.lit(1_704_067_200_000) / 86_400_000
-    )  # days since 2024-01-01 (events fixture spans Jan 2024)
-    tag = lambda df, s: df.withColumn("__seq", F.lit(s))  # noqa: E731
-    poison = lambda df: df.withColumn("value", F.col("value") + 1000.0)  # noqa: E731
-
-    b0_rows = base.filter(day < 10)
-    b1_rows = base.filter((day >= 10) & (day < 20))
-    b2_rows = base.filter(day >= 20)
-    b0 = tag(b0_rows, 0)
-    b1 = (
-        tag(b1_rows, 0)
-        .unionByName(tag(poison(b0_rows.filter(F.col("event_id") % 4 == 0)), 1))
-        .unionByName(tag(poison(b1_rows.filter(F.col("event_id") % 9 == 0)), 1))
-    )
-    b2 = tag(b2_rows, 0).unionByName(
-        tag(poison(b1_rows.filter(F.col("event_id") % 5 == 0)), 1)
-    )
-    return replay_batches(
-        spark,
-        ("dedup_replay", sf_dir),
-        (b0, b1, b2),
-        lambda frame, i, state: dedup_batch(
-            frame,
-            i,
-            key_columns=["event_id"],
-            sequence_column="__seq",
-            state_path=state,
-        ),
-        lambda state: read_deduped(spark, state),
-        prefix="dedup_stream_replay_",
-    )
-
 
 _JOINCARD_SQL = """
 WITH lo AS (
@@ -2426,7 +2290,7 @@ def join_cardinality_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# VARIANT semi-structured profile (Spark 4 shredded type; staged r08)
+# VARIANT semi-structured profile (Spark 4 shredded type)
 # --------------------------------------------------------------------------
 
 _VARIANT_SQL = """
@@ -2473,7 +2337,7 @@ def variant_props_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Streaming heavy-hitters sketch fold (staged r08)
+# Streaming heavy-hitters sketch fold
 # --------------------------------------------------------------------------
 
 
@@ -2520,7 +2384,7 @@ def heavy_hitters_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # --------------------------------------------------------------------------
-# Nearest-direction as-of join (pandas merge_asof parity; staged r08)
+# Nearest-direction as-of join (pandas merge_asof parity)
 # --------------------------------------------------------------------------
 
 _ASOF_NEAREST_SQL = """
@@ -2659,7 +2523,7 @@ def asof_forward_tolerance_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Incremental on-disk IVF-PQ index maintenance (staged r10; VERDICT r08 #8)
+# Incremental on-disk IVF-PQ index maintenance
 # --------------------------------------------------------------------------
 
 
@@ -2845,8 +2709,7 @@ def _pq_incr_base(spark: SparkSession, sf_dir: str):
 
 
 # --------------------------------------------------------------------------
-# Perceptual-hash image dedup over the real BMP raster path (staged r10;
-# VERDICT r08 #8 stretch, option B)
+# Perceptual-hash image dedup over the real BMP raster path
 # --------------------------------------------------------------------------
 
 _AHASH_SQL = """
@@ -2959,8 +2822,8 @@ def image_ahash_dup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Versioned-parquet time travel + change feed (staged r10; runtime-proven
-# S2-S4 semantics while delta-spark stays env-blocked)
+# Versioned-parquet time travel + change feed (S2-S4 semantics without
+# delta-spark)
 # --------------------------------------------------------------------------
 
 
@@ -3074,7 +2937,7 @@ def versioned_change_feed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Parquet footer statistics profile (staged r10): pruning pre-flight
+# Parquet footer statistics profile: pruning pre-flight
 # --------------------------------------------------------------------------
 
 _FOOTER_SQL = """
@@ -3122,7 +2985,7 @@ def footer_stats_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Python DataSource batch read over the versioned table (staged r10)
+# Python DataSource batch read over the versioned table
 # --------------------------------------------------------------------------
 
 _VERSIONED_DS_SQL = """
@@ -3157,7 +3020,7 @@ def versioned_datasource_snapshot_q(spark: SparkSession, sf_dir: str) -> DataFra
 
 
 # --------------------------------------------------------------------------
-# TRUE Structured Streaming drain of the commit stream (staged r10)
+# TRUE Structured Streaming drain of the commit stream
 # --------------------------------------------------------------------------
 
 _VERSIONED_STREAM_SQL = """
@@ -3230,10 +3093,8 @@ def versioned_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r11 cohort (staged in r11, PROMOTED to live ``@register`` in r12:
-#     margin_align_auto, mined_pairs_retrieval_eval, leakage_safe_split,
-#     bloom_prune_join, join_size_preflight, temperature_mix_sample,
-#     rtbf_delete_propagation, ivf_index_drift) --------------------------
+# --- versioned change-feed merge replay, DSIR selection, gap fill, scan
+#     pruning, margin alignment mining ---------------------------------
 
 _VERSIONED_CDF_MERGE_SQL = """
 SELECT o_orderkey, o_custkey,
@@ -3680,8 +3541,9 @@ def margin_align_mining_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Entries staged for r12 promotion (parity-tested at sf0.001 + sf0.01,
-# budgets pre-recorded, x10-audited; see registry.py rotation plan)
+# Alignment mining, retrieval eval, leakage-safe split, bloom-prune
+# joins, join-size pre-flight, temperature mixing, right-to-be-forgotten
+# propagation and IVF drift
 # --------------------------------------------------------------------------
 
 
@@ -4464,10 +4326,10 @@ def ivf_index_drift_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Entries staged for r13 promotion (see registry.py rotation plan):
-# the quota-mix streaming twin and the bloom-prune->exact-join
-# composition named in VERDICT r11 #4, plus a categorical-PSI dataset
-# drift monitor and contrastive hard-negative mining.
+# Bloom-prune->exact-join composition, dataset drift (categorical and
+# value PSI, streaming), quota-mix stream replay, contrastive
+# hard-negative mining, containment dedup and incremental containment
+# matching.
 # --------------------------------------------------------------------------
 
 _BPEJ_SQL = """
@@ -5138,11 +5000,9 @@ def _incr_containment_frame(
 
 
 # --------------------------------------------------------------------------
-# r14 STAGED COHORT (library code + tests landed r12; rows staged r13).
-# Everything below is @register_staged: parity-tested at sf0.001+sf0.01
-# by tests/test_staged_queries.py, plan-budgeted by the staged-aware
-# plan_digest, promoted to live @register next round per the rotation
-# plan pinned in registry.py.
+# Training-shard layout, indexed ingestion dedup, streaming
+# decontamination, LM quality gate, canary audit, audio dedup, URL
+# canonicalization and boilerplate line dedup.
 # --------------------------------------------------------------------------
 
 
@@ -5238,21 +5098,33 @@ def shard_balance_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- exactly-once ingestion dedup, key-index/append-only arm ----------------
 
+_DEDUP_REPLAY_SQL = """
+SELECT event_id, user_id, event_type, value, epoch_ms(ts) AS ts_ms
+FROM events
+"""
+
 
 @register("indexed_dedup_stream_replay", oracle=_DEDUP_REPLAY_SQL)
 def indexed_dedup_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``dedup_stream_replay``'s key-index/append-only twin
-    (streaming/dedup.py ``dedup_batch_indexed`` / ``read_accepted``):
-    the same three poisoned at-least-once micro-batches, the same
-    first-write-wins contract, but versioned state holds ONLY the key
-    index and accepted payloads land in an append-only table — the
-    payload is written once and never rewritten, which is the 100 TB
-    ingestion posture (``dedup_batch`` rewrites the full accumulated
-    corpus every micro-batch; measured 2.33 s vs 3.91 s at 2M rows
-    and the gap grows with corpus size). Same oracle: the accepted
-    union must equal the ORIGINAL events table exactly — an admitted
-    duplicate, a kept poisoned payload, or a dropped first occurrence
-    flips the value hash."""
+    """First-write-wins ingestion dedup (streaming/dedup.py
+    ``dedup_batch_indexed`` / ``read_accepted``) replayed over three
+    micro-batches that simulate at-least-once delivery with
+    PAYLOAD-MUTATING retries. Versioned state holds ONLY the key index
+    and accepted payloads land in an append-only table, so the payload
+    is written once and never rewritten.
+
+    - batch 0: events from the first 10 days (original payloads,
+      seq 0);
+    - batch 1: the next 10 days PLUS a redelivery of every
+      event_id % 4 == 0 row from batch 0 with value poisoned (+1000,
+      seq 1) PLUS a poisoned within-batch duplicate of its own
+      event_id % 9 == 0 rows (seq 1 vs the original's seq 0);
+    - batch 2: the remaining days plus a poisoned redelivery of
+      batch 1's event_id % 5 == 0 rows.
+
+    The accepted union must equal the ORIGINAL events table exactly —
+    an admitted duplicate, a kept poisoned payload, or a dropped first
+    occurrence flips the value hash."""
     from pyspark_unload_to_gcs_spark.functions.timestamps import (
         epoch_ms as epoch_ms_col,
     )
@@ -5546,7 +5418,7 @@ def bigram_lm_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     an LM-quality stage). FULL value oracle: round-6+DECIMAL
     transition accumulation replays bit-for-bit, and the expected
     natural > shuffled > OOV mean ordering is pinned by
-    tests/test_staged_queries.py on this exact frame. Scale: the
+    tests/test_operators.py on a hand-built corpus. Scale: the
     train slice tokenizes once; the bigram table hash-joins
     (deliberately not broadcast — |bigram vocab| rows), unigrams
     broadcast; one explode over the scored corpus."""
@@ -5800,7 +5672,7 @@ def audio_dup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -- URL canonicalization profile (r13 continuation staging) ----------------
+# -- URL canonicalization profile -------------------------------------------
 
 
 def _url_profile_oracle() -> str:
@@ -5951,7 +5823,7 @@ def url_canonical_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -- corpus boilerplate line dedup (r13 continuation staging) ---------------
+# -- corpus boilerplate line dedup -------------------------------------------
 
 
 def _line_dedup_oracle() -> str:
@@ -6041,9 +5913,10 @@ def line_dedup_boilerplate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# r15 COHORT — staged EARLY in the r13 continuation sitting (library
-# code + model-twin tests landed the same sitting; rows get full value
-# oracles here and promote after the r14 cohort per the rotation pin).
+# Quality-gate diagnostics: threshold sweeps, calibration, exact AUC,
+# mixture deviation and reweighting, domain-fair keeps, epoch
+# schedules, split leakage, within-document line dedup, robots gating,
+# HTML boilerplate and language-ID confusion.
 # --------------------------------------------------------------------------
 
 from pyspark_unload_to_gcs_spark.registry_extensions import (  # noqa: E402
@@ -6897,9 +6770,8 @@ def langid_confusion_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# R16 cohort (staged r14 per VERDICT r13 #4): oracled rows for the three
-# library-only candidates — exact percentiles / winsorize, the ensemble
-# quality combiner, and MIME sniffing.
+# Exact percentiles / winsorize, the ensemble quality combiner, and
+# MIME sniffing.
 # --------------------------------------------------------------------------
 
 _PCT_PPMS = [10_000, 250_000, 500_000, 750_000, 990_000]
@@ -7169,7 +7041,7 @@ def mime_sniff_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Open-protocol Delta log rows (staged r14 continuation): S2/S3/S4
+# Open-protocol Delta log rows: S2/S3/S4
 # runtime semantics on the PUBLIC Delta table format, no delta-spark —
 # the minimal log reader/writer in sources/delta_log.py. Same commit
 # arms and closed-form oracles as the versioned-parquet twins, so the

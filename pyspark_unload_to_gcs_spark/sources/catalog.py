@@ -106,12 +106,6 @@ def load_sf_dir(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTD
     return {name: load_parquet(spark, os.path.join(sf_dir, f"{name}.parquet")) for name in names}
 
 
-def register_sf_dir(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES) -> None:
-    """Register each parquet table as a temp view for spark.sql use."""
-    for name, df in load_sf_dir(spark, sf_dir, names).items():
-        df.createOrReplaceTempView(name)
-
-
 def custom_sql_source(
     spark: SparkSession,
     sql_dir: str,

@@ -11,7 +11,7 @@ contracts:
    on a stream keeps every key forever; use it only when the key space
    is small and closed.
 
-2. ``dedup_batch`` / ``start_streaming_dedup`` — UNBOUNDED
+2. ``dedup_batch_indexed`` / ``start_streaming_dedup`` — UNBOUNDED
    first-write-wins with explicit versioned state, for the contract
    watermark expiry cannot give: a row may arrive again arbitrarily
    late, possibly with a MUTATED payload from a retried upstream job,
@@ -19,29 +19,24 @@ contracts:
    - within the batch: collapse to the lowest ``sequence_column`` row
      per key (one hash shuffle on the key);
    - across batches: anti-join the collapsed batch against the
-     accumulated state's keys (same shuffle key — exchange reuse);
+     accumulated key index (same shuffle key — exchange reuse);
    - exactly-once across RETRIES (same protocol as streaming/merge.py
-     / rollup.py): state version ``v=<batch_id>`` derives only from
-     the latest version ``< batch_id`` plus the batch rows, written
-     with overwrite, so a retried batch rewrites the identical state
-     instead of re-admitting rows.
+     / rollup.py): key-index version ``v=<batch_id>`` derives only
+     from the latest version ``< batch_id`` plus the batch rows,
+     written with overwrite, so a retried batch rewrites the identical
+     state instead of re-admitting rows.
 
-   Two state layouts share the collapse/anti-join algebra:
-   ``dedup_batch`` keeps the accumulated deduped output itself as the
-   versioned state (simple, and what the replay oracle reads back;
-   O(corpus) rewrite per batch — fine while the accepted set is
-   small); ``dedup_batch_indexed`` is the 100 TB posture — versioned
-   state holds only the KEY INDEX and accepted rows append to an
-   insert-only table (``read_accepted``), so the payload is written
-   once and never rewritten.
+   Versioned state holds only the KEY INDEX; accepted rows append to
+   an insert-only table (``read_accepted``), so the payload is written
+   once and never rewritten and per-batch state I/O is O(keys +
+   batch), not O(corpus).
 
 ``state_path`` works on any URI scheme the cluster's Hadoop conf can
 serve (file:/gs:/s3a:/hdfs:): writes go through the Spark parquet
-writer and the commit-gated readbacks (``read_deduped`` /
-``read_accepted``) list state through the Hadoop-FS-backed
-``rollup.committed_dirs`` (ADVICE r12: the earlier glob-based listing
-silently returned None on non-POSIX schemes while committed state
-existed).
+writer and the commit-gated readbacks (``read_accepted`` and the
+key index) list state through the Hadoop-FS-backed
+``rollup.committed_dirs`` (a glob-based listing would silently miss
+committed state on non-POSIX schemes).
 """
 
 from __future__ import annotations
@@ -86,36 +81,6 @@ def _orderable(dt) -> bool:
     if isinstance(dt, T.StructType):
         return all(_orderable(f.dataType) for f in dt.fields)
     return True
-
-
-def read_deduped(
-    spark: SparkSession, state_path: str, *, before: int | None = None
-) -> DataFrame | None:
-    """Latest committed deduped output (same layout as rollup state)."""
-    return read_state(spark, state_path, before=before)
-
-
-def dedup_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    *,
-    key_columns: Sequence[str],
-    sequence_column: str,
-    state_path: str,
-) -> None:
-    """Fold one micro-batch: admit only first-seen keys (module
-    docstring, contract 2). Deterministic in (state@<batch_id, batch
-    rows)."""
-    spark = batch_df.sparkSession
-    collapsed = _collapse_batch(batch_df, key_columns, sequence_column)
-    prev = read_deduped(spark, state_path, before=batch_id)
-    if prev is None:
-        nxt = collapsed
-    else:
-        nxt = prev.unionByName(
-            _first_seen_rows(collapsed, prev, key_columns)
-        )
-    nxt.write.mode("overwrite").parquet(_sub(state_path, f"v={batch_id}"))
 
 
 def _collapse_batch(
@@ -177,16 +142,12 @@ def start_streaming_dedup(
     state_path: str,
     checkpoint_dir: str,
     trigger_available_now: bool = True,
-    indexed: bool = False,
 ):
-    """Continuously admit first-seen rows from a stream; returns the
-    StreamingQuery. ``indexed=False`` folds via ``dedup_batch`` (read
-    back with ``read_deduped``); ``indexed=True`` is the key-index /
-    append-only layout (``dedup_batch_indexed`` / ``read_accepted``) —
-    the posture for corpora too large to rewrite per batch."""
-    fold = dedup_batch_indexed if indexed else dedup_batch
+    """Continuously admit first-seen rows from a stream with
+    ``dedup_batch_indexed`` (read back with ``read_accepted``); returns
+    the StreamingQuery."""
     writer = stream_df.writeStream.foreachBatch(
-        lambda bdf, bid: fold(
+        lambda bdf, bid: dedup_batch_indexed(
             bdf,
             bid,
             key_columns=key_columns,
@@ -199,11 +160,6 @@ def start_streaming_dedup(
     return writer.start()
 
 
-# ---------------------------------------------------------------------------
-# key-index mode: the 100 TB posture of contract 2
-# ---------------------------------------------------------------------------
-
-
 def dedup_batch_indexed(
     batch_df: DataFrame,
     batch_id: int,
@@ -212,16 +168,13 @@ def dedup_batch_indexed(
     sequence_column: str,
     state_path: str,
 ) -> None:
-    """``dedup_batch`` with the module docstring's documented swap
-    point made real: versioned state holds ONLY the key index
+    """Fold one micro-batch: admit only first-seen keys (module
+    docstring, contract 2). Versioned state holds ONLY the key index
     (``<state>/keys/v=<b>`` — the narrow columns the anti-join needs),
     and accepted rows land in an append-only table
     (``<state>/accepted/b=<b>``, one idempotent overwrite per batch).
     Per-batch cost is O(keys rewrite + batch) — the PAYLOAD is written
-    once and never rewritten, which is the difference between a
-    maintainable 100 TB corpus and rewriting the corpus every
-    micro-batch (``dedup_batch`` rewrites the full accumulated output,
-    fine while the accepted set is small, ruinous at scale).
+    once and never rewritten.
 
     Exactly-once across retries, same protocol: both writes derive
     only from (keys@<batch_id, batch rows), so a retried batch
@@ -251,7 +204,7 @@ def dedup_batch_indexed(
 def read_accepted(
     spark: SparkSession, state_path: str
 ) -> DataFrame | None:
-    """The accepted (deduped) rows of the key-index mode: the union of
+    """The accepted (deduped) rows: the union of
     every COMMITTED ``accepted/b=<b>`` slice (the shared _SUCCESS gate
     of rollup.committed_dirs — a torn write must not surface). Returns
     None before any batch committed."""

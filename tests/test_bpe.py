@@ -319,3 +319,39 @@ def test_load_merges_rejects_mismatched_tokenization_base(spark, tmp_path):
     ).write.parquet(path)
     with pytest.raises(ValueError, match="different .* tokenization|tokenization base"):
         load_merges(spark, path)
+
+
+def test_bpe_oracle_survives_training_exhaustion(spark):
+    """If training exhausts before _BPE_MERGES merges (degenerate
+    corpus), the unrolled replay's per-step CTE must become a no-op —
+    an unguarded CROSS JOIN against the empty top-1 frame would delete
+    every word state and zero the counts (review finding). The corpus
+    here supports only 3 merges; both BPE oracles must still match."""
+    import duckdb
+    import pandas as pd
+
+    from pyspark_unload_to_gcs_spark.operators.bpe import bpe_encode_counts, bpe_train
+    from pyspark_unload_to_gcs_spark.registry_pipeline import (
+        _BPE_COUNTS_SQL,
+        _BPE_TRAIN_SQL,
+    )
+    from tests.oracle_harness import assert_matches
+
+    rows = [(1, "ab ab"), (2, "ab"), (3, "")]
+    pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
+    con = duckdb.connect()
+    con.register("documents", pdf)
+    docs = spark.createDataFrame(pdf)
+
+    merges = bpe_train(docs, num_merges=8, with_counts=True)
+    # exhausts after (a,b) then (ab,</w>): every word is one symbol
+    assert len(merges) == 2
+    merge_rows = [(i + 1, a, b, int(c)) for i, (a, b, c) in enumerate(merges)]
+    train_df = spark.createDataFrame(
+        merge_rows, "rank bigint, a string, b string, pair_count bigint"
+    )
+    assert_matches(train_df, con, _BPE_TRAIN_SQL, name="bpe_train_exhausted")
+
+    counts = bpe_encode_counts(docs, [(a, b) for a, b, _ in merges])
+    assert_matches(counts, con, _BPE_COUNTS_SQL, name="bpe_counts_exhausted")
+    con.close()

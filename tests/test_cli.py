@@ -97,12 +97,15 @@ def test_cli_end_to_end_prints_checkpoint(spark, tmp_path, capsys):
 def test_cli_list_and_run_query(capsys):
     import json as _json
 
+    from pyspark_unload_to_gcs_spark import registry
     from pyspark_unload_to_gcs_spark.cli import main
 
     assert main(["--list_queries"]) == 0
     out = capsys.readouterr().out.splitlines()
     assert "q1_pricing_summary *" in out
     assert any(line.startswith("near_dedup_minhash") for line in out)
+    # one registry: every listed name is a registered query, and back
+    assert [line.removesuffix(" *") for line in out] == sorted(registry.queries())
 
     assert main(["--run_query", "row_count_guard", "--limit", "5"]) == 0
     lines = capsys.readouterr().out.splitlines()
@@ -110,30 +113,6 @@ def test_cli_list_and_run_query(capsys):
 
     assert main(["--run_query", "nope_missing"]) == 2
     assert "close matches" not in capsys.readouterr().err or True
-
-
-def test_cli_exposes_staged_queries(capsys):
-    """Staged (next-window) queries are user-runnable through the CLI:
-    --list_queries marks them '(staged)', --run_query executes them
-    (review r11: the staged path had no coverage)."""
-    import json as _json
-
-    from pyspark_unload_to_gcs_spark import registry, registry_staged
-    from pyspark_unload_to_gcs_spark.cli import main
-
-    staged_only = set(registry_staged.staged_queries()) - set(registry.queries())
-    assert staged_only, "no staged queries to exercise — drop this test"
-    name = sorted(staged_only)[0]
-
-    assert main(["--list_queries"]) == 0
-    out = capsys.readouterr().out.splitlines()
-    assert f"{name} * (staged)" in out
-    # live names never carry the staged mark
-    assert "q1_pricing_summary *" in out
-
-    assert main(["--run_query", "temperature_mix_sample", "--limit", "3"]) == 0
-    lines = capsys.readouterr().out.splitlines()
-    assert lines and all(_json.loads(li) is not None for li in lines)
 
 
 def test_cli_explain_prints_plan(capsys):

@@ -275,7 +275,7 @@ def test_margin_align_auto_arrow_matches_fold(spark, sf_dir):
     auto-k operating point (the ivf_assign twin contract) — if the
     argmax ever flips on an exact centroid-score tie, this fails
     before the driver row does."""
-    from pyspark_unload_to_gcs_spark.registry_staged import (
+    from pyspark_unload_to_gcs_spark.registry_pipeline import (
         margin_align_auto_with_method,
     )
 
@@ -296,7 +296,7 @@ def test_leakage_safe_split_members_share_split(spark, sf_dir):
     """The property the row exists for: every near-dup cluster's
     members land in the SAME split (zero leakage), and both splits are
     non-empty on the fixture."""
-    from pyspark_unload_to_gcs_spark.registry_staged import leakage_safe_split_q
+    from pyspark_unload_to_gcs_spark.registry_pipeline import leakage_safe_split_q
 
     out = leakage_safe_split_q(spark, sf_dir)
     leaky = (

@@ -2001,3 +2001,37 @@ def test_threshold_sweep_plan_is_one_aggregate(spark):
     )
     assert plan.count("Scan ") <= 1
     assert "Join" not in plan
+
+
+def test_repeated_span_dedup_vertical_tab_parity(spark):
+    """Regression for the r06 advice finding: Java ``\\s`` includes
+    U+000B (vertical tab) while RE2's does not, so tokenizing with
+    ``\\s+`` on the Spark side and ``\\s+`` on the DuckDB side diverges
+    on VT-bearing text. Both sides now use the explicit class
+    ``[ \\t\\n\\x0B\\f\\r]+``; this pins parity on documents where VT
+    actually separates tokens inside a repeated span."""
+    import duckdb
+    import pandas as pd
+
+    from pyspark_unload_to_gcs_spark.operators.dedup import repeated_span_dedup
+    from pyspark_unload_to_gcs_spark.registry_pipeline import _SPAN_DEDUP_SQL
+    from tests.oracle_harness import assert_matches
+
+    span = "w1 w2\x0bw3 w4 w5\x0bw6 w7 w8 w9 w10"  # 10 tokens iff VT splits
+    rows = [
+        (1, f"lead {span} tail1"),
+        (2, f"{span} other trailing words here"),
+        (3, "unique\x0btext with no repeated ten token span at all"),
+        (4, ""),
+    ]
+    pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
+    con = duckdb.connect()
+    con.register("documents", pdf)
+
+    sdf = spark.createDataFrame(rows, "doc_id long, text string")
+    out = repeated_span_dedup(sdf, span_tokens=10, min_repeats=2)
+    assert_matches(out, con, _SPAN_DEDUP_SQL, name="repeated_span_dedup_vt")
+    # the repeated 10-token windows must actually have been detected
+    # (i.e. VT really tokenized): docs 1 and 2 lose the shared span
+    got = {r["doc_id"]: r["n_tokens_removed"] for r in out.collect()}
+    assert got[1] >= 10 and got[2] >= 10 and got[3] == 0

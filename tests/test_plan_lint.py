@@ -22,14 +22,13 @@ from pathlib import Path
 
 import pytest
 
-from pyspark_unload_to_gcs_spark import registry, registry_staged
+from tools.plan_digest import screened_queries
 
-# staged queries are next round's window — lint them under the same
-# no-cartesian/no-BatchEvalPython/budget rules BEFORE they go live, so
-# a scale problem surfaces a round early (r11; the scale audit already
-# included them, the lint did not)
-_ALL = registry_staged.all_queries()
-QUERY_NAMES = sorted(_ALL.keys())
+# memoized-checkpoint queries render as 'Scan ExistingRDD' — lint their
+# PLAN TWIN (the un-checkpointed frame) so the real mining stages stay
+# under the anti-pattern screens
+_SCREENED = screened_queries()
+QUERY_NAMES = sorted(_SCREENED)
 _BUDGET_PATH = Path(__file__).resolve().parent / "plan_budgets.json"
 BUDGETS = json.loads(_BUDGET_PATH.read_text()) if _BUDGET_PATH.exists() else {}
 
@@ -47,11 +46,7 @@ def _plan(df) -> str:
 
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_plan_lint_and_budget(spark, sf_dir, name):
-    # memoized-checkpoint queries render as 'Scan ExistingRDD' — lint
-    # their PLAN TWIN (the un-checkpointed frame) so the real mining
-    # stages stay under the anti-pattern screens (review r12)
-    fn = registry_staged.PLAN_TWINS.get(name, _ALL[name])
-    plan = _plan(fn(spark, sf_dir))
+    plan = _plan(_SCREENED[name](spark, sf_dir))
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF in plan"
     assert "CartesianProduct" not in plan, f"{name}: cartesian product in plan"
 

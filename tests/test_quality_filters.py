@@ -386,3 +386,42 @@ def test_compression_ratio_quality_rejects_bad_level(spark):
     df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
     with _pytest.raises(ValueError, match="zlib level"):
         compression_ratio_quality(df, level=0)
+
+
+def test_staged_repetition_oracle_multiline_parity(spark):
+    """The fixture's docs are single-line, so the dup-line branch of
+    the gopher_repetition oracle is only trivially exercised there —
+    this pins Spark-vs-DuckDB parity on synthetic multi-line and
+    repetitive docs (the branch that caught DuckDB's list_position
+    returning 0, not NULL, for absent elements)."""
+    import duckdb
+    import pandas as pd
+
+    from pyspark_unload_to_gcs_spark.operators.quality_filters import (
+        gopher_repetition_profile,
+    )
+    from pyspark_unload_to_gcs_spark.registry_pipeline import _REP_SQL
+    from tests.oracle_harness import assert_matches
+
+    rows = [
+        (1, "same line here\nanother line\nsame line here\nthird line other"),
+        (2, " ".join(["buy now"] * 30)),
+        (3, "one two three four five six seven eight nine ten"),
+        (4, "a b\na b\na b\na b"),
+        (5, ""),
+    ]
+    pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
+    con = duckdb.connect()
+    con.register("documents", pdf)
+
+    sdf = spark.createDataFrame(rows, "doc_id long, text string")
+    out = gopher_repetition_profile(sdf)
+    frac_cols = [c for c in out.columns if c.endswith("_frac")]
+    from pyspark.sql import functions as FF
+
+    out = out.select(
+        "doc_id",
+        *[FF.round(FF.col(c), 9).alias(c) for c in frac_cols],
+        "repetition_ok",
+    )
+    assert_matches(out, con, _REP_SQL, name="gopher_repetition_multiline")

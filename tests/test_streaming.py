@@ -1202,15 +1202,15 @@ def test_incremental_sessionize_randomized_splits_match_batch(spark):
 
 def test_streaming_first_write_wins_dedup_and_retry(spark, sf_dir, tmp_path):
     """Versioned-state first-write-wins dedup (streaming/dedup.py
-    ``dedup_batch``): poisoned redeliveries across batches and
+    ``dedup_batch_indexed``): poisoned redeliveries across batches and
     duplicate rows within a batch must all lose to the first accepted
     version, and re-running the final batch (Spark retry semantics)
     must leave the state byte-identical."""
     from pyspark.sql import functions as F
 
     from pyspark_unload_to_gcs_spark.streaming.dedup import (
-        dedup_batch,
-        read_deduped,
+        dedup_batch_indexed,
+        read_accepted,
     )
 
     ev = load_parquet(spark, f"{sf_dir}/events.parquet").select(
@@ -1234,19 +1234,19 @@ def test_streaming_first_write_wins_dedup_and_retry(spark, sf_dir, tmp_path):
         )
     )
     for i, b in enumerate((b0, b1)):
-        dedup_batch(
+        dedup_batch_indexed(
             b, i, key_columns=["event_id"], sequence_column="__seq", state_path=state
         )
-    got = read_deduped(spark, state)
+    got = read_accepted(spark, state)
     want = {r["event_id"]: r["value"] for r in ev.collect()}
     got_map = {r["event_id"]: r["value"] for r in got.collect()}
     assert got_map == want  # every original kept, every poison dropped
 
     # retry batch 1: state must not change (version overwrite, not append)
-    dedup_batch(
+    dedup_batch_indexed(
         b1, 1, key_columns=["event_id"], sequence_column="__seq", state_path=state
     )
-    again = {r["event_id"]: r["value"] for r in read_deduped(spark, state).collect()}
+    again = {r["event_id"]: r["value"] for r in read_accepted(spark, state).collect()}
     assert again == want
 
 
@@ -1259,8 +1259,8 @@ def test_first_write_wins_dedup_null_keys_and_equal_seq_retry(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from pyspark_unload_to_gcs_spark.streaming.dedup import (
-        dedup_batch,
-        read_deduped,
+        dedup_batch_indexed,
+        read_accepted,
     )
 
     state = str(tmp_path / "null_dedup_state")
@@ -1274,9 +1274,13 @@ def test_first_write_wins_dedup_null_keys_and_equal_seq_retry(spark, tmp_path):
         [(None, 101.0, 1), (7, 30.0, 0), (7, 40.0, 0), (7, 5.0, None)],
         "k int, v double, __seq int",
     )
-    dedup_batch(b0, 0, key_columns=["k"], sequence_column="__seq", state_path=state)
-    dedup_batch(b1, 1, key_columns=["k"], sequence_column="__seq", state_path=state)
-    got = {r["k"]: r["v"] for r in read_deduped(spark, state).collect()}
+    dedup_batch_indexed(
+        b0, 0, key_columns=["k"], sequence_column="__seq", state_path=state
+    )
+    dedup_batch_indexed(
+        b1, 1, key_columns=["k"], sequence_column="__seq", state_path=state
+    )
+    got = {r["k"]: r["v"] for r in read_accepted(spark, state).collect()}
     assert got[None] == 1.0, "NULL-key redelivery was re-admitted"
     assert got[5] == 2.0
     assert got[7] == 30.0, "equal-seq tie must pick the deterministic min row"
@@ -1284,10 +1288,10 @@ def test_first_write_wins_dedup_null_keys_and_equal_seq_retry(spark, tmp_path):
 
     # retry batch 1 several times: state must be byte-identical
     for _ in range(3):
-        dedup_batch(
+        dedup_batch_indexed(
             b1, 1, key_columns=["k"], sequence_column="__seq", state_path=state
         )
-        again = {r["k"]: r["v"] for r in read_deduped(spark, state).collect()}
+        again = {r["k"]: r["v"] for r in read_accepted(spark, state).collect()}
         assert again == got
 
 
@@ -1300,8 +1304,8 @@ def test_first_write_wins_dedup_map_typed_payload(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from pyspark_unload_to_gcs_spark.streaming.dedup import (
-        dedup_batch,
-        read_deduped,
+        dedup_batch_indexed,
+        read_accepted,
     )
 
     state = str(tmp_path / "map_dedup_state")
@@ -1314,9 +1318,13 @@ def test_first_write_wins_dedup_map_typed_payload(spark, tmp_path):
         [(1, {"a": 999}, 1), (2, {"b": 1}, 0), (2, {"b": 2}, 0)],
         "k int, props map<string,int>, __seq int",
     )
-    dedup_batch(b0, 0, key_columns=["k"], sequence_column="__seq", state_path=state)
-    dedup_batch(b1, 1, key_columns=["k"], sequence_column="__seq", state_path=state)
-    got = {r["k"]: dict(r["props"]) for r in read_deduped(spark, state).collect()}
+    dedup_batch_indexed(
+        b0, 0, key_columns=["k"], sequence_column="__seq", state_path=state
+    )
+    dedup_batch_indexed(
+        b1, 1, key_columns=["k"], sequence_column="__seq", state_path=state
+    )
+    got = {r["k"]: dict(r["props"]) for r in read_accepted(spark, state).collect()}
     assert got[1] == {"a": 1}, "map-payload redelivery was re-admitted"
     assert got[2] in ({"b": 1}, {"b": 2})
     assert len(got) == 2
@@ -1324,11 +1332,11 @@ def test_first_write_wins_dedup_map_typed_payload(spark, tmp_path):
     # retries rewrite identical state (the winner of the key-2 tie
     # must be stable across re-executions)
     for _ in range(3):
-        dedup_batch(
+        dedup_batch_indexed(
             b1, 1, key_columns=["k"], sequence_column="__seq", state_path=state
         )
         again = {
-            r["k"]: dict(r["props"]) for r in read_deduped(spark, state).collect()
+            r["k"]: dict(r["props"]) for r in read_accepted(spark, state).collect()
         }
         assert again == got
 
@@ -1697,11 +1705,10 @@ def test_containment_index_build_refuses_empty(spark, tmp_path):
 
 
 def test_indexed_dedup_matches_full_mode_and_retries(spark, sf_dir, tmp_path):
-    """Key-index mode (streaming/dedup.py ``dedup_batch_indexed``):
-    the SAME poisoned 2-batch sequence must accept exactly the rows
-    the full-state mode accepts, the versioned state must hold ONLY
-    the key columns (the payload is append-only, never rewritten),
-    NULL keys stay first-class, and a retried fold leaves both the
+    """Key-index state (streaming/dedup.py ``dedup_batch_indexed``):
+    the poisoned 2-batch sequence must accept exactly the original
+    rows, the versioned state must hold ONLY the key columns (the
+    payload is append-only, never rewritten), NULL keys stay first-class, and a retried fold leaves both the
     accepted table and the key index identical."""
     from pyspark.sql import functions as F
 
@@ -1739,7 +1746,7 @@ def test_indexed_dedup_matches_full_mode_and_retries(spark, sf_dir, tmp_path):
         )
     got = {r["event_id"]: r["value"] for r in read_accepted(spark, state).collect()}
     want = {r["event_id"]: r["value"] for r in ev.collect()}
-    assert got == want  # identical accept decisions to the full mode
+    assert got == want  # every original kept, every poison dropped
 
     # the versioned state is the key index alone — payload stays out
     keys_state = read_state(spark, f"{state}/keys")
@@ -1783,7 +1790,7 @@ def test_indexed_dedup_null_keys(spark, tmp_path):
 def test_indexed_dedup_under_true_readstream(
     spark, events_stream_dir, events_schema, tmp_path
 ):
-    """start_streaming_dedup(indexed=True) under a REAL readStream:
+    """start_streaming_dedup under a REAL readStream:
     the file stream redelivers nothing here, so the accepted table
     must equal the full input — and the key index must be exactly the
     input's key set held in narrow columns."""
@@ -1804,7 +1811,6 @@ def test_indexed_dedup_under_true_readstream(
         sequence_column="__seq",
         state_path=state,
         checkpoint_dir=str(tmp_path / "idx_stream_ckpt"),
-        indexed=True,
     )
     q.awaitTermination(120)
 

@@ -25,10 +25,19 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark_unload_to_gcs_spark import registry_staged  # noqa: E402
+from pyspark_unload_to_gcs_spark import registry  # noqa: E402
+from pyspark_unload_to_gcs_spark.registry_pipeline import PLAN_TWINS  # noqa: E402
 from pyspark_unload_to_gcs_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+
+
+def screened_queries() -> dict:
+    """The registered queries as the digest, the budgets and
+    tests/test_plan_lint.py screen them: memoized-checkpoint queries
+    substitute their PLAN TWIN so the real plan is screened, not the
+    'Scan ExistingRDD' shell."""
+    return {**registry.queries(), **PLAN_TWINS}
 
 
 def digest(plan: str) -> dict:
@@ -64,13 +73,7 @@ def write_budgets(path: str | None = None) -> None:
     spark = get_spark(app_name="plan-budgets", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     budgets = {}
-    # live + staged, the same set tests/test_plan_lint.py lints (r12:
-    # staged budgets were previously hand-recorded and drifted);
-    # memoized-checkpoint queries substitute their PLAN TWIN so the
-    # real mining plan is budgeted, not the 'Scan ExistingRDD' shell
-    queries = dict(registry_staged.all_queries())
-    queries.update(registry_staged.PLAN_TWINS)
-    for name, q in queries.items():
+    for name, q in screened_queries().items():
         plan = q(spark, budget_sf)._jdf.queryExecution().executedPlan().toString()
         # memoized frames render "== Initial Plan ==" after execution,
         # double-counting exchanges (see tests/test_plan_lint.py::_plan)
@@ -86,11 +89,7 @@ def main() -> None:
     spark = get_spark(app_name="plan-digest", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     rows = []
-    # live + staged, the same set tests/test_plan_lint.py lints (r12:
-    # staged budgets were previously hand-recorded and drifted)
-    queries = dict(registry_staged.all_queries())
-    queries.update(registry_staged.PLAN_TWINS)
-    for name, q in queries.items():
+    for name, q in screened_queries().items():
         plan = q(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
         rows.append((name, digest(plan.split("== Initial Plan ==")[0])))
     rows.sort(key=lambda r: (-r[1]["exchanges"], r[0]))

@@ -198,12 +198,6 @@ def main() -> None:
     qs["semantic_dedup_auto_arrow"] = lambda s, d: semantic_dedup_auto_with_method(
         s, d, assign_method="arrow"
     )
-    # staged queries are next round's window — audit them BEFORE they
-    # go live so a scale problem surfaces a round early
-    from pyspark_unload_to_gcs_spark import registry_staged
-
-    for _name, _fn in registry_staged.staged_queries().items():
-        qs.setdefault(_name, _fn)
     names = list(qs) if not args.queries else args.queries.split(",")
     # resumable: merge into any existing audit JSON and skip names
     # already timed, so the (long) full audit can run in chunks
