@@ -9,7 +9,7 @@ instead of failing late inside Spark analysis.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from enum import Enum
 
 
@@ -47,9 +47,6 @@ class SyncConfig:
     scd_time_column: str = ""
     # engine extension: deterministic tie-break columns for equal scd_time
     scd_tiebreak_columns: tuple[str, ...] = ()
-    # reference leaks the row_num rank column into output (export.py:180-185);
-    # we drop it by default and expose the leak behind a compat flag.
-    keep_rank_column: bool = False
 
     # shared filters (reference export.py:19-28)
     non_nullable_columns: tuple[str, ...] = ()
@@ -89,8 +86,6 @@ class SyncConfig:
     # it needs the table's key columns.
     table_format: str = "delta"
     cdc_key_columns: tuple[str, ...] = ()
-
-    extra: dict = field(default_factory=dict)
 
     def validate(self) -> None:
         if self.sync_type == SyncType.SCD_LATEST and (

@@ -99,7 +99,6 @@ def plan_sync(spark: SparkSession, config: SyncConfig) -> PlannedSync:
             config.group_id_column,
             config.scd_time_column,
             tiebreak_columns=config.scd_tiebreak_columns,
-            keep_rank_column=config.keep_rank_column,
         )
         desc = f"scd-latest({config.table}, by={config.group_id_column}, t={config.scd_time_column})"
     else:  # pragma: no cover - validate() rejects unknowns via Enum

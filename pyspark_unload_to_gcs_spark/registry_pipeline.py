@@ -388,8 +388,9 @@ def merge_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         EXPORT_CHANGE_TYPE_COLUMN,
         INSERT,
     )
-    from pyspark_unload_to_gcs_spark.streaming.merge import merge_batch, read_snapshot
+    from pyspark_unload_to_gcs_spark.streaming.merge import merge_batch
     from pyspark_unload_to_gcs_spark.streaming.replay import replay_batches
+    from pyspark_unload_to_gcs_spark.streaming.rollup import read_state
 
     base = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -438,7 +439,7 @@ def merge_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             sequence_column="__seq",
             state_path=state,
         ),
-        lambda state: read_snapshot(spark, state),
+        lambda state: read_state(spark, state),
         prefix="merge_stream_replay_",
     )
     return snap.select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -2871,6 +2872,31 @@ def _register_versioned_commits(spark: SparkSession) -> None:
     )
 
 
+def _drain_commit_stream(spark: SparkSession, path: str, fold, name: str) -> None:
+    """Drain the ``versioned_commits`` stream of the table at ``path``
+    through ``fold`` with ``start_fold`` (fresh checkpoint).
+    awaitTermination(timeout) returns False on timeout WITHOUT stopping
+    the query — memoizing then would hand back a partially-drained
+    output as the query result (ADVICE r09) — so a slow drain raises,
+    surfacing the stream's own error first."""
+    import tempfile
+
+    from pyspark_unload_to_gcs_spark.streaming.rollup import start_fold
+
+    _register_versioned_commits(spark)
+    stream = spark.readStream.format("versioned_commits").option("path", path).load()
+    q = start_fold(
+        stream, fold, checkpoint_dir=tempfile.mkdtemp(prefix=f"{name}_ckpt_")
+    )
+    if not q.awaitTermination(300):
+        exc = q.exception()
+        q.stop()
+        raise RuntimeError(
+            f"{name}: availableNow drain did not finish within 300s "
+            f"(stream exception: {exc})"
+        )
+
+
 _VERSIONED_SNAPSHOT_SQL = """
 SELECT o_orderkey, o_custkey,
        CAST(o_totalprice AS DOUBLE)
@@ -3059,33 +3085,13 @@ def versioned_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _versioned_orders(spark, sf_dir)
 
     def build():
-        _register_versioned_commits(spark)
         out_dir = tempfile.mkdtemp(prefix="versioned_stream_replay_") + "/rows"
-        ckpt = tempfile.mkdtemp(prefix="versioned_stream_replay_ckpt_")
-        stream = (
-            spark.readStream.format("versioned_commits")
-            .option("path", path)
-            .load()
+        _drain_commit_stream(
+            spark,
+            path,
+            lambda batch, _i: batch.write.mode("append").parquet(out_dir),
+            "versioned_stream_replay",
         )
-        q = (
-            stream.writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(
-                lambda batch, _i: batch.write.mode("append").parquet(out_dir)
-            )
-            .start()
-        )
-        # awaitTermination(timeout) returns False on timeout WITHOUT
-        # stopping the query — memoizing then would hand back a
-        # partially-drained output as the query result (ADVICE r09).
-        # Raise loudly instead; surface the stream's own error first.
-        if not q.awaitTermination(300):
-            exc = q.exception()
-            q.stop()
-            raise RuntimeError(
-                "versioned_stream_replay: availableNow drain did not "
-                f"finish within 300s (stream exception: {exc})"
-            )
         return out_dir
 
     return spark.read.parquet(
@@ -3118,36 +3124,30 @@ def versioned_cdf_merge_stream_replay_q(spark: SparkSession, sf_dir: str) -> Dat
     table's final version, which the oracle states in closed form from
     orders. Offset handling, the CDF derivation, the merge algebra,
     and the stream runner all sit inside the value hash."""
+    import functools
     import tempfile
 
-    from pyspark_unload_to_gcs_spark.streaming.cdc_stream import (
-        start_versioned_cdf_merge,
-    )
-    from pyspark_unload_to_gcs_spark.streaming.merge import read_snapshot
+    from pyspark_unload_to_gcs_spark.streaming.cdc_stream import cdf_merge_batch
+    from pyspark_unload_to_gcs_spark.streaming.rollup import read_state
 
     path = _versioned_orders(spark, sf_dir)
 
     def build():
-        _register_versioned_commits(spark)
         state = tempfile.mkdtemp(prefix="versioned_cdf_merge_state_")
-        ckpt = tempfile.mkdtemp(prefix="versioned_cdf_merge_ckpt_")
-        q = start_versioned_cdf_merge(
+        _drain_commit_stream(
             spark,
             path,
-            key_columns=["o_orderkey"],
-            state_path=state,
-            checkpoint_dir=ckpt,
+            functools.partial(
+                cdf_merge_batch,
+                table_path=path,
+                key_columns=["o_orderkey"],
+                state_path=state,
+            ),
+            "versioned_cdf_merge_stream_replay",
         )
-        if not q.awaitTermination(300):
-            exc = q.exception()
-            q.stop()
-            raise RuntimeError(
-                "versioned_cdf_merge_stream_replay: availableNow drain did not "
-                f"finish within 300s (stream exception: {exc})"
-            )
         return state
 
-    snap = read_snapshot(
+    snap = read_state(
         spark, session_memo(spark, ("versioned", sf_dir, "cdf_merge"), build)
     )
     assert snap is not None

@@ -17,8 +17,6 @@ Scale posture vs the reference:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -67,17 +65,16 @@ def compact_files(
     original or the compacted data recoverable (worst case: the data
     sits at the backup path, named discoverably next to the target).
 
-    Two sizing/swap backends (VERDICT r05 #9):
-    - plain local paths: os.walk + os.rename (fast path, atomic swap);
-    - any URI (``file:``, ``gs://``, ``s3a://``, ...): the Hadoop
-      FileSystem API — ``listFiles`` for sizes, ``delete`` + ``rename``
-      for the swap — so the same maintenance pass runs against object
-      stores through whatever connector the cluster ships. NOTE: on
-      object stores "rename" is a server-side copy, not atomic — run
-      compaction from a single maintenance job, not concurrently with
-      writers (same constraint every table-format-less compactor has).
+    Sizing and the swap go through the Hadoop FileSystem API —
+    ``listFiles`` for sizes, ``rename`` + ``delete`` for the swap — and
+    resolve ``path`` the way ``spark.read`` does (a plain path lands on
+    the default filesystem), so the same maintenance pass runs on
+    ``file:``, ``gs://``, ``s3a://``, ... through whatever connector the
+    cluster ships. NOTE: on object stores "rename" is a server-side
+    copy, not atomic — run compaction from a single maintenance job, not
+    concurrently with writers (same constraint every table-format-less
+    compactor has).
     """
-    import shutil
     import uuid
 
     def _rewrite(n_files: int, out_uri: str) -> None:
@@ -90,69 +87,41 @@ def compact_files(
             .save(out_uri)
         )
 
-    if "://" in path or path.startswith("file:"):
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        src_p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = src_p.getFileSystem(hconf)
-        # component-wise hidden check (same rule as _iter_data_files):
-        # part files under a leftover _temporary/ dir from a crashed
-        # prior write must not inflate the sizing target (r06 advice —
-        # the leaf-name-only check counted them)
-        total_bytes = sum(st.getLen() for _rel, st in _iter_data_files(fs, src_p))
-        n_files = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
-        tag = uuid.uuid4().hex[:8]
-        tmp_uri = f"{path.rstrip('/')}__compact_{tag}"
-        tmp_p = jvm.org.apache.hadoop.fs.Path(tmp_uri)
-        bak_p = jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}__precompact_{tag}")
-        _rewrite(n_files, tmp_uri)
-        # backup-then-swap: the source is never deleted before the
-        # compacted output is in place (a crash leaves the data at a
-        # discoverable __precompact_ sibling, not gone)
-        if not fs.rename(src_p, bak_p):
-            raise IOError(
-                f"compact_files: could not move {path} aside for the swap; "
-                f"compacted output left at {tmp_uri}, source untouched"
-            )
-        if not fs.rename(tmp_p, src_p):
-            restored = fs.rename(bak_p, src_p)
-            raise IOError(
-                f"compact_files: rename {tmp_uri} -> {path} failed; "
-                + (
-                    "source restored, compacted output left at the tmp path"
-                    if restored
-                    else f"RESTORE ALSO FAILED — original data is at "
-                    f"{bak_p.toString()}, compacted output at {tmp_uri}"
-                )
-            )
-        fs.delete(bak_p, True)
-        return n_files
-
-    # strip any trailing slash: tmp/bak are SIBLING paths, and a
-    # trailing slash would nest them inside the source (r06 review:
-    # os.rename of a dir into itself raises EINVAL)
-    src = path.rstrip("/") or path
-    total_bytes = 0
-    for dp, dirs, files in os.walk(src):
-        # prune hidden/temporary DIRECTORIES too (component-wise rule,
-        # matching the URI branch and _iter_data_files): a crashed
-        # prior write's _temporary/0/part-* must not count
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        total_bytes += sum(
-            os.path.getsize(os.path.join(dp, f))
-            for f in files
-            if not f.startswith(("_", "."))
-        )
+    jvm = spark.sparkContext._jvm
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    src_p = jvm.org.apache.hadoop.fs.Path(path)
+    fs = src_p.getFileSystem(hconf)
+    # component-wise hidden check (same rule as _iter_data_files):
+    # part files under a leftover _temporary/ dir from a crashed
+    # prior write must not inflate the sizing target (r06 advice —
+    # the leaf-name-only check counted them)
+    total_bytes = sum(st.getLen() for _rel, st in _iter_data_files(fs, src_p))
     n_files = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
     tag = uuid.uuid4().hex[:8]
-    tmp = f"{src}__compact_{tag}"
-    bak = f"{src}__precompact_{tag}"
-    _rewrite(n_files, f"file:{tmp}")
-    # backup-then-swap (see docstring): both renames are atomic on a
-    # local filesystem; the backup is removed only after the swap
-    os.rename(src, bak)
-    os.rename(tmp, src)
-    shutil.rmtree(bak)
+    tmp_uri = f"{path.rstrip('/')}__compact_{tag}"
+    tmp_p = jvm.org.apache.hadoop.fs.Path(tmp_uri)
+    bak_p = jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}__precompact_{tag}")
+    _rewrite(n_files, tmp_uri)
+    # backup-then-swap: the source is never deleted before the
+    # compacted output is in place (a crash leaves the data at a
+    # discoverable __precompact_ sibling, not gone)
+    if not fs.rename(src_p, bak_p):
+        raise IOError(
+            f"compact_files: could not move {path} aside for the swap; "
+            f"compacted output left at {tmp_uri}, source untouched"
+        )
+    if not fs.rename(tmp_p, src_p):
+        restored = fs.rename(bak_p, src_p)
+        raise IOError(
+            f"compact_files: rename {tmp_uri} -> {path} failed; "
+            + (
+                "source restored, compacted output left at the tmp path"
+                if restored
+                else f"RESTORE ALSO FAILED — original data is at "
+                f"{bak_p.toString()}, compacted output at {tmp_uri}"
+            )
+        )
+    fs.delete(bak_p, True)
     return n_files
 
 

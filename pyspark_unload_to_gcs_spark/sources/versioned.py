@@ -9,8 +9,8 @@ runtime behavior unprovable here (VERDICT r04..r08). This module gives
 the SEMANTICS runtime evidence on the format Spark always has:
 
 - layout: ``<path>/v=<N>/`` parquet snapshot dirs (committed iff the
-  ``_SUCCESS`` marker exists — same torn-write gate as the streaming
-  versioned state, streaming/rollup.py) + an atomically-replaced
+  ``_SUCCESS`` marker exists — ``committed_dirs``, the same torn-write
+  gate the streaming folds' state reads through) + an atomically-replaced
   ``_commits.json`` ledger mapping version -> commit epoch ms, with a
   create-if-absent ``_commits.lock`` CAS serializing writers; all
   ledger/layout I/O goes through the JVM Hadoop FileSystem API, so
@@ -52,7 +52,6 @@ from pyspark_unload_to_gcs_spark.operators.cdc import (
 
 _COMMITS_FILE = "_commits.json"
 _LOCK_FILE = "_commits.lock"
-_VERSION_RE = re.compile(r"v=(\d+)$")
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -258,26 +257,38 @@ def _acquire_commit_lock(path: str, op: str):
     return jvm, fs, lock
 
 
-def _committed_versions(path: str) -> list[int]:
+def committed_dirs(path: str, prefix: str) -> list[tuple[int, str]]:
+    """COMMITTED ``<prefix>=<n>`` directories under ``path`` as
+    ``(n, dir)`` pairs sorted by n — the one lister of versioned
+    layout: table versions and streaming fold state (``v=``), and
+    append-only slices (``b=``). The commit marker is the ``_SUCCESS``
+    file Spark's FileOutputCommitter writes LAST: gating on 'some
+    *.parquet exists' would count a torn multi-file write (crash
+    mid-write: some part files landed, no _SUCCESS) as committed. A
+    retried overwrite deletes the old dir contents first, so a slice is
+    never half-new-half-old.
+
+    Listing goes through the Hadoop FileSystem (one ``globStatus`` plus
+    one ``exists`` per candidate dir), so state on any scheme the
+    cluster can write reads back; only a py4j-less process falls back
+    to local glob (see the filesystem layer note above)."""
+    pat = re.compile(rf"{re.escape(prefix)}=(\d+)$")
     handle = _jfs(path)
     if handle is None:
         local = _strip_file_scheme(path)
         return sorted(
-            int(m.group(1))
-            for d in glob.glob(os.path.join(local, "v=*"))
-            if (m := _VERSION_RE.search(d))
-            and os.path.exists(os.path.join(d, "_SUCCESS"))
+            (int(m.group(1)), d)
+            for d in glob.glob(os.path.join(local, f"{prefix}=*"))
+            if (m := pat.search(d)) and os.path.exists(os.path.join(d, "_SUCCESS"))
         )
     jvm, _gw, fs, _root = handle
-    stats = fs.globStatus(jvm.org.apache.hadoop.fs.Path(_sub(path, "v=*")))
-    if stats is None:
-        return []
+    hpath = jvm.org.apache.hadoop.fs.Path
     out = []
-    for s in stats:
-        p = s.getPath()
-        m = _VERSION_RE.search(str(p.getName()))
-        if m and fs.exists(jvm.org.apache.hadoop.fs.Path(p, "_SUCCESS")):
-            out.append(int(m.group(1)))
+    for st in fs.globStatus(hpath(_sub(path, f"{prefix}=*"))) or []:
+        p = st.getPath()
+        d = str(p.toString())
+        if (m := pat.search(d)) and fs.exists(hpath(p, "_SUCCESS")):
+            out.append((int(m.group(1)), d))
     return sorted(out)
 
 
@@ -292,7 +303,7 @@ def table_history(path: str) -> list[dict]:
     if text is None:
         return []
     ledger = json.loads(text)
-    committed = set(_committed_versions(path))
+    committed = {v for v, _d in committed_dirs(path, "v")}
     rows = [e for e in ledger if e["version"] in committed]
     return sorted(rows, key=lambda e: -e["version"])
 
@@ -464,6 +475,7 @@ __all__ = [
     "ConcurrentCommitError",
     "change_feed",
     "commit_version",
+    "committed_dirs",
     "latest_commit_timestamp_ms",
     "snapshot_at_ms",
     "table_history",

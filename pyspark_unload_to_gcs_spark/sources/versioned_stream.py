@@ -123,9 +123,7 @@ class _FilePartition(InputPartition):
 # files by cumulative size up to this target — small commits collapse
 # to one task, big commits keep one task per ~128 MB, the same
 # economics as spark.sql.files.maxPartitionBytes.
-_TARGET_PARTITION_BYTES = int(
-    os.environ.get("SPARK_GRAFT_STREAM_PARTITION_BYTES", 128 * 1024 * 1024)
-)
+_TARGET_PARTITION_BYTES = 128 * 1024 * 1024
 
 
 def _grouped_partitions(

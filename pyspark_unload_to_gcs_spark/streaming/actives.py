@@ -11,14 +11,12 @@ Estimates carry standard HLL error (~2-3% at default lgConfigK).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_unload_to_gcs_spark.functions.timestamps import epoch_ms
 from pyspark_unload_to_gcs_spark.operators.product import day_number
-from pyspark_unload_to_gcs_spark.streaming.rollup import read_state
+from pyspark_unload_to_gcs_spark.streaming.rollup import read_state, write_state
 
 
 def fold_actives_batch(
@@ -47,27 +45,7 @@ def fold_actives_batch(
         )
     else:
         merged = batch_sketches
-    merged.write.mode("overwrite").parquet(os.path.join(state_path, f"v={batch_id}"))
-
-
-def start_streaming_actives(
-    stream_df: DataFrame,
-    *,
-    state_path: str,
-    checkpoint_dir: str,
-    user_column: str = "user_id",
-    time_column: str = "ts",
-    trigger_available_now: bool = True,
-):
-    writer = stream_df.writeStream.foreachBatch(
-        lambda bdf, bid: fold_actives_batch(
-            bdf, bid, state_path=state_path,
-            user_column=user_column, time_column=time_column,
-        )
-    ).option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    write_state(merged, state_path, batch_id)
 
 
 def current_rolling_actives(

@@ -33,12 +33,10 @@ only ever unioned and written, never re-sorted.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pyspark_unload_to_gcs_spark.streaming.rollup import read_state
+from pyspark_unload_to_gcs_spark.streaming.rollup import read_state, write_state
 
 
 def admit_batch(
@@ -77,7 +75,7 @@ def admit_batch(
         if admitted_prev is not None
         else admitted_new
     )
-    out.write.mode("overwrite").parquet(os.path.join(state_path, f"v={batch_id}"))
+    write_state(out, state_path, batch_id)
 
 
 def read_admitted(spark: SparkSession, state_path: str) -> DataFrame | None:

@@ -4,7 +4,8 @@ the checkpoint, map to INSERT/DELETE change rows, hand them to the
 consumer) re-expressed as one continuously-running Structured
 Streaming query instead of an orchestrated batch poll.
 
-``start_versioned_cdf_merge`` composes three existing pieces:
+``cdf_merge_batch``, run with ``rollup.start_fold`` over a
+``versioned_commits`` readStream, composes three existing pieces:
 
 1. the ``versioned_commits`` Python DataSource (sources/
    versioned_stream.py) delivers each COMMITTED version exactly once
@@ -40,10 +41,9 @@ the diff disappears — swap the readStream for the CDF reader and keep
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyspark_unload_to_gcs_spark.operators.cdc import (
@@ -52,10 +52,14 @@ from pyspark_unload_to_gcs_spark.operators.cdc import (
     apply_changes,
     snapshot_diff,
 )
-from pyspark_unload_to_gcs_spark.streaming.merge import (
-    collapse_changes,
-    read_snapshot,
+from pyspark_unload_to_gcs_spark.sources.versioned import (
+    _read_text,
+    _replace_text_atomic,
+    _sub,
+    committed_dirs,
 )
+from pyspark_unload_to_gcs_spark.streaming.merge import collapse_changes
+from pyspark_unload_to_gcs_spark.streaming.rollup import read_state, write_state
 
 _STAMPS = ("_commit_version", "_commit_timestamp")
 _APPLIED_MARKER = "_APPLIED_VERSION"
@@ -67,24 +71,20 @@ def _applied_watermark(state_path: str, before: int) -> int:
     watermark is what makes empty commits safe: version enumeration
     below is ledger-driven, and the ledger alone cannot say which
     versions are already applied."""
-    from pyspark_unload_to_gcs_spark.streaming.rollup import _versions
-
-    versions = [v for v in _versions(state_path) if v < before]
-    if not versions:
+    dirs = [d for v, d in committed_dirs(state_path, "v") if v < before]
+    if not dirs:
         return -1
-    marker = os.path.join(state_path, f"v={versions[-1]}", _APPLIED_MARKER)
-    if not os.path.exists(marker):
+    text = _read_text(_sub(dirs[-1], _APPLIED_MARKER))
+    if text is None:
         # every committed state this module writes carries the marker;
         # its absence means external tampering — resetting to -1 would
         # silently re-apply history onto a non-empty state
         raise ValueError(
-            f"cdf_merge_batch: state version v={versions[-1]} at "
-            f"{state_path!r} has no {_APPLIED_MARKER} marker — the state "
-            "was not written by this consumer. Start from a fresh "
-            "state_path + checkpoint pair."
+            f"cdf_merge_batch: state version {dirs[-1]!r} has no "
+            f"{_APPLIED_MARKER} marker — the state was not written by "
+            "this consumer. Start from a fresh state_path + checkpoint pair."
         )
-    with open(marker) as f:
-        return int(f.read().strip())
+    return int(text.strip())
 
 
 def cdf_merge_batch(
@@ -204,7 +204,7 @@ def cdf_merge_batch(
             expected = v + 1
         base_cols = [c for c in batch_df.columns if c not in _STAMPS]
         empty = batch_df.select(*base_cols).limit(0)
-        prev_state = read_snapshot(spark, state_path, before=batch_id)
+        prev_state = read_state(spark, state_path, before=batch_id)
         prev_frame = prev_state if prev_state is not None else empty
         changes: DataFrame | None = None
         for version, commit_ms in todo:
@@ -239,48 +239,12 @@ def cdf_merge_batch(
             ).drop(EXPORT_CHANGE_TYPE_COLUMN)
         else:
             nxt = apply_changes(prev_state, collapsed, list(key_columns))
-        out_dir = os.path.join(state_path, f"v={batch_id}")
-        nxt.write.mode("overwrite").parquet(out_dir)
+        out_dir = write_state(nxt, state_path, batch_id)
         # watermark LAST (after _SUCCESS): a crash in between replays
         # the batch, which recomputes the identical state + marker
-        with open(os.path.join(out_dir, _APPLIED_MARKER), "w") as f:
-            f.write(str(todo[-1][0]))
+        _replace_text_atomic(_sub(out_dir, _APPLIED_MARKER), str(todo[-1][0]))
     finally:
         batch_df.unpersist()
 
 
-def start_versioned_cdf_merge(
-    spark: SparkSession,
-    table_path: str,
-    *,
-    key_columns: Sequence[str],
-    state_path: str,
-    checkpoint_dir: str,
-    on_changes: Callable[[DataFrame, int], None] | None = None,
-    trigger_available_now: bool = True,
-):
-    """Run the CDC loop as a stream: versioned commits in, per-commit
-    change rows derived, snapshot continuously MERGEd. Returns the
-    StreamingQuery; ``streaming/merge.read_snapshot(state_path)``
-    serves the current table at any time."""
-    stream = (
-        spark.readStream.format("versioned_commits")
-        .option("path", table_path)
-        .load()
-    )
-    writer = stream.writeStream.foreachBatch(
-        lambda bdf, bid: cdf_merge_batch(
-            bdf,
-            bid,
-            table_path=table_path,
-            key_columns=key_columns,
-            state_path=state_path,
-            on_changes=on_changes,
-        )
-    ).option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-__all__ = ["cdf_merge_batch", "start_versioned_cdf_merge"]
+__all__ = ["cdf_merge_batch"]

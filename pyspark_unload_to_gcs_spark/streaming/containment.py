@@ -33,11 +33,9 @@ function of (index, batch rows). Matches are per-doc independent, so
 the union over batches equals the batch operator over the union of
 batches — the replay oracle's invariant.
 
-All layout I/O — including the ``read_matches`` commit-gated readback,
-which routes through the Hadoop-FS-backed ``rollup.committed_dirs``
-(ADVICE r12: the earlier glob-based listing silently returned None on
-non-POSIX schemes) — goes through the versioned ledger's Hadoop-FS
-helpers, so ``state_path`` works on any URI scheme the cluster can
+All layout I/O — including the ``read_matches`` commit-gated readback
+through ``rollup.read_slices`` — goes through the versioned ledger's
+Hadoop-FS helpers, so ``state_path`` works on any URI scheme the cluster can
 write (file:/gs:/s3a:).
 """
 
@@ -299,14 +297,10 @@ def containment_match_batch(
 
 def read_matches(spark: SparkSession, state_path: str) -> DataFrame | None:
     """All batches' match rows as one frame (batch_id is a data
-    column). Only COMMITTED ``matches/b=<id>`` slices are read (the
-    shared _SUCCESS gate of rollup.committed_dirs — a torn overwrite
-    must not surface partial matches that LOOK computed, review r12);
-    None before any batch committed."""
+    column). Only COMMITTED ``matches/b=<id>`` slices are read (a torn
+    overwrite must not surface partial matches that LOOK computed,
+    review r12); None before any batch committed."""
     from pyspark_unload_to_gcs_spark.sources.versioned import _sub
-    from pyspark_unload_to_gcs_spark.streaming.rollup import committed_dirs
+    from pyspark_unload_to_gcs_spark.streaming.rollup import read_slices
 
-    dirs = committed_dirs(_sub(state_path, "matches"), "b")
-    if not dirs:
-        return None
-    return spark.read.parquet(*[d for _b, d in dirs]).drop("b")
+    return read_slices(spark, _sub(state_path, "matches"), "b")

@@ -11,11 +11,12 @@ contracts:
    on a stream keeps every key forever; use it only when the key space
    is small and closed.
 
-2. ``dedup_batch_indexed`` / ``start_streaming_dedup`` — UNBOUNDED
-   first-write-wins with explicit versioned state, for the contract
-   watermark expiry cannot give: a row may arrive again arbitrarily
-   late, possibly with a MUTATED payload from a retried upstream job,
-   and the FIRST accepted version must survive. Per micro-batch:
+2. ``dedup_batch_indexed`` (streamed with ``rollup.start_fold``) —
+   UNBOUNDED first-write-wins with explicit versioned state, for the
+   contract watermark expiry cannot give: a row may arrive again
+   arbitrarily late, possibly with a MUTATED payload from a retried
+   upstream job, and the FIRST accepted version must survive. Per
+   micro-batch:
    - within the batch: collapse to the lowest ``sequence_column`` row
      per key (one hash shuffle on the key);
    - across batches: anti-join the collapsed batch against the
@@ -35,8 +36,7 @@ contracts:
 serve (file:/gs:/s3a:/hdfs:): writes go through the Spark parquet
 writer and the commit-gated readbacks (``read_accepted`` and the
 key index) list state through the Hadoop-FS-backed
-``rollup.committed_dirs`` (a glob-based listing would silently miss
-committed state on non-POSIX schemes).
+``sources.versioned.committed_dirs``.
 """
 
 from __future__ import annotations
@@ -47,8 +47,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_unload_to_gcs_spark.sources.versioned import _sub
-
-from pyspark_unload_to_gcs_spark.streaming.rollup import read_state
+from pyspark_unload_to_gcs_spark.streaming.rollup import (
+    read_slices,
+    read_state,
+    write_state,
+)
 
 
 def stream_exact_dedup(
@@ -134,32 +137,6 @@ def _first_seen_rows(
     return collapsed.join(pk, cond, "left_anti")
 
 
-def start_streaming_dedup(
-    stream_df: DataFrame,
-    *,
-    key_columns: Sequence[str],
-    sequence_column: str,
-    state_path: str,
-    checkpoint_dir: str,
-    trigger_available_now: bool = True,
-):
-    """Continuously admit first-seen rows from a stream with
-    ``dedup_batch_indexed`` (read back with ``read_accepted``); returns
-    the StreamingQuery."""
-    writer = stream_df.writeStream.foreachBatch(
-        lambda bdf, bid: dedup_batch_indexed(
-            bdf,
-            bid,
-            key_columns=key_columns,
-            sequence_column=sequence_column,
-            state_path=state_path,
-        )
-    ).option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def dedup_batch_indexed(
     batch_df: DataFrame,
     batch_id: int,
@@ -196,21 +173,13 @@ def dedup_batch_indexed(
     nxt_keys = admitted.select(*key_columns)
     if prev_keys is not None:
         nxt_keys = prev_keys.unionByName(nxt_keys)
-    nxt_keys.write.mode("overwrite").parquet(
-        _sub(_sub(state_path, "keys"), f"v={batch_id}")
-    )
+    write_state(nxt_keys, _sub(state_path, "keys"), batch_id)
 
 
 def read_accepted(
     spark: SparkSession, state_path: str
 ) -> DataFrame | None:
-    """The accepted (deduped) rows: the union of
-    every COMMITTED ``accepted/b=<b>`` slice (the shared _SUCCESS gate
-    of rollup.committed_dirs — a torn write must not surface). Returns
+    """The accepted (deduped) rows: the union of every COMMITTED
+    ``accepted/b=<b>`` slice (a torn write must not surface). Returns
     None before any batch committed."""
-    from pyspark_unload_to_gcs_spark.streaming.rollup import committed_dirs
-
-    dirs = committed_dirs(_sub(state_path, "accepted"), "b")
-    if not dirs:
-        return None
-    return spark.read.parquet(*[d for _b, d in dirs])
+    return read_slices(spark, _sub(state_path, "accepted"), "b")

@@ -109,9 +109,10 @@ def drift_batch(
     )
 
 
-def read_drift(spark: SparkSession, state_path: str) -> DataFrame:
-    """All batches' drift rows as one frame (batch_id is a data column;
-    the ``b=`` partition directory is dropped)."""
+def read_drift(spark: SparkSession, state_path: str) -> DataFrame | None:
+    """All committed batches' drift rows as one frame (batch_id is a
+    data column); None before any batch committed."""
     from pyspark_unload_to_gcs_spark.sources.versioned import _sub
+    from pyspark_unload_to_gcs_spark.streaming.rollup import read_slices
 
-    return spark.read.parquet(_sub(state_path, "drift")).drop("b")
+    return read_slices(spark, _sub(state_path, "drift"), "b")

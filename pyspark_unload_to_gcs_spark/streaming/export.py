@@ -1,18 +1,21 @@
-"""Streaming export sink: ``foreachBatch`` + the batch writers.
+"""Streaming export sink: a ``foreachBatch`` fold over the batch writers.
 
 Each micro-batch is exported exactly like one orchestrated incremental
 run of the reference job (gzip JSON/CSV partition under the output URI),
 with Spark's checkpointing replacing the reference's
 orchestrator-persisted ``time_cutoff_ms`` watermark
 (export.py:131-158, 333-337): on restart the source resumes from the
-checkpoint, so each row is exported once per batch epoch.
+checkpoint, so each row is exported once per batch epoch. Run it with
+``rollup.start_fold(stream, functools.partial(export_batch, config=...,
+stats=...), checkpoint_dir=...)``.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 from pyspark_unload_to_gcs_spark.config import SyncConfig
 from pyspark_unload_to_gcs_spark.operators.hashing import content_hash
@@ -30,42 +33,28 @@ class StreamExportStats:
         return sum(r for _, r in self.batches)
 
 
-def start_stream_export(
-    df: DataFrame,
-    config: SyncConfig,
+def export_batch(
+    batch_df: DataFrame,
+    batch_id: int,
     *,
-    checkpoint_dir: str,
-    trigger_available_now: bool = True,
-    count_rows: bool = False,
-):
-    """Start a streaming export; returns (StreamingQuery, stats).
-
-    ``trigger_available_now=True`` drains everything currently available
-    then stops — the direct replacement for one orchestrated incremental
-    run. ``count_rows`` adds a per-batch count action (observability at
-    small scale; leave off at 100 TB where the write itself reports row
-    counts via task metrics).
-    """
-    stats = StreamExportStats()
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        hashed = content_hash(
-            batch_df, config.computed_hash_column, config.computed_hash_ignore_columns
-        )
-        batch_config = SyncConfig(
-            table=config.table,
-            export_format=config.export_format,
-            output_uri=f"{config.output_uri.rstrip('/')}/batch={batch_id}",
-            compression=config.compression,
-            max_records_per_file=config.max_records_per_file,
-            single_file=config.single_file,
-        )
-        write_export(hashed, batch_config)
-        stats.batches.append((batch_id, batch_df.count() if count_rows else -1))
-
-    writer = df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+    config: SyncConfig,
+    stats: StreamExportStats,
+) -> None:
+    """Hash and write one micro-batch under
+    ``<output_uri>/batch=<batch_id>``. The row count rides on the write
+    as an ``Observation`` (as in ``plans.sync.run_sync``), so ``stats``
+    gets real counts with no extra count job."""
+    obs = Observation()
+    hashed = content_hash(
+        batch_df, config.computed_hash_column, config.computed_hash_ignore_columns
+    ).observe(obs, F.count(F.lit(1)).alias("rows"))
+    batch_config = SyncConfig(
+        table=config.table,
+        export_format=config.export_format,
+        output_uri=f"{config.output_uri.rstrip('/')}/batch={batch_id}",
+        compression=config.compression,
+        max_records_per_file=config.max_records_per_file,
+        single_file=config.single_file,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), stats
+    write_export(hashed, batch_config)
+    stats.batches.append((batch_id, obs.get["rows"]))

@@ -14,7 +14,8 @@ batch boundaries).
 This module is that loop as a foreachBatch fold, the same exactly-once
 posture as streaming/merge.py and streaming/dedup.py:
 
-- every micro-batch appends its rows as ``corpus/v=<batch_id>`` and
+- every micro-batch appends its rows as ``corpus/v=<batch_id>``
+  (``rollup.write_state``) and
   (re)writes ``manifest/b=<batch_id>`` — both idempotent overwrites, so
   a retried batch rewrites byte-identical state;
 - the budget B is frozen at bootstrap (half the batch-0 corpus, read
@@ -66,12 +67,14 @@ def quota_mix_batch(
         _replace_text_atomic,
         _sub,
     )
+    from pyspark_unload_to_gcs_spark.streaming.rollup import (
+        read_slices,
+        write_state,
+    )
 
     spark = batch_df.sparkSession
     corpus_root = _sub(state_path, "corpus")
-    batch_df.select(id_column, stratum_column).write.mode("overwrite").parquet(
-        _sub(corpus_root, f"v={batch_id}")
-    )
+    write_state(batch_df.select(id_column, stratum_column), corpus_root, batch_id)
     budget_path = _sub(state_path, "budget.txt")
     if batch_id == 0 or _read_text(budget_path) is None:
         # bootstrap provision: half the batch-0 corpus, counted from
@@ -88,11 +91,7 @@ def quota_mix_batch(
             )
         _replace_text_atomic(budget_path, str(n0 // 2))
     budget = int(_read_text(budget_path))
-    corpus = (
-        spark.read.parquet(corpus_root)
-        .filter(F.col("v") <= batch_id)
-        .drop("v")
-    )
+    corpus = read_slices(spark, corpus_root, "v", through=batch_id)
     selected = quota_temperature_mix(
         corpus, stratum_column, id_column, budget=budget, tau=tau
     )
@@ -121,9 +120,10 @@ def quota_mix_batch(
     )
 
 
-def read_manifests(spark: SparkSession, state_path: str) -> DataFrame:
-    """All batches' manifests as one frame (batch_id is a data column;
-    the ``b=`` partition directory is dropped)."""
+def read_manifests(spark: SparkSession, state_path: str) -> DataFrame | None:
+    """All committed batches' manifests as one frame (batch_id is a
+    data column); None before any batch committed."""
     from pyspark_unload_to_gcs_spark.sources.versioned import _sub
+    from pyspark_unload_to_gcs_spark.streaming.rollup import read_slices
 
-    return spark.read.parquet(_sub(state_path, "manifest")).drop("b")
+    return read_slices(spark, _sub(state_path, "manifest"), "b")

@@ -5,7 +5,7 @@ This is the streaming twin of the reference's CDC export consumer: the
 reference emits ``_mp_change_type`` INSERT/DELETE change rows per
 incremental window (export.py:114-126) and leaves applying them to the
 downstream system; here each micro-batch of change rows is folded onto
-the previous snapshot version, so ``read_snapshot`` serves the current
+the previous snapshot version, so ``rollup.read_state`` serves the current
 table state at any time without replaying history.
 
 Within one micro-batch a key may change several times (insert, then
@@ -24,10 +24,9 @@ a Delta/Iceberg MERGE sink; the collapse/apply algebra is unchanged.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyspark_unload_to_gcs_spark.operators.cdc import (
@@ -35,7 +34,7 @@ from pyspark_unload_to_gcs_spark.operators.cdc import (
     INSERT,
     apply_changes,
 )
-from pyspark_unload_to_gcs_spark.streaming.rollup import read_state
+from pyspark_unload_to_gcs_spark.streaming.rollup import read_state, write_state
 
 
 def collapse_changes(
@@ -61,13 +60,6 @@ def collapse_changes(
     )
 
 
-def read_snapshot(
-    spark: SparkSession, state_path: str, *, before: int | None = None
-) -> DataFrame | None:
-    """Latest committed snapshot version (same layout as rollup state)."""
-    return read_state(spark, state_path, before=before)
-
-
 def merge_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -83,7 +75,7 @@ def merge_batch(
     collapsed = collapse_changes(
         batch_df, key_columns, sequence_column, change_type_column=change_type_column
     ).drop(sequence_column)
-    prev = read_snapshot(spark, state_path, before=batch_id)
+    prev = read_state(spark, state_path, before=batch_id)
     if prev is None:
         nxt = collapsed.filter(F.col(change_type_column) == INSERT).drop(
             change_type_column
@@ -92,30 +84,4 @@ def merge_batch(
         nxt = apply_changes(
             prev, collapsed, list(key_columns), change_type_column=change_type_column
         )
-    nxt.write.mode("overwrite").parquet(os.path.join(state_path, f"v={batch_id}"))
-
-
-def start_streaming_merge(
-    stream_df: DataFrame,
-    *,
-    key_columns: Sequence[str],
-    sequence_column: str,
-    state_path: str,
-    checkpoint_dir: str,
-    trigger_available_now: bool = True,
-):
-    """Maintain the snapshot continuously from a change-row stream;
-    returns the StreamingQuery. ``read_snapshot`` serves the current
-    table at any time."""
-    writer = stream_df.writeStream.foreachBatch(
-        lambda bdf, bid: merge_batch(
-            bdf,
-            bid,
-            key_columns=key_columns,
-            sequence_column=sequence_column,
-            state_path=state_path,
-        )
-    ).option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    write_state(nxt, state_path, batch_id)

@@ -3,7 +3,9 @@
 The streaming twins' fold functions (token-budget admission, MERGE
 snapshot maintenance, incremental rollup) are exercised by registered
 queries that replay a fixed batch sequence against versioned parquet
-state in a temp dir. The folds are EAGER side effects, so a replay runs
+state in a temp dir: the same fold a live stream runs under
+``rollup.start_fold``, called here once per batch, committing through
+the same ``rollup.write_state``. The folds are EAGER side effects, so a replay runs
 once per (session, key) and its read-back frame is memoized through
 ``session.session_memo``: plan-only probes (test_plan_lint, the plan
 digest) reread the same state instead of re-folding into a fresh temp

@@ -13,15 +13,13 @@ O(|user-periods| + batch); the matrix is computed from state on demand
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from pyspark_unload_to_gcs_spark.operators.product import (
     retention_matrix_from_periods,
     user_periods,
 )
-from pyspark_unload_to_gcs_spark.streaming.rollup import _versions, read_state
+from pyspark_unload_to_gcs_spark.streaming.rollup import read_state, write_state
 
 
 def fold_periods_batch(
@@ -39,34 +37,7 @@ def fold_periods_batch(
     )
     prev = read_state(spark, state_path, before=batch_id)
     merged = batch_pairs if prev is None else prev.unionByName(batch_pairs).distinct()
-    merged.write.mode("overwrite").parquet(os.path.join(state_path, f"v={batch_id}"))
-
-
-def start_streaming_retention(
-    stream_df: DataFrame,
-    *,
-    state_path: str,
-    checkpoint_dir: str,
-    user_column: str = "user_id",
-    time_column: str = "ts",
-    period_days: int = 7,
-    trigger_available_now: bool = True,
-):
-    """Maintain the user-period state continuously; read the current
-    cohort matrix at any time with ``current_retention_matrix``."""
-    writer = stream_df.writeStream.foreachBatch(
-        lambda bdf, bid: fold_periods_batch(
-            bdf,
-            bid,
-            state_path=state_path,
-            user_column=user_column,
-            time_column=time_column,
-            period_days=period_days,
-        )
-    ).option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    write_state(merged, state_path, batch_id)
 
 
 def current_retention_matrix(spark: SparkSession, state_path: str) -> DataFrame | None:
@@ -85,8 +56,6 @@ def current_growth_accounting(spark: SparkSession, state_path: str) -> DataFrame
 
 __all__ = [
     "fold_periods_batch",
-    "start_streaming_retention",
     "current_retention_matrix",
     "current_growth_accounting",
-    "_versions",
 ]

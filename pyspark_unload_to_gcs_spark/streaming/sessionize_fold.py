@@ -28,7 +28,7 @@ b0..bn then ``finalize`` yields EXACTLY the batch
 adjacent events per user, and the fold sees exactly the same adjacent
 pairs (the open-state row stands in for the previous batch's last
 event, carrying the accumulated (seq, n_events, start)). Pinned by
-tests/test_streaming.py and the staged ``sessionize_stream_replay``
+tests/test_streaming.py and the registered ``sessionize_stream_replay``
 oracle.
 
 Exactly-once protocol (same as streaming/rollup.py): state ``v=b`` is
@@ -39,13 +39,16 @@ identical output instead of double-counting.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyspark_unload_to_gcs_spark.functions.timestamps import epoch_ms
-from pyspark_unload_to_gcs_spark.streaming.rollup import _versions, read_state
+from pyspark_unload_to_gcs_spark.sources.versioned import _sub, committed_dirs
+from pyspark_unload_to_gcs_spark.streaming.rollup import (
+    read_slices,
+    read_state,
+    write_state,
+)
 
 STATE_COLUMNS = ("user_id", "session_seq", "n_events", "start_ms", "last_ms")
 CLOSED_COLUMNS = (
@@ -176,9 +179,7 @@ def fold_batch(
         "end_ms",
         (F.col("end_ms") - F.col("start_ms")).alias("duration_ms"),
     )
-    closed.write.mode("overwrite").parquet(
-        os.path.join(state_path, "closed", f"v={batch_id}")
-    )
+    write_state(closed, _sub(state_path, "closed"), batch_id)
     state = sessions.filter(F.col("__open")).select(
         "user_id",
         "session_seq",
@@ -186,7 +187,7 @@ def fold_batch(
         "start_ms",
         F.col("end_ms").alias("last_ms"),
     )
-    state.write.mode("overwrite").parquet(os.path.join(state_path, f"v={batch_id}"))
+    write_state(state, state_path, batch_id)
 
 
 def read_sessions(
@@ -208,23 +209,14 @@ def read_sessions(
     ``user_id_type``: only used for the empty frame returned before any
     state exists — pass the actual id type when the user column is not
     a long (fold_batch itself is type-generic)."""
-    import glob as _g
-    import re as _re
-
-    committed = _versions(state_path)
-    latest = committed[-1] if committed else None
-    closed_root = os.path.join(state_path, "closed")
+    committed = committed_dirs(state_path, "v")
     parts = []
-    if latest is not None and os.path.isdir(closed_root):
-        dirs = [
-            d
-            for d in _g.glob(os.path.join(closed_root, "v=*"))
-            if (m := _re.search(r"v=(\d+)$", d))
-            and int(m.group(1)) <= latest
-            and os.path.exists(os.path.join(d, "_SUCCESS"))
-        ]
-        if dirs:
-            parts.append(spark.read.parquet(*dirs).select(*CLOSED_COLUMNS))
+    if committed:
+        closed = read_slices(
+            spark, _sub(state_path, "closed"), "v", through=committed[-1][0]
+        )
+        if closed is not None:
+            parts.append(closed.select(*CLOSED_COLUMNS))
     if finalize:
         state = read_state(spark, state_path)
         if state is not None:
@@ -250,31 +242,3 @@ def read_sessions(
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def start_incremental_sessionize(
-    stream_df: DataFrame,
-    *,
-    state_path: str,
-    checkpoint_dir: str,
-    user_column: str = "user_id",
-    time_column: str = "ts",
-    gap_ms: int = 30 * 60 * 1000,
-    trigger_available_now: bool = True,
-):
-    """Maintain the session state continuously; returns the
-    StreamingQuery. ``read_sessions`` serves the closed-session log (+
-    finalized opens) at any time without replaying event history."""
-    writer = stream_df.writeStream.foreachBatch(
-        lambda bdf, bid: fold_batch(
-            bdf,
-            bid,
-            state_path=state_path,
-            user_column=user_column,
-            time_column=time_column,
-            gap_ms=gap_ms,
-        )
-    ).option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

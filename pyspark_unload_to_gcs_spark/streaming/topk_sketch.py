@@ -20,12 +20,10 @@ a plain count/rank; above it, DataSketches frequent-items error bounds
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyspark_unload_to_gcs_spark.streaming.rollup import read_state
+from pyspark_unload_to_gcs_spark.streaming.rollup import read_state, write_state
 
 
 def _acc(max_items: int):
@@ -64,7 +62,7 @@ def fold_topk_batch(
             .groupBy("grp")
             .agg(_comb(max_items_tracked).alias("st"))
         )
-    nxt.write.mode("overwrite").parquet(os.path.join(state_path, f"v={batch_id}"))
+    write_state(nxt, state_path, batch_id)
 
 
 def read_topk(
@@ -99,30 +97,3 @@ def read_topk(
         F.lit(int(total_sentinel)).alias("grp"), "st"
     )
     return explode(per).unionByName(explode(merged))
-
-
-def start_streaming_topk(
-    stream_df: DataFrame,
-    *,
-    item_column: str,
-    group_column,
-    state_path: str,
-    checkpoint_dir: str,
-    max_items_tracked: int = 4096,
-    trigger_available_now: bool = True,
-):
-    """Maintain the per-group sketch state continuously from a stream;
-    ``read_topk`` serves current heavy hitters at any time."""
-    writer = stream_df.writeStream.foreachBatch(
-        lambda bdf, bid: fold_topk_batch(
-            bdf,
-            bid,
-            item_column=item_column,
-            group_column=group_column,
-            state_path=state_path,
-            max_items_tracked=max_items_tracked,
-        )
-    ).option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

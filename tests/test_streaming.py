@@ -4,6 +4,7 @@ data (the batch forms are the oracle-checked reference semantics)."""
 
 from __future__ import annotations
 
+import functools
 import glob
 import gzip
 import json
@@ -13,7 +14,9 @@ from pyspark.sql import functions as F
 
 from pyspark_unload_to_gcs_spark.config import SyncConfig
 from pyspark_unload_to_gcs_spark.sources.catalog import load_parquet
-from pyspark_unload_to_gcs_spark.streaming.export import start_stream_export
+from pyspark_unload_to_gcs_spark.sources.versioned import committed_dirs
+from pyspark_unload_to_gcs_spark.streaming.export import StreamExportStats, export_batch
+from pyspark_unload_to_gcs_spark.streaming.rollup import start_fold
 from pyspark_unload_to_gcs_spark.streaming.sessionize import sessionize_stream
 from pyspark_unload_to_gcs_spark.streaming.sources import stream_parquet_dir
 from pyspark_unload_to_gcs_spark.streaming.windows import session_window_agg, tumbling_agg
@@ -150,8 +153,11 @@ def test_stream_export_foreachbatch(spark, events_stream_dir, events_schema, tmp
         export_format="json",
         computed_hash_column="row_hash",
     )
-    q, stats = start_stream_export(
-        stream, cfg, checkpoint_dir=str(tmp_path / "ckpt"), count_rows=True
+    stats = StreamExportStats()
+    q = start_fold(
+        stream,
+        functools.partial(export_batch, config=cfg, stats=stats),
+        checkpoint_dir=str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
     batch_dirs = glob.glob(f"{tmp_path}/out/batch=*")
@@ -201,7 +207,11 @@ def test_windowed_streaming_export_end_to_end(spark, events_stream_dir, events_s
         aggs={"n_events": "count(1)"},
     )
     cfg = SyncConfig(table="windowed", output_uri=f"file:{tmp_path}/wout", export_format="json")
-    q, stats = start_stream_export(agg, cfg, checkpoint_dir=str(tmp_path / "wckpt"))
+    q = start_fold(
+        agg,
+        functools.partial(export_batch, config=cfg, stats=StreamExportStats()),
+        checkpoint_dir=str(tmp_path / "wckpt"),
+    )
     q.awaitTermination(120)
     files = glob.glob(f"{tmp_path}/wout/batch=*/*.gz")
     assert files  # finalized windows were exported
@@ -404,19 +414,15 @@ def test_incremental_rollup_stream_matches_batch_and_is_retry_safe(
         aggregate_state,
         finalize_state,
     )
-    from pyspark_unload_to_gcs_spark.streaming.rollup import (
-        fold_batch,
-        read_state,
-        start_incremental_rollup,
-    )
+    from pyspark_unload_to_gcs_spark.streaming.rollup import fold_batch, read_state
 
     state = str(tmp_path / "state")
     stream = stream_parquet_dir(spark, events_stream_dir, events_schema, max_files_per_trigger=1)
-    q = start_incremental_rollup(
+    q = start_fold(
         stream,
-        keys=["event_type"],
-        value_column="value",
-        state_path=state,
+        functools.partial(
+            fold_batch, keys=["event_type"], value_column="value", state_path=state
+        ),
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
@@ -586,13 +592,16 @@ def test_streaming_retention_matches_batch_and_is_retry_safe(
     from pyspark_unload_to_gcs_spark.streaming.retention import (
         current_retention_matrix,
         fold_periods_batch,
-        start_streaming_retention,
     )
 
     state = str(tmp_path_factory.mktemp("ret_state"))
     ckpt = str(tmp_path_factory.mktemp("ret_ckpt"))
     stream = stream_parquet_dir(spark, events_stream_dir, events_schema, max_files_per_trigger=1)
-    q = start_streaming_retention(stream, state_path=state, checkpoint_dir=ckpt)
+    q = start_fold(
+        stream,
+        functools.partial(fold_periods_batch, state_path=state),
+        checkpoint_dir=ckpt,
+    )
     q.awaitTermination(120)
 
     expected = {(r.cohort_period, r.period_offset): r.n_users
@@ -606,9 +615,7 @@ def test_streaming_retention_matches_batch_and_is_retry_safe(
         __import__("glob").glob(f"{events_stream_dir}/part-*.parquet"),
         key=lambda p: __import__("os").path.getmtime(p),
     )[-1]
-    from pyspark_unload_to_gcs_spark.streaming.rollup import _versions
-
-    last_v = _versions(state)[-1]
+    last_v = committed_dirs(state, "v")[-1][0]
     fold_periods_batch(spark.read.parquet(last_file), last_v, state_path=state)
     refolded = {(r.cohort_period, r.period_offset): r.n_users
                 for r in current_retention_matrix(spark, state).collect()}
@@ -621,13 +628,17 @@ def test_streaming_growth_accounting_from_same_state(
     from pyspark_unload_to_gcs_spark.operators.product import growth_accounting
     from pyspark_unload_to_gcs_spark.streaming.retention import (
         current_growth_accounting,
-        start_streaming_retention,
+        fold_periods_batch,
     )
 
     state = str(tmp_path_factory.mktemp("ga_state"))
     ckpt = str(tmp_path_factory.mktemp("ga_ckpt"))
     stream = stream_parquet_dir(spark, events_stream_dir, events_schema, max_files_per_trigger=2)
-    q = start_streaming_retention(stream, state_path=state, checkpoint_dir=ckpt)
+    q = start_fold(
+        stream,
+        functools.partial(fold_periods_batch, state_path=state),
+        checkpoint_dir=ckpt,
+    )
     q.awaitTermination(120)
 
     expected = {r.period: (r.n_new, r.n_retained, r.n_resurrected, r.n_churned)
@@ -647,14 +658,16 @@ def test_streaming_actives_sketches_match_batch_estimates(
     from pyspark_unload_to_gcs_spark.streaming.actives import (
         current_rolling_actives,
         fold_actives_batch,
-        start_streaming_actives,
     )
-    from pyspark_unload_to_gcs_spark.streaming.rollup import _versions
 
     state = str(tmp_path_factory.mktemp("act_state"))
     ckpt = str(tmp_path_factory.mktemp("act_ckpt"))
     stream = stream_parquet_dir(spark, events_stream_dir, events_schema, max_files_per_trigger=1)
-    q = start_streaming_actives(stream, state_path=state, checkpoint_dir=ckpt)
+    q = start_fold(
+        stream,
+        functools.partial(fold_actives_batch, state_path=state),
+        checkpoint_dir=ckpt,
+    )
     q.awaitTermination(120)
 
     batch = spark.read.parquet(events_stream_dir)
@@ -670,7 +683,9 @@ def test_streaming_actives_sketches_match_batch_estimates(
 
     last_file = sorted(_glob.glob(f"{events_stream_dir}/part-*.parquet"),
                        key=_os.path.getmtime)[-1]
-    fold_actives_batch(spark.read.parquet(last_file), _versions(state)[-1], state_path=state)
+    fold_actives_batch(
+        spark.read.parquet(last_file), committed_dirs(state, "v")[-1][0], state_path=state
+    )
     refolded = {r.day_num: (r.dau_approx, r.wau_approx)
                 for r in current_rolling_actives(spark, state).collect()}
     assert refolded == expected
@@ -882,12 +897,8 @@ def test_streaming_merge_maintains_snapshot_and_is_retry_safe(spark, sf_dir, tmp
 
     from pyspark.sql import functions as F
 
-    from pyspark_unload_to_gcs_spark.streaming.merge import (
-        collapse_changes,
-        merge_batch,
-        read_snapshot,
-        start_streaming_merge,
-    )
+    from pyspark_unload_to_gcs_spark.streaming.merge import collapse_changes, merge_batch
+    from pyspark_unload_to_gcs_spark.streaming.rollup import read_state
 
     orders = load_parquet(spark, f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_totalprice"
@@ -935,11 +946,14 @@ def test_streaming_merge_maintains_snapshot_and_is_retry_safe(spark, sf_dir, tmp
     stream = stream_parquet_dir(
         spark, log_dir, spark.read.parquet(log_dir).schema, max_files_per_trigger=1
     )
-    q = start_streaming_merge(
+    q = start_fold(
         stream,
-        key_columns=["o_orderkey"],
-        sequence_column="seq",
-        state_path=state,
+        functools.partial(
+            merge_batch,
+            key_columns=["o_orderkey"],
+            sequence_column="seq",
+            state_path=state,
+        ),
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
@@ -951,7 +965,7 @@ def test_streaming_merge_maintains_snapshot_and_is_retry_safe(spark, sf_dir, tmp
         .select("o_orderkey", "o_totalprice")
         .collect()
     }
-    got = {tuple(r) for r in read_snapshot(spark, state).collect()}
+    got = {tuple(r) for r in read_state(spark, state).collect()}
     assert got == expected
     assert len(got) > 0
     # updated keys carry the post-image price; deleted keys are absent
@@ -973,7 +987,7 @@ def test_streaming_merge_maintains_snapshot_and_is_retry_safe(spark, sf_dir, tmp
     merge_batch(
         last_rows, 2, key_columns=["o_orderkey"], sequence_column="seq", state_path=state
     )
-    assert {tuple(r) for r in read_snapshot(spark, state).collect()} == expected
+    assert {tuple(r) for r in read_state(spark, state).collect()} == expected
 
 
 def test_streaming_token_budget_admission_and_retry(spark, sf_dir, tmp_path):
@@ -1072,16 +1086,15 @@ def test_incremental_sessionize_stream_matches_batch_and_is_retry_safe(
     from pyspark_unload_to_gcs_spark.streaming.sessionize_fold import (
         fold_batch,
         read_sessions,
-        start_incremental_sessionize,
     )
 
     state = str(tmp_path / "sess_state")
     stream = stream_parquet_dir(
         spark, events_stream_dir, events_schema, max_files_per_trigger=1
     )
-    q = start_incremental_sessionize(
+    q = start_fold(
         stream.select("user_id", "ts"),
-        state_path=state,
+        functools.partial(fold_batch, state_path=state),
         checkpoint_dir=str(tmp_path / "sess_ckpt"),
     )
     q.awaitTermination(120)
@@ -1141,6 +1154,36 @@ def test_incremental_sessionize_ignores_uncommitted_closed_log(
     expected = {tuple(r) for r in read_sessions(spark, clean).collect()}
     assert after == expected
     assert after != baseline
+
+
+def test_incremental_sessionize_reads_back_on_uri_scheme_path(spark, tmp_path):
+    """The closed-session log is listed through the same commit-gated
+    lister as the state: three batches folded into a ``file:`` state
+    path read back the same five sessions (three closed, two
+    finalized-open) as the plain-path fold."""
+    from pyspark_unload_to_gcs_spark.streaming.sessionize_fold import (
+        fold_batch,
+        read_sessions,
+    )
+
+    hour = 3600
+    batches = [
+        [(1, 0), (2, 0)],
+        [(1, 2 * hour), (2, 600)],
+        [(1, 4 * hour), (2, 3 * hour)],
+    ]
+
+    def fold_all(state):
+        for b, rows in enumerate(batches):
+            frame = spark.createDataFrame(rows, "user_id long, t long").select(
+                "user_id", F.timestamp_seconds("t").alias("ts")
+            )
+            fold_batch(frame, b, state_path=state)
+        return {tuple(r) for r in read_sessions(spark, state).collect()}
+
+    plain = fold_all(str(tmp_path / "plain_state"))
+    assert len(plain) == 5
+    assert fold_all("file:" + str(tmp_path / "uri_state")) == plain
 
 
 def test_incremental_sessionize_randomized_splits_match_batch(spark):
@@ -1790,13 +1833,13 @@ def test_indexed_dedup_null_keys(spark, tmp_path):
 def test_indexed_dedup_under_true_readstream(
     spark, events_stream_dir, events_schema, tmp_path
 ):
-    """start_streaming_dedup under a REAL readStream:
+    """dedup_batch_indexed under start_fold and a REAL readStream:
     the file stream redelivers nothing here, so the accepted table
     must equal the full input — and the key index must be exactly the
     input's key set held in narrow columns."""
     from pyspark_unload_to_gcs_spark.streaming.dedup import (
+        dedup_batch_indexed,
         read_accepted,
-        start_streaming_dedup,
     )
     from pyspark_unload_to_gcs_spark.streaming.rollup import read_state
     from pyspark_unload_to_gcs_spark.streaming.sources import stream_parquet_dir
@@ -1805,11 +1848,14 @@ def test_indexed_dedup_under_true_readstream(
     stream = stream_parquet_dir(
         spark, events_stream_dir, events_schema, max_files_per_trigger=1
     ).withColumn("__seq", F.lit(0))
-    q = start_streaming_dedup(
+    q = start_fold(
         stream,
-        key_columns=["event_id"],
-        sequence_column="__seq",
-        state_path=state,
+        functools.partial(
+            dedup_batch_indexed,
+            key_columns=["event_id"],
+            sequence_column="__seq",
+            state_path=state,
+        ),
         checkpoint_dir=str(tmp_path / "idx_stream_ckpt"),
     )
     q.awaitTermination(120)
@@ -1831,11 +1877,7 @@ def test_committed_dirs_serves_uri_scheme_paths(spark, tmp_path):
     file:-scheme state_path end-to-end — fold, read_state, and the
     dedup/containment slice readers all route through it."""
     from pyspark_unload_to_gcs_spark.operators.incremental import finalize_state
-    from pyspark_unload_to_gcs_spark.streaming.rollup import (
-        committed_dirs,
-        fold_batch,
-        read_state,
-    )
+    from pyspark_unload_to_gcs_spark.streaming.rollup import fold_batch, read_state
 
     state = "file:" + str(tmp_path / "uri_state")
     batch = spark.createDataFrame(

@@ -4,6 +4,7 @@ readers. Pins the resolution rules the Delta probes contract:
 timestamp-<= snapshot resolution, DESCRIBE-HISTORY ordering, CDF
 window filtering with out-of-range-empty, commit atomicity."""
 
+import functools
 import os
 import sys
 from pathlib import Path
@@ -19,6 +20,20 @@ from pyspark_unload_to_gcs_spark.sources.versioned import (
     snapshot_at_ms,
     table_history,
 )
+from pyspark_unload_to_gcs_spark.streaming.cdc_stream import cdf_merge_batch
+from pyspark_unload_to_gcs_spark.streaming.rollup import read_state, start_fold
+
+
+def _cdf_merge_stream(spark, table_path, *, checkpoint_dir, **fold_kwargs):
+    """``cdf_merge_batch`` over the table's ``versioned_commits``
+    stream, drained with ``start_fold``."""
+    stream = (
+        spark.readStream.format("versioned_commits")
+        .option("path", table_path)
+        .load()
+    )
+    fold = functools.partial(cdf_merge_batch, table_path=table_path, **fold_kwargs)
+    return start_fold(stream, fold, checkpoint_dir=checkpoint_dir)
 
 
 @pytest.fixture()
@@ -230,10 +245,11 @@ def test_versioned_commits_datasource_batch_stream_and_resume(spark, tmp_path):
 
 def test_versioned_commit_stream_to_export_sink(spark, tmp_path):
     """Full streaming CDC-ingest composition: versioned commits stream
-    (Python DataSource) -> start_stream_export (foreachBatch + the
-    batch gzip-JSON writer) — each drain exports exactly the versions
-    committed since the checkpoint, the reference's orchestrated
-    incremental loop with Spark checkpointing as the watermark."""
+    (Python DataSource) -> the export_batch fold under start_fold
+    (foreachBatch + the batch gzip-JSON writer) — each drain exports
+    exactly the versions committed since the checkpoint, the
+    reference's orchestrated incremental loop with Spark checkpointing
+    as the watermark."""
     import glob
     import gzip
     import json as _json
@@ -243,7 +259,10 @@ def test_versioned_commit_stream_to_export_sink(spark, tmp_path):
     from pyspark_unload_to_gcs_spark.sources.versioned_stream import (
         VersionedCommitsDataSource,
     )
-    from pyspark_unload_to_gcs_spark.streaming.export import start_stream_export
+    from pyspark_unload_to_gcs_spark.streaming.export import (
+        StreamExportStats,
+        export_batch,
+    )
 
     spark.dataSource.register(VersionedCommitsDataSource)
     table = str(tmp_path / "t")
@@ -260,8 +279,10 @@ def test_versioned_commit_stream_to_export_sink(spark, tmp_path):
             .option("path", table)
             .load()
         )
-        q, _stats = start_stream_export(
-            stream, cfg, checkpoint_dir=str(tmp_path / "ckpt")
+        q = start_fold(
+            stream,
+            functools.partial(export_batch, config=cfg, stats=StreamExportStats()),
+            checkpoint_dir=str(tmp_path / "ckpt"),
         )
         q.awaitTermination(120)
         rows = []
@@ -528,10 +549,6 @@ def test_versioned_cdf_merge_stream_end_to_end(spark, tmp_path):
     from pyspark_unload_to_gcs_spark.sources.versioned_stream import (
         VersionedCommitsDataSource,
     )
-    from pyspark_unload_to_gcs_spark.streaming.cdc_stream import (
-        start_versioned_cdf_merge,
-    )
-    from pyspark_unload_to_gcs_spark.streaming.merge import read_snapshot
 
     spark.dataSource.register(VersionedCommitsDataSource)
     table = str(tmp_path / "t")
@@ -548,7 +565,7 @@ def test_versioned_cdf_merge_stream_end_to_end(spark, tmp_path):
         changes.write.mode("append").parquet(changes_dir)
 
     def run():
-        q = start_versioned_cdf_merge(
+        q = _cdf_merge_stream(
             spark,
             table,
             key_columns=["k"],
@@ -560,7 +577,7 @@ def test_versioned_cdf_merge_stream_end_to_end(spark, tmp_path):
 
     run()
     # the maintained snapshot equals the table's latest version
-    snap = {(r["k"], r["v"]) for r in read_snapshot(spark, state).collect()}
+    snap = {(r["k"], r["v"]) for r in read_state(spark, state).collect()}
     assert snap == {(1, 11.0), (3, 30.0)}
     # the exported change rows are the per-commit CDF shape
     got = {
@@ -585,7 +602,7 @@ def test_versioned_cdf_merge_stream_end_to_end(spark, tmp_path):
     commit_version(mk([(1, 12.0), (3, 30.0), (4, 40.0)]), table, 400)
     commit_version(mk([(3, 30.0), (4, 40.0)]), table, 500)
     run()
-    snap = {(r["k"], r["v"]) for r in read_snapshot(spark, state).collect()}
+    snap = {(r["k"], r["v"]) for r in read_state(spark, state).collect()}
     assert snap == {(3, 30.0), (4, 40.0)}
     new_rows = {
         (r["_mp_change_type"], r["k"], r["v"], r["_commit_version"])
@@ -632,10 +649,6 @@ def test_versioned_cdf_merge_stream_empty_commit_truncation(spark, tmp_path):
     from pyspark_unload_to_gcs_spark.sources.versioned_stream import (
         VersionedCommitsDataSource,
     )
-    from pyspark_unload_to_gcs_spark.streaming.cdc_stream import (
-        start_versioned_cdf_merge,
-    )
-    from pyspark_unload_to_gcs_spark.streaming.merge import read_snapshot
 
     spark.dataSource.register(VersionedCommitsDataSource)
     table = str(tmp_path / "t")
@@ -645,7 +658,7 @@ def test_versioned_cdf_merge_stream_empty_commit_truncation(spark, tmp_path):
     mk = lambda rows: spark.createDataFrame(rows, "k int, v double")  # noqa: E731
 
     def run():
-        q = start_versioned_cdf_merge(
+        q = _cdf_merge_stream(
             spark,
             table,
             key_columns=["k"],
@@ -657,14 +670,14 @@ def test_versioned_cdf_merge_stream_empty_commit_truncation(spark, tmp_path):
 
     commit_version(mk([(1, 10.0), (2, 20.0)]), table, 100)
     run()
-    assert {(r["k"], r["v"]) for r in read_snapshot(spark, state).collect()} == {
+    assert {(r["k"], r["v"]) for r in read_state(spark, state).collect()} == {
         (1, 10.0),
         (2, 20.0),
     }
     # the truncating empty commit, as the ONLY new version
     commit_version(mk([]).filter("k IS NOT NULL"), table, 200)
     run()
-    snap = read_snapshot(spark, state)
+    snap = read_state(spark, state)
     assert snap.count() == 0
     got = {
         (r["_mp_change_type"], r["k"], r["_commit_version"])
@@ -675,7 +688,7 @@ def test_versioned_cdf_merge_stream_empty_commit_truncation(spark, tmp_path):
     # rows after the truncation keep flowing
     commit_version(mk([(3, 30.0)]), table, 300)
     run()
-    assert {(r["k"], r["v"]) for r in read_snapshot(spark, state).collect()} == {
+    assert {(r["k"], r["v"]) for r in read_state(spark, state).collect()} == {
         (3, 30.0)
     }
 
@@ -692,10 +705,6 @@ def test_versioned_cdf_merge_stream_vacuum_gap_raises(spark, tmp_path):
     from pyspark_unload_to_gcs_spark.sources.versioned_stream import (
         VersionedCommitsDataSource,
     )
-    from pyspark_unload_to_gcs_spark.streaming.cdc_stream import (
-        start_versioned_cdf_merge,
-    )
-    from pyspark_unload_to_gcs_spark.streaming.merge import read_snapshot
 
     spark.dataSource.register(VersionedCommitsDataSource)
     mk = lambda rows: spark.createDataFrame(rows, "k int, v double")  # noqa: E731
@@ -703,7 +712,7 @@ def test_versioned_cdf_merge_stream_vacuum_gap_raises(spark, tmp_path):
     # behind-retention consumer: applied v0, then v1 vacuumed away
     table = str(tmp_path / "t1")
     commit_version(mk([(1, 10.0)]), table, 100)
-    q = start_versioned_cdf_merge(
+    q = _cdf_merge_stream(
         spark,
         table,
         key_columns=["k"],
@@ -714,7 +723,7 @@ def test_versioned_cdf_merge_stream_vacuum_gap_raises(spark, tmp_path):
     commit_version(mk([(2, 20.0)]), table, 200)
     commit_version(mk([(3, 30.0)]), table, 300)
     vacuum(table, keep_last=1)  # drops v0 and the unapplied v1
-    q = start_versioned_cdf_merge(
+    q = _cdf_merge_stream(
         spark,
         table,
         key_columns=["k"],
@@ -734,7 +743,7 @@ def test_versioned_cdf_merge_stream_vacuum_gap_raises(spark, tmp_path):
     commit_version(mk([(1, 10.0)]), table2, 100)
     commit_version(mk([(2, 20.0)]), table2, 200)
     vacuum(table2, keep_last=1)
-    q = start_versioned_cdf_merge(
+    q = _cdf_merge_stream(
         spark,
         table2,
         key_columns=["k"],
@@ -742,7 +751,7 @@ def test_versioned_cdf_merge_stream_vacuum_gap_raises(spark, tmp_path):
         checkpoint_dir=str(tmp_path / "c2"),
     )
     assert q.awaitTermination(120)
-    snap = read_snapshot(spark, str(tmp_path / "s2"))
+    snap = read_state(spark, str(tmp_path / "s2"))
     assert {(r["k"], r["v"]) for r in snap.collect()} == {(2, 20.0)}
 
 
@@ -755,8 +764,6 @@ def test_cdf_merge_rowless_batch_defers_concurrent_data_commit(spark, tmp_path):
     loss. A rowless batch must apply only versions verifiably
     zero-row on disk and DEFER the data commit to the batch that
     carries its rows."""
-    from pyspark_unload_to_gcs_spark.streaming.cdc_stream import cdf_merge_batch
-    from pyspark_unload_to_gcs_spark.streaming.merge import read_snapshot
 
     table = str(tmp_path / "t")
     state = str(tmp_path / "state")
@@ -806,7 +813,7 @@ def test_cdf_merge_rowless_batch_defers_concurrent_data_commit(spark, tmp_path):
         on_changes=export,
     )
     assert len(exported) == n_exports, "rowless batch fabricated changes"
-    snap = read_snapshot(spark, state)
+    snap = read_state(spark, state)
     assert {(r["k"], r["v"]) for r in snap.collect()} == {(1, 10.0), (2, 20.0)}
 
     # batch 2 carries v1's real rows — the deferred commit applies now,
@@ -823,7 +830,7 @@ def test_cdf_merge_rowless_batch_defers_concurrent_data_commit(spark, tmp_path):
         ("DELETE", 1, 10.0, 1),
         ("INSERT", 1, 11.0, 1),
     }
-    snap = read_snapshot(spark, state)
+    snap = read_state(spark, state)
     assert {(r["k"], r["v"]) for r in snap.collect()} == {(1, 11.0), (2, 20.0)}
 
     # control: a genuinely EMPTY commit (zero-row on disk) still
@@ -843,7 +850,34 @@ def test_cdf_merge_rowless_batch_defers_concurrent_data_commit(spark, tmp_path):
         ("DELETE", 1, 11.0, 2),
         ("DELETE", 2, 20.0, 2),
     }
-    assert read_snapshot(spark, state).count() == 0
+    assert read_state(spark, state).count() == 0
+
+
+def test_cdf_merge_batch_on_uri_scheme_state_path(spark, tmp_path):
+    """The applied-version marker is read and written through the
+    Hadoop FileSystem like the state it sits in, so a ``file:`` state
+    path folds batch after batch (a local ``open`` of the URI failed
+    on batch 0)."""
+    table = str(tmp_path / "t")
+    state = "file:" + str(tmp_path / "state")
+    mk = lambda rows: spark.createDataFrame(  # noqa: E731
+        rows, "k int, v double, _commit_version long, _commit_timestamp long"
+    )
+    commit_version(
+        spark.createDataFrame([(1, 10.0), (2, 20.0)], "k int, v double"),
+        table,
+        100,
+    )
+    kw = dict(table_path=table, key_columns=["k"], state_path=state)
+    cdf_merge_batch(mk([(1, 10.0, 0, 100), (2, 20.0, 0, 100)]), 0, **kw)
+    commit_version(
+        spark.createDataFrame([(1, 11.0)], "k int, v double"), table, 200
+    )
+    cdf_merge_batch(mk([(1, 11.0, 1, 200)]), 1, **kw)
+    snap = read_state(spark, state)
+    assert {(r["k"], r["v"]) for r in snap.collect()} == {(1, 11.0)}
+    marker = tmp_path / "state" / "v=1" / "_APPLIED_VERSION"
+    assert marker.read_text() == "1"
 
 
 def test_ledger_n_rows_stat_recorded_and_survives_vacuum(spark, tmp_path):
@@ -873,8 +907,6 @@ def test_rowless_batch_uses_ledger_stat_not_per_version_jobs(
     snapshot reads (ADVICE r11: the fallback isEmpty() loop serialized
     one Spark job per pending version inside foreachBatch)."""
     from pyspark_unload_to_gcs_spark.sources import versioned as V
-    from pyspark_unload_to_gcs_spark.streaming.cdc_stream import cdf_merge_batch
-    from pyspark_unload_to_gcs_spark.streaming.merge import read_snapshot
 
     table = str(tmp_path / "t")
     state = str(tmp_path / "state")
@@ -913,7 +945,7 @@ def test_rowless_batch_uses_ledger_stat_not_per_version_jobs(
     )
     monkeypatch.undo()
     # the two empty commits applied (truncation), v3 deferred
-    assert read_snapshot(spark, state).count() == 0
+    assert read_state(spark, state).count() == 0
     cdf_merge_batch(
         mk([(1, 11.0, 3, 400)]),
         2,
@@ -921,7 +953,7 @@ def test_rowless_batch_uses_ledger_stat_not_per_version_jobs(
         key_columns=["k"],
         state_path=state,
     )
-    snap = read_snapshot(spark, state)
+    snap = read_state(spark, state)
     assert {(r["k"], r["v"]) for r in snap.collect()} == {(1, 11.0)}
 
 
@@ -939,10 +971,6 @@ def test_cdf_merge_stream_races_concurrent_committer(spark, tmp_path):
     from pyspark_unload_to_gcs_spark.sources.versioned_stream import (
         VersionedCommitsDataSource,
     )
-    from pyspark_unload_to_gcs_spark.streaming.cdc_stream import (
-        start_versioned_cdf_merge,
-    )
-    from pyspark_unload_to_gcs_spark.streaming.merge import read_snapshot
 
     spark.dataSource.register(VersionedCommitsDataSource)
     table = str(tmp_path / "t")
@@ -973,7 +1001,7 @@ def test_cdf_merge_stream_races_concurrent_committer(spark, tmp_path):
             assert [e["version"] for e in table_history(table)] == [1, 0]
 
     def run():
-        q = start_versioned_cdf_merge(
+        q = _cdf_merge_stream(
             spark,
             table,
             key_columns=["k"],
@@ -987,14 +1015,14 @@ def test_cdf_merge_stream_races_concurrent_committer(spark, tmp_path):
     # the in-flight batch applied ONLY v0 — the mid-batch commit was
     # neither applied early nor fabricated as a truncation
     assert exported[0] == {("INSERT", 1, 0), ("INSERT", 2, 0)}
-    assert {(r["k"], r["v"]) for r in read_snapshot(spark, state).collect()} == {
+    assert {(r["k"], r["v"]) for r in read_state(spark, state).collect()} == {
         (1, 10.0),
         (2, 20.0),
     }
     # the next drain delivers the racing commit exactly once, true diff
     run()
     assert exported[-1] == {("DELETE", 1, 1), ("INSERT", 1, 1)}
-    assert {(r["k"], r["v"]) for r in read_snapshot(spark, state).collect()} == {
+    assert {(r["k"], r["v"]) for r in read_state(spark, state).collect()} == {
         (1, 11.0),
         (2, 20.0),
     }
