@@ -10,9 +10,19 @@ Real Delta CDF requires delta-spark, which is optional here: the
 mapping/planning logic is Delta-independent and tested on in-memory
 frames; ``sources/delta.py`` wires the actual Delta readers behind an
 import guard.
+
+The change-feed kernel for tables without a change log lives here too,
+written once for every source: ``commit_as_of`` (the TIMESTAMP AS OF
+rule over a commit history), ``commit_changes`` (the per-commit diff
+loop) and ``window_changes`` (the ``[start_ms, end_ms]`` feed over a
+history and a version reader). ``sources/versioned.py``,
+``sources/delta_log.py`` and ``streaming/cdc_stream.py`` call them.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable, Sequence
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -137,3 +147,148 @@ def snapshot_diff(
         *[F.col(f"n.{c}").alias(c) for c in value_cols],
     )
     return deletes.unionByName(inserts)
+
+
+def commit_as_of(history: Sequence[dict], ts_ms: int, *, table: str) -> dict:
+    """The TIMESTAMP AS OF rule: the history entry with the highest
+    ``version`` whose ``commit_ms <= ts_ms`` (entries with no commit
+    time never resolve). ``history`` may come in any order. Pure
+    Python over the history list, no Spark call, so it also serves the
+    py4j-less workers the versioned DataSource plans in. Raises when
+    ``ts_ms`` precedes every commit."""
+    eligible = [
+        e for e in history if e["commit_ms"] is not None and e["commit_ms"] <= ts_ms
+    ]
+    if not eligible:
+        raise ValueError(
+            f"no commit of {table!r} at or before {ts_ms} ms — the "
+            "timestamp precedes the first commit"
+        )
+    return max(eligible, key=lambda e: e["version"])
+
+
+def commit_changes(
+    prev: DataFrame,
+    commits: Sequence[tuple[int, int, DataFrame]],
+    key_columns: Sequence[str],
+    *,
+    prev_version: int | None = None,
+) -> DataFrame:
+    """Change rows of consecutive commits: each ``(version, commit_ms,
+    frame)`` snapshot is diffed (``snapshot_diff``) against the one
+    before it — the first against ``prev`` — and stamped
+    ``_commit_version`` / ``_commit_timestamp``; the diffs are unioned.
+    No commits gives the empty stamped frame in ``prev``'s schema.
+
+    Versions must be consecutive, starting at ``prev_version + 1`` when
+    ``prev`` is a known version (``None`` = an empty or bootstrap base):
+    a gap means history between two snapshots is gone, and diffing
+    across it would attribute several commits' changes to one."""
+    keys = list(key_columns)
+    expected = None if prev_version is None else prev_version + 1
+    parts = []
+    for version, commit_ms, frame in commits:
+        if expected is not None and version != expected:
+            raise ValueError(
+                f"commit_changes: ledger gap at version {expected} (next "
+                f"surviving version is {version}) — history between the "
+                "two snapshots was vacuumed, so its per-commit changes "
+                "cannot be reconstructed. Re-sync from a full snapshot."
+            )
+        expected = version + 1
+        parts.append((version, commit_ms, snapshot_diff(prev, frame, keys)))
+        prev = frame
+    if not parts:
+        empty = prev.limit(0)
+        parts = [(None, None, snapshot_diff(empty, empty, keys))]
+    return reduce(
+        DataFrame.unionByName,
+        (
+            diff.withColumn("_commit_version", F.lit(version).cast("long"))
+            .withColumn("_commit_timestamp", F.lit(commit_ms).cast("long"))
+            for version, commit_ms, diff in parts
+        ),
+    )
+
+
+def _align(df: DataFrame, template: DataFrame, version: int, table: str) -> DataFrame:
+    """``df`` in ``template``'s columns: columns the version predates
+    come back as typed NULLs (additive evolution); a column the
+    template lacks raises."""
+    extra = [c for c in df.columns if c not in template.columns]
+    if extra:
+        raise ValueError(
+            f"change feed of {table!r}: version {version} carries columns "
+            f"{extra} absent from the latest schema — column DROPS are a "
+            "rewrite, not an evolution the feed aligns"
+        )
+    return df.select(
+        *[
+            F.col(f.name)
+            if f.name in df.columns
+            else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in template.schema.fields
+        ]
+    )
+
+
+def window_changes(
+    history: Sequence[dict],
+    read_version: Callable[[int], DataFrame],
+    start_ms: int,
+    end_ms: int,
+    *,
+    key_columns: Sequence[str],
+    table: str,
+) -> DataFrame:
+    """The change feed of a versioned table for every commit with
+    ``start_ms <= commit_ms <= end_ms``, from its ``history``
+    (``{"version", "commit_ms"}`` entries, any order; an entry with no
+    commit time is a readable version that never falls in a window)
+    and ``read_version(v)``, which returns snapshot ``v``.
+
+    Version 0 diffs against empty (the first-sync all-INSERT shape); a
+    window whose first commit has no surviving predecessor raises, as
+    Delta CDF does on vacuumed history, instead of fabricating the
+    pre-existing snapshot as INSERTs. The feed's schema is the newest
+    version's: older snapshots align by typed NULL columns, so an
+    unchanged row that merely gained a NULL column hashes the same on
+    both sides and emits nothing; a dropped column raises. Each
+    version is read once — the newest doubles as the schema template
+    when it is in the window. A window past the last commit gives the
+    empty stamped frame."""
+    if not history:
+        raise ValueError(f"{table!r} has no commits")
+    versions = {e["version"] for e in history}
+    in_window = sorted(
+        (
+            e
+            for e in history
+            if e["commit_ms"] is not None and start_ms <= e["commit_ms"] <= end_ms
+        ),
+        key=lambda e: e["version"],
+    )
+    first = in_window[0]["version"] if in_window else 0
+    prev_version = first - 1 if first > 0 else None
+    if prev_version is not None and prev_version not in versions:
+        raise ValueError(
+            f"change feed of {table!r}: commit version {first} has no "
+            f"surviving predecessor (version {prev_version} was vacuumed) "
+            "— the requested window spans vacuumed history, so per-commit "
+            "changes cannot be reconstructed. Narrow the window to start "
+            "at or after the oldest commit whose predecessor survives, or "
+            "re-sync from a full snapshot."
+        )
+    newest = max(versions)
+    template = read_version(newest)
+    frames = {newest: template}
+    for v in [prev_version, *(e["version"] for e in in_window)]:
+        if v is not None and v not in frames:
+            frames[v] = _align(read_version(v), template, v, table)
+    prev = template.limit(0) if prev_version is None else frames[prev_version]
+    return commit_changes(
+        prev,
+        [(e["version"], e["commit_ms"], frames[e["version"]]) for e in in_window],
+        key_columns,
+        prev_version=prev_version,
+    )

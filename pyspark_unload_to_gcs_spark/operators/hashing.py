@@ -82,11 +82,9 @@ def content_hash(
         df.columns, ignore_columns, ignore_substring_compat=ignore_substring_compat
     )
     if method == "json":
-        payload = F.to_json(F.struct(*[F.col(c) for c in cols]))
+        digest = F.md5(F.to_json(F.struct(*[F.col(c) for c in cols])))
     elif method == "concat":
-        payload = F.concat_ws(
-            "|", *[F.coalesce(F.col(c).cast("string"), F.lit(NULL_SENTINEL)) for c in cols]
-        )
+        digest = row_hash_expr(cols)
     else:
         raise ValueError(f"Unknown hash method: {method}")
-    return df.withColumn(output_column, F.md5(payload))
+    return df.withColumn(output_column, digest)

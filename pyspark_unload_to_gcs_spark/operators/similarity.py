@@ -61,68 +61,6 @@ def _pair_dot(a: str = "__va", b: str = "__vb") -> Column:
     )
 
 
-def _pair_dot_arrow(a: str = "__va", b: str = "__vb") -> Column:
-    """Arrow-batched twin of ``_pair_dot`` (opt r16, guide §4.2) —
-    BIT-IDENTICAL by construction, not merely close: the accumulation
-    runs in element-index order (``acc = acc + a[:,i]*b[:,i]``, one
-    numpy op per dimension over the whole batch), which is exactly the
-    left-to-right double fold the HOF evaluates per row, and IEEE-754
-    ops are deterministic — so each pair's double result carries the
-    same bits as the interpreted fold, and a threshold or rounding
-    downstream cannot flip between the two arms
-    (tests/test_asof.py::test_semantic_match_arrow_verify_matches_fold).
-    No BLAS matmul here on purpose: ``np.dot`` sums in SIMD/pairwise
-    order and could differ in the last ulp.
-
-    PRECONDITION (same fail-fast contract as ``ivf_assign``'s arrow
-    arm): every vector non-null, equal-length, with no NULL/NaN
-    elements — the fold path NULLs such pairs out of a >= filter, but
-    a silent NaN here would compare as GREATEST in Spark and keep the
-    pair; violations raise instead of diverging.
-
-    Marked non-deterministic so the optimizer cannot duplicate the
-    Python stage below a pushed-down filter (guide §4.4)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _dot(va: pd.Series, vb: pd.Series) -> pd.Series:
-        if len(va) == 0:
-            return pd.Series([], dtype="float64")
-        if va.isna().any() or vb.isna().any():
-            raise ValueError(
-                "_pair_dot_arrow: NULL vector in batch — the arrow verify "
-                "arm requires non-null fixed-dim vectors (use the fold arm "
-                "or filter first)"
-            )
-        try:
-            ma = np.array(va.tolist(), dtype=np.float64)
-            mb = np.array(vb.tolist(), dtype=np.float64)
-        except ValueError as exc:
-            raise ValueError(
-                "_pair_dot_arrow: ragged vector batch — all vectors must "
-                "share one dimension (use the fold arm)"
-            ) from exc
-        if ma.ndim != 2 or mb.ndim != 2 or ma.shape != mb.shape:
-            raise ValueError(
-                f"_pair_dot_arrow: pair sides disagree on shape "
-                f"({ma.shape} vs {mb.shape})"
-            )
-        if np.isnan(ma).any() or np.isnan(mb).any():
-            raise ValueError(
-                "_pair_dot_arrow: NULL/NaN element inside a vector — the "
-                "fold arm NULLs such pairs out of the threshold filter, a "
-                "NaN here would silently compare as greatest (use the fold "
-                "arm or impute first)"
-            )
-        acc = np.zeros(ma.shape[0], dtype=np.float64)
-        for i in range(ma.shape[1]):
-            acc = acc + ma[:, i] * mb[:, i]
-        return pd.Series(acc)
-
-    return _dot.asNondeterministic()(F.col(a), F.col(b))
-
-
 def cosine_to_query(vec_col: Column, query: Sequence[float]) -> Column:
     qn = math.sqrt(sum(float(x) * float(x) for x in query))
     denom = norm(vec_col) * F.lit(qn)
@@ -831,7 +769,6 @@ def semantic_match_against_index(
     vec_column: str = "embedding",
     cell_column: str = "ivf_cell",
     cosine_threshold: float = 0.95,
-    verify_method: str = "fold",
 ) -> DataFrame:
     """Incremental SemDeDup: match a NEW batch of vectors against a
     previously cell-assigned semantic ``index`` (the output of
@@ -842,15 +779,10 @@ def semantic_match_against_index(
     and the index — duplicate-id inputs emit duplicate pairs (ADVICE
     r04).
 
-    ``verify_method`` picks the exact-cosine arm for the joined pairs:
-    ``"fold"`` (default) is the codegen'd HOF dot; ``"arrow"`` runs
-    the SAME index-order accumulation vectorized over Arrow batches
-    (``_pair_dot_arrow`` — bit-identical by IEEE determinism, pinned
-    in tests) and requires fully non-null fixed-dim vectors (fails
-    fast otherwise). Measured r16: at ~63k pairs x 64 dims the fold
-    WINS (1.49 vs 1.97 s quiet min — the JVM->Python boundary costs
-    more than the fused fold); reach for "arrow" only when pair
-    volume x dim makes the interpreted-per-pair work dominate.
+    The exact cosine of each joined pair is the codegen'd HOF dot
+    (``_pair_dot``). An Arrow-batched verify arm was measured slower at
+    ~63k pairs x 64 dims (1.97 s against 1.49 s quiet min: the
+    JVM->Python boundary costs more than the fused fold) and removed.
 
     The clustered counterpart of ``ann_match_against_index``: the
     corpus is assigned ONCE when the index is written; each increment
@@ -878,11 +810,6 @@ def semantic_match_against_index(
             "every match silently missed. Rebuild the index or pass the quantizer "
             "it was built with."
         )
-    if verify_method not in ("fold", "arrow"):
-        raise ValueError(
-            f"semantic_match_against_index: unknown verify_method "
-            f"{verify_method!r} (expected 'fold' or 'arrow')"
-        )
     nb = ivf_assign(new_df, centroids, vec_column=vec_column, cell_column=cell_column)
     # per-row norm staging + no defensive pair-dedup: see ann_join
     l = nb.select(
@@ -897,8 +824,7 @@ def semantic_match_against_index(
         F.col(vec_column).alias("__vb"),
         norm(F.col(vec_column)).alias("__nb"),
     )
-    pair = _pair_dot_arrow() if verify_method == "arrow" else _pair_dot()
-    cos = pair / (F.col("__na") * F.col("__nb"))
+    cos = _pair_dot() / (F.col("__na") * F.col("__nb"))
     return (
         l.join(r, cell_column)
         .filter(F.col("new_id") != F.col("index_id"))
@@ -1200,10 +1126,9 @@ def pq_index_append(
     # drop the staging copy so high-frequency append streams don't
     # accumulate a full copy of the touched cells per compaction
     # (ADVICE r09); Hadoop FS API so object-store URIs work too
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(tmp)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
+    from pyspark_unload_to_gcs_spark.sources.versioned import _require_jfs
+
+    _jvm, _gw, fs, hpath = _require_jfs(tmp, "pq_index_append")
     fs.delete(hpath, True)
     return len(touched)
 

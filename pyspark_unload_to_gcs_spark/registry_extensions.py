@@ -1679,21 +1679,16 @@ def incremental_semantic_match_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py (foreachBatch over micro-batches equals
     this one-shot match).
 
-    Keeps the FOLD pair-verify arm after measurement (opt r16, VERDICT
-    r15 #6 explored): an Arrow pair-verify arm was built
-    (`_pair_dot_arrow`, bit-identical by IEEE determinism, pinned in
-    tests/test_asof.py::test_semantic_match_arrow_verify_matches_fold)
-    but measured SLOWER here — isolated quiet A/B min 1.49 s (fold) vs
+    Verifies pairs with the codegen'd FOLD dot: an Arrow pair-verify
+    arm measured SLOWER here — isolated quiet A/B min 1.49 s (fold) vs
     1.97 s (arrow) — because this row's candidate volume (~63k pairs x
-    64 dims) is far below where the JVM->Python boundary amortizes;
-    the codegen'd fold is ~4M fused multiply-adds. The arrow arm stays
-    available via ``verify_method`` for index scales where pair volume
-    dominates (the assignment-arm precedent at high k)."""
+    64 dims) is far below where the JVM->Python boundary amortizes
+    (the fold is ~4M fused multiply-adds), and was removed."""
     return _incremental_semantic_match_frame(spark, sf_dir, checkpoint=True)
 
 
 def _incremental_semantic_match_frame(
-    spark: SparkSession, sf_dir: str, *, checkpoint: bool, verify_method: str = "fold"
+    spark: SparkSession, sf_dir: str, *, checkpoint: bool
 ) -> DataFrame:
     """checkpoint=False is the PLAN TWIN arm
     (registry_pipeline.PLAN_TWINS): the eager index checkpoint renders as
@@ -1710,9 +1705,7 @@ def _incremental_semantic_match_frame(
     new = emb.filter(F.col("vec_id") % 4 == 0).select(
         (F.col("vec_id") + 50000).alias("vec_id"), "embedding"
     )
-    out = S.semantic_match_against_index(
-        new, index, cents, cosine_threshold=0.95, verify_method=verify_method
-    )
+    out = S.semantic_match_against_index(new, index, cents, cosine_threshold=0.95)
     return out.select("new_id", "index_id", F.round("cosine", 6).alias("cosine_r"))
 
 

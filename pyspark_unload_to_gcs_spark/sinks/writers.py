@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_unload_to_gcs_spark.config import ExportFormat, SyncConfig
+from pyspark_unload_to_gcs_spark.sources.versioned import _require_jfs
 
 
 def configure_gcs_auth(
@@ -123,36 +124,6 @@ def compact_files(
         )
     fs.delete(bak_p, True)
     return n_files
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table_name: str,
-    bucket_columns: list[str],
-    *,
-    n_buckets: int = 32,
-    sort_columns: list[str] | None = None,
-    format: str = "parquet",
-) -> None:
-    """Persist as a bucketed (and optionally sorted) managed table.
-
-    Bucketing is THE shuffle-elimination tool for repeated big-big
-    joins/aggregations on the same key at 100 TB: two tables bucketed by
-    the join key with the same bucket count join with NO Exchange (and
-    no sort, when sorted) — asserted in tests/test_plans.py. The write
-    itself shuffles once; every subsequent join amortizes it.
-    """
-    from pyspark_unload_to_gcs_spark.sources.bucketed import write_bucketed
-
-    write_bucketed(
-        df,
-        table_name,
-        bucket_columns=bucket_columns,
-        num_buckets=n_buckets,
-        sort_columns=sort_columns,
-        path=None,
-        format=format,
-    )
 
 
 def write_export(df: DataFrame, config: SyncConfig) -> str:
@@ -319,19 +290,6 @@ def write_zordered(
 MANIFEST_NAME = "_MANIFEST.json"
 
 
-def _manifest_fs(output_uri: str):
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError("manifest: no active SparkSession")
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(output_uri)
-    fs = path.getFileSystem(hconf)
-    return jvm, fs, path
-
-
 def _iter_data_files(fs, path):
     """Yield (rel_path, file_status) for every DATA file under the
     export root, excluding hidden/temporary content by checking EVERY
@@ -376,7 +334,7 @@ def write_manifest(output_uri: str, *, row_count: int | None = None) -> dict:
     dict."""
     import json
 
-    jvm, fs, path = _manifest_fs(output_uri)
+    jvm, _gw, fs, path = _require_jfs(output_uri, "write_manifest")
     entries = []
     for rel, st in _iter_data_files(fs, path):
         entries.append(
@@ -420,7 +378,7 @@ def validate_manifest(output_uri: str) -> dict:
     (review finding)."""
     import json
 
-    jvm, fs, path = _manifest_fs(output_uri)
+    jvm, _gw, fs, path = _require_jfs(output_uri, "validate_manifest")
     mpath = jvm.org.apache.hadoop.fs.Path(path, MANIFEST_NAME)
     if not fs.exists(mpath):
         raise ValueError(f"validate_manifest: no {MANIFEST_NAME} under {output_uri}")

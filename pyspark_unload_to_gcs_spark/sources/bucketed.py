@@ -54,8 +54,7 @@ def write_bucketed(
     """Write ``df`` as a bucketed table registered in the session
     catalog — EXTERNAL (path-backed) when ``path`` is given, managed
     otherwise. Overwrites any existing table of the same name. This is
-    the engine's one bucketed-write implementation;
-    ``sinks/writers.py::write_bucketed_table`` delegates here.
+    the engine's one bucketed-write implementation.
 
     ``sort_columns`` defaults to ``bucket_columns`` — sorted buckets let
     a sort-merge join skip its per-task sort, and cost nothing extra at

@@ -9,7 +9,10 @@ The DEPENDENCY-FREE runtime path for the same capabilities is
 ``sources/delta_log.py`` (r14): a minimal open-protocol transaction-log
 reader — history probe, TIMESTAMP AS OF replay through checkpoints,
 diff-derived change feed — executing S2-S4 semantics on the documented
-Delta table format without this package.
+Delta table format without this package. Its TIMESTAMP AS OF rule and
+change feed are the shared kernel in ``operators/cdc.py``
+(``commit_as_of``, ``window_changes`` over ``commit_changes``), the
+same one the versioned-parquet source runs.
 
 Reference behaviors being mirrored:
 - latest commit timestamp probe: DESCRIBE HISTORY ... LIMIT 1

@@ -19,13 +19,16 @@ spellings; this is the dependency-free execution path):
 - ``table_history`` / ``latest_commit_timestamp_ms`` — the DESCRIBE
   HISTORY probe (reference export.py:49-60, S4);
 - ``snapshot_at_ms`` — TIMESTAMP AS OF time travel with the newest
-  commit-timestamp <= ts resolution rule (export.py:112-114, S2);
+  commit-timestamp <= ts resolution rule (export.py:112-114, S2;
+  ``operators/cdc.commit_as_of``);
 - ``change_feed_by_diff`` — per-commit change rows in a timestamp
-  window via snapshot diffs (export.py:115-128, S3). A Delta writer
-  that persists ``_change_data`` files could serve these cheaper; the
-  diff derivation needs only the log + data files and emits the SAME
-  preimage-DELETE/postimage-INSERT model (``operators/cdc.py``),
-  stamped with ``_commit_version``/``_commit_timestamp``.
+  window via snapshot diffs (export.py:115-128, S3): the
+  ``operators/cdc.window_changes`` kernel the versioned-parquet twin
+  runs, fed log-replayed snapshots. A Delta writer that persists
+  ``_change_data`` files could serve these cheaper; the diff
+  derivation needs only the log + data files and emits the SAME
+  preimage-DELETE/postimage-INSERT model, stamped with
+  ``_commit_version``/``_commit_timestamp``.
 
 Scope is documented, not silently wrong: reader protocol version 1
 (no deletion vectors, no column mapping, no generated columns).
@@ -60,7 +63,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from pyspark_unload_to_gcs_spark.operators.cdc import snapshot_diff
+from pyspark_unload_to_gcs_spark.operators.cdc import commit_as_of, window_changes
 from pyspark_unload_to_gcs_spark.sources.versioned import (
     _jfs,
     _read_text,
@@ -232,18 +235,9 @@ def latest_commit_timestamp_ms(table: str) -> int:
 
 def version_at_timestamp_ms(table: str, ts_ms: int) -> int:
     """Newest version whose commit timestamp is <= ``ts_ms`` — the
-    TIMESTAMP AS OF resolution rule (same rule as the versioned-parquet
-    twin, sources/versioned.py)."""
-    eligible = [
-        e["version"]
-        for e in table_history(table)
-        if e["commit_ms"] is not None and e["commit_ms"] <= ts_ms
-    ]
-    if not eligible:
-        raise ValueError(
-            f"delta_log: no commit of {table!r} at or before {ts_ms} ms"
-        )
-    return max(eligible)
+    TIMESTAMP AS OF rule (``operators/cdc.commit_as_of``, shared with
+    the versioned-parquet twin)."""
+    return commit_as_of(table_history(table), ts_ms, table=table)["version"]
 
 
 def _check_protocol(action: dict, table: str) -> None:
@@ -425,12 +419,13 @@ def change_feed_by_diff(
     """Change rows for every commit with ``start_ms <= commit_ms <=
     end_ms`` (reference S3 window, export.py:115-128; caller supplies
     the half-open +1 ms start): per commit, the snapshot diff against
-    its predecessor — version 0 diffs against empty, the first-sync
-    all-INSERT shape — stamped ``_commit_version`` /
-    ``_commit_timestamp``. Same change model and stamps as the
-    versioned-parquet twin, derived from the OPEN log format. A window
-    past the last commit returns an empty frame instead of erroring
-    (the timestampOutOfRange contract, export.py:196)."""
+    its predecessor, stamped ``_commit_version`` /
+    ``_commit_timestamp`` — the ``operators/cdc.window_changes`` feed
+    the versioned-parquet twin runs, over log-replayed snapshots
+    (schema evolution aligns the same way). A version kept only in a
+    checkpoint still serves as a predecessor. A window past the last
+    commit returns an empty frame instead of erroring (the
+    timestampOutOfRange contract, export.py:196)."""
     history = table_history(table)
     # a commit with no commitInfo.timestamp cannot be placed inside or
     # outside the window — an incomplete feed with no error is the
@@ -443,39 +438,20 @@ def change_feed_by_diff(
             "commitInfo.timestamp — cannot decide change-feed window "
             "membership; refusing rather than serve an incomplete feed"
         )
-    in_window = [
-        e for e in history if start_ms <= e["commit_ms"] <= end_ms
+    committed = {e["version"] for e in history}
+    history += [
+        {"version": v, "commit_ms": None}
+        for v in checkpoint_versions(table)
+        if v not in committed
     ]
-    latest = history[-1]["version"]
-    template = snapshot_at_version(spark, table, latest)
-    empty = template.limit(0)
-    if not in_window:
-        return (
-            snapshot_diff(empty, empty, key_columns)
-            .withColumn("_commit_version", F.lit(None).cast("long"))
-            .withColumn("_commit_timestamp", F.lit(None).cast("long"))
-        )
-    parts = []
-    for e in in_window:
-        prev = (
-            snapshot_at_version(spark, table, e["version"] - 1)
-            if e["version"] > 0
-            else empty
-        )
-        cur = snapshot_at_version(spark, table, e["version"])
-        parts.append(
-            snapshot_diff(prev, cur, key_columns)
-            .withColumn(
-                "_commit_version", F.lit(e["version"]).cast("long")
-            )
-            .withColumn(
-                "_commit_timestamp", F.lit(e["commit_ms"]).cast("long")
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return window_changes(
+        history,
+        lambda v: snapshot_at_version(spark, table, v),
+        start_ms,
+        end_ms,
+        key_columns=key_columns,
+        table=table,
+    )
 
 
 # ---------------------------------------------------------------------------

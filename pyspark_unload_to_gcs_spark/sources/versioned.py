@@ -17,15 +17,16 @@ the SEMANTICS runtime evidence on the format Spark always has:
   any URI scheme the cluster can write (``file:``/``hdfs:``/``gs:``/
   ``s3a:``) versions identically;
 - ``snapshot_at_ms`` = the newest committed version with
-  ``commit_ms <= ts`` (Delta's TIMESTAMP AS OF resolution rule);
-- ``change_feed`` = per-commit snapshot diffs (operators/cdc.py
-  ``snapshot_diff``) for commits inside ``[start_ms, end_ms]``, each
-  row carrying ``_commit_version`` / ``_commit_timestamp`` next to the
-  export change discriminator — an update emits the same
-  preimage-DELETE / postimage-INSERT pair the reference maps Delta CDF
-  rows onto (export.py:121-126). A start past the last commit returns
-  an EMPTY frame, mirroring the timestampOutOfRange conf the Delta
-  reader sets.
+  ``commit_ms <= ts`` (Delta's TIMESTAMP AS OF resolution rule,
+  ``operators/cdc.commit_as_of``);
+- ``change_feed`` = per-commit snapshot diffs for commits inside
+  ``[start_ms, end_ms]`` (the ``operators/cdc.window_changes`` kernel
+  the Delta-log twin shares), each row carrying ``_commit_version`` /
+  ``_commit_timestamp`` next to the export change discriminator — an
+  update emits the same preimage-DELETE / postimage-INSERT pair the
+  reference maps Delta CDF rows onto (export.py:121-126). A start past
+  the last commit returns an EMPTY frame, mirroring the
+  timestampOutOfRange conf the Delta reader sets.
 
 Difference from a log-backed format, stated honestly: Delta reads
 changes from its commit log; this source reconstructs them by diffing
@@ -43,11 +44,11 @@ import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from pyspark_unload_to_gcs_spark.operators.cdc import (
     EXPORT_CHANGE_TYPE_COLUMN,
-    snapshot_diff,
+    commit_as_of,
+    window_changes,
 )
 
 _COMMITS_FILE = "_commits.json"
@@ -64,8 +65,9 @@ class ConcurrentCommitError(RuntimeError):
 # --- filesystem layer -------------------------------------------------
 #
 # All ledger and layout I/O goes through the JVM Hadoop FileSystem API
-# (the same abstraction write_manifest uses, sinks/writers.py), so a
-# versioned table works on ANY URI scheme the Spark cluster can write:
+# (``_require_jfs`` is also the one handle write_manifest,
+# validate_manifest and pq_index_append resolve), so a versioned
+# table works on ANY URI scheme the Spark cluster can write:
 # file:, hdfs:, gs:, s3a:. One honest exception: when there is no
 # active SparkSession in this Python process — the Spark 4 Python
 # DataSource (sources/versioned_stream.py) plans and reads inside
@@ -104,9 +106,9 @@ def _require_jfs(path: str, op: str):
     handle = _jfs(path)
     if handle is None:
         raise RuntimeError(
-            f"versioned.{op}: no active SparkSession — table mutations "
-            "go through the JVM Hadoop FileSystem API and cannot run "
-            "in a py4j-less worker process"
+            f"{op}: no active SparkSession — it goes through the JVM "
+            "Hadoop FileSystem API and cannot run in a py4j-less worker "
+            "process"
         )
     return handle
 
@@ -140,7 +142,7 @@ def _replace_text_atomic(path: str, text: str) -> None:
     """Write-to-temp + rename-with-OVERWRITE (FileContext) — atomic on
     local/HDFS, a single-object PUT on object stores; a reader never
     sees a half-written ledger."""
-    jvm, gw, fs, dst = _require_jfs(path, "_replace_text_atomic")
+    jvm, gw, fs, dst = _require_jfs(path, "versioned._replace_text_atomic")
     tmp = jvm.org.apache.hadoop.fs.Path(path + ".tmp")
     out = fs.create(tmp, True)
     try:
@@ -212,7 +214,7 @@ def _acquire_commit_lock(path: str, op: str):
     import datetime
     import socket
 
-    jvm, _gw, fs, _root = _require_jfs(path, op)
+    jvm, _gw, fs, _root = _require_jfs(path, f"versioned.{op}")
     lock = jvm.org.apache.hadoop.fs.Path(_sub(path, _LOCK_FILE))
     try:
         out = fs.create(lock, False)
@@ -375,15 +377,11 @@ def _read_version(spark: SparkSession, path: str, version: int) -> DataFrame:
 
 def snapshot_at_ms(spark: SparkSession, path: str, ts_ms: int) -> DataFrame:
     """Time-travel read pinned to a commit timestamp (reference S2):
-    the newest version with ``commit_ms <= ts_ms``. Raises if ``ts_ms``
-    precedes the first commit — same contract as Delta's TIMESTAMP AS
-    OF."""
-    eligible = [e for e in table_history(path) if e["commit_ms"] <= ts_ms]
-    if not eligible:
-        raise ValueError(
-            f"snapshot_at_ms: {ts_ms} precedes the first commit of {path!r}"
-        )
-    return _read_version(spark, path, eligible[0]["version"])
+    the newest version with ``commit_ms <= ts_ms``
+    (``operators/cdc.commit_as_of``). Raises if ``ts_ms`` precedes the
+    first commit — same contract as Delta's TIMESTAMP AS OF."""
+    entry = commit_as_of(table_history(path), ts_ms, table=path)
+    return _read_version(spark, path, entry["version"])
 
 
 def change_feed(
@@ -397,77 +395,19 @@ def change_feed(
     """Change rows for every commit with ``start_ms <= commit_ms <=
     end_ms`` (reference S3 window; caller supplies the half-open +1 ms
     start, ``operators.filters.cdc_window_bounds_ms``): per commit, the
-    snapshot diff against its predecessor (version 0 diffs against
-    empty = all-INSERT, the first-sync shape), stamped with
-    ``_commit_version`` and ``_commit_timestamp`` ms. A window past the
-    last commit returns an empty frame instead of erroring."""
-    history = sorted(table_history(path), key=lambda e: e["version"])
-    in_window = [e for e in history if start_ms <= e["commit_ms"] <= end_ms]
-    if not history:
-        raise ValueError(f"versioned table at {path!r} has no commits")
-    # schema evolution: the feed's schema is the LATEST version's (the
-    # table's current shape); older snapshots align by adding typed
-    # NULL columns. An unchanged row that merely gained a NULL column
-    # hashes identically on both sides of the diff, so evolution alone
-    # emits no spurious change rows.
-    template = _read_version(spark, path, history[-1]["version"])
-
-    def _aligned(df: DataFrame) -> DataFrame:
-        cols = []
-        for f in template.schema.fields:
-            if f.name in df.columns:
-                cols.append(F.col(f.name))
-            else:
-                cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-        extra = [c for c in df.columns if c not in template.columns]
-        if extra:
-            raise ValueError(
-                f"change_feed: version carries columns {extra} absent from "
-                "the latest schema — column DROPS are a rewrite, not an "
-                "evolution this source aligns"
-            )
-        return df.select(*cols)
-
-    empty = template.limit(0)
-    if not in_window:
-        return (
-            snapshot_diff(empty, empty, key_columns)
-            .withColumn("_commit_version", F.lit(None).cast("long"))
-            .withColumn("_commit_timestamp", F.lit(None).cast("long"))
-        )
-    parts = []
-    by_version = {e["version"]: e for e in history}
-    for e in in_window:
-        if e["version"] > 0 and e["version"] - 1 not in by_version:
-            # The predecessor was vacuumed: diffing against empty would
-            # fabricate the whole pre-existing snapshot as INSERT rows
-            # attributed to this commit. Delta CDF errors when the
-            # requested window spans vacuumed history — match it
-            # (ADVICE r09). Version 0 legitimately diffs against empty
-            # (the first-sync all-INSERT shape).
-            raise ValueError(
-                f"change_feed: commit version {e['version']} has no "
-                f"surviving predecessor (version {e['version'] - 1} was "
-                "vacuumed) — the requested window spans vacuumed history, "
-                "so per-commit changes cannot be reconstructed. Narrow "
-                "the window to start at or after the oldest commit whose "
-                "predecessor survives, or re-sync from a full snapshot."
-            )
-        prev = (
-            _aligned(_read_version(spark, path, e["version"] - 1))
-            if e["version"] - 1 in by_version
-            else empty
-        )
-        cur = _aligned(_read_version(spark, path, e["version"]))
-        parts.append(
-            snapshot_diff(prev, cur, key_columns)
-            .withColumn("_commit_version", F.lit(e["version"]).cast("long"))
-            .withColumn("_commit_timestamp", F.lit(e["commit_ms"]).cast("long"))
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    snapshot diff against its predecessor, stamped with
+    ``_commit_version`` and ``_commit_timestamp`` ms — the
+    ``operators/cdc.window_changes`` feed over this table's ledger. A
+    window past the last commit returns an empty frame instead of
+    erroring; one spanning vacuumed history raises."""
+    return window_changes(
+        table_history(path),
+        lambda v: _read_version(spark, path, v),
+        start_ms,
+        end_ms,
+        key_columns=key_columns,
+        table=path,
+    )
 
 
 __all__ = [

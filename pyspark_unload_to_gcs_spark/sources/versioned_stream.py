@@ -36,6 +36,12 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from pyspark_unload_to_gcs_spark.operators.cdc import commit_as_of
+from pyspark_unload_to_gcs_spark.sources.versioned import (
+    _strip_file_scheme,
+    table_history,
+)
+
 _ARROW_TO_DDL = {
     "int8": "tinyint",
     "int16": "smallint",
@@ -79,24 +85,12 @@ def _ddl_for(path: str) -> str:
     return ", ".join(parts)
 
 
-def _history(path: str) -> list[dict]:
-    """Committed (version, commit_ms) ASCENDING — delegates to the one
-    authoritative commit gate (ledger entry AND _SUCCESS,
-    sources/versioned.py::table_history) so the two modules cannot
-    drift on what counts as committed."""
-    from pyspark_unload_to_gcs_spark.sources.versioned import table_history
-
-    return sorted(table_history(path), key=lambda e: e["version"])
-
-
 def _version_files(path: str, version: int) -> list[str]:
     """Part files of a committed version, via local glob — this Python
     DataSource reads with pyarrow in py4j-less workers, so its scope
     is local/``file:`` paths (the module docstring's ingest-control
     posture); a ``file:`` URI from the Hadoop-FS versioned writer is
     accepted by stripping the scheme."""
-    from pyspark_unload_to_gcs_spark.sources.versioned import _strip_file_scheme
-
     return sorted(
         glob.glob(os.path.join(_strip_file_scheme(path), f"v={version}", "*.parquet"))
     )
@@ -206,19 +200,14 @@ class _SnapshotReader(DataSourceReader):
         target_bytes: int | None = None,
     ):
         self._targets = targets
-        history = _history(path)
+        history = table_history(path)  # newest first
         if not history:
             raise ValueError(f"versioned_commits: no commits at {path!r}")
-        if as_of_ms is None:
-            entry = history[-1]
-        else:
-            eligible = [e for e in history if e["commit_ms"] <= as_of_ms]
-            if not eligible:
-                raise ValueError(
-                    f"versioned_commits: as_of_ms={as_of_ms} precedes the "
-                    f"first commit of {path!r}"
-                )
-            entry = eligible[-1]
+        entry = (
+            history[0]
+            if as_of_ms is None
+            else commit_as_of(history, as_of_ms, table=path)
+        )
         self._parts = _grouped_partitions(
             path, entry["version"], entry["commit_ms"], target_bytes
         )
@@ -250,12 +239,12 @@ class _CommitsStreamReader(DataSourceStreamReader):
         return {"version": -1}
 
     def latestOffset(self):
-        history = _history(self._path)
-        return {"version": history[-1]["version"] if history else -1}
+        history = table_history(self._path)  # newest first
+        return {"version": history[0]["version"] if history else -1}
 
     def partitions(self, start, end):
         lo, hi = start["version"], end["version"]
-        by_version = {e["version"]: e for e in _history(self._path)}
+        by_version = {e["version"]: e for e in table_history(self._path)}
         parts = []
         for v in range(lo + 1, hi + 1):
             e = by_version.get(v)
@@ -292,7 +281,7 @@ class VersionedCommitsDataSource(DataSource):
         return path
 
     def schema(self) -> str:
-        history = _history(self._path())
+        history = table_history(self._path())  # newest first
         if not history:
             raise ValueError(
                 f"versioned_commits: no commits at {self._path()!r} to "
@@ -300,7 +289,7 @@ class VersionedCommitsDataSource(DataSource):
             )
         # LATEST version carries the table's current (evolved) schema;
         # older versions align via typed-NULL padding in the readers
-        files = _version_files(self._path(), history[-1]["version"])
+        files = _version_files(self._path(), history[0]["version"])
         base = _ddl_for(files[0])
         # both paths stamp commit metadata — one schema serves batch
         # snapshot reads and the commit stream alike

@@ -13,11 +13,12 @@ Streaming query instead of an orchestrated batch poll.
    ``_commit_timestamp`` — the ledger-gated trigger AND the postimage
    data in one read;
 2. inside ``foreachBatch``, per-commit change rows are derived
-   JVM-side with ``operators/cdc.snapshot_diff`` — the previous
-   snapshot comes from the merge state (which, by induction, equals
-   the last applied version), and successive versions WITHIN the
-   batch diff against each other, so every version's files are read
-   exactly once by the stream and never re-read from the table;
+   JVM-side by ``operators/cdc.commit_changes`` (the per-commit diff
+   loop of the batch change feeds) — the previous snapshot comes from
+   the merge state (which, by induction, equals the last applied
+   version), and successive versions WITHIN the batch diff against
+   each other, so every version's files are read exactly once by the
+   stream and never re-read from the table;
 3. the change rows fold onto the maintained snapshot through the
    ``streaming/merge.py`` algebra (collapse last-change-wins on
    ``_commit_version``, then ``apply_changes``) with the
@@ -32,8 +33,9 @@ inside the same ``foreachBatch``, so a retry re-exports the identical
 frame (idempotent sinks downstream, same contract as the reference's
 checkpointed window replay).
 
-Scale posture: the diff is a key-hash join per commit, the same plan
-``sources/versioned.change_feed`` runs in batch; the snapshots stream
+Scale posture: the diff is a key-hash join per commit, the same
+``commit_changes`` kernel ``sources/versioned.change_feed`` and
+``sources/delta_log.change_feed_by_diff`` run in batch; the snapshots stream
 through the Python source once. On a log-backed format (Delta CDF)
 the diff disappears — swap the readStream for the CDF reader and keep
 ``foreachBatch`` + merge unchanged.
@@ -50,7 +52,7 @@ from pyspark_unload_to_gcs_spark.operators.cdc import (
     EXPORT_CHANGE_TYPE_COLUMN,
     INSERT,
     apply_changes,
-    snapshot_diff,
+    commit_changes,
 )
 from pyspark_unload_to_gcs_spark.sources.versioned import (
     _read_text,
@@ -192,39 +194,29 @@ def cdf_merge_batch(
         todo = [(v, ms) for v, ms in ledger if prev_applied < v <= hi]
         if not todo:
             return
-        expected = prev_applied + 1 if prev_applied >= 0 else todo[0][0]
-        for v, _ms in todo:
-            if v != expected:
-                raise ValueError(
-                    f"cdf_merge_batch: ledger gap at version {expected} "
-                    f"(next surviving version is {v}) — vacuum removed "
-                    "history this consumer had not applied yet. Re-sync "
-                    "from a full snapshot."
-                )
-            expected = v + 1
         base_cols = [c for c in batch_df.columns if c not in _STAMPS]
         empty = batch_df.select(*base_cols).limit(0)
         prev_state = read_state(spark, state_path, before=batch_id)
-        prev_frame = prev_state if prev_state is not None else empty
-        changes: DataFrame | None = None
-        for version, commit_ms in todo:
-            # in-ledger version with no batch rows = an empty snapshot
-            # (its one part file has zero rows); the diff below emits
-            # the truncation as DELETEs
-            cur = (
-                batch_df.filter(
-                    F.col("_commit_version") == version
-                ).select(*base_cols)
-                if version in in_batch
-                else empty
-            )
-            diff = (
-                snapshot_diff(prev_frame, cur, list(key_columns))
-                .withColumn("_commit_version", F.lit(version).cast("long"))
-                .withColumn("_commit_timestamp", F.lit(commit_ms).cast("long"))
-            )
-            changes = diff if changes is None else changes.unionByName(diff)
-            prev_frame = cur
+        # an in-ledger version with no batch rows is an empty snapshot
+        # (its one part file has zero rows); its diff emits the
+        # truncation as DELETEs. A gap after the watermark raises in
+        # commit_changes; with no state yet, the oldest surviving
+        # version bootstraps as all-INSERTs.
+        changes = commit_changes(
+            prev_state if prev_state is not None else empty,
+            [
+                (
+                    v,
+                    ms,
+                    batch_df.filter(F.col("_commit_version") == v).select(*base_cols)
+                    if v in in_batch
+                    else empty,
+                )
+                for v, ms in todo
+            ],
+            key_columns,
+            prev_version=prev_applied if prev_applied >= 0 else None,
+        )
         if on_changes is not None:
             on_changes(changes, batch_id)
         # last-change-wins per key across the batch's commits, then one

@@ -185,84 +185,6 @@ def test_semantic_dedup_fixed_k_arrow_matches_fold(spark, sf_dir):
     assert out["fold"] == out["arrow"]
 
 
-def test_semantic_match_arrow_verify_matches_fold(spark, sf_dir):
-    """The registered incremental_semantic_match benches the ARROW
-    pair-verify arm (opt r16, VERDICT r15 #6): the index-order Arrow
-    accumulation must be BIT-identical to the HOF fold — full-precision
-    cosine compared, not the rounded output — because the >=0.95
-    threshold and the round(,6) both sit downstream of the dot."""
-    from pyspark_unload_to_gcs_spark.registry_extensions import (
-        _incremental_semantic_match_frame,
-    )
-
-    out = {}
-    for method in ("fold", "arrow"):
-        df = _incremental_semantic_match_frame(
-            spark, sf_dir, checkpoint=False, verify_method=method
-        )
-        out[method] = {tuple(r) for r in df.collect()}
-    assert out["fold"] == out["arrow"]
-
-    # full-precision pin on the operator itself (rounding must not be
-    # what makes them agree)
-    from pyspark.sql import functions as F
-
-    from pyspark_unload_to_gcs_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    cents = S.ivf_centroids_from_sample(emb, n_centroids=16)
-    index = S.ivf_assign(emb, cents)
-    new = emb.filter(F.col("vec_id") % 4 == 0).select(
-        (F.col("vec_id") + 50000).alias("vec_id"), "embedding"
-    )
-    full = {}
-    for method in ("fold", "arrow"):
-        full[method] = {
-            (r["new_id"], r["index_id"]): r["cosine"]
-            for r in S.semantic_match_against_index(
-                new, index, cents, cosine_threshold=0.95, verify_method=method
-            ).collect()
-        }
-    assert full["fold"].keys() == full["arrow"].keys()
-    for k, v in full["fold"].items():
-        # bit equality, not approx: IEEE determinism argument in
-        # _pair_dot_arrow's docstring
-        assert v == full["arrow"][k], k
-
-
-def test_pair_dot_arrow_fails_fast_on_null_and_ragged(spark):
-    """The arrow verify arm must refuse NULL/ragged vectors instead of
-    silently diverging from the fold path's NULL semantics (a NaN
-    cosine would compare as GREATEST in Spark and pass the threshold)."""
-    import pytest as _pytest
-    from py4j.protocol import Py4JJavaError
-    from pyspark.sql.utils import PythonException
-
-    from pyspark_unload_to_gcs_spark.operators import similarity as S
-
-    null_df = spark.createDataFrame(
-        [(1, [1.0, None]), (2, [1.0, 2.0])],
-        "vec_id long, embedding array<double>",
-    )
-    ragged_df = spark.createDataFrame(
-        [(1, [1.0]), (2, [1.0, 2.0])],
-        "vec_id long, embedding array<double>",
-    )
-    cents = [(0, [1.0, 0.0])]
-    for bad in (null_df, ragged_df):
-        idx = S.ivf_assign(bad.filter("vec_id = 2"), cents)
-        with _pytest.raises((PythonException, Py4JJavaError)):
-            S.semantic_match_against_index(
-                bad.filter("vec_id = 1"),
-                idx,
-                cents,
-                cosine_threshold=0.0,
-                verify_method="arrow",
-            ).collect()
-
-
 # --------------------------------------------------------------------------
 # Product quantization
 # --------------------------------------------------------------------------

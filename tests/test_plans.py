@@ -105,12 +105,16 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path_factory):
     """Two tables bucketed on the join key with equal bucket counts
     join shuffle-free — the amortized-shuffle layout for repeated
     big-big joins."""
-    from pyspark_unload_to_gcs_spark.sinks.writers import write_bucketed_table
+    from pyspark_unload_to_gcs_spark.sources.bucketed import write_bucketed
 
     o = registry._t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
     li = registry._t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    write_bucketed_table(o, "b_orders", ["o_orderkey"], n_buckets=8, sort_columns=["o_orderkey"])
-    write_bucketed_table(li, "b_lineitem", ["l_orderkey"], n_buckets=8, sort_columns=["l_orderkey"])
+    write_bucketed(
+        o, "b_orders", bucket_columns=["o_orderkey"], num_buckets=8, sort_columns=["o_orderkey"]
+    )
+    write_bucketed(
+        li, "b_lineitem", bucket_columns=["l_orderkey"], num_buckets=8, sort_columns=["l_orderkey"]
+    )
     try:
         bo, bl = spark.table("b_orders"), spark.table("b_lineitem")
         joined = bo.join(bl, bo.o_orderkey == bl.l_orderkey)
