@@ -21,7 +21,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_unload_to_gcs_spark.config import ExportFormat, SyncConfig
-from pyspark_unload_to_gcs_spark.sources.versioned import _require_jfs
+from pyspark_unload_to_gcs_spark.sources.versioned import (
+    _replace_text_atomic,
+    _require_jfs,
+    _sub,
+)
 
 
 def configure_gcs_auth(
@@ -88,14 +92,10 @@ def compact_files(
             .save(out_uri)
         )
 
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    src_p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = src_p.getFileSystem(hconf)
-    # component-wise hidden check (same rule as _iter_data_files):
-    # part files under a leftover _temporary/ dir from a crashed
-    # prior write must not inflate the sizing target (r06 advice —
-    # the leaf-name-only check counted them)
+    jvm, _gw, fs, src_p = _require_jfs(path, "compact_files")
+    # part files under a leftover _temporary/ dir from a crashed prior
+    # write must not inflate the sizing target: _iter_data_files skips
+    # a file when ANY path component is hidden, not just the leaf
     total_bytes = sum(st.getLen() for _rel, st in _iter_data_files(fs, src_p))
     n_files = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
     tag = uuid.uuid4().hex[:8]
@@ -294,8 +294,7 @@ def _iter_data_files(fs, path):
     """Yield (rel_path, file_status) for every DATA file under the
     export root, excluding hidden/temporary content by checking EVERY
     path component (``_temporary/0/part-*.json`` from a failed prior
-    job must not be manifested as data — a leaf-name-only check missed
-    it; review finding)."""
+    job must not be manifested as data)."""
     base = str(fs.makeQualified(path).toUri().getPath())
     it = fs.listFiles(path, True)
     while it.hasNext():
@@ -311,8 +310,8 @@ def _iter_data_files(fs, path):
 def _md5_hex_jvm(jvm, fs, p) -> str:
     """md5 of a file, streamed ENTIRELY JVM-side via commons-codec
     DigestUtils — only the 32-char hex crosses py4j, so a multi-GB
-    part file never materializes on the Python side (review finding;
-    commons-codec ships on Spark's classpath)."""
+    part file never materializes on the Python side (commons-codec
+    ships on Spark's classpath)."""
     stream = fs.open(p)
     try:
         return str(jvm.org.apache.commons.codec.digest.DigestUtils.md5Hex(stream))
@@ -329,9 +328,10 @@ def write_manifest(output_uri: str, *, row_count: int | None = None) -> dict:
     instead of silently under-loading). Files enumerate through the
     Hadoop FileSystem API (object-store URIs work like local paths);
     hashing streams JVM-side; the manifest is written to a temporary
-    name and RENAMED into place, so its presence atomically implies
-    the listed files were complete when hashed. Returns the manifest
-    dict."""
+    name and renamed over any previous one in a single step
+    (``_replace_text_atomic``), so an export is never left without a
+    manifest and its presence implies the listed files were complete
+    when hashed. Returns the manifest dict."""
     import json
 
     jvm, _gw, fs, path = _require_jfs(output_uri, "write_manifest")
@@ -353,16 +353,9 @@ def write_manifest(output_uri: str, *, row_count: int | None = None) -> dict:
     }
     if row_count is not None:
         manifest["row_count"] = int(row_count)
-    tmp = jvm.org.apache.hadoop.fs.Path(path, "." + MANIFEST_NAME + ".tmp")
-    out = jvm.org.apache.hadoop.fs.Path(path, MANIFEST_NAME)
-    stream = fs.create(tmp, True)
-    try:
-        stream.write(bytearray(json.dumps(manifest, indent=1).encode()))
-    finally:
-        stream.close()
-    fs.delete(out, False)
-    if not fs.rename(tmp, out):
-        raise IOError(f"write_manifest: rename to {MANIFEST_NAME} failed")
+    _replace_text_atomic(
+        _sub(output_uri, MANIFEST_NAME), json.dumps(manifest, indent=1)
+    )
     return manifest
 
 
@@ -374,8 +367,8 @@ def validate_manifest(output_uri: str) -> dict:
     FIRST (set membership, byte sizes from the listing); only
     size-matching files are hashed. Checksum/EOF read failures surface
     as divergences; infrastructure errors (auth, network) propagate
-    untranslated so a transient timeout is not mistaken for corruption
-    (review finding)."""
+    untranslated so a transient timeout is not mistaken for
+    corruption."""
     import json
 
     jvm, _gw, fs, path = _require_jfs(output_uri, "validate_manifest")

@@ -15,6 +15,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyspark_unload_to_gcs_spark.sources.versioned import _strip_file_scheme
 from pyspark_unload_to_gcs_spark.timeutil import ms_to_datetime
 
 TESTDATA_TABLES = (
@@ -41,12 +42,17 @@ def _nanos_timestamp_columns(path: str) -> list[str]:
     those natively — treating them as ns-longs would apply an integer
     div to a TIMESTAMP column and fail analysis. Only INT64 columns
     whose parquet logical type is TIMESTAMP(NANOS) need the conversion.
+    A ``file:`` URI is probed locally; other schemes report none.
     """
+    from urllib.parse import urlparse
+
     import pyarrow.parquet as pq
 
-    probe = path
-    if os.path.isdir(path):
-        files = sorted(glob.glob(os.path.join(path, "*.parquet")))
+    probe = _strip_file_scheme(path)
+    if urlparse(probe).scheme:
+        return []
+    if os.path.isdir(probe):
+        files = sorted(glob.glob(os.path.join(probe, "*.parquet")))
         if not files:
             return []
         probe = files[0]

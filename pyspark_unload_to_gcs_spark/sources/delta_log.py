@@ -30,6 +30,11 @@ spellings; this is the dependency-free execution path):
   preimage-DELETE/postimage-INSERT model, stamped with
   ``_commit_version``/``_commit_timestamp``.
 
+One log read per call: every public function lists ``_delta_log/``
+once (``_read_log``, through the session's Hadoop FileSystem) and
+passes the read down, which parses each commit JSON and collects each
+checkpoint at most once however many snapshots the call replays.
+
 Scope is documented, not silently wrong: reader protocol version 1
 (no deletion vectors, no column mapping, no generated columns).
 ``snapshot`` refuses tables demanding ``minReaderVersion > 1`` instead
@@ -55,9 +60,9 @@ pruned parquet scan of the surviving files.
 from __future__ import annotations
 
 import json
-import os
 import re
 import uuid
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -65,10 +70,9 @@ from pyspark.sql.types import StructType
 
 from pyspark_unload_to_gcs_spark.operators.cdc import commit_as_of, window_changes
 from pyspark_unload_to_gcs_spark.sources.versioned import (
-    _jfs,
     _read_text,
+    _replace_text_atomic,
     _require_jfs,
-    _strip_file_scheme,
     _sub,
 )
 
@@ -83,11 +87,11 @@ _MULTIPART_CP_RE = re.compile(r"^(\d{20})\.checkpoint\.(\d{10})\.(\d{10})\.parqu
 _OTHER_CP_RE = re.compile(r"^(\d{20})\.checkpoint\..+$")
 
 # Hard bound on the checkpoint actions materialized on the driver per
-# replay (VERDICT r15 #4): each projected action row is ~100-300 B, so
-# the cap is a few hundred MB of driver heap — the scale at which real
-# deployments shard state or move to the manifest-checkpoint formats
-# this v1 reader refuses anyway. Over-cap checkpoints REFUSE loudly,
-# the same posture as the reader's other v1 caps.
+# replay: each projected action row is ~100-300 B, so the cap is a few
+# hundred MB of driver heap — the scale at which real deployments
+# shard state or move to the manifest-checkpoint formats this v1
+# reader refuses anyway. Over-cap checkpoints REFUSE loudly, the same
+# posture as the reader's other v1 caps.
 _CHECKPOINT_ACTION_CAP = 2_000_000
 
 
@@ -95,104 +99,96 @@ def _log_path(table: str) -> str:
     return _sub(table, _LOG_DIR)
 
 
-def _list_log_files(table: str) -> list[str]:
-    """File NAMES in ``_delta_log/`` (not paths), [] if absent."""
-    log = _log_path(table)
-    handle = _jfs(log)
-    if handle is None:
-        local = _strip_file_scheme(log)
-        if not os.path.isdir(local):
-            return []
-        return sorted(os.listdir(local))
-    _jvm, _gw, fs, p = handle
-    if not fs.exists(p):
-        return []
-    return sorted(
-        str(st.getPath().getName()) for st in fs.listStatus(p)
+def _commit_file(table: str, version: int) -> str:
+    return _sub(_log_path(table), f"{version:020d}.json")
+
+
+@dataclass
+class _DeltaLog:
+    """One listing of ``_delta_log/`` for one public call, with each
+    commit's actions and each checkpoint's state cached on first use."""
+
+    table: str
+    commits: list[int]
+    complete_checkpoints: dict[int, list[str]]
+    unknown_checkpoint: str | None
+    parsed: dict[int, list[dict]] = field(default_factory=dict)
+    collected: dict[int, tuple[dict[str, dict], dict | None]] = field(
+        default_factory=dict
     )
+
+    @property
+    def checkpoints(self) -> dict[int, list[str]]:
+        """{version: part paths}, ascending. Raises on a checkpoint shape
+        this reader does not understand: skipping it would move the
+        replay floor below log-cleaned commits."""
+        if self.unknown_checkpoint is not None:
+            raise ValueError(
+                f"delta_log: {self.table!r} carries a checkpoint file this "
+                f"protocol-v1 reader does not understand "
+                f"({self.unknown_checkpoint}) — refusing rather than "
+                "replay from the wrong floor"
+            )
+        return self.complete_checkpoints
+
+    def actions(self, version: int) -> list[dict]:
+        """The actions of commit ``version``, parsed once per read."""
+        if version not in self.parsed:
+            text = _read_text(_commit_file(self.table, version))
+            if text is None:
+                raise ValueError(
+                    f"delta_log: commit {version} missing from {self.table!r}"
+                )
+            self.parsed[version] = [
+                json.loads(line) for line in text.splitlines() if line.strip()
+            ]
+        return self.parsed[version]
+
+
+def _read_log(table: str | _DeltaLog) -> _DeltaLog:
+    """List ``_delta_log/`` (absent reads as empty); a ``_DeltaLog``
+    passes through, so a callee reuses its caller's read."""
+    if isinstance(table, _DeltaLog):
+        return table
+    log = _log_path(table)
+    _jvm, _gw, fs, p = _require_jfs(log, "delta_log._read_log")
+    names = (
+        sorted(str(st.getPath().getName()) for st in fs.listStatus(p))
+        if fs.exists(p)
+        else []
+    )
+    commits: list[int] = []
+    complete: dict[int, list[str]] = {}
+    parts: dict[int, dict[int, dict[int, str]]] = {}
+    unknown = None
+    for name in names:
+        if m := _COMMIT_RE.match(name):
+            commits.append(int(m.group(1)))
+        elif m := _CHECKPOINT_RE.match(name):
+            complete[int(m.group(1))] = [_sub(log, name)]
+        elif m := _MULTIPART_CP_RE.match(name):
+            v, i, n = (int(g) for g in m.groups())
+            parts.setdefault(v, {}).setdefault(n, {})[i] = _sub(log, name)
+        elif unknown is None and _OTHER_CP_RE.match(name):
+            unknown = name
+    for v, by_n in parts.items():
+        for n in sorted(by_n):
+            if v not in complete and set(by_n[n]) == set(range(1, n + 1)):
+                complete[v] = [by_n[n][i] for i in range(1, n + 1)]
+    return _DeltaLog(table, commits, dict(sorted(complete.items())), unknown)
 
 
 def commit_versions(table: str) -> list[int]:
     """Sorted commit versions present as JSON commit files."""
-    out = []
-    for name in _list_log_files(table):
-        m = _COMMIT_RE.match(name)
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
+    return list(_read_log(table).commits)
 
 
 def checkpoint_versions(table: str) -> list[int]:
     """Sorted versions with a readable parquet checkpoint: single-file,
     or multi-part with ALL parts present. Checkpoint-shaped files this
-    v1 reader does not understand (V2 UUID checkpoints, sidecars) raise
-    instead of being skipped — a skipped checkpoint would silently move
-    the replay floor below log-cleaned commits (ADVICE r14)."""
-    singles: set[int] = set()
-    parts: dict[int, dict[int, set[int]]] = {}
-    for name in _list_log_files(table):
-        m = _CHECKPOINT_RE.match(name)
-        if m:
-            singles.add(int(m.group(1)))
-            continue
-        m = _MULTIPART_CP_RE.match(name)
-        if m:
-            v, i, n = (int(g) for g in m.groups())
-            parts.setdefault(v, {}).setdefault(n, set()).add(i)
-            continue
-        if _OTHER_CP_RE.match(name):
-            raise ValueError(
-                f"delta_log: {table!r} carries a checkpoint file this "
-                f"protocol-v1 reader does not understand ({name}) — "
-                "refusing rather than replay from the wrong floor"
-            )
-    complete_multis = {
-        v
-        for v, by_n in parts.items()
-        if any(done == set(range(1, n + 1)) for n, done in by_n.items())
-    }
-    return sorted(singles | complete_multis)
-
-
-def _checkpoint_paths(table: str, version: int) -> list[str]:
-    """The parquet files making up the checkpoint at ``version``: the
-    single file when one exists, else the complete multi-part set."""
-    single = None
-    multis: dict[int, dict[int, str]] = {}
-    for name in _list_log_files(table):
-        m = _CHECKPOINT_RE.match(name)
-        if m and int(m.group(1)) == version:
-            single = name
-            continue
-        m = _MULTIPART_CP_RE.match(name)
-        if m and int(m.group(1)) == version:
-            _v, i, n = (int(g) for g in m.groups())
-            multis.setdefault(n, {})[i] = name
-    if single is not None:
-        return [_sub(_log_path(table), single)]
-    for n in sorted(multis):
-        if set(multis[n]) == set(range(1, n + 1)):
-            return [
-                _sub(_log_path(table), multis[n][i])
-                for i in range(1, n + 1)
-            ]
-    raise ValueError(
-        f"delta_log: no complete checkpoint at version {version} of "
-        f"{table!r}"
-    )
-
-
-def _commit_file(table: str, version: int) -> str:
-    return _sub(_log_path(table), f"{version:020d}.json")
-
-
-def _read_actions(table: str, version: int) -> list[dict]:
-    text = _read_text(_commit_file(table, version))
-    if text is None:
-        raise ValueError(
-            f"delta_log: commit {version} missing from {table!r}"
-        )
-    return [json.loads(line) for line in text.splitlines() if line.strip()]
+    v1 reader does not understand (V2 UUID checkpoints, sidecars)
+    raise."""
+    return list(_read_log(table).checkpoints)
 
 
 def table_history(table: str) -> list[dict]:
@@ -201,16 +197,14 @@ def table_history(table: str) -> list[dict]:
     (``commitInfo.timestamp``; protocol: milliseconds), operation
     string (absent commitInfo degrades to operation=None, never an
     error — commitInfo is optional in the protocol)."""
-    versions = commit_versions(table)
-    if not versions:
-        raise ValueError(f"no Delta commit log found under {table!r}")
+    log = _read_log(table)
+    if not log.commits:
+        raise ValueError(f"no Delta commit log found under {log.table!r}")
     out = []
-    for v in versions:
-        info = {}
-        for action in _read_actions(table, v):
-            if "commitInfo" in action:
-                info = action["commitInfo"]
-                break
+    for v in log.commits:
+        info = next(
+            (a["commitInfo"] for a in log.actions(v) if "commitInfo" in a), {}
+        )
         out.append(
             {
                 "version": v,
@@ -224,10 +218,11 @@ def table_history(table: str) -> list[dict]:
 def latest_commit_timestamp_ms(table: str) -> int:
     """Most recent commit's timestamp in epoch ms (the reference's
     DESCRIBE HISTORY ... LIMIT 1 probe, export.py:49-60)."""
-    last = table_history(table)[-1]
+    log = _read_log(table)
+    last = table_history(log)[-1]
     if last["commit_ms"] is None:
         raise ValueError(
-            f"delta_log: commit {last['version']} of {table!r} carries "
+            f"delta_log: commit {last['version']} of {log.table!r} carries "
             "no commitInfo.timestamp — cannot resolve a commit time"
         )
     return int(last["commit_ms"])
@@ -237,7 +232,8 @@ def version_at_timestamp_ms(table: str, ts_ms: int) -> int:
     """Newest version whose commit timestamp is <= ``ts_ms`` — the
     TIMESTAMP AS OF rule (``operators/cdc.commit_as_of``, shared with
     the versioned-parquet twin)."""
-    return commit_as_of(table_history(table), ts_ms, table=table)["version"]
+    log = _read_log(table)
+    return commit_as_of(table_history(log), ts_ms, table=log.table)["version"]
 
 
 def _check_protocol(action: dict, table: str) -> None:
@@ -250,8 +246,90 @@ def _check_protocol(action: dict, table: str) -> None:
         )
 
 
+def _collect_checkpoint(
+    spark: SparkSession, log: _DeltaLog, cp: int
+) -> tuple[dict[str, dict], dict | None]:
+    """(active files, metaData) of the checkpoint at ``cp``, collected
+    once per log read."""
+    if cp in log.collected:
+        return log.collected[cp]
+    table = log.table
+    cp_df = spark.read.parquet(*log.checkpoints[cp])
+    cols = []
+    if "protocol" in cp_df.columns:
+        cols.append(F.col("protocol.minReaderVersion").alias("p_mrv"))
+    else:
+        cols.append(F.lit(None).cast("int").alias("p_mrv"))
+    if "metaData" not in cp_df.columns:
+        raise ValueError(
+            f"delta_log: checkpoint {cp} of {table!r} has no metaData "
+            "column — not a protocol-v1 classic checkpoint"
+        )
+    cols.append(F.col("metaData"))
+    cols.append(
+        F.when(
+            F.col("add").isNotNull(),
+            F.struct(
+                F.col("add.path").alias("path"),
+                F.col("add.partitionValues").alias("partitionValues"),
+                F.col("add.size").alias("size"),
+                F.col("add.modificationTime").alias("modificationTime"),
+            ),
+        ).alias("add")
+        if "add" in cp_df.columns
+        else F.lit(None).alias("add")
+    )
+    cols.append(
+        F.col("remove.path").alias("rm_path")
+        if "remove" in cp_df.columns
+        else F.lit(None).cast("string").alias("rm_path")
+    )
+    # driver-side collect of LOG METADATA (one row per action, the same
+    # economics as every Delta reader, which also materializes the
+    # active-file list to plan the scan) — but BOUNDED and COLUMN-PRUNED:
+    # capped at _CHECKPOINT_ACTION_CAP actions (limit(cap+1) — ONE job,
+    # and an over-cap checkpoint REFUSES instead of growing the driver
+    # without bound), and only the action fields the replay consumes
+    # cross the wire — the protocol guard, the metaData struct, add's
+    # path/partitionValues/size/modificationTime (what write_checkpoint
+    # re-emits; the scan needs only path) and remove.path. Foreign
+    # checkpoints may carry wide per-file stats/tags columns that this
+    # projection drops before collect.
+    rows = cp_df.select(*cols).limit(_CHECKPOINT_ACTION_CAP + 1).collect()
+    if len(rows) > _CHECKPOINT_ACTION_CAP:
+        raise ValueError(
+            f"delta_log: checkpoint {cp} of {table!r} holds more than "
+            f"{_CHECKPOINT_ACTION_CAP} actions — refusing to "
+            "materialize an unbounded active-file list on the driver "
+            "(shard state or use a manifest-checkpoint format)"
+        )
+    # adds first, removes popped after: a spec checkpoint carries each
+    # path as EITHER an active add or a remove tombstone, so this is
+    # row-order-independent (collect order is not a protocol guarantee)
+    files: dict[str, dict] = {}
+    metadata: dict | None = None
+    removed: set[str] = set()
+    for r in rows:
+        if r["p_mrv"] is not None:
+            _check_protocol({"protocol": {"minReaderVersion": r["p_mrv"]}}, table)
+        md = r["metaData"]
+        if md is not None and md["schemaString"] is not None:
+            metadata = md.asDict(recursive=True)
+        add = r["add"]
+        if add is not None and add["path"] is not None:
+            d = add.asDict(recursive=True)
+            d["dataChange"] = False
+            files[d["path"]] = d
+        if r["rm_path"] is not None:
+            removed.add(r["rm_path"])
+    for p in removed:
+        files.pop(p, None)
+    log.collected[cp] = files, metadata
+    return files, metadata
+
+
 def _active_state(
-    spark: SparkSession, table: str, version: int
+    spark: SparkSession, log: _DeltaLog, version: int
 ) -> tuple[dict[str, dict], dict | None]:
     """Replay the log to ``version``: (active files {relative path ->
     add action}, latest full metaData action dict). Starts from the
@@ -259,102 +337,29 @@ def _active_state(
     protocol's compaction — then applies later JSON commits in order.
     Every commit version in ``(checkpoint, version]`` must be present
     as a JSON file: a gap means the log was cleaned past the chosen
-    floor and a partial replay would return wrong rows AND could skip
-    the protocol-guard action, so this refuses instead (ADVICE r14 —
-    the writer already enforced the no-gap invariant; now the reader
-    does too)."""
+    floor, and a partial replay would return wrong rows AND could skip
+    the protocol-guard action, so this refuses instead (the writer
+    enforces the same no-gap invariant)."""
     files: dict[str, dict] = {}
     metadata: dict | None = None
     start = 0
-    cps = [c for c in checkpoint_versions(table) if c <= version]
+    cps = [c for c in log.checkpoints if c <= version]
     if cps:
-        cp = cps[-1]
-        # driver-side collect of LOG METADATA (one row per action, the
-        # same economics as every Delta reader, which also materializes
-        # the active-file list to plan the scan) — but BOUNDED and
-        # COLUMN-PRUNED (VERDICT r15 #1/#4): the collect is capped at
-        # _CHECKPOINT_ACTION_CAP actions (limit(cap+1) — ONE job, and
-        # an over-cap checkpoint REFUSES like the reader's other v1
-        # caps instead of growing the driver without bound), and only
-        # the action fields the replay consumes cross the wire — the
-        # protocol guard, the metaData struct, add's
-        # path/partitionValues/size/modificationTime (what
-        # write_checkpoint re-emits; the scan needs only path) and
-        # remove.path. Foreign checkpoints may carry wide per-file
-        # stats/tags columns that this projection drops before collect.
-        cp_df = spark.read.parquet(*_checkpoint_paths(table, cp))
-        cols = []
-        if "protocol" in cp_df.columns:
-            cols.append(F.col("protocol.minReaderVersion").alias("p_mrv"))
-        else:
-            cols.append(F.lit(None).cast("int").alias("p_mrv"))
-        if "metaData" not in cp_df.columns:
-            raise ValueError(
-                f"delta_log: checkpoint {cp} of {table!r} has no metaData "
-                "column — not a protocol-v1 classic checkpoint"
-            )
-        cols.append(F.col("metaData"))
-        cols.append(
-            F.when(
-                F.col("add").isNotNull(),
-                F.struct(
-                    F.col("add.path").alias("path"),
-                    F.col("add.partitionValues").alias("partitionValues"),
-                    F.col("add.size").alias("size"),
-                    F.col("add.modificationTime").alias("modificationTime"),
-                ),
-            ).alias("add")
-            if "add" in cp_df.columns
-            else F.lit(None).alias("add")
-        )
-        cols.append(
-            F.col("remove.path").alias("rm_path")
-            if "remove" in cp_df.columns
-            else F.lit(None).cast("string").alias("rm_path")
-        )
-        rows = cp_df.select(*cols).limit(_CHECKPOINT_ACTION_CAP + 1).collect()
-        if len(rows) > _CHECKPOINT_ACTION_CAP:
-            raise ValueError(
-                f"delta_log: checkpoint {cp} of {table!r} holds more than "
-                f"{_CHECKPOINT_ACTION_CAP} actions — refusing to "
-                "materialize an unbounded active-file list on the driver "
-                "(shard state or use a manifest-checkpoint format)"
-            )
-        # adds first, removes popped after: a spec checkpoint carries
-        # each path as EITHER an active add or a remove tombstone, so
-        # this is row-order-independent (collect order is not a
-        # protocol guarantee)
-        removed: set[str] = set()
-        for r in rows:
-            if r["p_mrv"] is not None:
-                _check_protocol(
-                    {"protocol": {"minReaderVersion": r["p_mrv"]}}, table
-                )
-            md = r["metaData"]
-            if md is not None and md["schemaString"] is not None:
-                metadata = md.asDict(recursive=True)
-            add = r["add"]
-            if add is not None and add["path"] is not None:
-                d = add.asDict(recursive=True)
-                d["dataChange"] = False
-                files[d["path"]] = d
-            if r["rm_path"] is not None:
-                removed.add(r["rm_path"])
-        for p in removed:
-            files.pop(p, None)
-        start = cp + 1
-    present = set(commit_versions(table))
+        cp_files, metadata = _collect_checkpoint(spark, log, cps[-1])
+        files = dict(cp_files)
+        start = cps[-1] + 1
+    present = set(log.commits)
     needed = [v for v in range(start, version + 1) if v not in present]
     if needed:
         raise ValueError(
-            f"delta_log: commits {needed} missing from {table!r} between "
+            f"delta_log: commits {needed} missing from {log.table!r} between "
             f"replay floor {start} and requested version {version} — the "
             "log was cleaned past the newest usable checkpoint; refusing "
             "to replay an incomplete action set"
         )
     for v in range(start, version + 1):
-        for action in _read_actions(table, v):
-            _check_protocol(action, table)
+        for action in log.actions(v):
+            _check_protocol(action, log.table)
             if "metaData" in action and action["metaData"].get("schemaString"):
                 metadata = action["metaData"]
             if "add" in action:
@@ -374,38 +379,37 @@ def snapshot_at_version(
     schema format), never a schemaless empty frame."""
     from urllib.parse import unquote
 
+    log = _read_log(table)
     # a version is addressable if its commit JSON exists OR a
     # checkpoint at exactly that version does — a log vacuumed all the
     # way to a checkpoint keeps the checkpointed version readable
     # (delta-spark serves this; the checkpoint IS the complete state)
-    versions = commit_versions(table)
-    if version not in versions and version not in checkpoint_versions(table):
+    if version not in log.commits and version not in log.checkpoints:
         raise ValueError(
-            f"delta_log: version {version} not in {table!r} "
-            f"(have {versions})"
+            f"delta_log: version {version} not in {log.table!r} "
+            f"(have {log.commits})"
         )
-    files, metadata = _active_state(spark, table, version)
+    files, metadata = _active_state(spark, log, version)
     schema_json = metadata.get("schemaString") if metadata else None
     if not files:
         if schema_json is None:
             raise ValueError(
                 f"delta_log: empty snapshot and no metaData.schemaString "
-                f"in {table!r} — cannot type an empty frame"
+                f"in {log.table!r} — cannot type an empty frame"
             )
         schema = StructType.fromJson(json.loads(schema_json))
         return spark.createDataFrame([], schema)
     # protocol: add.path is RELATIVE to the table root and URL-encoded
-    paths = [_sub(table, unquote(p)) for p in sorted(files)]
-    return spark.read.option("basePath", table).parquet(*paths)
+    paths = [_sub(log.table, unquote(p)) for p in sorted(files)]
+    return spark.read.option("basePath", log.table).parquet(*paths)
 
 
 def snapshot_at_ms(spark: SparkSession, table: str, ts_ms: int) -> DataFrame:
     """TIMESTAMP AS OF time travel (reference S2, export.py:112-114):
     resolve the newest commit at or before ``ts_ms``, then read that
     version's surviving files."""
-    return snapshot_at_version(
-        spark, table, version_at_timestamp_ms(table, ts_ms)
-    )
+    log = _read_log(table)
+    return snapshot_at_version(spark, log, version_at_timestamp_ms(log, ts_ms))
 
 
 def change_feed_by_diff(
@@ -426,31 +430,32 @@ def change_feed_by_diff(
     checkpoint still serves as a predecessor. A window past the last
     commit returns an empty frame instead of erroring (the
     timestampOutOfRange contract, export.py:196)."""
-    history = table_history(table)
+    log = _read_log(table)
+    history = table_history(log)
     # a commit with no commitInfo.timestamp cannot be placed inside or
     # outside the window — an incomplete feed with no error is the
-    # silent-wrong path this module promises not to have (ADVICE r14),
-    # so refuse, matching latest_commit_timestamp_ms
+    # silent-wrong path this module promises not to have, so refuse,
+    # matching latest_commit_timestamp_ms
     untimed = [e["version"] for e in history if e["commit_ms"] is None]
     if untimed:
         raise ValueError(
-            f"delta_log: commits {untimed} of {table!r} carry no "
+            f"delta_log: commits {untimed} of {log.table!r} carry no "
             "commitInfo.timestamp — cannot decide change-feed window "
             "membership; refusing rather than serve an incomplete feed"
         )
-    committed = {e["version"] for e in history}
+    committed = set(log.commits)
     history += [
         {"version": v, "commit_ms": None}
-        for v in checkpoint_versions(table)
+        for v in log.checkpoints
         if v not in committed
     ]
     return window_changes(
         history,
-        lambda v: snapshot_at_version(spark, table, v),
+        lambda v: snapshot_at_version(spark, log, v),
         start_ms,
         end_ms,
         key_columns=key_columns,
-        table=table,
+        table=log.table,
     )
 
 
@@ -492,7 +497,8 @@ def write_delta_commit(
     if mode not in ("append", "overwrite"):
         raise ValueError(f"write_delta_commit: unknown mode {mode!r}")
     spark = df.sparkSession
-    versions = commit_versions(table)
+    log = _read_log(table)
+    versions = log.commits
     version = (versions[-1] + 1) if versions else 0
     if versions and versions != list(range(versions[0], versions[-1] + 1)):
         raise ValueError(
@@ -545,7 +551,7 @@ def write_delta_commit(
             }
         )
     if mode == "overwrite" and version > 0:
-        prev_files, _meta = _active_state(spark, table, version - 1)
+        prev_files, _meta = _active_state(spark, log, version - 1)
         for rel in sorted(prev_files):
             actions.append(
                 {
@@ -567,10 +573,7 @@ def write_delta_commit(
             }
         }
     )
-    log_dir = _log_path(table)
-    hdir = jvm.org.apache.hadoop.fs.Path(log_dir)
-    if not fs.exists(hdir):
-        fs.mkdirs(hdir)
+    # the claim creates _delta_log/ itself on the first commit
     _create_exclusive(
         _commit_file(table, version),
         "\n".join(json.dumps(a, separators=(",", ":")) for a in actions)
@@ -589,30 +592,18 @@ def write_checkpoint(spark: SparkSession, table: str, version: int) -> None:
     (id/format/schemaString/partitionColumns/configuration/createdTime)
     carried forward from the log — so an external spec reader following
     ``_last_checkpoint`` sees a well-formed checkpoint, not just the
-    subset this module's own reader happens to consume (ADVICE r14)."""
-    from pyspark_unload_to_gcs_spark.sources.versioned import (
-        _replace_text_atomic,
-    )
-
-    files, metadata = _active_state(spark, table, version)
+    subset this module's own reader happens to consume."""
+    files, metadata = _active_state(spark, _read_log(table), version)
     if metadata is None:
         raise ValueError(
             f"delta_log: no metaData action in the log of {table!r} — "
             "cannot write a spec-complete checkpoint"
         )
-    rows = []
-    rows.append(
-        {
-            "protocol": {"minReaderVersion": 1, "minWriterVersion": 2},
-            "metaData": None,
-            "add": None,
-            "remove": None,
-        }
-    )
+    # one action per row; a column the row's dict omits is null
     fmt = metadata.get("format") or {}
-    rows.append(
+    rows = [
+        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
         {
-            "protocol": None,
             "metaData": {
                 "id": metadata.get("id"),
                 "format": {
@@ -630,16 +621,12 @@ def write_checkpoint(spark: SparkSession, table: str, version: int) -> None:
                     else None
                 ),
             },
-            "add": None,
-            "remove": None,
-        }
-    )
+        },
+    ]
     for rel in sorted(files):
         a = files[rel]
         rows.append(
             {
-                "protocol": None,
-                "metaData": None,
                 "add": {
                     "path": a["path"],
                     "partitionValues": dict(a.get("partitionValues") or {}),
@@ -647,7 +634,6 @@ def write_checkpoint(spark: SparkSession, table: str, version: int) -> None:
                     "modificationTime": int(a.get("modificationTime", 0)),
                     "dataChange": False,
                 },
-                "remove": None,
             }
         )
     schema = (

@@ -17,6 +17,13 @@ from pyspark.sql import functions as F  # noqa: E402
 from pyspark_unload_to_gcs_spark.sources import delta_log as D  # noqa: E402
 
 
+@pytest.fixture(scope="module", autouse=True)
+def _session(spark):
+    """The reader lists the log through the active session's Hadoop
+    FileSystem, so even the tests that take no ``spark`` need one."""
+    return spark
+
+
 @pytest.fixture(scope="module")
 def table(spark, tmp_path_factory):
     """3-commit table over a tiny closed-form frame: v0 @ 1000 = even
@@ -405,6 +412,81 @@ def test_change_feed_reads_each_version_once(spark, table, tmp_path, monkeypatch
             assert reads == want, (feed.__name__, start_ms, reads)
 
 
+def test_each_call_reads_the_log_once(spark, table, tmp_path, monkeypatch):
+    """Every public call lists ``_delta_log/`` once, reads each commit
+    JSON at most once and collects a checkpoint at most once, however
+    many snapshots it replays — on the 3-commit table, without and then
+    with a checkpoint at v1."""
+    import shutil
+    from collections import Counter
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    t = str(tmp_path / "t")
+    shutil.copytree(table, t, ignore=shutil.ignore_patterns("*checkpoint*"))
+    listings, reads, collects = [], Counter(), []
+
+    class ListingFS:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def listStatus(self, p):
+            if str(p.getName()) == "_delta_log":
+                listings.append(p)
+            return self._fs.listStatus(p)
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    def handle(path, op, _get=D._require_jfs):
+        jvm, gw, fs, p = _get(path, op)
+        return jvm, gw, ListingFS(fs), p
+
+    def read_text(path, _read=D._read_text):
+        if path.endswith(".json"):
+            reads[path] += 1
+        return _read(path)
+
+    def parquet(self, *paths, _read=DataFrameReader.parquet, **options):
+        collects.extend(p for p in paths if ".checkpoint." in p)
+        return _read(self, *paths, **options)
+
+    monkeypatch.setattr(D, "_require_jfs", handle)
+    monkeypatch.setattr(D, "_read_text", read_text)
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    feed = D.change_feed_by_diff
+    calls = {
+        "commit_versions": lambda: D.commit_versions(t),
+        "checkpoint_versions": lambda: D.checkpoint_versions(t),
+        "table_history": lambda: D.table_history(t),
+        "latest_commit_timestamp_ms": lambda: D.latest_commit_timestamp_ms(t),
+        "version_at_timestamp_ms": lambda: D.version_at_timestamp_ms(t, 2500),
+        "snapshot_at_version": lambda: D.snapshot_at_version(spark, t, 2),
+        "snapshot_at_ms": lambda: D.snapshot_at_ms(spark, t, 2500),
+        "1-commit feed": lambda: feed(spark, t, 2500, 3000, key_columns=["k"]),
+        "2-commit feed": lambda: feed(spark, t, 1500, 3000, key_columns=["k"]),
+    }
+    steps = [*calls.items(), ("write_checkpoint", lambda: D.write_checkpoint(spark, t, 1))]
+    steps += [(f"{name} (checkpoint at v1)", call) for name, call in calls.items()]
+    steps.append(
+        (
+            "write_delta_commit",
+            lambda: D.write_delta_commit(
+                spark.range(3).select(F.col("id").alias("k")), t,
+                commit_ms=4000, mode="overwrite",
+            ),
+        )
+    )
+    for name, call in steps:
+        for seen in (listings, reads, collects):
+            seen.clear()
+        call()
+        assert len(listings) == 1, (name, len(listings))
+        assert max(reads.values(), default=0) <= 1, (name, reads)
+        assert len(collects) <= 1, (name, collects)
+    assert D.checkpoint_versions(t) == [1]
+
+
 def test_change_feed_predecessor_kept_only_in_checkpoint(spark, tmp_path):
     """Log cleanup may delete the commit JSON below a checkpoint; the
     checkpointed version still serves as the predecessor a window diffs
@@ -690,8 +772,9 @@ def test_foreign_checkpoint_with_full_spec_schema(spark, foreign_table, tmp_path
     # one row per action, columns txn/add/remove/metaData/protocol
     schema_string = None
     adds = {}
+    log = D._read_log(t)
     for v in (0, 1, 2):
-        for a in D._read_actions(t, v):
+        for a in log.actions(v):
             if "metaData" in a:
                 md = a["metaData"]
                 schema_string = md["schemaString"]

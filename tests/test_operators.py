@@ -332,6 +332,26 @@ def test_nanos_detection_ignores_spark_written_timestamps(spark, sf_dir, tmp_pat
     assert [r.ts.microsecond for r in got] == [0, 123456]
 
 
+def test_load_table_accepts_file_uris(spark, sf_dir, tmp_path):
+    """``file:`` and ``file://`` table paths load the same rows as the
+    plain path (the nanos footer probe reads the local directory), and
+    a path on another scheme skips the local probe instead of failing
+    in it."""
+    import os
+
+    from pyspark_unload_to_gcs_spark.sources.catalog import (
+        _nanos_timestamp_columns,
+        load_table,
+    )
+
+    d = str(tmp_path / "orders")
+    load_table(spark, os.path.join(sf_dir, "orders.parquet")).write.parquet(d)
+    want = load_table(spark, d).count()
+    for uri in ("file:" + d, "file://" + d):
+        assert load_table(spark, uri).count() == want
+    assert _nanos_timestamp_columns("hdfs://nn:8020/no/such/table") == []
+
+
 def test_temperature_mix_budget_and_determinism(spark, sf_dir):
     """temperature_mix selects ~target_rows with alpha-smoothed source
     proportions, deterministically (same rows on re-run), and never
