@@ -46,18 +46,17 @@ def key_skew_profile(df: DataFrame, key_column: str, label: str | None = None) -
         F.max("cnt").cast("long").alias("max_cnt"),
     )
     # ONE conditional-aggregation pass picks all three rank positions
-    # (r07 rewrite: the previous three per-percentile joins recomputed
-    # the count frame and cost 16 exchanges for a diagnostic; the
-    # 1-row totals broadcast against the rank frame and a single agg
+    # (three per-percentile joins would recompute the count frame and
+    # cost 16 exchanges for a diagnostic; the 1-row totals broadcast against the rank frame and a single agg
     # read the values AT ceil(q * n_keys)). max(when(...)) is safe:
     # exactly one row matches each target rank.
     joined = ranked.crossJoin(F.broadcast(totals))
     # rank = ceil(n_keys * pct / 100) computed in PURE BIGINT as
-    # (n_keys * pct + 99) div 100: the previous ceil(n_keys * 0.99)
-    # was off-by-one wherever the IEEE product overshoots the integer
+    # (n_keys * pct + 99) div 100: ceil(n_keys * 0.99) would be
+    # off-by-one wherever the IEEE product overshoots the integer
     # (0.99 * 100 = 99.000000000000014 -> ceil 100), and oracle parity
-    # held only because DuckDB repeated the identical float expression
-    # (r08 review finding). Integer arithmetic has one answer.
+    # would hold only because DuckDB repeats the identical float
+    # expression. Integer arithmetic has one answer.
     pick = lambda pct: F.max(  # noqa: E731
         F.when(
             F.col("rk") == F.expr(f"(n_keys * {pct} + 99) div 100"),
@@ -110,7 +109,7 @@ def join_cardinality_profile(
     key cardinality, swap exact counts for theta sketches
     (operators/sketches.py) to bound the matching-key estimate.
 
-    Plan (optimization r15, guide §2.4): ONE full-outer join of the two
+    Plan: ONE full-outer join of the two
     count frames and ONE final aggregate compute all six numbers —
     every lc row surfaces exactly once in the outer join, so
     sum(ca)/count(ca) over it equal the per-side totals, count(ca AND
@@ -199,13 +198,7 @@ def parquet_footer_profile(
     )
 
 
-def footer_file_frame(
-    spark,
-    path: str,
-    key_column: str,
-    *,
-    recursive: bool = False,
-):
+def footer_file_frame(spark, path: str, key_column: str):
     """Per-FILE parquet footer statistics as a DataFrame — the shared
     metadata reader under ``parquet_footer_profile`` (table fold) and
     ``scan_prune_plan`` (per-partition keep/skip):
@@ -217,20 +210,12 @@ def footer_file_frame(
     Arrow-batched paths frame); no data pages are touched. min/max are
     NULL (unknown) when any row group lacks statistics; key_nulls is
     NULL when any row group lacks a null count (optional in the
-    format — ADVICE r09). ``recursive=True`` walks hive-partitioned
-    layouts (``key=value`` subdirectories)."""
-    import glob as _glob
-    import os as _os
+    format). The files are ``storage.data_files``: hive-partitioned
+    layouts (``key=value`` subdirectories) are walked, and leftovers
+    of a crashed write (``_temporary/``) are not counted."""
+    from pyspark_unload_to_gcs_spark.storage import data_files, local_path
 
-    if _os.path.isdir(path):
-        pattern = (
-            _os.path.join(path, "**", "*.parquet")
-            if recursive
-            else _os.path.join(path, "*.parquet")
-        )
-        files = sorted(_glob.glob(pattern, recursive=recursive))
-    else:
-        files = [path]
+    files = [local_path(f.path) for f in data_files(path)]
     if not files:
         raise ValueError(f"footer_file_frame: no parquet files at {path!r}")
     paths_df = spark.createDataFrame(
@@ -263,7 +248,7 @@ def footer_file_frame(
                     # null_count is OPTIONAL in the format: pyarrow
                     # returns None when has_null_count is false (legal
                     # for non-pyarrow/Spark writers) — propagate
-                    # unknown, never count 0 (ADVICE r09)
+                    # unknown, never count 0
                     if st is None or not st.has_null_count:
                         nulls_ok = False
                     else:
@@ -317,9 +302,7 @@ def scan_prune_plan(
     against data-derived truth."""
     from pyspark.sql import functions as _F
 
-    per_file = footer_file_frame(
-        spark, path, key_column, recursive=partition_column is not None
-    )
+    per_file = footer_file_frame(spark, path, key_column)
     if partition_column is None:
         grouped = per_file.select(
             _F.col("path").alias("unit"),
@@ -334,7 +317,7 @@ def scan_prune_plan(
 
         # anchor at a path-segment start and escape the name: an
         # unanchored 'bkt=' would match inside 'region_bkt=1' and
-        # silently merge distinct partitions (review finding)
+        # silently merge distinct partitions
         pattern = rf"(?:^|/){_re.escape(partition_column)}=([^/]+)"
         grouped = (
             per_file.withColumn(
@@ -380,7 +363,7 @@ def scan_prune_plan(
             # carries no min/max — without this clause the range test
             # evaluates to NULL (neither kept nor skipped) and a
             # consumer filtering on keep silently drops the row
-            # (ADVICE r10); keep must be a TOTAL boolean
+            #; keep must be a TOTAL boolean
             ~_F.col("stats_ok")
             | _F.col("key_min").isNull()
             | _F.col("key_max").isNull(),
@@ -460,7 +443,7 @@ def cm_join_size_estimate(
     )
     # products/sums in DECIMAL(38,0): long arithmetic would silently
     # WRAP around 9.2e18 (reachable at the table sizes this pre-flight
-    # is for), voiding the never-underestimates guarantee (review r11)
+    # is for), voiding the never-underestimates guarantee
     shared = (
         ca.join(cb, ["r", "b"])
         .groupBy("r")
@@ -476,7 +459,7 @@ def cm_join_size_estimate(
     # a sketch row with NO shared (r,b) buckets has inner product 0 —
     # the inner join above drops it, and min() over the survivors would
     # report a positive estimate where the row-minimum is exactly 0
-    # (disjoint key multisets + collisions elsewhere; ADVICE r11). Keep
+    # (disjoint key multisets + collisions elsewhere). Keep
     # every row on a 0..rows-1 spine and coalesce the missing sums to 0.
     spine = left.sparkSession.range(rows).select(
         _F.col("id").cast("int").alias("r")
@@ -500,7 +483,7 @@ def cm_join_size_estimate(
         )
         # no shared (r,b) bucket (disjoint key sets / empty input) means
         # no key can match — the estimate is an exact 0, not NULL
-        # (review r11: min over an empty aggregate is NULL)
+        # (min over an empty aggregate is NULL)
         .otherwise(_F.coalesce(m.cast("long"), _F.lit(0).cast("long")))
         .alias("join_size_est")
     )
@@ -635,7 +618,7 @@ def numeric_drift_psi(
         # integral columns ride the BIGINT sketch: the double sketch
         # rounds values past 2^53, perturbing edges and breaking the
         # "arms agree below capacity" contract on id-like/nanosecond
-        # columns (review r12)
+        # columns
         integral = isinstance(
             df.schema[value_column].dataType,
             (_T.ByteType, _T.ShortType, _T.IntegerType, _T.LongType),
@@ -884,7 +867,7 @@ def calibration_bins(
     ).cast("long")
     # NaN passes isNotNull() and under greatest/least NaN ordering would
     # land in bin 0 with confidence_ppm 1,000,000 — a fabricated
-    # max-confidence point (ADVICE r13); excluded like NULL, matching
+    # max-confidence point; excluded like NULL, matching
     # the module's _pct_value discipline
     per = (
         df.filter(score.isNotNull() & ~F.isnan(score) & label.isNotNull())
@@ -965,7 +948,7 @@ def score_auc(
         F.col(score_column).cast("double"), int(score_decimals)
     )
     label = F.col(label_column).cast("boolean")
-    # NaN scores are excluded like NULL (ADVICE r13: NaN passes
+    # NaN scores are excluded like NULL (NaN passes
     # isNotNull() and would otherwise rank as greater-than-everything)
     buckets = (
         df.filter(score.isNotNull() & ~F.isnan(score) & label.isNotNull())

@@ -263,7 +263,7 @@ def ivf_assign(
                 )
             # isna() above only catches whole-NULL vectors; a NULL
             # ELEMENT inside a correct-length vector becomes NaN here
-            # and would argmax into a silent arbitrary cell (ADVICE r05)
+            # and would argmax into a silent arbitrary cell
             if np.isnan(m).any():
                 raise ValueError(
                     "ivf_assign(method='arrow'): NULL/NaN element inside "
@@ -429,7 +429,7 @@ def ann_join(
 
     Precondition: ids must be UNIQUE per input row on both sides —
     pairs sharing several buckets are de-duplicated by (id, id) key, so
-    duplicate-id inputs emit duplicate pairs (ADVICE r04).
+    duplicate-id inputs emit duplicate pairs.
 
     Self-join (``left is right``, the near-dedup case): the bucketed
     frame is materialized once (localCheckpoint) and reused for both
@@ -591,7 +591,7 @@ def ann_match_against_index(
     ``lsh_bucket``). Returns (new_id, index_id, cosine) for every cross
     pair at or above the threshold whose vectors share an LSH bucket.
     Precondition: ids must be UNIQUE per row in both the batch and the
-    index — duplicate-id inputs emit duplicate pairs (ADVICE r04).
+    index — duplicate-id inputs emit duplicate pairs.
 
     The embeddings twin of ``dedup.match_against_index``, and the
     production shape for continuous embedding ingestion at 100 TB: the
@@ -728,7 +728,7 @@ def rrf_fuse(
     Output gains the query column AND a ``fused_rank`` column (the
     1-based position inside the per-query cut — the window that takes
     the cut already computed it, so consumers must not re-derive it
-    with a second identical window; review r11). This is the
+    with a second identical window). This is the
     retrieval-evaluation shape: M mined/labeled queries fused in one
     plan instead of M driver-looped single-query fusions."""
     keys = [id_column] if query_column is None else [query_column, id_column]
@@ -776,8 +776,7 @@ def semantic_match_against_index(
     ``ivf_cell``). Returns (new_id, index_id, cosine) for every cross
     pair at or above the threshold whose vectors share a quantizer
     cell. Precondition: ids must be UNIQUE per row in both the batch
-    and the index — duplicate-id inputs emit duplicate pairs (ADVICE
-    r04).
+    and the index — duplicate-id inputs emit duplicate pairs.
 
     The exact cosine of each joined pair is the codegen'd HOF dot
     (``_pair_dot``). An Arrow-batched verify arm was measured slower at
@@ -998,7 +997,7 @@ def pq_topk(
 
 
 # --------------------------------------------------------------------------
-# On-disk IVF-PQ index maintenance (VERDICT r08 #8 stretch)
+# On-disk IVF-PQ index maintenance
 # --------------------------------------------------------------------------
 
 
@@ -1125,11 +1124,10 @@ def pq_index_append(
     # the dynamic-partition overwrite above is fully materialized —
     # drop the staging copy so high-frequency append streams don't
     # accumulate a full copy of the touched cells per compaction
-    # (ADVICE r09); Hadoop FS API so object-store URIs work too
-    from pyspark_unload_to_gcs_spark.sources.versioned import _require_jfs
+    # through storage.delete, so object-store URIs work too
+    from pyspark_unload_to_gcs_spark.storage import delete
 
-    _jvm, _gw, fs, hpath = _require_jfs(tmp, "pq_index_append")
-    fs.delete(hpath, True)
+    delete(tmp, recursive=True)
     return len(touched)
 
 
@@ -1158,7 +1156,7 @@ def ivf_drift_report(
     one scan of the vectors (ONLY the vector column rides through
     them), one bounded (<= cells) aggregate, no data shuffle beyond
     it; all-integer output — an empty input yields an all-zero row,
-    never NULLs or a division error (review r11) — so the report is
+    never NULLs or a division error — so the report is
     value-oracle-able cross-engine."""
     both = ivf_assign(
         df.select(F.col(vec_column).cast("array<double>").alias(vec_column)),

@@ -267,7 +267,7 @@ def gopher_repetition_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     at sf0.001/0.01/0.1 in tests/test_quality_filters.py and by a
     hypothesis property test), so the fold-semantics oracle still
     hash-matches while the query drops from ~8 s to ~1-3 s at sf0.1
-    (VERDICT r05 #1)."""
+   ."""
     from pyspark_unload_to_gcs_spark.operators.quality_filters import (
         gopher_repetition_profile,
     )
@@ -336,10 +336,10 @@ def dedup_keep_best_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# r06 cohort: streaming foreachBatch replays, driver-faced
+# Streaming foreachBatch replays, driver-faced
 # --------------------------------------------------------------------------
 #
-# Same pattern that drove token_budget_stream_replay green in r05: the
+# Same pattern as token_budget_stream_replay: the
 # streaming twins' fold functions are exercised through a DETERMINISTIC
 # batch-sequence replay against versioned parquet state, so the
 # exactly-once versioned-state machinery itself (not just its batch
@@ -530,11 +530,10 @@ def sessionize_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     finalized: the closed-session log + finalized opens must equal the
     direct batch sessionization — the same oracle the batch
     ``sessionization`` query carries. This gives the sessions family a
-    driver-faced state-protocol check (rollup and MERGE got theirs in
-    r06), covering cross-batch session continuation, gap-split across
+    driver-faced state-protocol check (as rollup and MERGE have),
+    covering cross-batch session continuation, gap-split across
     the batch boundary, and users absent from a batch.
-    (Trimmed 4 → 3 folds in r09 per VERDICT r08 #4 and 3 → 2 in r15
-    per VERDICT r14 #1 — each sequential fold is a full state
+    (Two folds: each sequential fold is a full state
     read+shuffle+write, and ONE boundary already exercises every
     cross-batch transition; the protocol's retry/ordering edge cases
     live in tests/test_streaming.py.)"""
@@ -1560,7 +1559,7 @@ def unicode_normalize_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     changed flag, both char lengths, and the md5 of the normalized
     text. DuckDB's ``nfc_normalize`` replays Python's
     ``unicodedata.normalize('NFC', ...)`` exactly (both implement
-    Unicode NFC; parity pinned in tests since r06)."""
+    Unicode NFC; parity pinned in tests)."""
     from pyspark_unload_to_gcs_spark.operators.text import normalize_unicode
 
     docs = _t(spark, sf_dir, "documents").select(
@@ -1599,7 +1598,7 @@ WHERE o_orderstatus IS NOT NULL AND o_orderstatus != ''
 def export_manifest_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exactly-once export handoff under a driver oracle
     (sinks/writers.py ``write_manifest``/``validate_manifest``;
-    extends the r06 ``export_roundtrip_hash`` pin): full sync of
+    extends the ``export_roundtrip_hash`` pin): full sync of
     orders with non-null filter + json-method content hash, written
     as gzip JSON-lines with maxRecordsPerFile, then a _MANIFEST.json
     is written (per-file sizes + JVM-side md5) and VALIDATED —
@@ -1643,7 +1642,7 @@ def export_manifest_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # sf0.01 (15k orders -> 2 files) without drowning the
                 # JVM-side md5 passes in per-file stream-open overhead
                 # at sf0.1+ (2000 -> 75 files was 40% of this query's
-                # wall; SCALE_AUDIT.md r07 table)
+                # wall; SCALE_AUDIT.md)
                 max_records_per_file=7500,
             ),
         )
@@ -1708,7 +1707,7 @@ def xml_ingest_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Theta set-operation accuracy pin, ESTIMATING regime (VERDICT r06 #8)
+# Theta set-operation accuracy pin, ESTIMATING regime
 # --------------------------------------------------------------------------
 
 # The live theta_user_day_overlap row proves the sketch algebra in the
@@ -1720,7 +1719,7 @@ def xml_ingest_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # error shape of theta set operations (DataSketches set-op error
 # analysis: intersection/difference error scales with the UNION
 # cardinality over sqrt(nominal entries), not with the result size).
-# Empirical worst at sf0.01/lg6 is 3.19 units (measured r07), so 6
+# Empirical worst at sf0.01/lg6 is 3.19 units (measured), so 6
 # units passes with ~2x headroom while a catastrophic regression
 # (collapsed sketch, wrong set-op wiring, hash change) lands far
 # outside. At sf0.001 the same capacity sits BELOW the ~15 users/day
@@ -2008,7 +2007,7 @@ def binaryfile_wav_ingest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     row additionally proves the FILE path: bytes survive the
     write/list/read roundtrip bit-exactly or the stats diverge.
 
-    FIXTURE-BUILD FS ASSUMPTION (r08 review finding): the executor-side
+    FIXTURE-BUILD FS ASSUMPTION: the executor-side
     ``open()`` writes land in a driver-created ``tempfile.mkdtemp``
     directory, which executors can only see when they share the
     driver's filesystem — true in local mode (this harness) but not on
@@ -2458,7 +2457,7 @@ def asof_nearest_click_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Forward-direction as-of join with tolerance (live r09; VERDICT r08 #6)
+# Forward-direction as-of join with tolerance
 # --------------------------------------------------------------------------
 
 _ASOF_FORWARD_SQL = """
@@ -2627,7 +2626,7 @@ def pq_index_incremental_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the planted top-1 probe, a double-applied or stale-cell compact
     duplicates/forgets rows — every path flips the value hash.
 
-    Cost split (VERDICT r13 perf item #1): the BULK backfill append +
+    Cost split: the BULK backfill append +
     touched-cell compaction is one-time index maintenance with the
     same encode-once economics as the base build, so it lives in the
     ``_pq_incr_base`` named warmup; the row times the steady-state
@@ -2650,7 +2649,7 @@ def pq_index_incremental_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         # is bit-equal to the fold twin (pinned in tests/test_asof.py)
         # and measured CHEAPER here: fold's unrolled k-way codebook
         # expression pays ~3 s of plan compilation that dwarfs the
-        # Python-worker roundtrip on a 1-row batch (r14 measurement)
+        # Python-worker roundtrip on a 1-row batch (measured)
         probe = spark.createDataFrame(
             [(30001, [x + 0.0005 for x in q])],
             "vec_id long, embedding array<double>",
@@ -2675,8 +2674,7 @@ def _pq_incr_base(spark: SparkSession, sf_dir: str):
     the BULK backfill batch (the vec_id % 5 == 1 rows). Backfill is
     one-time maintenance — the same encode-once economics as the base
     build — so it bills here, visibly, as warmup_pq_incr_base_sec
-    (VERDICT r13 perf item #1: the row previously paid ~7-13 s of it
-    per bench loop). The row itself times what a live index repeats
+    (billed in the row, it cost ~7-13 s per bench loop). The row itself times what a live index repeats
     per arrival: single-vector append-only + serve."""
     import tempfile
 
@@ -2877,7 +2875,7 @@ def _drain_commit_stream(spark: SparkSession, path: str, fold, name: str) -> Non
     through ``fold`` with ``start_fold`` (fresh checkpoint).
     awaitTermination(timeout) returns False on timeout WITHOUT stopping
     the query — memoizing then would hand back a partially-drained
-    output as the query result (ADVICE r09) — so a slow drain raises,
+    output as the query result — so a slow drain raises,
     surfacing the stream's own error first."""
     import tempfile
 
@@ -3522,7 +3520,7 @@ def margin_align_mining_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizer is the oracle operating point (pair mass ~n²/8);
     production scales n_centroids ~ sqrt(n) — the operator takes the
     quantizer from the caller, so the plan is unchanged
-    (SCALE_AUDIT.md r10)."""
+    (SCALE_AUDIT.md)."""
     from pyspark_unload_to_gcs_spark.operators.align import margin_align_pairs
     from pyspark_unload_to_gcs_spark.operators.similarity import (
         ivf_centroids_from_sample,
@@ -3555,7 +3553,7 @@ def _margin_align_auto_raw(
     runs the mine. Plan lint/digest screen THIS (via PLAN_TWINS below);
     the memoizing wrapper's localCheckpoint renders as an opaque
     'Scan ExistingRDD' that would hide the whole mining plan from the
-    anti-pattern screens (review r12)."""
+    anti-pattern screens."""
     import math
 
     from pyspark_unload_to_gcs_spark.operators.align import margin_align_pairs
@@ -3603,7 +3601,7 @@ def margin_align_auto_with_method(
 # checkpointed intermediate, the twin builds the REAL plan so
 # tests/test_plan_lint.py and tools/plan_digest.py screen the hidden
 # stages for BatchEvalPython/CartesianProduct and budget drift. Sweep
-# of every lineage-truncating registered frame (review r12); the
+# of every lineage-truncating registered frame; the
 # stream replays stay out by design — their registered plan IS a state
 # read-back, and their fold plans are exercised by the streaming test
 # suite. Downstream consumers of a memoized frame
@@ -3656,8 +3654,8 @@ PLAN_TWINS: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 
 @register("margin_align_auto", oracle=_align_oracle("auto"))
 def margin_align_auto_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Margin alignment mining in its PRODUCTION posture (VERDICT r10
-    #2): n_centroids = max(8, isqrt(n)) so within-cell candidate mass
+    """Margin alignment mining in its PRODUCTION posture:
+    n_centroids = max(8, isqrt(n)) so within-cell candidate mass
     grows as n^1.5 instead of the fixed-cell n², and the Arrow matmul
     assignment arm — the configuration that ships at 100 TB, now the
     benched one, so the fixed-8-cell `margin_align_mining` row can't
@@ -3687,7 +3685,7 @@ def _retrieval_eval_oracle() -> str:
     division, or an exact-rational 1/(60+rank) term. The label spine
     replays the AUTO-K quantizer (k = max(8, isqrt(n))) — the same
     production posture margin_align_auto benches — so no live row
-    carries the fixed-cell n²/8 pair-mass curve (VERDICT r11 #2)."""
+    carries the fixed-cell n²/8 pair-mass curve."""
     from pyspark_unload_to_gcs_spark.registry_extensions import _DOT, _SS
 
     words = "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x != '')"
@@ -3773,7 +3771,7 @@ FROM gold g LEFT JOIN topfused t
 
 @register("mined_pairs_retrieval_eval", oracle=_retrieval_eval_oracle())
 def mined_pairs_retrieval_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mined-pairs -> retrieval-eval composition (VERDICT r10 #7, the
+    """Mined-pairs -> retrieval-eval composition (the
     last §2l family with no end-to-end composition row): the margin
     alignment miner's output becomes relevance supervision for the
     hybrid retrieval stack. The top-{_REVAL_M} mined (src, tgt) pairs
@@ -3791,7 +3789,7 @@ def mined_pairs_retrieval_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     per arm. FULL value oracle sharing the mining spine f-string.
     The gold labels mine on the AUTO-K quantizer + Arrow assignment
     (the margin_align_auto production posture, n^1.5 pair mass) so no
-    live row carries the fixed-cell n²/8 curve (VERDICT r11 #2)."""
+    live row carries the fixed-cell n²/8 curve."""
     from pyspark.sql import Window
 
     from pyspark_unload_to_gcs_spark.operators.similarity import (
@@ -3890,7 +3888,7 @@ def mined_pairs_retrieval_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # fused_rank comes FROM rrf_fuse's own cut window — re-deriving it
     # with a second identical window duplicated the sort and forked the
-    # tie rule (review r11)
+    # tie rule
     ranked = fused.select("src_id", "doc_id", F.col("fused_rank").alias("fr"))
     return gold.join(
         ranked,
@@ -4346,7 +4344,7 @@ GROUP BY o.o_custkey
 @register("bloom_prune_exact_join", oracle=_BPEJ_SQL)
 def bloom_prune_exact_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-prune -> exact-join COMPOSITION on the PRODUCTION hash arm
-    (VERDICT r11 #4; operators/joins.py ``bucket_bloom_prune`` with
+    (operators/joins.py ``bucket_bloom_prune`` with
     method="xxhash64"): the prune's no-false-negatives guarantee means
     the exact join's result is invariant to it, so — unlike the
     diagnostics row ``bloom_prune_join``, which pins leakage counts on
@@ -4388,7 +4386,7 @@ def _psi_term_sql(n_a: str, n_b: str, na: str, nb: str, k: str) -> str:
     replay (event_drift_psi, drift_stream_replay, value_drift_psi) —
     the SQL twin of operators/diagnostics.drift_psi_from_counts, so a
     smoothing or rounding change cannot be edited into one oracle and
-    silently break parity for the others (review r12)."""
+    silently break parity for the others."""
     pp = f"(CAST({n_a} + 1 AS DOUBLE) / CAST({na} + {k} AS DOUBLE))"
     qq = f"(CAST({n_b} + 1 AS DOUBLE) / CAST({nb} + {k} AS DOUBLE))"
     return f"round(({pp} - {qq}) * ln({pp} / {qq}), 6)"
@@ -4501,8 +4499,8 @@ c{b} AS (
 @register("quota_mix_stream_replay", oracle=_qmix_oracle())
 def quota_mix_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-size training-mix manifests over a GROWING corpus
-    (streaming/manifest.py; the streaming twin VERDICT r11 #4 asked
-    for): three ingest micro-batches (doc_id % 3) fold into versioned
+    (streaming/manifest.py; the streaming twin of the batch mix):
+    three ingest micro-batches (doc_id % 3) fold into versioned
     corpus state; each batch re-balances the SAME bootstrap-frozen
     budget (half the batch-0 corpus) across the shifting language
     counts with the exact-quota tau=0.5 operator the batch row
@@ -4513,7 +4511,7 @@ def quota_mix_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     number replays bit-for-bit (sqrt-fold quotas, md5 rank, BIGINT
     sums).
 
-    Bench note (the r12 promotion caveat): exact COUPLED quotas mean
+    Bench note: exact COUPLED quotas mean
     each batch re-reads the cumulative (doc_id, lang) projection —
     two narrow columns, never the payload — so per-batch cost grows
     with the corpus; that is the honest price of exactness, and the
@@ -5244,7 +5242,7 @@ def containment_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning, or the commit gate flips the row set. Per-batch cost at
     scale: one batch-sized window + a bucket-pruned posting join —
     the corpus-side gram work happened once. Which is exactly how the
-    bench bills it (r14, the _pq_shared economics): the one-time
+    bench bills it (the _pq_shared economics): the one-time
     index BOOTSTRAP is the named ``warmup_containment_index_sec``
     (``_containment_frozen_index`` below, memoized per session); the
     row times the steady-state per-batch folds + readback that a
@@ -5264,7 +5262,7 @@ def containment_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_join(F.slice(w, 1, 12), " ").alias("text"),
     )
     # Checkpoint the arriving-doc frame BEFORE splitting it into
-    # micro-batches (opt r16, guide §7.3/§3.3): the excerpt branch is a
+    # micro-batches (guide §7.3/§3.3): the excerpt branch is a
     # deep HOF tree (array_join(slice(filter(split(...))))) and each
     # fold re-plans gram_sets COMPOSED over it — measured 1.2-3.4 s of
     # pure driver planning per fold (the localCheckpoint handles plan
@@ -5313,8 +5311,7 @@ def _containment_frozen_index(spark: SparkSession, sf_dir: str) -> str:
     session and billed as a NAMED bench warmup: in a live
     decontamination stream the index freezes once and every batch
     joins against it — re-freezing it inside the replay row was 20+ s
-    of one-time cost billed per bench loop (the pq_index precedent,
-    VERDICT r13 #1)."""
+    of one-time cost billed per bench loop (the pq_index precedent)."""
     import tempfile
 
     from pyspark_unload_to_gcs_spark.streaming.containment import (
@@ -5796,7 +5793,7 @@ def url_canonical_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         # every 5th key: the collapse profile's value coverage is
         # identical on the slice (same closed-form arms) and the
         # fixture stops costing 300k normalizations per bench loop
-        # (r14 — the operator's own scale story lives in
+        # (the operator's own scale story lives in
         # SCALE_AUDIT.md, not in fixture bulk)
         .filter(F.col("o_orderkey") % 5 == 0)
         .select(
@@ -6565,8 +6562,8 @@ def robots_gate_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     okey = F.col("o_orderkey").cast("long")
     # per-URL longest-match runs in the frontier's scan stage; the
-    # local single-file fixture is one task without this (opt r15,
-    # guide §2.5 unsplittable-input repartition — no-op at scale).
+    # local single-file fixture is one task without this (guide
+    # §2.5 unsplittable-input repartition — no-op at scale).
     # Key projection BEFORE the repartition (guide §2.3): only
     # o_orderkey crosses the exchange, not the full order row.
     urls = ensure_parallelism(
@@ -6745,7 +6742,7 @@ def langid_confusion_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_unload_to_gcs_spark.operators.dedup import ensure_parallelism
 
     # the stopword-vote regex work runs in the scan stage; parallelize
-    # the single-file local fixture (opt r15, guide §2.5 — no-op at
+    # the single-file local fixture (guide §2.5 — no-op at
     # scale where the corpus already has >= cores partitions)
     docs = ensure_parallelism(
         _t(spark, sf_dir, "documents").select("lang", "text")
@@ -7152,14 +7149,15 @@ def delta_log_history_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ACTIVE row count at that version (one union-all scan over the
     replayed snapshots, groupBy version — proves every historical
     replay, not just the tip). The commit metadata rides as literals
-    from the (KB-sized) log; only the row counts touch data."""
+    from the (KB-sized) log, read once and shared by the history and
+    every snapshot; only the row counts touch data."""
     from pyspark_unload_to_gcs_spark.sources import delta_log as DL
 
-    path = _delta_orders(spark, sf_dir)
-    hist = DL.table_history(path)
+    log = DL._read_log(_delta_orders(spark, sf_dir))
+    hist = DL.table_history(log)
     counts = None
     for e in hist:
-        s = DL.snapshot_at_version(spark, path, e["version"]).select(
+        s = DL.snapshot_at_version(spark, log, e["version"]).select(
             F.lit(e["version"]).cast("long").alias("version")
         )
         counts = s if counts is None else counts.unionByName(s)

@@ -2,7 +2,9 @@
 
 URI-agnostic: the same writer handles ``gs://bucket/prefix`` in
 production and ``file:/tmp/...`` in tests — only Hadoop conf differs
-(``configure_gcs_auth``).
+(``configure_gcs_auth``). Listing, manifest text and swaps go through
+``storage.py``: its ``data_files`` rule decides what counts as an
+export's data.
 
 Scale posture vs the reference:
 - JSON (default): gzip JSON-lines, parallel write, ``maxRecordsPerFile``
@@ -21,10 +23,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_unload_to_gcs_spark.config import ExportFormat, SyncConfig
-from pyspark_unload_to_gcs_spark.sources.versioned import (
-    _replace_text_atomic,
-    _require_jfs,
-    _sub,
+from pyspark_unload_to_gcs_spark.storage import (
+    child,
+    data_files,
+    hadoop_fs,
+    read_text,
+    replace_text_atomic,
 )
 
 
@@ -92,11 +96,11 @@ def compact_files(
             .save(out_uri)
         )
 
-    jvm, _gw, fs, src_p = _require_jfs(path, "compact_files")
+    jvm, _gw, fs, src_p = hadoop_fs(path, "compact_files")
     # part files under a leftover _temporary/ dir from a crashed prior
-    # write must not inflate the sizing target: _iter_data_files skips
-    # a file when ANY path component is hidden, not just the leaf
-    total_bytes = sum(st.getLen() for _rel, st in _iter_data_files(fs, src_p))
+    # write must not inflate the sizing target: data_files skips a file
+    # when ANY path component is hidden, not just the leaf
+    total_bytes = sum(f.size for f in data_files(path))
     n_files = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
     tag = uuid.uuid4().hex[:8]
     tmp_uri = f"{path.rstrip('/')}__compact_{tag}"
@@ -290,29 +294,12 @@ def write_zordered(
 MANIFEST_NAME = "_MANIFEST.json"
 
 
-def _iter_data_files(fs, path):
-    """Yield (rel_path, file_status) for every DATA file under the
-    export root, excluding hidden/temporary content by checking EVERY
-    path component (``_temporary/0/part-*.json`` from a failed prior
-    job must not be manifested as data)."""
-    base = str(fs.makeQualified(path).toUri().getPath())
-    it = fs.listFiles(path, True)
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath()
-        full = str(p.toUri().getPath())
-        rel = full[len(base):].lstrip("/") if full.startswith(base) else p.getName()
-        if any(part.startswith(("_", ".")) for part in rel.split("/")):
-            continue
-        yield rel, st
-
-
-def _md5_hex_jvm(jvm, fs, p) -> str:
+def _md5_hex_jvm(jvm, fs, path: str) -> str:
     """md5 of a file, streamed ENTIRELY JVM-side via commons-codec
     DigestUtils — only the 32-char hex crosses py4j, so a multi-GB
     part file never materializes on the Python side (commons-codec
     ships on Spark's classpath)."""
-    stream = fs.open(p)
+    stream = fs.open(jvm.org.apache.hadoop.fs.Path(path))
     try:
         return str(jvm.org.apache.commons.codec.digest.DigestUtils.md5Hex(stream))
     finally:
@@ -325,26 +312,22 @@ def write_manifest(output_uri: str, *, row_count: int | None = None) -> dict:
     (optionally) the exported row count — the exactly-once handoff
     artifact a downstream consumer validates BEFORE ingesting (a
     partially-visible export directory fails the manifest check
-    instead of silently under-loading). Files enumerate through the
-    Hadoop FileSystem API (object-store URIs work like local paths);
+    instead of silently under-loading). Files enumerate through
+    ``storage.data_files`` (object-store URIs work like local paths);
     hashing streams JVM-side; the manifest is written to a temporary
     name and renamed over any previous one in a single step
-    (``_replace_text_atomic``), so an export is never left without a
+    (``storage.replace_text_atomic``), so an export is never left without a
     manifest and its presence implies the listed files were complete
     when hashed. Returns the manifest dict."""
     import json
 
-    jvm, _gw, fs, path = _require_jfs(output_uri, "write_manifest")
-    entries = []
-    for rel, st in _iter_data_files(fs, path):
-        entries.append(
-            {
-                "path": rel,
-                "bytes": int(st.getLen()),
-                "md5": _md5_hex_jvm(jvm, fs, st.getPath()),
-            }
-        )
-    entries.sort(key=lambda e: e["path"])
+    jvm, _gw, fs, root = hadoop_fs(output_uri, "write_manifest")
+    if not fs.exists(root):
+        raise FileNotFoundError(f"write_manifest: no export at {output_uri}")
+    entries = [
+        {"path": f.rel, "bytes": f.size, "md5": _md5_hex_jvm(jvm, fs, f.path)}
+        for f in data_files(output_uri)
+    ]
     manifest = {
         "version": 1,
         "n_files": len(entries),
@@ -353,8 +336,8 @@ def write_manifest(output_uri: str, *, row_count: int | None = None) -> dict:
     }
     if row_count is not None:
         manifest["row_count"] = int(row_count)
-    _replace_text_atomic(
-        _sub(output_uri, MANIFEST_NAME), json.dumps(manifest, indent=1)
+    replace_text_atomic(
+        child(output_uri, MANIFEST_NAME), json.dumps(manifest, indent=1)
     )
     return manifest
 
@@ -371,19 +354,13 @@ def validate_manifest(output_uri: str) -> dict:
     corruption."""
     import json
 
-    jvm, _gw, fs, path = _require_jfs(output_uri, "validate_manifest")
-    mpath = jvm.org.apache.hadoop.fs.Path(path, MANIFEST_NAME)
-    if not fs.exists(mpath):
+    jvm, _gw, fs, _root = hadoop_fs(output_uri, "validate_manifest")
+    text = read_text(child(output_uri, MANIFEST_NAME))
+    if text is None:
         raise ValueError(f"validate_manifest: no {MANIFEST_NAME} under {output_uri}")
-    stream = fs.open(mpath)
-    try:
-        manifest = json.loads(
-            bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream)).decode()
-        )
-    finally:
-        stream.close()
+    manifest = json.loads(text)
 
-    listed = {rel: st for rel, st in _iter_data_files(fs, path)}
+    listed = {f.rel: f for f in data_files(output_uri)}
     want = {e["path"]: e for e in manifest["files"]}
     missing = sorted(set(want) - set(listed))
     extra = sorted(set(listed) - set(want))
@@ -392,7 +369,7 @@ def validate_manifest(output_uri: str) -> dict:
     if extra:
         raise ValueError(f"validate_manifest: unexpected files {extra[:3]}")
     for rel, e in sorted(want.items()):
-        got_bytes = int(listed[rel].getLen())
+        got_bytes = listed[rel].size
         if got_bytes != e["bytes"]:
             raise ValueError(
                 f"validate_manifest: {rel} diverges "
@@ -400,7 +377,7 @@ def validate_manifest(output_uri: str) -> dict:
             )
     for rel, e in sorted(want.items()):
         try:
-            got_md5 = _md5_hex_jvm(jvm, fs, listed[rel].getPath())
+            got_md5 = _md5_hex_jvm(jvm, fs, listed[rel].path)
         except Exception as exc:
             msg = str(exc)
             if "ChecksumException" in msg or "EOFException" in msg:

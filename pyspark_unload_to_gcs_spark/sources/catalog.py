@@ -4,18 +4,24 @@ The reference reads exactly one three-part catalog table per run via
 ``spark.sql`` (export.py:137, 203) and supports per-table custom SQL
 files loaded from the workspace (export.py:70-100). Here a "table" may
 be a catalog/temp-view name or a parquet path/directory, so everything
-runs identically on local test parquet and on a warehouse.
+runs identically on local test parquet and on a warehouse. Footer
+probes and SQL files are found through ``storage.py``, so ``file:``
+and object-store paths resolve like plain ones.
 """
 
 from __future__ import annotations
 
-import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyspark_unload_to_gcs_spark.sources.versioned import _strip_file_scheme
+from pyspark_unload_to_gcs_spark.storage import (
+    child,
+    data_files,
+    local_path,
+    read_text,
+)
 from pyspark_unload_to_gcs_spark.timeutil import ms_to_datetime
 
 TESTDATA_TABLES = (
@@ -42,21 +48,21 @@ def _nanos_timestamp_columns(path: str) -> list[str]:
     those natively — treating them as ns-longs would apply an integer
     div to a TIMESTAMP column and fail analysis. Only INT64 columns
     whose parquet logical type is TIMESTAMP(NANOS) need the conversion.
-    A ``file:`` URI is probed locally; other schemes report none.
+    The first data file (``storage.data_files``, so hive ``key=value``
+    layouts are walked) of a plain or ``file:`` path is probed; other
+    schemes report none.
     """
     from urllib.parse import urlparse
 
     import pyarrow.parquet as pq
 
-    probe = _strip_file_scheme(path)
-    if urlparse(probe).scheme:
+    if urlparse(local_path(path)).scheme:
         return []
-    if os.path.isdir(probe):
-        files = sorted(glob.glob(os.path.join(probe, "*.parquet")))
-        if not files:
-            return []
-        probe = files[0]
-    pq_schema = pq.ParquetFile(probe).schema  # parquet (not arrow) schema
+    files = data_files(path)
+    if not files:
+        return []
+    # parquet (not arrow) schema
+    pq_schema = pq.ParquetFile(local_path(files[0].path)).schema
     out = []
     for i in range(len(pq_schema)):
         col = pq_schema.column(i)
@@ -128,11 +134,10 @@ def custom_sql_source(
     reference's parameter currency (export.py:94-98).
     """
     filename = "initial_query.sql" if time_cutoff_ms == 0 else "recurring_query.sql"
-    path = os.path.join(sql_dir, filename)
-    if not os.path.exists(path):
+    path = child(sql_dir, filename)
+    query = read_text(path)
+    if query is None:
         raise FileNotFoundError(f"Custom SQL query file not found: {path}")
-    with open(path) as f:
-        query = f.read()
 
     params: dict[str, str] = {"end_timestamp": ms_to_datetime(end_ms).isoformat()}
     if time_cutoff_ms > 0:

@@ -31,8 +31,8 @@ spellings; this is the dependency-free execution path):
   ``_commit_version``/``_commit_timestamp``.
 
 One log read per call: every public function lists ``_delta_log/``
-once (``_read_log``, through the session's Hadoop FileSystem) and
-passes the read down, which parses each commit JSON and collects each
+once (``_read_log``, through ``storage.hadoop_fs``) and passes the
+read down, which parses each commit JSON and collects each
 checkpoint at most once however many snapshots the call replays.
 
 Scope is documented, not silently wrong: reader protocol version 1
@@ -45,8 +45,9 @@ read goes through ``basePath`` so partition columns come back typed.
 ``write_delta_commit`` is the fixture/export writer: it stages data
 files with Spark, moves them into the table root via the Hadoop
 FileSystem API, and claims the next ``<version>.json`` with
-create-exclusive semantics (the protocol's optimistic concurrency on
-filesystems with atomic create). It writes the documented subset —
+``storage.create_exclusive`` (the protocol's optimistic concurrency on
+filesystems with atomic create); a writer that loses the claim raises
+``ConcurrentCommitError``. All file I/O goes through ``storage.py``. It writes the documented subset —
 protocol + metaData (v0), commitInfo with the caller's timestamp, add
 actions with sizes, remove actions for overwrites — which is exactly
 what the reader consumes and what any spec reader (including
@@ -69,11 +70,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from pyspark_unload_to_gcs_spark.operators.cdc import commit_as_of, window_changes
-from pyspark_unload_to_gcs_spark.sources.versioned import (
-    _read_text,
-    _replace_text_atomic,
-    _require_jfs,
-    _sub,
+from pyspark_unload_to_gcs_spark.sources.versioned import ConcurrentCommitError
+from pyspark_unload_to_gcs_spark.storage import (
+    child,
+    create_exclusive,
+    data_files,
+    delete,
+    hadoop_fs,
+    read_text,
+    replace_text_atomic,
 )
 
 _LOG_DIR = "_delta_log"
@@ -96,11 +101,11 @@ _CHECKPOINT_ACTION_CAP = 2_000_000
 
 
 def _log_path(table: str) -> str:
-    return _sub(table, _LOG_DIR)
+    return child(table, _LOG_DIR)
 
 
 def _commit_file(table: str, version: int) -> str:
-    return _sub(_log_path(table), f"{version:020d}.json")
+    return child(_log_path(table), f"{version:020d}.json")
 
 
 @dataclass
@@ -134,7 +139,7 @@ class _DeltaLog:
     def actions(self, version: int) -> list[dict]:
         """The actions of commit ``version``, parsed once per read."""
         if version not in self.parsed:
-            text = _read_text(_commit_file(self.table, version))
+            text = read_text(_commit_file(self.table, version))
             if text is None:
                 raise ValueError(
                     f"delta_log: commit {version} missing from {self.table!r}"
@@ -151,7 +156,7 @@ def _read_log(table: str | _DeltaLog) -> _DeltaLog:
     if isinstance(table, _DeltaLog):
         return table
     log = _log_path(table)
-    _jvm, _gw, fs, p = _require_jfs(log, "delta_log._read_log")
+    _jvm, _gw, fs, p = hadoop_fs(log, "delta_log._read_log")
     names = (
         sorted(str(st.getPath().getName()) for st in fs.listStatus(p))
         if fs.exists(p)
@@ -165,10 +170,10 @@ def _read_log(table: str | _DeltaLog) -> _DeltaLog:
         if m := _COMMIT_RE.match(name):
             commits.append(int(m.group(1)))
         elif m := _CHECKPOINT_RE.match(name):
-            complete[int(m.group(1))] = [_sub(log, name)]
+            complete[int(m.group(1))] = [child(log, name)]
         elif m := _MULTIPART_CP_RE.match(name):
             v, i, n = (int(g) for g in m.groups())
-            parts.setdefault(v, {}).setdefault(n, {})[i] = _sub(log, name)
+            parts.setdefault(v, {}).setdefault(n, {})[i] = child(log, name)
         elif unknown is None and _OTHER_CP_RE.match(name):
             unknown = name
     for v, by_n in parts.items():
@@ -400,7 +405,7 @@ def snapshot_at_version(
         schema = StructType.fromJson(json.loads(schema_json))
         return spark.createDataFrame([], schema)
     # protocol: add.path is RELATIVE to the table root and URL-encoded
-    paths = [_sub(log.table, unquote(p)) for p in sorted(files)]
+    paths = [child(log.table, unquote(p)) for p in sorted(files)]
     return spark.read.option("basePath", log.table).parquet(*paths)
 
 
@@ -464,17 +469,6 @@ def change_feed_by_diff(
 # ---------------------------------------------------------------------------
 
 
-def _create_exclusive(path: str, text: str) -> None:
-    """Create-with-fail-if-exists — the protocol's optimistic
-    concurrency primitive on filesystems with atomic create."""
-    _jvm, _gw, fs, p = _require_jfs(path, "delta_log._create_exclusive")
-    out = fs.create(p, False)
-    try:
-        out.write(text.encode("utf-8"))
-    finally:
-        out.close()
-
-
 def write_delta_commit(
     df: DataFrame,
     table: str,
@@ -492,8 +486,9 @@ def write_delta_commit(
     Data files stage through a Spark parquet write in a scratch
     subdirectory, then move into the table root via the Hadoop
     FileSystem API with collision-free names; the commit JSON is
-    claimed create-exclusively, so a concurrent writer loses with an
-    error instead of corrupting the log."""
+    claimed create-exclusively, so a concurrent writer loses with
+    ``ConcurrentCommitError`` instead of corrupting the log (its moved
+    data files stay unreferenced, invisible to every reader)."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"write_delta_commit: unknown mode {mode!r}")
     spark = df.sparkSession
@@ -506,32 +501,28 @@ def write_delta_commit(
             "to extend a vacuumed/corrupt log"
         )
 
-    staging = _sub(table, f"_staging_{version:020d}_{uuid.uuid4().hex[:8]}")
+    staging = child(table, f"_staging_{version:020d}_{uuid.uuid4().hex[:8]}")
     df.write.mode("overwrite").parquet(staging)
-    jvm, _gw, fs, _root = _require_jfs(table, "delta_log.write_delta_commit")
-    hstaging = jvm.org.apache.hadoop.fs.Path(staging)
+    jvm, _gw, fs, _root = hadoop_fs(table, "delta_log.write_delta_commit")
+    hpath = jvm.org.apache.hadoop.fs.Path
     adds = []
-    for st in fs.listStatus(hstaging):
-        name = str(st.getPath().getName())
-        if not name.endswith(".parquet"):
-            continue
+    for f in data_files(staging):
         rel = f"part-{version:05d}-{len(adds):05d}-{uuid.uuid4().hex}.parquet"
-        dst = jvm.org.apache.hadoop.fs.Path(_sub(table, rel))
-        if not fs.rename(st.getPath(), dst):
+        if not fs.rename(hpath(f.path), hpath(child(table, rel))):
             raise RuntimeError(
-                f"delta_log: could not move staged file {name} into "
+                f"delta_log: could not move staged file {f.rel} into "
                 f"{table!r}"
             )
         adds.append(
             {
                 "path": rel,
                 "partitionValues": {},
-                "size": int(fs.getFileStatus(dst).getLen()),
+                "size": f.size,
                 "modificationTime": int(commit_ms),
                 "dataChange": True,
             }
         )
-    fs.delete(hstaging, True)
+    delete(staging, recursive=True)
 
     actions: list[dict] = []
     if version == 0:
@@ -574,11 +565,18 @@ def write_delta_commit(
         }
     )
     # the claim creates _delta_log/ itself on the first commit
-    _create_exclusive(
-        _commit_file(table, version),
-        "\n".join(json.dumps(a, separators=(",", ":")) for a in actions)
-        + "\n",
-    )
+    commit_file = _commit_file(table, version)
+    try:
+        create_exclusive(
+            commit_file,
+            "\n".join(json.dumps(a, separators=(",", ":")) for a in actions)
+            + "\n",
+        )
+    except FileExistsError:
+        raise ConcurrentCommitError(
+            f"delta_log.write_delta_commit: another writer claimed "
+            f"{commit_file} first — re-read the log and retry"
+        ) from None
     return version
 
 
@@ -646,23 +644,20 @@ def write_checkpoint(spark: SparkSession, table: str, version: int) -> None:
         "size:bigint,modificationTime:bigint,dataChange:boolean>, "
         "remove struct<path:string>"
     )
-    cp_path = _sub(_log_path(table), f"{version:020d}.checkpoint.parquet")
-    tmp = _sub(_log_path(table), f"_cp_tmp_{uuid.uuid4().hex[:8]}")
+    cp_path = child(_log_path(table), f"{version:020d}.checkpoint.parquet")
+    tmp = child(_log_path(table), f"_cp_tmp_{uuid.uuid4().hex[:8]}")
     spark.createDataFrame(rows, schema).coalesce(1).write.mode(
         "overwrite"
     ).parquet(tmp)
-    jvm, _gw, fs, _root = _require_jfs(table, "delta_log.write_checkpoint")
-    part = None
-    for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(tmp)):
-        if str(st.getPath().getName()).endswith(".parquet"):
-            part = st.getPath()
-            break
-    if part is None:
+    jvm, _gw, fs, _root = hadoop_fs(table, "delta_log.write_checkpoint")
+    parts = data_files(tmp)
+    if not parts:
         raise RuntimeError("delta_log.write_checkpoint: no part file")
-    fs.rename(part, jvm.org.apache.hadoop.fs.Path(cp_path))
-    fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), True)
-    _replace_text_atomic(
-        _sub(_log_path(table), "_last_checkpoint"),
+    hpath = jvm.org.apache.hadoop.fs.Path
+    fs.rename(hpath(parts[0].path), hpath(cp_path))
+    delete(tmp, recursive=True)
+    replace_text_atomic(
+        child(_log_path(table), "_last_checkpoint"),
         json.dumps({"version": version, "size": len(rows)}),
     )
 

@@ -26,9 +26,6 @@ scans prefer ``sources.versioned.snapshot_at_ms`` (JVM parquet reader).
 
 from __future__ import annotations
 
-import glob
-import os
-
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -37,9 +34,12 @@ from pyspark.sql.datasource import (
 )
 
 from pyspark_unload_to_gcs_spark.operators.cdc import commit_as_of
-from pyspark_unload_to_gcs_spark.sources.versioned import (
-    _strip_file_scheme,
-    table_history,
+from pyspark_unload_to_gcs_spark.sources.versioned import table_history
+from pyspark_unload_to_gcs_spark.storage import (
+    DataFile,
+    child,
+    data_files,
+    local_path,
 )
 
 _ARROW_TO_DDL = {
@@ -72,7 +72,7 @@ def _ddl_for(path: str) -> str:
         elif t.startswith("decimal"):
             # pyarrow renders 'decimal128(p, s)' / 'decimal256(p, s)',
             # which Spark's DDL parser rejects — re-spell from the
-            # typed precision/scale (ADVICE r09).
+            # typed precision/scale.
             ddl = f"decimal({field.type.precision},{field.type.scale})"
         else:
             ddl = _ARROW_TO_DDL.get(t)
@@ -85,15 +85,12 @@ def _ddl_for(path: str) -> str:
     return ", ".join(parts)
 
 
-def _version_files(path: str, version: int) -> list[str]:
-    """Part files of a committed version, via local glob — this Python
-    DataSource reads with pyarrow in py4j-less workers, so its scope
-    is local/``file:`` paths (the module docstring's ingest-control
-    posture); a ``file:`` URI from the Hadoop-FS versioned writer is
-    accepted by stripping the scheme."""
-    return sorted(
-        glob.glob(os.path.join(_strip_file_scheme(path), f"v={version}", "*.parquet"))
-    )
+def _version_files(path: str, version: int) -> list[DataFile]:
+    """Part files of a committed version (``storage.data_files``). This
+    Python DataSource reads them with pyarrow, in py4j-less workers too,
+    so its scope is local/``file:`` paths (the module docstring's
+    ingest-control posture)."""
+    return data_files(child(path, f"v={version}"))
 
 
 class _FilePartition(InputPartition):
@@ -110,10 +107,10 @@ class _FilePartition(InputPartition):
         self.commit_ms = commit_ms
 
 
-# Target bytes per reader partition (opt r16, guide §4/§2.2): one
-# Python worker round-trip per PART FILE made tiny fixture commits pay
-# several task startups for KBs of data, while at real scale a fixed
-# per-file split stays fine because files are large. Group a version's
+# Target bytes per reader partition: one Python worker round-trip per
+# PART FILE would make tiny commits pay several task startups for KBs
+# of data, while at real scale a fixed per-file split stays fine
+# because files are large. Group a version's
 # files by cumulative size up to this target — small commits collapse
 # to one task, big commits keep one task per ~128 MB, the same
 # economics as spark.sql.files.maxPartitionBytes.
@@ -125,8 +122,8 @@ def _grouped_partitions(
 ) -> list[_FilePartition]:
     """Partitions for one committed version: files packed
     first-fit-in-listing-order into ~_TARGET_PARTITION_BYTES groups.
-    Listing order is the sorted glob, so the grouping is deterministic
-    for a committed (immutable) version — replayed batches stay
+    Listing order is sorted, so the grouping is deterministic for a
+    committed (immutable) version — replayed batches stay
     byte-identical."""
     if target_bytes is None:
         target_bytes = _TARGET_PARTITION_BYTES
@@ -134,15 +131,11 @@ def _grouped_partitions(
     cur: list[str] = []
     cur_bytes = 0
     for f in _version_files(path, version):
-        try:
-            size = os.path.getsize(f)
-        except OSError:
-            size = target_bytes  # unknown -> its own group
-        if cur and cur_bytes + size > target_bytes:
+        if cur and cur_bytes + f.size > target_bytes:
             groups.append(cur)
             cur, cur_bytes = [], 0
-        cur.append(f)
-        cur_bytes += size
+        cur.append(local_path(f.path))
+        cur_bytes += f.size
     if cur:
         groups.append(cur)
     return [_FilePartition(g, version, commit_ms) for g in groups]
@@ -165,9 +158,9 @@ def _read_file(partition: _FilePartition, targets: list):
     file(s) aligned to the resolved schema: columns a version predates
     come back as typed NULLs (schema evolution — additive only), and
     the commit stamps are appended as constants. The stamp arrays are
-    built as numpy full-arrays (opt r16, guide §4): the previous
-    ``pa.array([v] * n)`` materialized two n-element Python lists per
-    batch — pure interpreter overhead on a constant column."""
+    built as numpy full-arrays: ``pa.array([v] * n)`` would materialize
+    two n-element Python lists per batch — pure interpreter overhead on
+    a constant column."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -290,7 +283,7 @@ class VersionedCommitsDataSource(DataSource):
         # LATEST version carries the table's current (evolved) schema;
         # older versions align via typed-NULL padding in the readers
         files = _version_files(self._path(), history[0]["version"])
-        base = _ddl_for(files[0])
+        base = _ddl_for(local_path(files[0].path))
         # both paths stamp commit metadata — one schema serves batch
         # snapshot reads and the commit stream alike
         return base + ", `_commit_version` bigint, `_commit_timestamp` bigint"

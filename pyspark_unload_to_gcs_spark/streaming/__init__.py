@@ -13,5 +13,5 @@ Every fold runs through ``rollup.start_fold`` (foreachBatch,
 ``availableNow``), and every versioned-state fold commits
 ``v=<batch_id>`` through ``rollup.write_state`` and reads it back
 through ``rollup.read_state``, gated on the one lister
-``sources.versioned.committed_dirs``.
+``storage.committed_dirs``.
 """

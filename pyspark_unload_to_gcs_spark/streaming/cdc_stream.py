@@ -54,11 +54,11 @@ from pyspark_unload_to_gcs_spark.operators.cdc import (
     apply_changes,
     commit_changes,
 )
-from pyspark_unload_to_gcs_spark.sources.versioned import (
-    _read_text,
-    _replace_text_atomic,
-    _sub,
+from pyspark_unload_to_gcs_spark.storage import (
+    child,
     committed_dirs,
+    read_text,
+    replace_text_atomic,
 )
 from pyspark_unload_to_gcs_spark.streaming.merge import collapse_changes
 from pyspark_unload_to_gcs_spark.streaming.rollup import read_state, write_state
@@ -76,7 +76,7 @@ def _applied_watermark(state_path: str, before: int) -> int:
     dirs = [d for v, d in committed_dirs(state_path, "v") if v < before]
     if not dirs:
         return -1
-    text = _read_text(_sub(dirs[-1], _APPLIED_MARKER))
+    text = read_text(child(dirs[-1], _APPLIED_MARKER))
     if text is None:
         # every committed state this module writes carries the marker;
         # its absence means external tampering — resetting to -1 would
@@ -107,7 +107,7 @@ def cdf_merge_batch(
     batch evidences — NOT from the batch rows alone, because an EMPTY
     commit (a legal truncation: 0 rows) contributes no rows and would
     otherwise vanish, silently losing its DELETEs while the checkpoint
-    advanced (review finding). An in-range ledger version with no
+    advanced. An in-range ledger version with no
     batch rows IS such an empty snapshot; its diff against the
     previous state emits the truncation. When the batch itself is
     rowless there IS no batch evidence — only versions verified
@@ -133,7 +133,7 @@ def cdf_merge_batch(
     # several passes over the batch below (a stamps collect + one
     # filter per version) — pin the Python-source read FIRST so the
     # files aren't re-decoded per pass.
-    # MEASURED AND REJECTED (opt r16, guide §2.4): hash-partitioning
+    # MEASURED AND REJECTED: hash-partitioning
     # the pinned frame by the merge key so the per-version diff joins
     # share one exchange — interleaved A/B (5 reps, tagged fold
     # timings) read fold min 3.25 s (as-is) vs 7.62 s (co-partitioned):
@@ -155,7 +155,7 @@ def cdf_merge_batch(
         history = table_history(table_path)
         ledger = sorted((e["version"], e["commit_ms"]) for e in history)
         # commit-time row counts (ledger stat, recorded by
-        # commit_version since r12); None for legacy entries
+        # commit_version); None for entries written before the stat
         n_rows_by_v = {e["version"]: e.get("n_rows") for e in history}
         if in_batch:
             hi = max(in_batch)
@@ -166,16 +166,16 @@ def cdf_merge_batch(
             # planned. Inferring "empty commit" from the ledger alone
             # would diff that commit as an empty snapshot (fabricated
             # truncation DELETEs) and the advanced watermark would make
-            # the next batch skip its real rows — silent, permanent loss
-            # (ADVICE r10). So a version is only applied from a rowless
+            # the next batch skip its real rows — silent, permanent loss.
+            # So a version is only applied from a rowless
             # batch if its snapshot is verifiably zero-row ON DISK;
             # apply stops at the first version with data (dense-order
             # contract), deferring it to the batch that carries its
             # rows. The check reads the ledger's commit-time n_rows
             # stat — ZERO Spark jobs on a rowless micro-batch, however
-            # long the empty-commit backlog (ADVICE r11: the previous
-            # per-version isEmpty() loop serialized one job per pending
-            # version inside foreachBatch); only legacy ledger entries
+            # long the empty-commit backlog (a per-version isEmpty()
+            # loop would serialize one job per pending version inside
+            # foreachBatch); only legacy ledger entries
             # written before the stat existed fall back to isEmpty().
             hi = -1
             for v, _ms in ledger:
@@ -234,7 +234,7 @@ def cdf_merge_batch(
         out_dir = write_state(nxt, state_path, batch_id)
         # watermark LAST (after _SUCCESS): a crash in between replays
         # the batch, which recomputes the identical state + marker
-        _replace_text_atomic(_sub(out_dir, _APPLIED_MARKER), str(todo[-1][0]))
+        replace_text_atomic(child(out_dir, _APPLIED_MARKER), str(todo[-1][0]))
     finally:
         batch_df.unpersist()
 

@@ -45,10 +45,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_unload_to_gcs_spark.session import session_memo
+from pyspark_unload_to_gcs_spark.storage import child, qualified_path
 
 _META_COLS = ("shingle_n", "n_buckets", "threshold_pct")
 
-# broadcast-hint gates for containment_match_batch (ADVICE r14): a
+# broadcast-hint gates for containment_match_batch: a
 # normal micro-batch sails under both; a backfill batch covering a big
 # window must NOT be force-broadcast past what the driver can hold.
 # Prefix rows are 16 bytes each (id, hash) — 2M ≈ 32 MB serialized.
@@ -58,29 +59,8 @@ _BROADCAST_PREFIX_ROW_CAP = 2_000_000
 _BROADCAST_DOC_CAP = 100_000
 
 
-def _memo_root(path: str) -> str:
-    """Canonical memo key for an index root: the fully-qualified
-    Hadoop-FS path (same resolution as the versioned ledger), so
-    ``/t``, ``/t/`` and ``file:/t`` key identically; falls back to the
-    local abspath in a py4j-less process."""
-    import os as _os
-
-    from pyspark_unload_to_gcs_spark.sources.versioned import (
-        _jfs,
-        _strip_file_scheme,
-    )
-
-    handle = _jfs(path)
-    if handle is None:
-        return _os.path.abspath(_strip_file_scheme(path))
-    _jvm, _gw, fs, p = handle
-    return str(fs.makeQualified(p).toString())
-
-
 def _index_dir(state_path: str, name: str) -> str:
-    from pyspark_unload_to_gcs_spark.sources.versioned import _sub
-
-    return _sub(_sub(state_path, "index"), name)
+    return child(child(state_path, "index"), name)
 
 
 def _read_meta(spark: SparkSession, index_root: str):
@@ -88,13 +68,13 @@ def _read_meta(spark: SparkSession, index_root: str):
     with the session. The meta is frozen with the index, so one read per
     session is exact and spares every fold a small Spark job.
     ``containment_index_build`` drops the rebuilding session's entry;
-    the key is the qualified root (``_memo_root``), so no equivalent
+    the key is the qualified root (``storage.qualified_path``), so no equivalent
     spelling of the path can serve a stale Row past that drop. A
     rebuild by another process or session is not observed: rebuilding
     an index under a live consumer is not supported."""
     return session_memo(
         spark,
-        ("containment_meta", _memo_root(index_root)),
+        ("containment_meta", qualified_path(index_root)),
         lambda: spark.read.parquet(_index_dir(index_root, "meta")).first(),
     )
 
@@ -125,7 +105,7 @@ def containment_index_build(
     # n_buckets < 1 makes pmod() throw REMAINDER_BY_ZERO at execution
     # under ANSI (or NULL every bucket with ANSI off, where the two
     # sides' buckets never agree and the stream silently matches
-    # nothing) — refuse with a clear error at call time (review r12)
+    # nothing) — refuse with a clear error at call time
     if not isinstance(n_buckets, int) or n_buckets < 1:
         raise ValueError(
             f"containment_index_build: n_buckets={n_buckets!r} must be "
@@ -145,7 +125,7 @@ def containment_index_build(
         # it here so the emptiness guard below sees GRAMS, not rows: an
         # index whose docs all tokenize shorter than shingle_n must
         # refuse, not freeze empty postings that match nothing forever
-        # (review r12)
+        #
         .filter(F.size("__g") > 0)
     )
     # one gram pass feeds grams + postings + df — checkpoint so the
@@ -164,7 +144,7 @@ def containment_index_build(
     # repartition ON the bucket column before the partitioned write:
     # without it every upstream partition writes a sliver into every
     # bucket directory (partitions x buckets files — measured ~2k tiny
-    # files at fixture scale, r14), and every later batch fold pays the
+    # files at fixture scale), and every later batch fold pays the
     # listing + tiny-task cost. One compact shard per bucket is also
     # the 100 TB layout (scale n via repartition(n, "pb") if a single
     # bucket outgrows a shard).
@@ -181,7 +161,7 @@ def containment_index_build(
         _index_dir(state_path, "meta")
     )
     # drop this session's meta entry: a rebuild must not serve the old Row
-    session_memo(spark, ("containment_meta", _memo_root(state_path)), None)
+    session_memo(spark, ("containment_meta", qualified_path(state_path)), None)
 
 
 def containment_match_batch(
@@ -208,7 +188,6 @@ def containment_match_batch(
         rarest_prefix,
         verify_containment,
     )
-    from pyspark_unload_to_gcs_spark.sources.versioned import _sub
 
     spark = batch_df.sparkSession
     idx = index_path or state_path
@@ -252,7 +231,7 @@ def containment_match_batch(
     # the exact verify below discards them.
     # A NORMAL micro-batch is small, and AQE can't size it through the
     # localCheckpoint, so hint broadcast — but gate the hint on the
-    # measured batch size (ADVICE r14): a replay/backfill batch covering
+    # measured batch size: a replay/backfill batch covering
     # a big window would blow past maxBroadcastTableBytes or driver
     # memory and fail the stream, where size-based join selection would
     # have picked a shuffle. Over the cap, leave the plan to Spark.
@@ -291,16 +270,15 @@ def containment_match_batch(
         "containment_r",
     )
     out.write.mode("overwrite").parquet(
-        _sub(_sub(state_path, "matches"), f"b={batch_id}")
+        child(child(state_path, "matches"), f"b={batch_id}")
     )
 
 
 def read_matches(spark: SparkSession, state_path: str) -> DataFrame | None:
     """All batches' match rows as one frame (batch_id is a data
     column). Only COMMITTED ``matches/b=<id>`` slices are read (a torn
-    overwrite must not surface partial matches that LOOK computed,
-    review r12); None before any batch committed."""
-    from pyspark_unload_to_gcs_spark.sources.versioned import _sub
+    overwrite must not surface partial matches that LOOK computed);
+    None before any batch committed."""
     from pyspark_unload_to_gcs_spark.streaming.rollup import read_slices
 
-    return read_slices(spark, _sub(state_path, "matches"), "b")
+    return read_slices(spark, child(state_path, "matches"), "b")

@@ -36,7 +36,7 @@ contracts:
 serve (file:/gs:/s3a:/hdfs:): writes go through the Spark parquet
 writer and the commit-gated readbacks (``read_accepted`` and the
 key index) list state through the Hadoop-FS-backed
-``sources.versioned.committed_dirs``.
+``storage.committed_dirs``.
 """
 
 from __future__ import annotations
@@ -46,7 +46,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyspark_unload_to_gcs_spark.sources.versioned import _sub
+from pyspark_unload_to_gcs_spark.storage import child
 from pyspark_unload_to_gcs_spark.streaming.rollup import (
     read_slices,
     read_state,
@@ -90,12 +90,12 @@ def _collapse_batch(
     batch_df: DataFrame, key_columns: Sequence[str], sequence_column: str
 ) -> DataFrame:
     """Deterministic within-batch collapse to the lowest-sequence row
-    per key (review finding): sequence alone leaves equal-(key, seq)
+    per key: sequence alone leaves equal-(key, seq)
     rows to shuffle order, so a foreachBatch RETRY could rewrite state
     with a DIFFERENT winner — order by every remaining column after
     the sequence (NULL seqs last: an untagged row must not beat
     seq 0). Map-typed payloads are not orderable (AnalysisException at
-    plan time, r08 review finding): those columns tiebreak on
+    plan time): those columns tiebreak on
     xxhash64(to_json(col)) instead — still deterministic per row
     content, while orderable columns keep the min-row contract."""
     from pyspark.sql import Window
@@ -121,7 +121,7 @@ def _first_seen_rows(
     collapsed: DataFrame, prev_keys: DataFrame, key_columns: Sequence[str]
 ) -> DataFrame:
     """The collapsed rows whose keys are NOT in ``prev_keys`` —
-    NULL-SAFE anti-join (review finding): a plain equality anti-join
+    NULL-SAFE anti-join: a plain equality anti-join
     lets NULL-key rows through in EVERY batch (NULL = NULL is NULL),
     re-admitting them forever while the window collapse groups NULLs —
     eqNullSafe makes NULL a first-class key."""
@@ -159,7 +159,7 @@ def dedup_batch_indexed(
     version — whichever of the two writes the crash interrupted."""
     spark = batch_df.sparkSession
     collapsed = _collapse_batch(batch_df, key_columns, sequence_column)
-    prev_keys = read_state(spark, _sub(state_path, "keys"), before=batch_id)
+    prev_keys = read_state(spark, child(state_path, "keys"), before=batch_id)
     admitted = (
         collapsed
         if prev_keys is None
@@ -168,12 +168,12 @@ def dedup_batch_indexed(
     # two consumers (accepted write + key-version write) — one compute
     admitted = admitted.localCheckpoint(eager=False)
     admitted.write.mode("overwrite").parquet(
-        _sub(_sub(state_path, "accepted"), f"b={batch_id}")
+        child(child(state_path, "accepted"), f"b={batch_id}")
     )
     nxt_keys = admitted.select(*key_columns)
     if prev_keys is not None:
         nxt_keys = prev_keys.unionByName(nxt_keys)
-    write_state(nxt_keys, _sub(state_path, "keys"), batch_id)
+    write_state(nxt_keys, child(state_path, "keys"), batch_id)
 
 
 def read_accepted(
@@ -182,4 +182,4 @@ def read_accepted(
     """The accepted (deduped) rows: the union of every COMMITTED
     ``accepted/b=<b>`` slice (a torn write must not surface). Returns
     None before any batch committed."""
-    return read_slices(spark, _sub(state_path, "accepted"), "b")
+    return read_slices(spark, child(state_path, "accepted"), "b")

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyspark_unload_to_gcs_spark.storage import child
+
 
 def _counts(frame: DataFrame, category_column: str) -> DataFrame:
     return frame.groupBy(category_column).agg(
@@ -51,10 +53,9 @@ def drift_batch(
     from pyspark_unload_to_gcs_spark.operators.diagnostics import (
         drift_psi_from_counts,
     )
-    from pyspark_unload_to_gcs_spark.sources.versioned import _sub
 
     spark = batch_df.sparkSession
-    baseline_dir = _sub(state_path, "baseline")
+    baseline_dir = child(state_path, "baseline")
     if batch_id == 0:
         _counts(batch_df, category_column).write.mode("overwrite").parquet(
             baseline_dir
@@ -64,7 +65,7 @@ def drift_batch(
         # an empty bootstrap would freeze an EMPTY baseline: every
         # later batch emits finite smoothing-only terms that LOOK
         # computed while comparing against nothing — refuse loudly,
-        # same contract as quota_mix_batch (review r12)
+        # same contract as quota_mix_batch
         if baseline.isEmpty():
             raise ValueError(
                 "drift_batch: bootstrap batch is empty — cannot freeze "
@@ -72,7 +73,7 @@ def drift_batch(
             )
         # batch 0 is the self-comparison by construction — reuse the
         # written baseline as the current side instead of re-running
-        # the batch groupBy and a vacuous self-join (review r12)
+        # the batch groupBy and a vacuous self-join
         joined = baseline.select(
             category_column,
             F.col("n_a").cast("long").alias("n_a"),
@@ -85,7 +86,7 @@ def drift_batch(
         # NULL-safe category equality: a plain full-outer equi-join
         # never matches NULL keys, splitting a NULL category into two
         # one-sided rows and drifting from the batch twin, which groups
-        # NULL as ONE category (review r12)
+        # NULL as ONE category
         joined = baseline.join(
             current,
             baseline[category_column].eqNullSafe(current[category_column]),
@@ -105,14 +106,13 @@ def drift_batch(
         "psi_term_r",
     )
     out.write.mode("overwrite").parquet(
-        _sub(_sub(state_path, "drift"), f"b={batch_id}")
+        child(child(state_path, "drift"), f"b={batch_id}")
     )
 
 
 def read_drift(spark: SparkSession, state_path: str) -> DataFrame | None:
     """All committed batches' drift rows as one frame (batch_id is a
     data column); None before any batch committed."""
-    from pyspark_unload_to_gcs_spark.sources.versioned import _sub
     from pyspark_unload_to_gcs_spark.streaming.rollup import read_slices
 
-    return read_slices(spark, _sub(state_path, "drift"), "b")
+    return read_slices(spark, child(state_path, "drift"), "b")

@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyspark_unload_to_gcs_spark.storage import child, read_text, replace_text_atomic
+
 
 def quota_mix_batch(
     batch_df: DataFrame,
@@ -57,40 +59,35 @@ def quota_mix_batch(
         quota_temperature_mix,
     )
 
-    # budget/corpus layout I/O through the same Hadoop-FS text helpers
-    # the versioned ledger uses, so state_path works on any URI scheme
+    # budget/corpus layout I/O goes through storage.py, like the
+    # versioned ledger, so state_path works on any URI scheme
     # the cluster can write (file:/hdfs:/gs:/s3a:) and the budget file
     # is replaced ATOMICALLY — a crash mid-write can never be read back
-    # as a silently wrong budget (review r12)
-    from pyspark_unload_to_gcs_spark.sources.versioned import (
-        _read_text,
-        _replace_text_atomic,
-        _sub,
-    )
+    # as a silently wrong budget
     from pyspark_unload_to_gcs_spark.streaming.rollup import (
         read_slices,
         write_state,
     )
 
     spark = batch_df.sparkSession
-    corpus_root = _sub(state_path, "corpus")
+    corpus_root = child(state_path, "corpus")
     write_state(batch_df.select(id_column, stratum_column), corpus_root, batch_id)
-    budget_path = _sub(state_path, "budget.txt")
-    if batch_id == 0 or _read_text(budget_path) is None:
+    budget_path = child(state_path, "budget.txt")
+    if batch_id == 0 or read_text(budget_path) is None:
         # bootstrap provision: half the batch-0 corpus, counted from
         # the WRITTEN files (a retry recomputes the identical B)
-        n0 = spark.read.parquet(_sub(corpus_root, "v=0")).count()
+        n0 = spark.read.parquet(child(corpus_root, "v=0")).count()
         if n0 == 0:
             # a rowless bootstrap would freeze B=0 permanently: every
             # later manifest selects nothing while looking computed —
-            # refuse loudly instead (review r12)
+            # refuse loudly instead
             raise ValueError(
                 "quota_mix_batch: bootstrap batch is empty — cannot "
                 "provision a manifest budget; start the stream once "
                 "the corpus has data"
             )
-        _replace_text_atomic(budget_path, str(n0 // 2))
-    budget = int(_read_text(budget_path))
+        replace_text_atomic(budget_path, str(n0 // 2))
+    budget = int(read_text(budget_path))
     corpus = read_slices(spark, corpus_root, "v", through=batch_id)
     selected = quota_temperature_mix(
         corpus, stratum_column, id_column, budget=budget, tau=tau
@@ -116,14 +113,13 @@ def quota_mix_batch(
         )
     )
     manifest.write.mode("overwrite").parquet(
-        _sub(_sub(state_path, "manifest"), f"b={batch_id}")
+        child(child(state_path, "manifest"), f"b={batch_id}")
     )
 
 
 def read_manifests(spark: SparkSession, state_path: str) -> DataFrame | None:
     """All committed batches' manifests as one frame (batch_id is a
     data column); None before any batch committed."""
-    from pyspark_unload_to_gcs_spark.sources.versioned import _sub
     from pyspark_unload_to_gcs_spark.streaming.rollup import read_slices
 
-    return read_slices(spark, _sub(state_path, "manifest"), "b")
+    return read_slices(spark, child(state_path, "manifest"), "b")

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyspark_unload_to_gcs_spark.functions.timestamps import epoch_ms
-from pyspark_unload_to_gcs_spark.sources.versioned import _sub, committed_dirs
+from pyspark_unload_to_gcs_spark.storage import child, committed_dirs
 from pyspark_unload_to_gcs_spark.streaming.rollup import (
     read_slices,
     read_state,
@@ -156,7 +156,7 @@ def fold_batch(
         (F.col("__seg") == F.col("__max_seg")).alias("__open"),
     )
     # two writes consume the same frame; materialize so the window/agg
-    # pipeline runs once. localCheckpoint, not persist (opt r16): a
+    # pipeline runs once. localCheckpoint, not persist: a
     # CACHED plan's output partitioning is pinned to the static shuffle
     # partition count (AQE leaves cached plans alone —
     # canChangeCachedPlanOutputPartitioning default), so both writes
@@ -179,7 +179,7 @@ def fold_batch(
         "end_ms",
         (F.col("end_ms") - F.col("start_ms")).alias("duration_ms"),
     )
-    write_state(closed, _sub(state_path, "closed"), batch_id)
+    write_state(closed, child(state_path, "closed"), batch_id)
     state = sessions.filter(F.col("__open")).select(
         "user_id",
         "session_seq",
@@ -213,7 +213,7 @@ def read_sessions(
     parts = []
     if committed:
         closed = read_slices(
-            spark, _sub(state_path, "closed"), "v", through=committed[-1][0]
+            spark, child(state_path, "closed"), "v", through=committed[-1][0]
         )
         if closed is not None:
             parts.append(closed.select(*CLOSED_COLUMNS))

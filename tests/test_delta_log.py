@@ -15,6 +15,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from pyspark.sql import functions as F  # noqa: E402
 
 from pyspark_unload_to_gcs_spark.sources import delta_log as D  # noqa: E402
+from pyspark_unload_to_gcs_spark.storage import create_exclusive  # noqa: E402
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -198,7 +199,7 @@ def test_protocol_guard_refuses_newer_reader(spark, table, tmp_path):
 
 def test_commit_claim_is_exclusive(spark, table):
     with pytest.raises(Exception):
-        D._create_exclusive(
+        create_exclusive(
             D._commit_file(table, 0), '{"commitInfo":{}}'
         )
 
@@ -438,11 +439,11 @@ def test_each_call_reads_the_log_once(spark, table, tmp_path, monkeypatch):
         def __getattr__(self, name):
             return getattr(self._fs, name)
 
-    def handle(path, op, _get=D._require_jfs):
+    def handle(path, op, _get=D.hadoop_fs):
         jvm, gw, fs, p = _get(path, op)
         return jvm, gw, ListingFS(fs), p
 
-    def read_text(path, _read=D._read_text):
+    def read_text(path, _read=D.read_text):
         if path.endswith(".json"):
             reads[path] += 1
         return _read(path)
@@ -451,8 +452,8 @@ def test_each_call_reads_the_log_once(spark, table, tmp_path, monkeypatch):
         collects.extend(p for p in paths if ".checkpoint." in p)
         return _read(self, *paths, **options)
 
-    monkeypatch.setattr(D, "_require_jfs", handle)
-    monkeypatch.setattr(D, "_read_text", read_text)
+    monkeypatch.setattr(D, "hadoop_fs", handle)
+    monkeypatch.setattr(D, "read_text", read_text)
     monkeypatch.setattr(DataFrameReader, "parquet", parquet)
     feed = D.change_feed_by_diff
     calls = {
@@ -950,3 +951,78 @@ def test_log_replay_matches_dict_model(spark, tmp_path_factory, steps, cp_at):
         )
         assert got == expected, f"version {v}: {got} != {expected}"
         assert D.version_at_timestamp_ms(t, (v + 1) * 1000 + 500) == v
+
+
+def test_lost_commit_claim_raises_concurrent_commit_error(spark, tmp_path, monkeypatch):
+    """A writer that lists the log, then finds its next commit file
+    already created by another writer, raises ConcurrentCommitError
+    naming that file; the winner's commit stays the log's tip."""
+    from pyspark_unload_to_gcs_spark.sources.versioned import ConcurrentCommitError
+
+    t = str(tmp_path / "race")
+    df = spark.range(0, 2).select(F.col("id").alias("k"))
+    D.write_delta_commit(df, t, commit_ms=100)
+
+    def racing_read(table, _read=D._read_log):
+        log = _read(table)
+        # another writer lands the next commit after this one listed the log
+        create_exclusive(
+            D._commit_file(t, len(log.commits)),
+            '{"commitInfo":{"timestamp":150,"operation":"WINNER"}}\n',
+        )
+        return log
+
+    monkeypatch.setattr(D, "_read_log", racing_read)
+    with pytest.raises(ConcurrentCommitError, match=f"{1:020d}.json"):
+        D.write_delta_commit(df, t, commit_ms=200)
+    monkeypatch.undo()
+    assert [e["operation"] for e in D.table_history(t)] == ["WRITE", "WINNER"]
+
+
+def test_history_probe_row_reads_the_log_once(spark, sf_dir, monkeypatch):
+    """Building ``delta_log_history_probe`` lists ``_delta_log/`` once,
+    reads each commit JSON at most once and collects the checkpoint at
+    most once: the history and every snapshot share one log read."""
+    from collections import Counter
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from pyspark_unload_to_gcs_spark import registry_pipeline as RP
+
+    RP._delta_orders(spark, sf_dir)  # the fixture table, built and memoized
+    listings, reads, collects = [], Counter(), []
+
+    class ListingFS:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def listStatus(self, p):
+            if str(p.getName()) == "_delta_log":
+                listings.append(p)
+            return self._fs.listStatus(p)
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    def handle(path, op, _get=D.hadoop_fs):
+        jvm, gw, fs, p = _get(path, op)
+        return jvm, gw, ListingFS(fs), p
+
+    def read_text(path, _read=D.read_text):
+        if path.endswith(".json"):
+            reads[path] += 1
+        return _read(path)
+
+    def parquet(self, *paths, _read=DataFrameReader.parquet, **options):
+        collects.extend(p for p in paths if ".checkpoint." in p)
+        return _read(self, *paths, **options)
+
+    monkeypatch.setattr(D, "hadoop_fs", handle)
+    monkeypatch.setattr(D, "read_text", read_text)
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    row = RP.delta_log_history_probe_q(spark, sf_dir)
+    assert len(listings) == 1, listings
+    assert len(reads) == 3 and max(reads.values()) == 1, reads
+    assert len(collects) <= 1, collects
+    monkeypatch.undo()
+    assert [r["version"] for r in row.orderBy("version").collect()] == [0, 1, 2]

@@ -4,7 +4,7 @@ only in ``rollup.start_fold`` (the one ``foreachBatch`` and
 in ``rollup.write_state``, and nothing under ``streaming/`` lists or
 reads state with local-filesystem calls (``glob``, ``os.path.exists``,
 ``open``), which miss state on ``file:`` and object-store URIs; the
-lister is ``sources.versioned.committed_dirs``."""
+lister is ``storage.committed_dirs``."""
 
 import ast
 from pathlib import Path

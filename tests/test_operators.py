@@ -2055,3 +2055,79 @@ def test_repeated_span_dedup_vertical_tab_parity(spark):
     # (i.e. VT really tokenized): docs 1 and 2 lose the shared span
     got = {r["doc_id"]: r["n_tokens_removed"] for r in out.collect()}
     assert got[1] >= 10 and got[2] >= 10 and got[3] == 0
+
+
+def test_load_table_reads_nanos_in_hive_partitioned_dirs(spark, tmp_path):
+    """A hive-partitioned table of INT64 TIMESTAMP(NANOS) files loads
+    with ``ts`` as TimestampType, from a plain and a ``file:`` path: the
+    footer probe walks the ``p=<v>/`` directories to find a data file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import TimestampType
+
+    from pyspark_unload_to_gcs_spark.sources.catalog import load_table
+
+    d = str(tmp_path / "hive_ns")
+    ns = [1704067200_000_000_001, 1704067200_123_456_789, 1704153600_999_999_999]
+    pq.write_to_dataset(
+        pa.table(
+            {
+                "id": pa.array([1, 2, 3], pa.int64()),
+                "ts": pa.array(ns, pa.timestamp("ns")),
+                "p": pa.array([1, 1, 2], pa.int64()),
+            }
+        ),
+        d,
+        partition_cols=["p"],
+    )
+    for path in (d, "file:" + d):
+        df = load_table(spark, path)
+        assert isinstance(df.schema["ts"].dataType, TimestampType), path
+        got = df.orderBy("id").select(F.expr("unix_micros(ts)")).collect()
+        assert [r[0] for r in got] == [n // 1000 for n in ns], path
+
+
+def test_footer_listing_skips_crashed_write_leftovers(spark, tmp_path):
+    """``scan_prune_plan`` over a hive-partitioned table counts only the
+    committed files: a stray ``_temporary/0/...`` part file left by a
+    crashed write is not a data file."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from pyspark_unload_to_gcs_spark.operators.diagnostics import scan_prune_plan
+
+    out = tmp_path / "t"
+    (
+        spark.range(0, 100)
+        .select(F.col("id").alias("k"), (F.col("id") % 2).alias("p"))
+        .repartition(1)
+        .write.partitionBy("p")
+        .parquet(str(out))
+    )
+    part = next((out / "p=1").glob("part-*.parquet"))
+    stray = out / "_temporary" / "0" / "p=1"
+    stray.mkdir(parents=True)
+    shutil.copy(part, stray / "part-00099.parquet")
+    plan = scan_prune_plan(
+        spark, str(out), "k", lower=0, upper=1000, partition_column="p"
+    ).collect()
+    assert sorted((r["unit"], r["n_files"], r["n_rows"]) for r in plan) == [
+        ("0", 1, 50),
+        ("1", 1, 50),
+    ]
+
+
+def test_footer_profile_reads_file_uris(spark, tmp_path):
+    """A ``file:`` table path profiles exactly like the plain path."""
+    from pyspark.sql import functions as F
+
+    from pyspark_unload_to_gcs_spark.operators.diagnostics import (
+        parquet_footer_profile,
+    )
+
+    d = str(tmp_path / "multi")
+    spark.range(0, 1000).select(F.col("id").alias("k")).repartition(3).write.parquet(d)
+    plain = parquet_footer_profile(spark, d, "k").first().asDict()
+    assert plain["n_files"] == 3 and plain["n_rows"] == 1000
+    assert parquet_footer_profile(spark, "file:" + d, "k").first().asDict() == plain

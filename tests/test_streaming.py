@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from pyspark_unload_to_gcs_spark.config import SyncConfig
 from pyspark_unload_to_gcs_spark.sources.catalog import load_parquet
-from pyspark_unload_to_gcs_spark.sources.versioned import committed_dirs
+from pyspark_unload_to_gcs_spark.storage import committed_dirs
 from pyspark_unload_to_gcs_spark.streaming.export import StreamExportStats, export_batch
 from pyspark_unload_to_gcs_spark.streaming.rollup import start_fold
 from pyspark_unload_to_gcs_spark.streaming.sessionize import sessionize_stream

@@ -419,3 +419,16 @@ def test_cdc_sync_end_to_end_on_versioned_table(spark, tmp_path):
         ).validate()
     with pytest.raises(ValueError, match="table_format"):
         SyncConfig(table=table, table_format="iceberg").validate()
+
+
+def test_custom_sql_source_reads_file_uris(spark, tmp_path):
+    """The SQL directory may be given as a ``file:`` URI (or any scheme
+    the cluster reads): the query file is found and read like a plain
+    path."""
+    from pyspark_unload_to_gcs_spark.sources.catalog import custom_sql_source
+
+    sql_dir = tmp_path / "sql_uri"
+    sql_dir.mkdir()
+    (sql_dir / "initial_query.sql").write_text("SELECT 7 AS x, :end_timestamp AS e")
+    got = custom_sql_source(spark, "file:" + str(sql_dir), 0, 1709251200000).collect()
+    assert [r["x"] for r in got] == [7]
