@@ -112,9 +112,7 @@ def time_based_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "scd_latest_order",
-    oracle="""
+_SCD_LATEST_ORDER_SQL = """
     SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
            epoch_ms(o_orderdate) AS o_orderdate_ms, o_orderpriority
     FROM (
@@ -125,12 +123,13 @@ def time_based_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM orders
     ) RankedRows
     WHERE row_num = 1
-    """,
-)
-def scd_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """scd-latest W1+P8: latest order per customer (o_orderkey DESC
-    tie-break for determinism; rank column dropped — see operators/scd.py)."""
-    df = latest_per_group(
+    """
+
+
+def _latest_order_frame(spark: SparkSession, sf_dir: str, latest) -> DataFrame:
+    """The latest order per customer picked by ``latest`` (o_orderkey
+    DESC tie-break for determinism), order date as epoch ms."""
+    df = latest(
         _t(spark, sf_dir, "orders"), "o_custkey", "o_orderdate", tiebreak_columns=["o_orderkey"]
     )
     return df.select(
@@ -143,21 +142,14 @@ def scd_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "scd_latest_order_maxby",
-    oracle="""
-    SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-           epoch_ms(o_orderdate) AS o_orderdate_ms, o_orderpriority
-    FROM (
-        SELECT *, ROW_NUMBER() OVER (
-            PARTITION BY o_custkey
-            ORDER BY o_orderdate DESC, o_orderkey DESC
-        ) AS row_num
-        FROM orders
-    ) RankedRows
-    WHERE row_num = 1
-    """,
-)
+@register("scd_latest_order", oracle=_SCD_LATEST_ORDER_SQL)
+def scd_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """scd-latest W1+P8: latest order per customer (rank column dropped
+    — see operators/scd.py)."""
+    return _latest_order_frame(spark, sf_dir, latest_per_group)
+
+
+@register("scd_latest_order_maxby", oracle=_SCD_LATEST_ORDER_SQL)
 def scd_latest_order_maxby(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same result as scd_latest_order via max_by aggregation instead of
     a ranking window: partial max_by runs MAP-SIDE, so the shuffle
@@ -166,17 +158,7 @@ def scd_latest_order_maxby(spark: SparkSession, sf_dir: str) -> DataFrame:
     window form: the two implementations must agree.)"""
     from pyspark_unload_to_gcs_spark.operators.scd import latest_per_group_maxby
 
-    df = latest_per_group_maxby(
-        _t(spark, sf_dir, "orders"), "o_custkey", "o_orderdate", tiebreak_columns=["o_orderkey"]
-    )
-    return df.select(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderstatus",
-        "o_totalprice",
-        epoch_ms(df, "o_orderdate").alias("o_orderdate_ms"),
-        "o_orderpriority",
-    )
+    return _latest_order_frame(spark, sf_dir, latest_per_group_maxby)
 
 
 @register(
@@ -280,6 +262,20 @@ def cdc_change_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     return change_type_mapping(df)
 
 
+def _cdc_snapshots(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """Two deterministic snapshots of orders: ``old`` drops every tenth
+    key, ``new`` drops every seventh and bumps every fifth price."""
+    base = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
+    old = base.filter(F.col("o_orderkey") % 10 != 0)
+    new = base.filter(F.col("o_orderkey") % 7 != 0).withColumn(
+        "o_totalprice",
+        F.when(F.col("o_orderkey") % 5 == 0, F.col("o_totalprice") + 1.0).otherwise(
+            F.col("o_totalprice")
+        ),
+    )
+    return old, new
+
+
 @register(
     "cdc_snapshot_diff",
     oracle="""
@@ -311,14 +307,7 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     into DELETE/INSERT change rows — Delta-free CDC semantics."""
     from pyspark_unload_to_gcs_spark.operators.cdc import snapshot_diff
 
-    base = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
-    old = base.filter(F.col("o_orderkey") % 10 != 0)
-    new = base.filter(F.col("o_orderkey") % 7 != 0).withColumn(
-        "o_totalprice",
-        F.when(F.col("o_orderkey") % 5 == 0, F.col("o_totalprice") + 1.0).otherwise(
-            F.col("o_totalprice")
-        ),
-    )
+    old, new = _cdc_snapshots(spark, sf_dir)
     return snapshot_diff(old, new, ["o_orderkey"])
 
 
@@ -343,14 +332,7 @@ def cdc_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark_unload_to_gcs_spark.operators.cdc import apply_changes, snapshot_diff
 
-    base = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
-    old = base.filter(F.col("o_orderkey") % 10 != 0)
-    new = base.filter(F.col("o_orderkey") % 7 != 0).withColumn(
-        "o_totalprice",
-        F.when(F.col("o_orderkey") % 5 == 0, F.col("o_totalprice") + 1.0).otherwise(
-            F.col("o_totalprice")
-        ),
-    )
+    old, new = _cdc_snapshots(spark, sf_dir)
     changes = snapshot_diff(old, new, ["o_orderkey"])
     return apply_changes(old, changes, ["o_orderkey"])
 

@@ -691,9 +691,9 @@ def rolling_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "sessionization",
-    oracle="""
+# Gap-based sessions (30 min): also the oracle of the streaming
+# sessionizer replay (registry_pipeline), whose final state must equal it.
+_SESSIONIZATION_SQL = """
     WITH ts AS (
         SELECT user_id, epoch_ms(ts) AS ts_ms FROM events
     ), marked AS (
@@ -716,8 +716,10 @@ def rolling_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
            MAX(ts_ms) - MIN(ts_ms) AS duration_ms
     FROM sessions
     GROUP BY user_id, session_seq
-    """,
-)
+    """
+
+
+@register("sessionization", oracle=_SESSIONIZATION_SQL)
 def sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30 min) — lag + conditional cumsum,
     single shuffle on user_id shared by both windows."""

@@ -1221,9 +1221,11 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (all-pairs, viable oracle-side at toy scale) made symmetric, then a
 # recursive-CTE transitive closure; cluster_id = min reachable id, own
 # id when unpaired — mirroring operators/graph.py exactly. F-string-
-# shared by near_dup_clusters_exact and the leakage-safe split oracle
-# (registry_pipeline) so the closure can never desync between them.
-_CLUSTERS_CTE = f"""RECURSIVE {_SHINGLE_CTE},
+# shared by near_dup_clusters_exact, the leakage-safe split oracle and
+# the keep-best oracle (registry_pipeline) so the closure can never
+# desync between them; ``name`` names the cluster CTE.
+def _clusters_cte(name: str = "clusters") -> str:
+    return f"""RECURSIVE {_SHINGLE_CTE},
     pairs AS (
       SELECT a.doc_id AS u, b.doc_id AS v
       FROM sh a JOIN sh b ON a.doc_id < b.doc_id
@@ -1237,18 +1239,17 @@ _CLUSTERS_CTE = f"""RECURSIVE {_SHINGLE_CTE},
       UNION
       SELECT r.a, e.v FROM reach r JOIN edges e ON r.b = e.u
     ),
-    clusters AS (
+    {name} AS (
       SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a
     )"""
 
 
 @register(
     "near_dup_clusters_exact",
-    # the iterative-algorithm path (previously rows-only "by design"
-    # per the r01-r03 verdicts) is deterministic given an exact pair
-    # set, so it CAN carry a value oracle (see _CLUSTERS_CTE above)
+    # the iterative-algorithm path is deterministic given an exact
+    # pair set, so it carries a value oracle (see _clusters_cte above)
     oracle=f"""
-    WITH {_CLUSTERS_CTE}
+    WITH {_clusters_cte()}
     SELECT doc_id, cluster_id FROM clusters
     """,
 )
@@ -1523,15 +1524,40 @@ def embedding_near_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.embedding_near_dedup(uni, dim=dim).select("vec_id", "label")
 
 
-@register(
-    "semantic_dedup",
-    # Full replay of the SemDeDup pipeline: planted exact (+10000) and
-    # elementwise-perturbed (+20000, x + 0.001) duplicates unioned in
-    # SQL, the 16-smallest-id coarse quantizer, unit-normalized argmax
-    # cell assignment (ties -> larger cell, matching Spark's struct
-    # array_max), and exact fold-order-pinned cosine within a cell.
-    # Any change in clustering, assignment or scoring turns this red.
-    oracle=f"""
+# The SemDeDup replay pieces: unit-normalized centroids from a ``cent``
+# CTE, and the argmax cell assignment (ties -> larger cell, matching
+# Spark's struct array_max) of the rows of ``src`` to them.
+_UNIT_CENTROIDS = """centn AS (
+        SELECT cell, c,
+               CASE WHEN sqrt(list_reduce(list_transform(c, x -> x * x), (a, b) -> a + b)) = 0
+                    THEN 1.0
+                    ELSE sqrt(list_reduce(list_transform(c, x -> x * x), (a, b) -> a + b)) END AS n
+        FROM cent
+    ), centu AS (
+        SELECT cell, list_transform(c, x -> x / n) AS u FROM centn
+    ),"""
+
+
+def _nearest_cell(name: str, src: str, alias: str) -> str:
+    return f"""{name} AS (
+        SELECT vec_id, v, cell FROM (
+            SELECT {alias}.vec_id, {alias}.v, cu.cell,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY {alias}.vec_id
+                       ORDER BY {_DOT.format(a=f"{alias}.v", b="cu.u")} DESC, cu.cell DESC
+                   ) AS rn
+            FROM {src} {alias}, centu cu
+        ) WHERE rn = 1
+    )"""
+
+
+def _semantic_dedup_sql(cent: str) -> str:
+    """Full replay of the SemDeDup pipeline: planted exact (+10000) and
+    elementwise-perturbed (+20000, x + 0.001) duplicates unioned in
+    SQL, the centroid pick ``cent``, unit-normalized argmax cell
+    assignment, and exact fold-order-pinned cosine within a cell. Any
+    change in clustering, assignment or scoring turns it red."""
+    return f"""
     WITH base AS (
         SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
     ),
@@ -1544,28 +1570,9 @@ def embedding_near_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                list_transform(v, x -> x + CAST(0.001 AS DOUBLE)) AS v
         FROM base WHERE vec_id % 7 = 0
     ),
-    cent AS (
-        SELECT ROW_NUMBER() OVER (ORDER BY vec_id ASC) - 1 AS cell, v AS c
-        FROM uni ORDER BY vec_id ASC LIMIT 16
-    ), centn AS (
-        SELECT cell, c,
-               CASE WHEN sqrt(list_reduce(list_transform(c, x -> x * x), (a, b) -> a + b)) = 0
-                    THEN 1.0
-                    ELSE sqrt(list_reduce(list_transform(c, x -> x * x), (a, b) -> a + b)) END AS n
-        FROM cent
-    ), centu AS (
-        SELECT cell, list_transform(c, x -> x / n) AS u FROM centn
-    ),
-    assigned AS (
-        SELECT vec_id, v, cell FROM (
-            SELECT un.vec_id, un.v, cu.cell,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY un.vec_id
-                       ORDER BY {_DOT.format(a="un.v", b="cu.u")} DESC, cu.cell DESC
-                   ) AS rn
-            FROM uni un, centu cu
-        ) WHERE rn = 1
-    ),
+    {cent},
+    {_UNIT_CENTROIDS}
+    {_nearest_cell("assigned", "uni", "un")},
     losers AS (
         SELECT DISTINCT b.vec_id
         FROM assigned a JOIN assigned b ON a.cell = b.cell AND a.vec_id < b.vec_id
@@ -1574,23 +1581,15 @@ def embedding_near_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
               / (sqrt({_SS.format(a='a.v')}) * sqrt({_SS.format(a='b.v')})) >= 0.95
     )
     SELECT vec_id, label FROM uni WHERE vec_id NOT IN (SELECT vec_id FROM losers)
-    """,
-)
-def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup-style semantic dedup (operators/similarity.py
-    ``semantic_cluster_dedup``): coarse k-means cells as candidate
-    blocks instead of sign-LSH buckets — the learned-density
-    counterpart to ``embedding_near_dedup``. Every 10th vector is
-    planted back as an exact duplicate (vec_id+10000, cosine 1.0 —
-    identical vectors deterministically share a cell, so recall on
-    them is structural) and every 7th as an elementwise +0.001
-    perturbation (vec_id+20000, cosine ~0.9999 — may straddle a cell
-    boundary, in which case BOTH engines keep it, deterministically).
+    """
 
-    Benches the ARROW assignment arm like its auto-k sibling (VERDICT
-    r08 #3 precedent; 1.8 -> 1.1 s warm at sf0.1); fold stays the
-    oracle-derivation twin, pinned output-equal in
-    tests/test_asof.py::test_semantic_dedup_fixed_k_arrow_matches_fold."""
+
+def _semantic_dedup_frame(
+    spark: SparkSession, sf_dir: str, n_centroids, assign_method: str
+) -> DataFrame:
+    """``semantic_cluster_dedup`` over the planted corpus the
+    ``_semantic_dedup_sql`` replay unions: every 10th vector as an exact
+    copy (+10000), every 7th as a +0.001 perturbation (+20000)."""
     emb = _t(spark, sf_dir, "embeddings")
     base = emb.select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("embedding")
@@ -1605,9 +1604,37 @@ def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     uni = base.unionByName(exact).unionByName(pert)
     out = S.semantic_cluster_dedup(
-        uni, n_centroids=16, cosine_threshold=0.95, assign_method="arrow"
+        uni, n_centroids=n_centroids, cosine_threshold=0.95, assign_method=assign_method
     )
     return out.select("vec_id", "label")
+
+
+@register(
+    "semantic_dedup",
+    # fixed k: the 16 smallest-id vectors are the coarse quantizer
+    oracle=_semantic_dedup_sql(
+        """cent AS (
+        SELECT ROW_NUMBER() OVER (ORDER BY vec_id ASC) - 1 AS cell, v AS c
+        FROM uni ORDER BY vec_id ASC LIMIT 16
+    )"""
+    ),
+)
+def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SemDeDup-style semantic dedup (operators/similarity.py
+    ``semantic_cluster_dedup``): coarse k-means cells as candidate
+    blocks instead of sign-LSH buckets — the learned-density
+    counterpart to ``embedding_near_dedup``. Every 10th vector is
+    planted back as an exact duplicate (vec_id+10000, cosine 1.0 —
+    identical vectors deterministically share a cell, so recall on
+    them is structural) and every 7th as an elementwise +0.001
+    perturbation (vec_id+20000, cosine ~0.9999 — may straddle a cell
+    boundary, in which case BOTH engines keep it, deterministically).
+
+    Benches the ARROW assignment arm like its auto-k sibling (1.8 ->
+    1.1 s warm at sf0.1); fold stays the oracle-derivation twin, pinned
+    output-equal in
+    tests/test_asof.py::test_semantic_dedup_fixed_k_arrow_matches_fold."""
+    return _semantic_dedup_frame(spark, sf_dir, 16, "arrow")
 
 
 @register(
@@ -1629,35 +1656,10 @@ def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent AS (
         SELECT ROW_NUMBER() OVER (ORDER BY vec_id ASC) - 1 AS cell, v AS c
         FROM idx ORDER BY vec_id ASC LIMIT 16
-    ), centn AS (
-        SELECT cell, c,
-               CASE WHEN sqrt(list_reduce(list_transform(c, x -> x * x), (a, b) -> a + b)) = 0
-                    THEN 1.0
-                    ELSE sqrt(list_reduce(list_transform(c, x -> x * x), (a, b) -> a + b)) END AS n
-        FROM cent
-    ), centu AS (
-        SELECT cell, list_transform(c, x -> x / n) AS u FROM centn
     ),
-    idx_assigned AS (
-        SELECT vec_id, v, cell FROM (
-            SELECT i.vec_id, i.v, cu.cell,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY i.vec_id
-                       ORDER BY {_DOT.format(a="i.v", b="cu.u")} DESC, cu.cell DESC
-                   ) AS rn
-            FROM idx i, centu cu
-        ) WHERE rn = 1
-    ),
-    new_assigned AS (
-        SELECT vec_id, v, cell FROM (
-            SELECT nb.vec_id, nb.v, cu.cell,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY nb.vec_id
-                       ORDER BY {_DOT.format(a="nb.v", b="cu.u")} DESC, cu.cell DESC
-                   ) AS rn
-            FROM newb nb, centu cu
-        ) WHERE rn = 1
-    )
+    {_UNIT_CENTROIDS}
+    {_nearest_cell("idx_assigned", "idx", "i")},
+    {_nearest_cell("new_assigned", "newb", "nb")}
     SELECT n.vec_id AS new_id, i.vec_id AS index_id,
            round({_DOT.format(a='n.v', b='i.v')}
                  / (sqrt({_SS.format(a='n.v')}) * sqrt({_SS.format(a='i.v')})), 6)

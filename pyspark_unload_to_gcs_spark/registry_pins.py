@@ -27,6 +27,8 @@ from pyspark_unload_to_gcs_spark.session import session_memo
 from pyspark_unload_to_gcs_spark.registry_extensions import (
     _docs,
     _DOT,
+    _semantic_dedup_frame,
+    _semantic_dedup_sql,
     _SHINGLE_CTE,
     _SS,
     _shared_exact_pairs,
@@ -402,26 +404,16 @@ def token_budget_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # auto-k SemDeDup (the scale-safe configuration)
 # ---------------------------------------------------------------------------
 
-# Same full-pipeline replay as the fixed-k semantic_dedup oracle
-# (registry_extensions.py), with ONE change: k is computed from the
-# corpus size exactly as operators/similarity.py does —
-# max(16, isqrt(n-1)+1). floor(sqrt(m)) == math.isqrt(m) for every m
-# in play (doubles represent these integers exactly and sqrt is
-# correctly rounded, so the floor can't straddle a perfect square).
-_SEMANTIC_AUTO_SQL = f"""
-    WITH base AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    uni AS (
-        SELECT vec_id, label, v FROM base
-        UNION ALL
-        SELECT vec_id + 10000 AS vec_id, label, v FROM base WHERE vec_id % 10 = 0
-        UNION ALL
-        SELECT vec_id + 20000 AS vec_id, label,
-               list_transform(v, x -> x + CAST(0.001 AS DOUBLE)) AS v
-        FROM base WHERE vec_id % 7 = 0
-    ),
-    k AS (
+
+@register(
+    "semantic_dedup_auto",
+    # The fixed-k semantic_dedup replay with k computed from the corpus
+    # size exactly as operators/similarity.py does: max(16, isqrt(n-1)+1).
+    # floor(sqrt(m)) == math.isqrt(m) for every m in play (doubles
+    # represent these integers exactly and sqrt is correctly rounded, so
+    # the floor can't straddle a perfect square).
+    oracle=_semantic_dedup_sql(
+        """k AS (
         SELECT GREATEST(16, CAST(floor(sqrt(count(*) - 1)) AS BIGINT) + 1) AS k
         FROM uni
     ),
@@ -431,53 +423,23 @@ _SEMANTIC_AUTO_SQL = f"""
     ),
     cent AS (
         SELECT cell, c FROM ranked, k WHERE cell < k.k
-    ), centn AS (
-        SELECT cell, c,
-               CASE WHEN sqrt(list_reduce(list_transform(c, x -> x * x), (a, b) -> a + b)) = 0
-                    THEN 1.0
-                    ELSE sqrt(list_reduce(list_transform(c, x -> x * x), (a, b) -> a + b)) END AS n
-        FROM cent
-    ), centu AS (
-        SELECT cell, list_transform(c, x -> x / n) AS u FROM centn
+    )"""
     ),
-    assigned AS (
-        SELECT vec_id, v, cell FROM (
-            SELECT un.vec_id, un.v, cu.cell,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY un.vec_id
-                       ORDER BY {_DOT.format(a="un.v", b="cu.u")} DESC, cu.cell DESC
-                   ) AS rn
-            FROM uni un, centu cu
-        ) WHERE rn = 1
-    ),
-    losers AS (
-        SELECT DISTINCT b.vec_id
-        FROM assigned a JOIN assigned b ON a.cell = b.cell AND a.vec_id < b.vec_id
-        WHERE {_SS.format(a='a.v')} > 0 AND {_SS.format(a='b.v')} > 0
-          AND {_DOT.format(a='a.v', b='b.v')}
-              / (sqrt({_SS.format(a='a.v')}) * sqrt({_SS.format(a='b.v')})) >= 0.95
-    )
-    SELECT vec_id, label FROM uni WHERE vec_id NOT IN (SELECT vec_id FROM losers)
-"""
-
-
-@register("semantic_dedup_auto", oracle=_SEMANTIC_AUTO_SQL)
+)
 def semantic_dedup_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup with ``n_centroids="auto"`` — the configuration that
     actually ships at scale (k = max(16, isqrt(n-1)+1), so cells grow
     as sqrt(n) and within-cell pair mass as n^1.5 instead of n^2) —
     under the same full-pipeline value oracle as the fixed-k
-    ``semantic_dedup`` (VERDICT r04 #7: previously only the fixed-k
-    oracle point carried driver evidence). Same planted duplicates:
-    every 10th vector as an exact copy (+10000), every 7th as a +0.001
-    perturbation (+20000). The auto-k centroid set is deterministic
+    ``semantic_dedup``, so the auto-k path carries driver evidence too.
+    Same planted duplicates. The auto-k centroid set is deterministic
     (the k smallest-id vectors), so the oracle computes k from the
     corpus count and replays centroid pick, unit-normalized argmax
     assignment (ties -> larger cell) and fold-order-pinned cosine.
 
     Benches the ARROW assignment arm — the production matmul path,
-    3-7x faster than the fold arm (VERDICT r08 #3). The fold arm stays
-    the oracle-derivation twin, pinned bit-equal to arrow in
+    3-7x faster than the fold arm. The fold arm stays the
+    oracle-derivation twin, pinned bit-equal to arrow in
     tests/test_asof.py::test_semantic_dedup_auto_arrow_matches_fold,
     so the same DuckDB replay stays exact for both."""
     return semantic_dedup_auto_with_method(spark, sf_dir, assign_method="arrow")
@@ -487,26 +449,10 @@ def semantic_dedup_auto_with_method(
     spark: SparkSession, sf_dir: str, *, assign_method: str = "fold"
 ) -> DataFrame:
     """The ``semantic_dedup_auto`` pipeline with a selectable assignment
-    backend — the registered query pins ``fold`` (oracle-replayable);
-    ``tools/scale_audit.py`` audits ``arrow`` (the production matmul
-    path) against the same x10 curve and output set (VERDICT r05 #7)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    base = emb.select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    exact = base.filter(F.col("vec_id") % 10 == 0).select(
-        (F.col("vec_id") + 10000).alias("vec_id"), "label", "embedding"
-    )
-    pert = base.filter(F.col("vec_id") % 7 == 0).select(
-        (F.col("vec_id") + 20000).alias("vec_id"),
-        "label",
-        F.transform("embedding", lambda x: x + F.lit(0.001)).alias("embedding"),
-    )
-    uni = base.unionByName(exact).unionByName(pert)
-    out = S.semantic_cluster_dedup(
-        uni, n_centroids="auto", cosine_threshold=0.95, assign_method=assign_method
-    )
-    return out.select("vec_id", "label")
+    backend — ``fold`` is the oracle-replayable arm; ``tools/scale_audit.py``
+    audits ``arrow`` (the production matmul path) against the same x10
+    curve and output set."""
+    return _semantic_dedup_frame(spark, sf_dir, "auto", assign_method)
 
 
 # ---------------------------------------------------------------------------

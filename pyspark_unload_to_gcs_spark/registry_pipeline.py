@@ -286,28 +286,12 @@ def gopher_repetition_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 from pyspark_unload_to_gcs_spark.registry_extensions import (  # noqa: E402
-    _SHINGLE_CTE,
+    _clusters_cte,
     _shared_exact_pairs,
 )
 
 _KEEP_BEST_SQL = f"""
-WITH RECURSIVE {_SHINGLE_CTE},
-pairs AS (
-  SELECT a.doc_id AS u, b.doc_id AS v
-  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-  WHERE len(list_distinct(list_concat(a.s, b.s))) > 0
-    AND CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-        / len(list_distinct(list_concat(a.s, b.s))) >= 0.8
-),
-edges AS (SELECT u, v FROM pairs UNION SELECT v, u FROM pairs),
-reach(a, b) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT r.a, e.v FROM reach r JOIN edges e ON r.b = e.u
-),
-clustered AS (
-  SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a
-),
+WITH {_clusters_cte("clustered")},
 ranked AS (
   SELECT d.doc_id, d.n_chars, c.cluster_id,
          ROW_NUMBER() OVER (PARTITION BY c.cluster_id
@@ -344,7 +328,12 @@ def dedup_keep_best_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # batch-sequence replay against versioned parquet state, so the
 # exactly-once versioned-state machinery itself (not just its batch
 # algebra) carries a driver value oracle. Scaffold + memo rationale:
-# streaming/replay.py.
+# streaming/replay.py. A replay whose final state must equal a batch
+# row's answer carries that row's oracle.
+
+from pyspark_unload_to_gcs_spark.registry_analytics import _SESSIONIZATION_SQL  # noqa: E402
+from pyspark_unload_to_gcs_spark.registry_product import _RETENTION_SQL  # noqa: E402
+from pyspark_unload_to_gcs_spark.registry_shapes import _ROLLUP_SQL  # noqa: E402
 
 _MERGE_REPLAY_SQL = """
 SELECT o_orderkey, o_orderstatus,
@@ -445,19 +434,7 @@ def merge_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     return snap.select("o_orderkey", "o_orderstatus", "o_totalprice")
 
 
-_ROLLUP_REPLAY_SQL = """
-SELECT event_type,
-       COUNT(*) AS n_rows,
-       CAST(SUM(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS total,
-       MIN(value) AS min_value,
-       MAX(value) AS max_value,
-       CAST(SUM(CAST(value AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*) AS avg_value
-FROM events
-GROUP BY event_type
-"""
-
-
-@register("rollup_stream_replay", oracle=_ROLLUP_REPLAY_SQL)
+@register("rollup_stream_replay", oracle=_ROLLUP_SQL)
 def rollup_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming incremental-rollup twin (streaming/rollup.py
     ``fold_batch``) replayed over four deterministic micro-batches
@@ -495,33 +472,7 @@ def rollup_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Incremental sessionization replay
 # --------------------------------------------------------------------------
 
-_SESSION_REPLAY_SQL = """
-WITH ts AS (
-    SELECT user_id, epoch_ms(ts) AS ts_ms FROM events
-), marked AS (
-    SELECT user_id, ts_ms,
-           CASE WHEN lag(ts_ms) OVER w IS NULL
-                     OR ts_ms - lag(ts_ms) OVER w > 1800000
-                THEN 1 ELSE 0 END AS is_start
-    FROM ts
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts_ms)
-), sessions AS (
-    SELECT user_id, ts_ms,
-           CAST(SUM(is_start) OVER (PARTITION BY user_id ORDER BY ts_ms
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
-    FROM marked
-)
-SELECT user_id, session_seq,
-       COUNT(*) AS n_events,
-       MIN(ts_ms) AS start_ms,
-       MAX(ts_ms) AS end_ms,
-       MAX(ts_ms) - MIN(ts_ms) AS duration_ms
-FROM sessions
-GROUP BY user_id, session_seq
-"""
-
-
-@register("sessionize_stream_replay", oracle=_SESSION_REPLAY_SQL)
+@register("sessionize_stream_replay", oracle=_SESSIONIZATION_SQL)
 def sessionize_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The versioned-state incremental sessionizer
     (streaming/sessionize_fold.py ``fold_batch``) replayed over two
@@ -559,23 +510,7 @@ def sessionize_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RETENTION_REPLAY_SQL = """
-WITH per AS (
-    SELECT DISTINCT user_id, epoch_ms(ts) // 604800000 AS period
-    FROM events
-),
-coh AS (
-    SELECT user_id, MIN(period) AS cohort_period FROM per GROUP BY user_id
-)
-SELECT coh.cohort_period,
-       per.period - coh.cohort_period AS period_offset,
-       COUNT(DISTINCT per.user_id) AS n_users
-FROM per JOIN coh ON coh.user_id = per.user_id
-GROUP BY coh.cohort_period, period_offset
-"""
-
-
-@register("retention_stream_replay", oracle=_RETENTION_REPLAY_SQL)
+@register("retention_stream_replay", oracle=_RETENTION_SQL)
 def retention_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming retention fold (streaming/retention.py
     ``fold_periods_batch``) replayed over four micro-batches split by
@@ -1011,12 +946,16 @@ def ngram_diversity_approx_accuracy_q(spark: SparkSession, sf_dir: str) -> DataF
 # integer sums and turns the row red. Encoder and parser are written
 # independently (fixed-format writer vs chunk-walking reader).
 
-_WAV_SQL = """
+
+def _wav_sql(where: str = "") -> str:
+    """The closed-form PCM16 ramp's header fields and integer-exact
+    sample stats for each document ``where`` selects."""
+    return f"""
 WITH params AS (
   SELECT doc_id,
          1 + doc_id % 2 AS ch,
          200 + doc_id % 53 AS n_frames
-  FROM documents
+  FROM documents{where}
 ), samples AS (
   SELECT doc_id, ch, n_frames,
          unnest(generate_series(0, ch * n_frames - 1)) AS j
@@ -1039,7 +978,23 @@ GROUP BY doc_id
 """
 
 
-@register("wav_decode_stats", oracle=_WAV_SQL)
+def _synth_payloads(spark: SparkSession, sf_dir: str, encode) -> DataFrame:
+    """(doc_id, payload) with the bytes ``encode(doc_id)`` per document,
+    synthesized on the executors."""
+    docs = _t(spark, sf_dir, "documents").select("doc_id")
+
+    def synth(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            ids = pdf["doc_id"].to_numpy()
+            payloads = [encode(int(d)) for d in ids]
+            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+
+    return docs.mapInPandas(synth, "doc_id long, payload binary")
+
+
+@register("wav_decode_stats", oracle=_wav_sql())
 def wav_decode_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL WAV/PCM16 decode under a full value oracle: per document a
     deterministic PCM ramp (mono/stereo alternating by doc_id) is
@@ -1054,24 +1009,13 @@ def wav_decode_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_wav_pcm16,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    def encode(d):
+        ch = 1 + d % 2
+        n = 200 + d % 53
+        samples = [((d * 31 + j * 7) % 2048) - 1024 for j in range(ch * n)]
+        return encode_wav_pcm16(samples, 8000, n_channels=ch)
 
-    def synth(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids = pdf["doc_id"].to_numpy()
-            payloads = []
-            for d in ids:
-                d = int(d)
-                ch = 1 + d % 2
-                n = 200 + d % 53
-                samples = [((d * 31 + j * 7) % 2048) - 1024 for j in range(ch * n)]
-                payloads.append(encode_wav_pcm16(samples, 8000, n_channels=ch))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    synthesized = docs.mapInPandas(synth, "doc_id long, payload binary")
-    return decode_wav(synthesized)
+    return decode_wav(_synth_payloads(spark, sf_dir, encode))
 
 
 _BMP_SQL = """
@@ -1113,27 +1057,17 @@ def bmp_decode_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_bmp24,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    def encode(d):
+        w, h = 5 + d % 16, 3 + d % 7
+        return encode_bmp24(
+            [
+                [((d + 3 * x + 17 * y) % 256, (d * 5 + x) % 256, (d * 7 + y) % 256)
+                 for x in range(w)]
+                for y in range(h)
+            ]
+        )
 
-    def synth(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids = pdf["doc_id"].to_numpy()
-            payloads = []
-            for d in ids:
-                d = int(d)
-                w, h = 5 + d % 16, 3 + d % 7
-                px = [
-                    [((d + 3 * x + 17 * y) % 256, (d * 5 + x) % 256, (d * 7 + y) % 256)
-                     for x in range(w)]
-                    for y in range(h)
-                ]
-                payloads.append(encode_bmp24(px))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    synthesized = docs.mapInPandas(synth, "doc_id long, payload binary")
-    return decode_bmp(synthesized)
+    return decode_bmp(_synth_payloads(spark, sf_dir, encode))
 
 
 # --------------------------------------------------------------------------
@@ -1173,13 +1107,22 @@ def _pq_shared(spark: SparkSession, sf_dir: str):
     return session_memo(spark, ("pq_shared", sf_dir), build)
 
 
-
-def _pq_oracle() -> str:
+def _pq_oracle(codebook_filter: str = "", appended: str = "", ivf: bool = False) -> str:
+    """The PQ LUT replay: DuckDB reconstructs the sampled codebooks,
+    replays the per-subspace argmax assignment (the IVF oracle's tie
+    rule), recomputes the LUT values from the codebook literals and the
+    left-associated score sum, and takes the top-10. ``codebook_filter``
+    trains the quantizer on a subset of the corpus, ``appended`` adds
+    rows to the scored corpus, and ``ivf`` scores only the vectors whose
+    coarse cell (16 centroids, full-vector argmax) is among the query's
+    4 nearest, over the same sampled seeds. The argmax and LUT spines
+    are MATERIALIZED: DuckDB inlines a plain CTE at each reference and
+    would recompute the cross joins."""
     from pyspark_unload_to_gcs_spark.registry_extensions import _DOT, _SS
 
     m, sub = _PQ_M, _PQ_SUB
-    vslice = "b.v[cu.s * {sub} + 1 : (cu.s + 1) * {sub}]".format(sub=sub)
-    qslice = "qv.qv[cu.s * {sub} + 1 : (cu.s + 1) * {sub}]".format(sub=sub)
+    vslice = f"b.v[cu.s * {sub} + 1 : (cu.s + 1) * {sub}]"
+    qslice = f"qv.qv[cu.s * {sub} + 1 : (cu.s + 1) * {sub}]"
     d_cols = ", ".join(
         f"MAX(CASE WHEN a.s = {s} THEN l.d END) AS d{s}, "
         f"MAX(CASE WHEN a.s = {s} THEN l.ss END) AS ss{s}"
@@ -1191,33 +1134,82 @@ def _pq_oracle() -> str:
         f"CASE WHEN sqrt({sssum}) = 0 THEN 0.0 "
         f"ELSE {dsum} / (qn.qn * sqrt({sssum})) END"
     )
+    cs_norm = (
+        f"CASE WHEN sqrt({_SS.format(a='cs')}) = 0 THEN 1.0 "
+        f"ELSE sqrt({_SS.format(a='cs')}) END"
+    )
+    corpus = f"""
+    {"base0" if ivf else "base"} AS (
+      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+      FROM embeddings WHERE vec_id != 0{appended}
+    ),"""
+    coarse = f"""
+    cent AS (
+      SELECT ROW_NUMBER() OVER (ORDER BY vec_id ASC) - 1 AS cell,
+             CAST(embedding AS DOUBLE[]) AS c
+      FROM embeddings WHERE vec_id != 0 ORDER BY vec_id ASC LIMIT 16
+    ),
+    centn AS (
+      SELECT cell, c,
+             CASE WHEN sqrt({_SS.format(a="c")}) = 0
+                  THEN 1.0 ELSE sqrt({_SS.format(a="c")}) END AS n
+      FROM cent
+    ),
+    centu AS (SELECT cell, c, n, list_transform(c, x -> x / n) AS u FROM centn),
+    probes AS (
+      -- (q*c)/n term order, matching the python probe ranking exactly
+      -- (a*(x/n) rounds differently in the last ulp)
+      SELECT cell FROM centu, qv
+      ORDER BY list_reduce(list_transform(list_zip(qv.qv, centu.c),
+                                          z -> z[1] * z[2] / centu.n),
+                           (x, y) -> x + y) DESC,
+               cell ASC
+      LIMIT 4
+    ),{corpus}
+    coarse AS MATERIALIZED (
+      SELECT vec_id, cell FROM (
+        SELECT b.vec_id, cu.cell,
+               ROW_NUMBER() OVER (
+                 PARTITION BY b.vec_id
+                 ORDER BY {_DOT.format(a="b.v", b="cu.u")} DESC, cu.cell DESC
+               ) AS rn
+        FROM base0 b, centu cu
+      ) WHERE rn = 1
+    ),
+    base AS MATERIALIZED (
+      SELECT b.vec_id, b.v FROM base0 b
+      JOIN coarse co ON b.vec_id = co.vec_id
+      JOIN probes p ON co.cell = p.cell
+    ),"""
+    if ivf:
+        cbu = f"""
+    cbu AS (
+      SELECT s, j, cs, list_transform(cs, x -> x / ({cs_norm})) AS u
+      FROM cb
+    ),"""
+    else:
+        cbu = f"""
+    cbn AS (
+      SELECT s, j, cs, {cs_norm} AS n
+      FROM cb
+    ),
+    cbu AS (SELECT s, j, cs, list_transform(cs, x -> x / n) AS u FROM cbn),{corpus}"""
     return f"""
     WITH qv AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
     qn AS (
       SELECT CASE WHEN sqrt({_SS.format(a="qv")}) = 0 THEN 1.0
                   ELSE sqrt({_SS.format(a="qv")}) END AS qn
       FROM qv
-    ),
+    ),{coarse if ivf else ""}
     cbv AS (
       SELECT ROW_NUMBER() OVER (ORDER BY vec_id ASC) - 1 AS j,
              CAST(embedding AS DOUBLE[]) AS c
-      FROM embeddings WHERE vec_id != 0 ORDER BY vec_id ASC LIMIT {_PQ_K}
+      FROM embeddings WHERE vec_id != 0{codebook_filter} ORDER BY vec_id ASC LIMIT {_PQ_K}
     ),
     cb AS (
       SELECT sub.s, cbv.j, cbv.c[sub.s * {sub} + 1 : (sub.s + 1) * {sub}] AS cs
       FROM cbv, (SELECT unnest(generate_series(0, {m - 1})) AS s) sub
-    ),
-    cbn AS (
-      SELECT s, j, cs,
-             CASE WHEN sqrt({_SS.format(a="cs")}) = 0 THEN 1.0
-                  ELSE sqrt({_SS.format(a="cs")}) END AS n
-      FROM cb
-    ),
-    cbu AS (SELECT s, j, cs, list_transform(cs, x -> x / n) AS u FROM cbn),
-    base AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-      FROM embeddings WHERE vec_id != 0
-    ),
+    ),{cbu}
     assigned AS MATERIALIZED (
       SELECT vec_id, s, j FROM (
         SELECT b.vec_id, cu.s, cu.j,
@@ -1254,11 +1246,7 @@ def vector_topk_pq_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shared ``ivf_assign`` machinery, the full-precision query
     scores code rows via literal lookup tables (ADC — cosine against
     the reconstructed vector), m ``element_at`` lookups + a fixed-order
-    sum per row. FULL value oracle: DuckDB reconstructs the sampled
-    codebooks, replays the per-subspace argmax assignment (same tie
-    rule as the IVF oracle), recomputes the LUT values from the
-    codebook literals and the left-associated score sum, and takes the
-    same top-10."""
+    sum per row. FULL value oracle (``_pq_oracle``)."""
     from pyspark_unload_to_gcs_spark.operators import similarity as S
 
     enc, _centroids, codebooks, q = _pq_shared(spark, sf_dir)
@@ -1266,119 +1254,7 @@ def vector_topk_pq_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("vec_id", F.round("pq_score", 6).alias("pq_score_r"))
 
 
-def _ivfpq_oracle() -> str:
-    """Composed replay: the IVF oracle's coarse probe restriction
-    (16 centroids, 4 probes, full-vector argmax) feeding the PQ
-    oracle's per-subspace assignment + LUT scoring, both over the same
-    sampled seeds. Spines MATERIALIZED (lore #27)."""
-    from pyspark_unload_to_gcs_spark.registry_extensions import _DOT, _SS
-
-    m, sub = _PQ_M, _PQ_SUB
-    vslice = f"b.v[cu.s * {sub} + 1 : (cu.s + 1) * {sub}]"
-    qslice = f"qv.qv[cu.s * {sub} + 1 : (cu.s + 1) * {sub}]"
-    d_cols = ", ".join(
-        f"MAX(CASE WHEN a.s = {s} THEN l.d END) AS d{s}, "
-        f"MAX(CASE WHEN a.s = {s} THEN l.ss END) AS ss{s}"
-        for s in range(m)
-    )
-    dsum = "(((d0 + d1) + d2) + d3)"
-    sssum = "(((ss0 + ss1) + ss2) + ss3)"
-    score = (
-        f"CASE WHEN sqrt({sssum}) = 0 THEN 0.0 "
-        f"ELSE {dsum} / (qn.qn * sqrt({sssum})) END"
-    )
-    return f"""
-    WITH qv AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
-    qn AS (
-      SELECT CASE WHEN sqrt({_SS.format(a="qv")}) = 0 THEN 1.0
-                  ELSE sqrt({_SS.format(a="qv")}) END AS qn
-      FROM qv
-    ),
-    cent AS (
-      SELECT ROW_NUMBER() OVER (ORDER BY vec_id ASC) - 1 AS cell,
-             CAST(embedding AS DOUBLE[]) AS c
-      FROM embeddings WHERE vec_id != 0 ORDER BY vec_id ASC LIMIT 16
-    ),
-    centn AS (
-      SELECT cell, c,
-             CASE WHEN sqrt({_SS.format(a="c")}) = 0
-                  THEN 1.0 ELSE sqrt({_SS.format(a="c")}) END AS n
-      FROM cent
-    ),
-    centu AS (SELECT cell, c, n, list_transform(c, x -> x / n) AS u FROM centn),
-    probes AS (
-      -- (q*c)/n term order, matching the python probe ranking exactly
-      -- (a*(x/n) rounds differently in the last ulp)
-      SELECT cell FROM centu, qv
-      ORDER BY list_reduce(list_transform(list_zip(qv.qv, centu.c),
-                                          z -> z[1] * z[2] / centu.n),
-                           (x, y) -> x + y) DESC,
-               cell ASC
-      LIMIT 4
-    ),
-    base0 AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-      FROM embeddings WHERE vec_id != 0
-    ),
-    coarse AS MATERIALIZED (
-      SELECT vec_id, cell FROM (
-        SELECT b.vec_id, cu.cell,
-               ROW_NUMBER() OVER (
-                 PARTITION BY b.vec_id
-                 ORDER BY {_DOT.format(a="b.v", b="cu.u")} DESC, cu.cell DESC
-               ) AS rn
-        FROM base0 b, centu cu
-      ) WHERE rn = 1
-    ),
-    base AS MATERIALIZED (
-      SELECT b.vec_id, b.v FROM base0 b
-      JOIN coarse co ON b.vec_id = co.vec_id
-      JOIN probes p ON co.cell = p.cell
-    ),
-    cbv AS (
-      SELECT ROW_NUMBER() OVER (ORDER BY vec_id ASC) - 1 AS j,
-             CAST(embedding AS DOUBLE[]) AS c
-      FROM embeddings WHERE vec_id != 0 ORDER BY vec_id ASC LIMIT {_PQ_K}
-    ),
-    cb AS (
-      SELECT sub.s, cbv.j, cbv.c[sub.s * {sub} + 1 : (sub.s + 1) * {sub}] AS cs
-      FROM cbv, (SELECT unnest(generate_series(0, {m - 1})) AS s) sub
-    ),
-    cbu AS (
-      SELECT s, j, cs,
-             list_transform(cs, x -> x / (CASE WHEN sqrt({_SS.format(a="cs")}) = 0
-                                               THEN 1.0 ELSE sqrt({_SS.format(a="cs")}) END)) AS u
-      FROM cb
-    ),
-    assigned AS MATERIALIZED (
-      SELECT vec_id, s, j FROM (
-        SELECT b.vec_id, cu.s, cu.j,
-               ROW_NUMBER() OVER (
-                 PARTITION BY b.vec_id, cu.s
-                 ORDER BY {_DOT.format(a=vslice, b="cu.u")} DESC, cu.j DESC
-               ) AS rn
-        FROM base b, cbu cu
-      ) WHERE rn = 1
-    ),
-    luts AS MATERIALIZED (
-      SELECT cu.s, cu.j,
-             {_DOT.format(a=qslice, b="cu.cs")} AS d,
-             {_SS.format(a="cu.cs")} AS ss
-      FROM cbu cu, qv
-    ),
-    per_vec AS (
-      SELECT a.vec_id, {d_cols}
-      FROM assigned a JOIN luts l ON a.s = l.s AND a.j = l.j
-      GROUP BY a.vec_id
-    )
-    SELECT vec_id, round({score}, 6) AS pq_score_r
-    FROM per_vec, qn
-    ORDER BY {score} DESC, vec_id ASC
-    LIMIT 10
-    """
-
-
-@register("vector_topk_ivfpq", oracle=_ivfpq_oracle())
+@register("vector_topk_ivfpq", oracle=_pq_oracle(ivf=True))
 def vector_topk_ivfpq_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed 100 TB vector-search layout: IVF coarse cells
     prune the corpus to 4 probed cells of 16 (partition pruning at
@@ -1965,35 +1841,8 @@ def heavy_hitters_daily_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # binaryFile media ingestion + ORC ingestion roundtrips
 # --------------------------------------------------------------------------
 
-_BINFILE_WAV_SQL = """
-WITH params AS (
-  SELECT doc_id,
-         1 + doc_id % 2 AS ch,
-         200 + doc_id % 53 AS n_frames
-  FROM documents WHERE doc_id % 10 = 0
-), samples AS (
-  SELECT doc_id, ch, n_frames,
-         unnest(generate_series(0, ch * n_frames - 1)) AS j
-  FROM params
-), vals AS (
-  SELECT doc_id, ch, n_frames,
-         (doc_id * 31 + j * 7) % 2048 - 1024 AS s
-  FROM samples
-)
-SELECT doc_id,
-       CAST(8000 AS INTEGER) AS sample_rate,
-       CAST(MIN(ch) AS INTEGER) AS n_channels,
-       CAST(16 AS INTEGER) AS bit_depth,
-       CAST(MIN(n_frames) AS BIGINT) AS n_frames,
-       CAST(MIN(n_frames) * 1000 // 8000 AS BIGINT) AS duration_ms,
-       CAST(MAX(ABS(s)) AS BIGINT) AS peak_abs,
-       CAST(SUM(ABS(s)) AS BIGINT) AS sum_abs
-FROM vals
-GROUP BY doc_id
-"""
 
-
-@register("binaryfile_wav_ingest", oracle=_BINFILE_WAV_SQL)
+@register("binaryfile_wav_ingest", oracle=_wav_sql(" WHERE doc_id % 10 = 0"))
 def binaryfile_wav_ingest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Object-store media ingestion end to end: one WAV FILE per
     sampled document (doc_id % 10 == 0) is written to a directory by a
@@ -2527,90 +2376,20 @@ def asof_forward_tolerance_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _pq_incr_oracle() -> str:
-    """The vector_topk_pq LUT replay, parameterized two ways: codebooks
-    derive from the BASE subset only (vec_id % 5 != 1 — appends never
-    retrain the quantizer), and the scored corpus is base UNION the
-    appended batch (the % 5 == 1 rows plus the planted 30001 probe =
-    query + 0.0005, which must surface at the top — a silently dropped
-    or double-applied append flips the result set)."""
-    from pyspark_unload_to_gcs_spark.registry_extensions import _DOT, _SS
-
-    m, sub = _PQ_M, _PQ_SUB
-    vslice = "b.v[cu.s * {sub} + 1 : (cu.s + 1) * {sub}]".format(sub=sub)
-    qslice = "qv.qv[cu.s * {sub} + 1 : (cu.s + 1) * {sub}]".format(sub=sub)
-    d_cols = ", ".join(
-        f"MAX(CASE WHEN a.s = {s} THEN l.d END) AS d{s}, "
-        f"MAX(CASE WHEN a.s = {s} THEN l.ss END) AS ss{s}"
-        for s in range(m)
-    )
-    dsum = "(((d0 + d1) + d2) + d3)"
-    sssum = "(((ss0 + ss1) + ss2) + ss3)"
-    score = (
-        f"CASE WHEN sqrt({sssum}) = 0 THEN 0.0 "
-        f"ELSE {dsum} / (qn.qn * sqrt({sssum})) END"
-    )
-    return f"""
-    WITH qv AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
-    qn AS (
-      SELECT CASE WHEN sqrt({_SS.format(a="qv")}) = 0 THEN 1.0
-                  ELSE sqrt({_SS.format(a="qv")}) END AS qn
-      FROM qv
-    ),
-    cbv AS (
-      SELECT ROW_NUMBER() OVER (ORDER BY vec_id ASC) - 1 AS j,
-             CAST(embedding AS DOUBLE[]) AS c
-      FROM embeddings WHERE vec_id != 0 AND vec_id % 5 != 1
-      ORDER BY vec_id ASC LIMIT {_PQ_K}
-    ),
-    cb AS (
-      SELECT sub.s, cbv.j, cbv.c[sub.s * {sub} + 1 : (sub.s + 1) * {sub}] AS cs
-      FROM cbv, (SELECT unnest(generate_series(0, {m - 1})) AS s) sub
-    ),
-    cbn AS (
-      SELECT s, j, cs,
-             CASE WHEN sqrt({_SS.format(a="cs")}) = 0 THEN 1.0
-                  ELSE sqrt({_SS.format(a="cs")}) END AS n
-      FROM cb
-    ),
-    cbu AS (SELECT s, j, cs, list_transform(cs, x -> x / n) AS u FROM cbn),
-    base AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-      FROM embeddings WHERE vec_id != 0
+@register(
+    "pq_index_incremental_topk",
+    # codebooks from the base subset only (appends never retrain the
+    # quantizer); the scored corpus is base UNION the appended batch,
+    # whose planted probe 30001 = query + 0.0005 must surface at the top
+    oracle=_pq_oracle(
+        codebook_filter=" AND vec_id % 5 != 1",
+        appended="""
       UNION ALL
       SELECT 30001 AS vec_id,
              list_transform(qv, x -> x + CAST(0.0005 AS DOUBLE)) AS v
-      FROM qv
+      FROM qv""",
     ),
-    assigned AS MATERIALIZED (
-      SELECT vec_id, s, j FROM (
-        SELECT b.vec_id, cu.s, cu.j,
-               ROW_NUMBER() OVER (
-                 PARTITION BY b.vec_id, cu.s
-                 ORDER BY {_DOT.format(a=vslice, b="cu.u")} DESC, cu.j DESC
-               ) AS rn
-        FROM base b, cbu cu
-      ) WHERE rn = 1
-    ),
-    luts AS MATERIALIZED (
-      SELECT cu.s, cu.j,
-             {_DOT.format(a=qslice, b="cu.cs")} AS d,
-             {_SS.format(a="cu.cs")} AS ss
-      FROM cbu cu, qv
-    ),
-    per_vec AS (
-      SELECT a.vec_id, {d_cols}
-      FROM assigned a JOIN luts l ON a.s = l.s AND a.j = l.j
-      GROUP BY a.vec_id
-    )
-    SELECT vec_id, round({score}, 6) AS pq_score_r
-    FROM per_vec, qn
-    ORDER BY {score} DESC, vec_id ASC
-    LIMIT 10
-    """
-
-
-@register("pq_index_incremental_topk", oracle=_pq_incr_oracle())
+)
 def pq_index_incremental_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental on-disk IVF-PQ index maintenance
     (operators/similarity.py ``pq_index_write``/``pq_index_append``):
@@ -2711,7 +2490,31 @@ def _pq_incr_base(spark: SparkSession, sf_dir: str):
 # Perceptual-hash image dedup over the real BMP raster path
 # --------------------------------------------------------------------------
 
-_AHASH_SQL = """
+
+def _hamming_pairs_sql(bit_index: str) -> str:
+    """The shared tail of the perceptual-hash replays: 64 ``bits`` rows
+    per img_id (``bit_index`` 0..63) packed into (hi, lo) BIGINTs, then
+    the literal all-pairs XOR popcount <= 7."""
+    i = bit_index
+    return f"""hashes AS (
+  SELECT img_id,
+         CAST(SUM(CASE WHEN bit = 1 AND {i} >= 32
+                       THEN (CAST(1 AS BIGINT) << ({i} - 32)) ELSE 0 END)
+              AS BIGINT) AS hi,
+         CAST(SUM(CASE WHEN bit = 1 AND {i} < 32
+                       THEN (CAST(1 AS BIGINT) << {i}) ELSE 0 END)
+              AS BIGINT) AS lo
+  FROM bits GROUP BY img_id
+)
+SELECT a.img_id AS id_a, b.img_id AS id_b,
+       CAST(bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo))
+            AS BIGINT) AS hamming
+FROM hashes a JOIN hashes b ON a.img_id < b.img_id
+WHERE bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)) <= 7
+"""
+
+
+_AHASH_SQL = f"""
 WITH ids AS (
   SELECT doc_id FROM documents WHERE doc_id % 10 = 0
 ),
@@ -2740,22 +2543,7 @@ bits AS (
          CASE WHEN 64 * l.L > t.t THEN 1 ELSE 0 END AS bit
   FROM lum l JOIN tot t USING (img_id)
 ),
-hashes AS (
-  SELECT img_id,
-         CAST(SUM(CASE WHEN bit = 1 AND j >= 32
-                       THEN (CAST(1 AS BIGINT) << (j - 32)) ELSE 0 END)
-              AS BIGINT) AS hi,
-         CAST(SUM(CASE WHEN bit = 1 AND j < 32
-                       THEN (CAST(1 AS BIGINT) << j) ELSE 0 END)
-              AS BIGINT) AS lo
-  FROM bits GROUP BY img_id
-)
-SELECT a.img_id AS id_a, b.img_id AS id_b,
-       CAST(bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo))
-            AS BIGINT) AS hamming
-FROM hashes a JOIN hashes b ON a.img_id < b.img_id
-WHERE bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)) <= 7
-"""
+{_hamming_pairs_sql("j")}"""
 
 
 @register("image_ahash_dup_pairs", oracle=_AHASH_SQL)
@@ -2826,31 +2614,40 @@ def image_ahash_dup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+def _orders_commits(spark: SparkSession, sf_dir: str) -> list[tuple[DataFrame, int]]:
+    """The three (snapshot, commit ms) commits of both versioned-table
+    fixtures: v0 @ ms 1000 = even keys at original price; v1 @ ms 2000
+    = ALL keys with price+1.0 where key % 10 == 0 (updates + inserts);
+    v2 @ ms 3000 = v1 minus key % 7 == 0 (deletes). Deterministic
+    clock, so every probe replays in closed form from the orders
+    table."""
+    base = _t(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_custkey",
+        F.col("o_totalprice").cast("double").alias("price"),
+    )
+    v1 = base.withColumn(
+        "price",
+        F.col("price")
+        + F.when(F.col("o_orderkey") % 10 == 0, F.lit(1.0)).otherwise(F.lit(0.0)),
+    )
+    return [
+        (base.filter(F.col("o_orderkey") % 2 == 0), 1000),
+        (v1, 2000),
+        (v1.filter(F.col("o_orderkey") % 7 != 0), 3000),
+    ]
+
+
 def _versioned_orders(spark: SparkSession, sf_dir: str) -> str:
-    """Three-commit versioned table from orders (memoized per session):
-    v0 @ ms 1000 = even keys at original price; v1 @ ms 2000 = ALL keys
-    with price+1.0 where key % 10 == 0 (updates + inserts); v2 @ ms
-    3000 = v1 minus key % 7 == 0 (deletes). Deterministic clock, so
-    both probes replay in closed form from the orders table."""
+    """The ``_orders_commits`` versioned table (memoized per session)."""
     from pyspark_unload_to_gcs_spark.sources.versioned import commit_version
 
     def build():
         import tempfile
 
         path = tempfile.mkdtemp(prefix="versioned_orders_") + "/t"
-        base = _t(spark, sf_dir, "orders").select(
-            "o_orderkey",
-            "o_custkey",
-            F.col("o_totalprice").cast("double").alias("price"),
-        )
-        v1 = base.withColumn(
-            "price",
-            F.col("price")
-            + F.when(F.col("o_orderkey") % 10 == 0, F.lit(1.0)).otherwise(F.lit(0.0)),
-        )
-        commit_version(base.filter(F.col("o_orderkey") % 2 == 0), path, 1000)
-        commit_version(v1, path, 2000)
-        commit_version(v1.filter(F.col("o_orderkey") % 7 != 0), path, 3000)
+        for snapshot, ms in _orders_commits(spark, sf_dir):
+            commit_version(snapshot, path, ms)
         return path
 
     return session_memo(spark, ("versioned", sf_dir), build)
@@ -3769,6 +3566,18 @@ FROM gold g LEFT JOIN topfused t
 """
 
 
+def _mined_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The gold labels of the mined-supervision rows: the top-_REVAL_M
+    (src_id, tgt_id) pairs by margin from the auto-k quantizer + Arrow
+    assignment margin miner."""
+    return (
+        margin_align_auto_with_method(spark, sf_dir, assign_method="arrow")
+        .orderBy(F.col("margin_r").desc(), F.col("src_id").asc())
+        .limit(_REVAL_M)
+        .select("src_id", "tgt_id")
+    )
+
+
 @register("mined_pairs_retrieval_eval", oracle=_retrieval_eval_oracle())
 def mined_pairs_retrieval_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mined-pairs -> retrieval-eval composition (the
@@ -3804,12 +3613,7 @@ def mined_pairs_retrieval_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     docs = _t(spark, sf_dir, "documents")
-    gold = (
-        margin_align_auto_with_method(spark, sf_dir, assign_method="arrow")
-        .orderBy(F.col("margin_r").desc(), F.col("src_id").asc())
-        .limit(_REVAL_M)
-        .select("src_id", "tgt_id")
-    )
+    gold = _mined_gold(spark, sf_dir)
 
     # vector arm: M broadcast query vectors against the odd-id corpus
     qvec = gold.join(emb, gold["src_id"] == emb["vec_id"]).select(
@@ -3910,10 +3714,8 @@ def mined_pairs_retrieval_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _leakage_split_oracle() -> str:
-    from pyspark_unload_to_gcs_spark.registry_extensions import _CLUSTERS_CTE
-
     return f"""
-    WITH {_CLUSTERS_CTE}
+    WITH {_clusters_cte()}
     SELECT doc_id, cluster_id,
            CASE WHEN substring(md5(CAST(cluster_id AS VARCHAR)), 1, 4) < 'cccc'
                 THEN 'train' ELSE 'test' END AS split
@@ -3934,7 +3736,7 @@ def leakage_safe_split_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Zero leakage holds BY CONSTRUCTION (split is a pure function of
     the cluster id); the full value oracle replays shingling, the
     exact pair set, the recursive closure (f-string-shared
-    _CLUSTERS_CTE), and the md5 threshold per document. Scale: one
+    _clusters_cte), and the md5 threshold per document. Scale: one
     banded-pair closure (the near_dup_clusters plan) plus a narrow
     md5 map — no new shuffle beyond the cluster build."""
     from pyspark_unload_to_gcs_spark.operators.graph import dedup_clusters
@@ -4602,12 +4404,7 @@ def hard_negative_mining_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_unload_to_gcs_spark.operators.similarity import _pair_dot, norm
 
     emb = _t(spark, sf_dir, "embeddings")
-    gold = (
-        margin_align_auto_with_method(spark, sf_dir, assign_method="arrow")
-        .orderBy(F.col("margin_r").desc(), F.col("src_id").asc())
-        .limit(_REVAL_M)
-        .select("src_id", "tgt_id")
-    )
+    gold = _mined_gold(spark, sf_dir)
     qvec = gold.join(emb, gold["src_id"] == emb["vec_id"]).select(
         "src_id",
         "tgt_id",
@@ -4802,11 +4599,16 @@ def value_drift_psi_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _containment_oracle() -> str:
-    """Brute-force DuckDB replay of containment_dedup: the prefix
+def _containment_oracle(index_split: bool = False, batch_id: bool = False) -> str:
+    """Brute-force DuckDB replay of the containment rows: the prefix
     blocking is result-invariant (pigeonhole no-false-negatives), so
-    the oracle is the plain quadratic containment definition over the
-    same corpus — documents plus the planted 12-word excerpts."""
+    the oracle is the plain quadratic containment definition over
+    documents plus the planted 12-word excerpts. ``index_split`` matches
+    the new-batch side (every 5th doc plus the excerpts of INDEX docs)
+    against the index side instead of the corpus against itself;
+    ``batch_id`` adds each match's micro-batch (the id split doc_id %
+    2): matches are per-doc independent and the index is frozen, so the
+    per-batch union equals the batch operator."""
     words = (
         "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),"
         " x -> x != '')"
@@ -4816,27 +4618,41 @@ def _containment_oracle() -> str:
         " ELSE list_transform(generate_series(1, len(t) - 2),"
         " i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2]) END"
     )
+    if index_split:
+        grams = f"""idx AS (
+  SELECT doc_id, text FROM documents WHERE doc_id % 5 != 4
+), gn AS (
+  SELECT doc_id, list_distinct({tri}) AS gs
+  FROM (SELECT doc_id, {words} AS t FROM newb)
+), gi AS (
+  SELECT doc_id, list_distinct({tri}) AS gs
+  FROM (SELECT doc_id, {words} AS t FROM idx)
+)"""
+        pairs = "gn a, gi b\nWHERE"
+    else:
+        grams = f"""toks AS (
+  SELECT doc_id, {words} AS t FROM corpus
+), g AS (
+  SELECT doc_id, list_distinct({tri}) AS gs FROM toks
+)"""
+        pairs = "g a, g b\nWHERE a.doc_id != b.doc_id AND"
     return f"""
 WITH toks0 AS (
   SELECT doc_id, {words} AS t FROM documents
-), corpus AS (
-  SELECT doc_id, text FROM documents
+), {"newb" if index_split else "corpus"} AS (
+  SELECT doc_id, text FROM documents{" WHERE doc_id % 5 = 4" if index_split else ""}
   UNION ALL
   SELECT doc_id + (SELECT max(doc_id) + 1 FROM documents) AS doc_id,
          array_to_string(t[1:12], ' ') AS text
   FROM toks0 WHERE doc_id % 25 = 3 AND len(t) >= 15
-), toks AS (
-  SELECT doc_id, {words} AS t FROM corpus
-), g AS (
-  SELECT doc_id, list_distinct({tri}) AS gs FROM toks
-)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+), {grams}
+SELECT {"CAST(a.doc_id % 2 AS BIGINT) AS batch_id," if batch_id else ""}
+       a.doc_id AS id_a, b.doc_id AS id_b,
        CAST(len(a.gs) AS BIGINT) AS n_grams_a,
        CAST(len(list_intersect(a.gs, b.gs)) AS BIGINT) AS n_shared,
        round(CAST(len(list_intersect(a.gs, b.gs)) AS DOUBLE) / len(a.gs),
              9) AS containment_r
-FROM g a, g b
-WHERE a.doc_id != b.doc_id AND len(a.gs) > 0
+FROM {pairs} len(a.gs) > 0
   AND 100 * len(list_intersect(a.gs, b.gs)) >= 80 * len(a.gs)
 """
 
@@ -4877,75 +4693,18 @@ def _containment_frame(
     second at 32-way); real 100 TB inputs arrive multi-file and skip
     this."""
     from pyspark_unload_to_gcs_spark.operators.dedup import containment_pairs
-    from pyspark_unload_to_gcs_spark.operators.text import words_col
 
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    )
-    stride = (docs.agg(F.max("doc_id")).first()[0] or 0) + 1
-    w = words_col(F.col("text"))
-    excerpts = (
-        docs.filter((F.col("doc_id") % 25 == 3) & (F.size(w) >= 15))
-        .select(
-            (F.col("doc_id") + stride).alias("doc_id"),
-            F.array_join(F.slice(w, 1, 12), " ").alias("text"),
-        )
-    )
+    docs = _contain_docs(spark, sf_dir)
     return containment_pairs(
-        docs.unionByName(excerpts), "doc_id", "text",
+        docs.unionByName(_planted_excerpts(docs)), "doc_id", "text",
         shingle_n=3, threshold_pct=80,
         materialize_grams=materialize_grams,
         prefix_order="df",
     )
 
 
-def _incr_containment_oracle() -> str:
-    """Brute-force DuckDB replay of incremental_containment_match: the
-    new-batch side (every 5th doc plus the planted excerpts of INDEX
-    docs) against the index side, plain quadratic containment — the
-    prefix blocking is result-invariant."""
-    words = (
-        "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),"
-        " x -> x != '')"
-    )
-    tri = (
-        "CASE WHEN len(t) < 3 THEN CAST([] AS VARCHAR[])"
-        " ELSE list_transform(generate_series(1, len(t) - 2),"
-        " i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2]) END"
-    )
-    return f"""
-WITH toks0 AS (
-  SELECT doc_id, {words} AS t FROM documents
-), newb AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 5 = 4
-  UNION ALL
-  SELECT doc_id + (SELECT max(doc_id) + 1 FROM documents) AS doc_id,
-         array_to_string(t[1:12], ' ') AS text
-  FROM toks0 WHERE doc_id % 25 = 3 AND len(t) >= 15
-), idx AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 5 != 4
-), gn AS (
-  SELECT doc_id, list_distinct({tri}) AS gs
-  FROM (SELECT doc_id, {words} AS t FROM newb)
-), gi AS (
-  SELECT doc_id, list_distinct({tri}) AS gs
-  FROM (SELECT doc_id, {words} AS t FROM idx)
-)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       CAST(len(a.gs) AS BIGINT) AS n_grams_a,
-       CAST(len(list_intersect(a.gs, b.gs)) AS BIGINT) AS n_shared,
-       round(CAST(len(list_intersect(a.gs, b.gs)) AS DOUBLE) / len(a.gs),
-             9) AS containment_r
-FROM gn a, gi b
-WHERE len(a.gs) > 0
-  AND 100 * len(list_intersect(a.gs, b.gs)) >= 80 * len(a.gs)
-"""
-
-
 @register(
-    "incremental_containment_match", oracle=_incr_containment_oracle()
+    "incremental_containment_match", oracle=_containment_oracle(index_split=True)
 )
 def incremental_containment_match_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-time excerpt decontamination (operators/dedup.py
@@ -4971,23 +4730,9 @@ def _incr_containment_frame(
     input repartition compensates for the single-file fixture layout
     (see _containment_frame)."""
     from pyspark_unload_to_gcs_spark.operators.dedup import containment_join
-    from pyspark_unload_to_gcs_spark.operators.text import words_col
 
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    )
-    stride = (docs.agg(F.max("doc_id")).first()[0] or 0) + 1
-    w = words_col(F.col("text"))
-    excerpts = (
-        docs.filter((F.col("doc_id") % 25 == 3) & (F.size(w) >= 15))
-        .select(
-            (F.col("doc_id") + stride).alias("doc_id"),
-            F.array_join(F.slice(w, 1, 12), " ").alias("text"),
-        )
-    )
-    new_batch = docs.filter(F.col("doc_id") % 5 == 4).unionByName(excerpts)
+    docs = _contain_docs(spark, sf_dir)
+    new_batch = docs.filter(F.col("doc_id") % 5 == 4).unionByName(_planted_excerpts(docs))
     index = docs.filter(F.col("doc_id") % 5 != 4)
     return containment_join(
         new_batch, index, "doc_id", "doc_id",
@@ -5177,52 +4922,9 @@ def indexed_dedup_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame
 # -- streaming ingest decontamination against a frozen gram index -----------
 
 
-def _containment_replay_oracle() -> str:
-    """The incremental_containment_match oracle + batch_id: matches
-    are per-doc independent and the index is frozen, so the per-batch
-    union equals the batch operator and each row's batch is the
-    deterministic id split (doc_id % 2)."""
-    words = (
-        "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),"
-        " x -> x != '')"
-    )
-    tri = (
-        "CASE WHEN len(t) < 3 THEN CAST([] AS VARCHAR[])"
-        " ELSE list_transform(generate_series(1, len(t) - 2),"
-        " i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2]) END"
-    )
-    return f"""
-WITH toks0 AS (
-  SELECT doc_id, {words} AS t FROM documents
-), newb AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 5 = 4
-  UNION ALL
-  SELECT doc_id + (SELECT max(doc_id) + 1 FROM documents) AS doc_id,
-         array_to_string(t[1:12], ' ') AS text
-  FROM toks0 WHERE doc_id % 25 = 3 AND len(t) >= 15
-), idx AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 5 != 4
-), gn AS (
-  SELECT doc_id, list_distinct({tri}) AS gs
-  FROM (SELECT doc_id, {words} AS t FROM newb)
-), gi AS (
-  SELECT doc_id, list_distinct({tri}) AS gs
-  FROM (SELECT doc_id, {words} AS t FROM idx)
-)
-SELECT CAST(a.doc_id % 2 AS BIGINT) AS batch_id,
-       a.doc_id AS id_a, b.doc_id AS id_b,
-       CAST(len(a.gs) AS BIGINT) AS n_grams_a,
-       CAST(len(list_intersect(a.gs, b.gs)) AS BIGINT) AS n_shared,
-       round(CAST(len(list_intersect(a.gs, b.gs)) AS DOUBLE) / len(a.gs),
-             9) AS containment_r
-FROM gn a, gi b
-WHERE len(a.gs) > 0
-  AND 100 * len(list_intersect(a.gs, b.gs)) >= 80 * len(a.gs)
-"""
-
-
 @register(
-    "containment_stream_replay", oracle=_containment_replay_oracle()
+    "containment_stream_replay",
+    oracle=_containment_oracle(index_split=True, batch_id=True),
 )
 def containment_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``incremental_containment_match`` as a STREAM
@@ -5247,7 +4949,6 @@ def containment_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``_containment_frozen_index`` below, memoized per session); the
     row times the steady-state per-batch folds + readback that a
     live decontamination stream actually repeats."""
-    from pyspark_unload_to_gcs_spark.operators.text import words_col
     from pyspark_unload_to_gcs_spark.streaming.containment import (
         containment_match_batch,
         read_matches,
@@ -5255,12 +4956,6 @@ def containment_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_unload_to_gcs_spark.streaming.replay import replay_batches
 
     docs = _contain_docs(spark, sf_dir)
-    stride = (docs.agg(F.max("doc_id")).first()[0] or 0) + 1
-    w = words_col(F.col("text"))
-    excerpts = docs.filter((F.col("doc_id") % 25 == 3) & (F.size(w) >= 15)).select(
-        (F.col("doc_id") + stride).alias("doc_id"),
-        F.array_join(F.slice(w, 1, 12), " ").alias("text"),
-    )
     # Checkpoint the arriving-doc frame BEFORE splitting it into
     # micro-batches (guide §7.3/§3.3): the excerpt branch is a
     # deep HOF tree (array_join(slice(filter(split(...))))) and each
@@ -5274,7 +4969,7 @@ def containment_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # first action; same rows fold either way.
     new_batch = (
         docs.filter(F.col("doc_id") % 5 == 4)
-        .unionByName(excerpts)
+        .unionByName(_planted_excerpts(docs))
         .localCheckpoint(eager=False)
     )
     b0 = new_batch.filter(F.col("doc_id") % 2 == 0)
@@ -5302,6 +4997,20 @@ def _contain_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents")
         .select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    )
+
+
+def _planted_excerpts(docs: DataFrame) -> DataFrame:
+    """The 12-word leading excerpt of every 25th document with at least
+    15 words, re-keyed past the largest id (a data-driven stride,
+    collision-free at any audited scale)."""
+    from pyspark_unload_to_gcs_spark.operators.text import words_col
+
+    stride = (docs.agg(F.max("doc_id")).first()[0] or 0) + 1
+    w = words_col(F.col("text"))
+    return docs.filter((F.col("doc_id") % 25 == 3) & (F.size(w) >= 15)).select(
+        (F.col("doc_id") + stride).alias("doc_id"),
+        F.array_join(F.slice(w, 1, 12), " ").alias("text"),
     )
 
 
@@ -5585,22 +5294,7 @@ univ AS (
   SELECT w.img_id, w.k,
          CASE WHEN w.e * 64 > t.t THEN 1 ELSE 0 END AS bit
   FROM wsums w JOIN tots t USING (img_id)
-), hashes AS (
-  SELECT img_id,
-         CAST(SUM(CASE WHEN bit = 1 AND k >= 32
-                       THEN (CAST(1 AS BIGINT) << (k - 32)) ELSE 0 END)
-              AS BIGINT) AS hi,
-         CAST(SUM(CASE WHEN bit = 1 AND k < 32
-                       THEN (CAST(1 AS BIGINT) << k) ELSE 0 END)
-              AS BIGINT) AS lo
-  FROM bits GROUP BY img_id
-)
-SELECT a.img_id AS id_a, b.img_id AS id_b,
-       CAST(bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo))
-            AS BIGINT) AS hamming
-FROM hashes a JOIN hashes b ON a.img_id < b.img_id
-WHERE bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)) <= 7
-"""
+), {_hamming_pairs_sql("k")}"""
 
 
 @register("audio_dup_pairs", oracle=_audio_dup_oracle())
@@ -5823,23 +5517,21 @@ def url_canonical_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- corpus boilerplate line dedup -------------------------------------------
 
 
-def _line_dedup_oracle() -> str:
-    """DuckDB replay of the FULL corpus-scope line dedup
-    (operators/paragraphs.py ``line_dedup``): the same closed-form
-    5-line synthetic page per document (unique header, a banner shared
-    by doc_id%7, a blank structural line, a ubiquitous subscribe line,
-    a pair line whose multiplicity is scale-dependent), the same
-    normalized key (trim + whitespace-collapse + lowercase), the
-    corpus occurrence threshold, and the order-preserving reassembly
-    pinned down to the md5 of the rebuilt text."""
-    return """
+def _line_dedup_oracle(tail: str, keep: str) -> str:
+    """DuckDB replay of operators/paragraphs.py ``line_dedup`` over the
+    closed-form synthetic page per document that ``_line_dedup_frame``
+    builds (a unique header, a banner shared by doc_id%7, a blank
+    structural line, then the two ``tail`` lines): the same normalized
+    key (trim + whitespace-collapse + lowercase), the ``keep`` rule, and
+    the order-preserving reassembly pinned down to the md5 of the
+    rebuilt text."""
+    return f"""
 WITH docs AS (
   SELECT doc_id AS id,
     'Doc ' || CAST(doc_id AS VARCHAR) || ' ' || substr(text, 1, 40)
     || chr(10) || 'BANNER GROUP ' || CAST(doc_id % 7 AS VARCHAR)
     || chr(10)
-    || chr(10) || 'Click   here to SUBSCRIBE'
-    || chr(10) || 'pair ' || CAST(doc_id % 250 AS VARCHAR) AS text
+    {tail} AS text
   FROM documents
 ), split AS (
   SELECT id, string_split(text, chr(10)) AS l FROM docs
@@ -5849,7 +5541,7 @@ WITH docs AS (
   FROM split, LATERAL unnest(generate_series(1, len(l))) AS t(ord)
 ), flags AS (
   SELECT id, ord, line,
-    (key = '' OR COUNT(*) OVER (PARTITION BY key) <= 1) AS keep
+    ({keep}) AS keep
   FROM lines
 )
 SELECT id AS doc_id,
@@ -5864,7 +5556,50 @@ FROM flags GROUP BY id
 """
 
 
-@register("line_dedup_boilerplate", oracle=_line_dedup_oracle())
+def _line_dedup_frame(
+    spark: SparkSession, sf_dir: str, tail: list, scope: str = "corpus"
+) -> DataFrame:
+    """``line_dedup`` (max_occurrences=1, ``scope``) over the synthetic
+    page: the header, banner and blank line of ``_line_dedup_oracle``,
+    then the ``tail`` columns; output pins the rebuilt text by md5 +
+    length."""
+    from pyspark_unload_to_gcs_spark.operators.paragraphs import (
+        line_dedup,
+    )
+
+    docs = _t(spark, sf_dir, "documents").select(
+        F.col("doc_id").alias("id"),
+        F.concat(
+            F.lit("Doc "),
+            F.col("doc_id").cast("string"),
+            F.lit(" "),
+            F.substring(F.col("text"), 1, 40),
+            F.lit("\nBANNER GROUP "),
+            (F.col("doc_id") % 7).cast("string"),
+            F.lit("\n"),
+            *tail,
+        ).alias("text"),
+    )
+    out = line_dedup(docs, scope=scope, max_occurrences=1)
+    return out.select(
+        F.col("id").alias("doc_id"),
+        "n_lines",
+        "n_lines_removed",
+        F.md5(F.col("text_dedup")).alias("dedup_md5"),
+        F.length("text_dedup").cast("long").alias("dedup_chars"),
+    )
+
+
+@register(
+    "line_dedup_boilerplate",
+    # a ubiquitous subscribe line and a pair line whose multiplicity is
+    # scale-dependent; a line whose key occurs twice in the corpus drops
+    oracle=_line_dedup_oracle(
+        """|| chr(10) || 'Click   here to SUBSCRIBE'
+    || chr(10) || 'pair ' || CAST(doc_id % 250 AS VARCHAR)""",
+        "key = '' OR COUNT(*) OVER (PARTITION BY key) <= 1",
+    ),
+)
 def line_dedup_boilerplate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-scope exact line dedup (operators/paragraphs.py
     ``line_dedup`` — the C4/RefinedWeb boilerplate pass): each
@@ -5880,32 +5615,14 @@ def line_dedup_boilerplate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     sits under the driver hash. Scale: the hot-key set is the Zipf
     head (7 banner groups + 1 subscribe line here), exactly the
     boilerplate shape the broadcast join-back is designed for."""
-    from pyspark_unload_to_gcs_spark.operators.paragraphs import (
-        line_dedup,
-    )
-
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("id"),
-        F.concat(
-            F.lit("Doc "),
-            F.col("doc_id").cast("string"),
-            F.lit(" "),
-            F.substring(F.col("text"), 1, 40),
-            F.lit("\nBANNER GROUP "),
-            (F.col("doc_id") % 7).cast("string"),
-            F.lit("\n"),
+    return _line_dedup_frame(
+        spark,
+        sf_dir,
+        [
             F.lit("\nClick   here to SUBSCRIBE"),
             F.lit("\npair "),
             (F.col("doc_id") % 250).cast("string"),
-        ).alias("text"),
-    )
-    out = line_dedup(docs, max_occurrences=1)
-    return out.select(
-        F.col("id").alias("doc_id"),
-        "n_lines",
-        "n_lines_removed",
-        F.md5(F.col("text_dedup")).alias("dedup_md5"),
-        F.length("text_dedup").cast("long").alias("dedup_chars"),
+        ],
     )
 
 
@@ -6341,46 +6058,17 @@ def split_leakage_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _line_dedup_within_oracle() -> str:
-    """DuckDB replay of document-scope line_dedup over a page with a
-    planted intra-document repeat (the banner appears twice in every
-    page): first occurrence survives, the echo drops, reassembly
-    pinned by md5."""
-    return """
-WITH docs AS (
-  SELECT doc_id AS id,
-    'Doc ' || CAST(doc_id AS VARCHAR) || ' ' || substr(text, 1, 40)
-    || chr(10) || 'BANNER GROUP ' || CAST(doc_id % 7 AS VARCHAR)
-    || chr(10)
-    || chr(10) || 'banner   group ' || CAST(doc_id % 7 AS VARCHAR)
-    || chr(10) || 'tail ' || CAST(doc_id AS VARCHAR) AS text
-  FROM documents
-), split AS (
-  SELECT id, string_split(text, chr(10)) AS l FROM docs
-), lines AS (
-  SELECT id, ord, l[ord] AS line,
-    lower(trim(regexp_replace(l[ord], '[ \\t\\r]+', ' ', 'g'))) AS key
-  FROM split, LATERAL unnest(generate_series(1, len(l))) AS t(ord)
-), flags AS (
-  SELECT id, ord, line,
-    (key = '' OR ROW_NUMBER() OVER (PARTITION BY id, key ORDER BY ord)
-       <= 1) AS keep
-  FROM lines
-)
-SELECT id AS doc_id,
-  CAST(COUNT(*) AS BIGINT) AS n_lines,
-  CAST(COUNT(*) FILTER (WHERE NOT keep) AS BIGINT) AS n_lines_removed,
-  md5(COALESCE(string_agg(line, chr(10) ORDER BY ord)
-               FILTER (WHERE keep), '')) AS dedup_md5,
-  CAST(length(COALESCE(string_agg(line, chr(10) ORDER BY ord)
-                       FILTER (WHERE keep), '')) AS BIGINT)
-    AS dedup_chars
-FROM flags GROUP BY id
-"""
-
-
 @register(
-    "line_dedup_within_doc", oracle=_line_dedup_within_oracle()
+    "line_dedup_within_doc",
+    # the banner again in case/whitespace variants (a planted
+    # intra-document repeat): the first occurrence survives, the echo
+    # drops
+    oracle=_line_dedup_oracle(
+        """|| chr(10) || 'banner   group ' || CAST(doc_id % 7 AS VARCHAR)
+    || chr(10) || 'tail ' || CAST(doc_id AS VARCHAR)""",
+        """key = '' OR ROW_NUMBER() OVER (PARTITION BY id, key ORDER BY ord)
+       <= 1""",
+    ),
 )
 def line_dedup_within_doc_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document-scope exact line dedup (operators/paragraphs.py
@@ -6391,33 +6079,16 @@ def line_dedup_within_doc_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the echo drops. Reassembly pinned by md5 + length. The window
     is partitioned by (doc, key): partition-local, no corpus-wide
     shuffle by content. Full value oracle."""
-    from pyspark_unload_to_gcs_spark.operators.paragraphs import (
-        line_dedup,
-    )
-
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("id"),
-        F.concat(
-            F.lit("Doc "),
-            F.col("doc_id").cast("string"),
-            F.lit(" "),
-            F.substring(F.col("text"), 1, 40),
-            F.lit("\nBANNER GROUP "),
-            (F.col("doc_id") % 7).cast("string"),
-            F.lit("\n"),
+    return _line_dedup_frame(
+        spark,
+        sf_dir,
+        [
             F.lit("\nbanner   group "),
             (F.col("doc_id") % 7).cast("string"),
             F.lit("\ntail "),
             F.col("doc_id").cast("string"),
-        ).alias("text"),
-    )
-    out = line_dedup(docs, scope="document", max_occurrences=1)
-    return out.select(
-        F.col("id").alias("doc_id"),
-        "n_lines",
-        "n_lines_removed",
-        F.md5(F.col("text_dedup")).alias("dedup_md5"),
-        F.length("text_dedup").cast("long").alias("dedup_chars"),
+        ],
+        scope="document",
     )
 
 
@@ -7047,10 +6718,8 @@ def mime_sniff_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _delta_orders(spark: SparkSession, sf_dir: str) -> str:
-    """3-commit OPEN-FORMAT Delta table from orders (memoized per
-    session; the _versioned_orders arms on the documented protocol):
-    v0 @ ms 1000 = even keys; v1 @ ms 2000 = ALL keys with price+1.0
-    where key % 10 == 0; v2 @ ms 3000 = v1 minus key % 7 == 0. A
+    """The ``_orders_commits`` table on the OPEN Delta format (memoized
+    per session): each later commit overwrites the one before. A
     parquet checkpoint is written at v1 so every snapshot/feed row
     ALSO exercises the checkpoint replay path."""
     import tempfile
@@ -7059,28 +6728,9 @@ def _delta_orders(spark: SparkSession, sf_dir: str) -> str:
 
     def build():
         path = tempfile.mkdtemp(prefix="delta_orders_") + "/t"
-        base = _t(spark, sf_dir, "orders").select(
-            "o_orderkey",
-            "o_custkey",
-            F.col("o_totalprice").cast("double").alias("price"),
-        )
-        v1 = base.withColumn(
-            "price",
-            F.col("price")
-            + F.when(F.col("o_orderkey") % 10 == 0, F.lit(1.0)).otherwise(
-                F.lit(0.0)
-            ),
-        )
-        DL.write_delta_commit(
-            base.filter(F.col("o_orderkey") % 2 == 0), path, commit_ms=1000
-        )
-        DL.write_delta_commit(v1, path, commit_ms=2000, mode="overwrite")
-        DL.write_delta_commit(
-            v1.filter(F.col("o_orderkey") % 7 != 0),
-            path,
-            commit_ms=3000,
-            mode="overwrite",
-        )
+        for i, (snapshot, ms) in enumerate(_orders_commits(spark, sf_dir)):
+            mode = "overwrite" if i else "append"
+            DL.write_delta_commit(snapshot, path, commit_ms=ms, mode=mode)
         DL.write_checkpoint(spark, path, 1)
         return path
 

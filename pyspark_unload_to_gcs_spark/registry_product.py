@@ -62,9 +62,9 @@ def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     return funnel(_t(spark, sf_dir, "events"), FUNNEL_STEPS)
 
 
-@register(
-    "retention_cohorts",
-    oracle="""
+# Weekly cohort retention: also the oracle of the streaming retention
+# fold replay (registry_pipeline), whose final matrix must equal it.
+_RETENTION_SQL = """
     WITH per AS (
         SELECT DISTINCT user_id, epoch_ms(ts) // 604800000 AS period
         FROM events
@@ -77,8 +77,10 @@ def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(DISTINCT per.user_id) AS n_users
     FROM per JOIN coh ON coh.user_id = per.user_id
     GROUP BY coh.cohort_period, period_offset
-    """,
-)
+    """
+
+
+@register("retention_cohorts", oracle=_RETENTION_SQL)
 def retention_cohorts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly cohort retention matrix (7-day buckets anchored at the
     epoch — pure integer arithmetic, engine-portable boundaries)."""

@@ -332,9 +332,9 @@ def document_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "incremental_rollup_merge",
-    oracle="""
+# Direct per-event_type aggregation: the oracle of every incremental
+# rollup (window merge here, the streaming fold replay in registry_pipeline).
+_ROLLUP_SQL = """
     SELECT event_type,
            COUNT(*) AS n_rows,
            CAST(SUM(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS total,
@@ -343,8 +343,10 @@ def document_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(CAST(value AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*) AS avg_value
     FROM events
     GROUP BY event_type
-    """,
-)
+    """
+
+
+@register("incremental_rollup_merge", oracle=_ROLLUP_SQL)
 def incremental_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental aggregate maintenance (operators/incremental.py):
     the stream is split into two watermark windows, each partial-

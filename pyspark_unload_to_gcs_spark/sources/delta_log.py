@@ -487,8 +487,8 @@ def write_delta_commit(
     subdirectory, then move into the table root via the Hadoop
     FileSystem API with collision-free names; the commit JSON is
     claimed create-exclusively, so a concurrent writer loses with
-    ``ConcurrentCommitError`` instead of corrupting the log (its moved
-    data files stay unreferenced, invisible to every reader)."""
+    ``ConcurrentCommitError`` instead of corrupting the log, after
+    deleting the data files it moved (no commit references them)."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"write_delta_commit: unknown mode {mode!r}")
     spark = df.sparkSession
@@ -573,6 +573,8 @@ def write_delta_commit(
             + "\n",
         )
     except FileExistsError:
+        for a in adds:
+            delete(child(table, a["path"]))
         raise ConcurrentCommitError(
             f"delta_log.write_delta_commit: another writer claimed "
             f"{commit_file} first — re-read the log and retry"

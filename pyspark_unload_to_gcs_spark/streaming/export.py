@@ -12,14 +12,14 @@ stats=...), checkpoint_dir=...)``.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from pyspark_unload_to_gcs_spark.config import SyncConfig
 from pyspark_unload_to_gcs_spark.operators.hashing import content_hash
-from pyspark_unload_to_gcs_spark.sinks.writers import write_export
+from pyspark_unload_to_gcs_spark.sinks.writers import write_export, write_manifest
 
 
 @dataclass
@@ -41,20 +41,21 @@ def export_batch(
     stats: StreamExportStats,
 ) -> None:
     """Hash and write one micro-batch under
-    ``<output_uri>/batch=<batch_id>``. The row count rides on the write
-    as an ``Observation`` (as in ``plans.sync.run_sync``), so ``stats``
-    gets real counts with no extra count job."""
+    ``<output_uri>/batch=<batch_id>`` with every other setting of
+    ``config`` (format, compression, partitioning, file sizing), plus a
+    ``_MANIFEST.json`` with the batch's row count when ``emit_manifest``
+    is set. The row count rides on the write as an ``Observation`` (as
+    in ``plans.sync.run_sync``), so ``stats`` gets real counts with no
+    extra count job."""
     obs = Observation()
     hashed = content_hash(
         batch_df, config.computed_hash_column, config.computed_hash_ignore_columns
     ).observe(obs, F.count(F.lit(1)).alias("rows"))
-    batch_config = SyncConfig(
-        table=config.table,
-        export_format=config.export_format,
-        output_uri=f"{config.output_uri.rstrip('/')}/batch={batch_id}",
-        compression=config.compression,
-        max_records_per_file=config.max_records_per_file,
-        single_file=config.single_file,
+    batch_config = replace(
+        config, output_uri=f"{config.output_uri.rstrip('/')}/batch={batch_id}"
     )
     write_export(hashed, batch_config)
-    stats.batches.append((batch_id, obs.get["rows"]))
+    rows = obs.get["rows"]
+    if batch_config.emit_manifest:
+        write_manifest(batch_config.output_uri, row_count=rows)
+    stats.batches.append((batch_id, rows))

@@ -47,6 +47,47 @@ SESSION_STATE_SCHEMA = StructType(
 )
 
 
+def session_row(user, seq: int, n: int, start: int, last_ms: int) -> dict:
+    """One closed session as a ``SESSION_OUT_SCHEMA`` row."""
+    return {
+        "user_id": user,
+        "session_seq": seq,
+        "n_events": n,
+        "start_ms": start,
+        "end_ms": last_ms,
+        "duration_ms": last_ms - start,
+    }
+
+
+def gap_session_step(
+    user, state: tuple, timestamps, gap_ms: int, watermark_ms: int
+) -> tuple[tuple, list[dict]]:
+    """Fold one user's new event times (epoch ms) into its session
+    state ``(last_ms, session_seq, n_events, start_ms, open)``: sort
+    them, start a new session at every gap > ``gap_ms`` (closing the
+    open one), then close the open session early when the watermark
+    has already passed last + gap (the user went quiet while other
+    partitions advanced event time; a timeout or timer at or below the
+    watermark is rejected). Returns (new state, closed session rows).
+    The one gap-session step of both stateful sessionizers."""
+    last_ms, seq, n, start, open_ = state
+    closed: list[dict] = []
+    for t in sorted(timestamps):
+        if not open_ or t - last_ms > gap_ms:
+            if open_:
+                closed.append(session_row(user, seq, n, start, last_ms))
+            seq += 1
+            n = 0
+            start = t
+            open_ = 1
+        n += 1
+        last_ms = t
+    if open_ and last_ms + gap_ms <= watermark_ms:
+        closed.append(session_row(user, seq, n, start, last_ms))
+        n, start, open_ = 0, 0, 0
+    return (last_ms, seq, n, start, open_), closed
+
+
 def sessionize_stream(
     events: DataFrame,
     *,
@@ -65,60 +106,27 @@ def sessionize_stream(
         import pandas as pd
 
         user = key[0]
-        closed: list[dict] = []
-
-        def close(last_ms: int, seq: int, n: int, start: int) -> None:
-            closed.append(
-                {
-                    "user_id": user,
-                    "session_seq": seq,
-                    "n_events": n,
-                    "start_ms": start,
-                    "end_ms": last_ms,
-                    "duration_ms": last_ms - start,
-                }
-            )
-
-        if state.exists:
-            last_ms, seq, n, start, open_ = state.get
-        else:
-            last_ms, seq, n, start, open_ = 0, 0, 0, 0, 0
+        columns = [f.name for f in SESSION_OUT_SCHEMA.fields]
+        current = state.get if state.exists else (0, 0, 0, 0, 0)
 
         if state.hasTimedOut:
+            last_ms, seq, n, start, open_ = current
+            closed = []
             if open_:
-                close(last_ms, seq, n, start)
+                closed.append(session_row(user, seq, n, start, last_ms))
                 state.update((last_ms, seq, 0, 0, 0))  # keep seq numbering
-            yield pd.DataFrame(closed, columns=[f.name for f in SESSION_OUT_SCHEMA.fields])
+            yield pd.DataFrame(closed, columns=columns)
             return
 
-        ts_all: list[int] = []
-        for pdf in batches:
-            ts_all.extend(int(v) for v in pdf["__ts_ms"].tolist())
-        ts_all.sort()
-
-        for t in ts_all:
-            if not open_ or t - last_ms > gap_ms:
-                if open_:
-                    close(last_ms, seq, n, start)
-                seq += 1
-                n = 0
-                start = t
-                open_ = 1
-            n += 1
-            last_ms = t
-
-        # If the watermark has already passed last + gap (this user went
-        # quiet while other partitions advanced event time), close now —
-        # setTimeoutTimestamp rejects timestamps at/below the watermark.
-        wm = state.getCurrentWatermarkMs()
-        if open_ and last_ms + gap_ms <= wm:
-            close(last_ms, seq, n, start)
-            n, start, open_ = 0, 0, 0
-
-        state.update((last_ms, seq, n, start, open_))
+        ts_all = [int(v) for pdf in batches for v in pdf["__ts_ms"].tolist()]
+        new, closed = gap_session_step(
+            user, current, ts_all, gap_ms, state.getCurrentWatermarkMs()
+        )
+        state.update(new)
+        last_ms, *_, open_ = new
         if open_:
             state.setTimeoutTimestamp(last_ms + gap_ms)
-        yield pd.DataFrame(closed, columns=[f.name for f in SESSION_OUT_SCHEMA.fields])
+        yield pd.DataFrame(closed, columns=columns)
 
     from pyspark.sql import functions as F
 

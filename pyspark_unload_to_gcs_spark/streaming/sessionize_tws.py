@@ -30,6 +30,8 @@ from pyspark.sql.streaming.stateful_processor import (
 from pyspark_unload_to_gcs_spark.streaming.sessionize import (
     SESSION_OUT_SCHEMA,
     SESSION_STATE_SCHEMA,
+    gap_session_step,
+    session_row,
 )
 
 ROCKSDB_PROVIDER = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -56,52 +58,18 @@ class SessionProcessor(StatefulProcessor):
         self.handle = handle
         self.state = handle.getValueState("session", SESSION_STATE_SCHEMA)
 
-    def _row(self, user, seq: int, n: int, start: int, last_ms: int) -> dict:
-        return {
-            "user_id": user,
-            "session_seq": seq,
-            "n_events": n,
-            "start_ms": start,
-            "end_ms": last_ms,
-            "duration_ms": last_ms - start,
-        }
-
     def handleInputRows(
         self, key: tuple, rows: Iterator["pd.DataFrame"], timerValues: TimerValues  # noqa: F821
     ) -> Iterator["pd.DataFrame"]:
         import pandas as pd
 
-        user = key[0]
-        closed: list[dict] = []
-        last_ms, seq, n, start, open_ = (
-            self.state.get() if self.state.exists() else (0, 0, 0, 0, 0)
+        current = self.state.get() if self.state.exists() else (0, 0, 0, 0, 0)
+        ts_all = [int(v) for pdf in rows for v in pdf["__ts_ms"].tolist()]
+        new, closed = gap_session_step(
+            key[0], current, ts_all, self.gap_ms, timerValues.getCurrentWatermarkInMs()
         )
-
-        ts_all: list[int] = []
-        for pdf in rows:
-            ts_all.extend(int(v) for v in pdf["__ts_ms"].tolist())
-        ts_all.sort()
-
-        for t in ts_all:
-            if not open_ or t - last_ms > self.gap_ms:
-                if open_:
-                    closed.append(self._row(user, seq, n, start, last_ms))
-                seq += 1
-                n = 0
-                start = t
-                open_ = 1
-            n += 1
-            last_ms = t
-
-        # Watermark may already be past last+gap (user went quiet while
-        # other partitions advanced event time): close inline, exactly
-        # like the applyInPandasWithState twin.
-        wm = timerValues.getCurrentWatermarkInMs()
-        if open_ and last_ms + self.gap_ms <= wm:
-            closed.append(self._row(user, seq, n, start, last_ms))
-            n, start, open_ = 0, 0, 0
-
-        self.state.update((last_ms, seq, n, start, open_))
+        self.state.update(new)
+        last_ms, *_, open_ = new
         if open_:
             self.handle.registerTimer(last_ms + self.gap_ms)
         if closed:
@@ -120,7 +88,7 @@ class SessionProcessor(StatefulProcessor):
         if not open_ or expiry < last_ms + self.gap_ms:
             return
         self.state.update((last_ms, seq, 0, 0, 0))  # keep seq numbering
-        yield pd.DataFrame([self._row(key[0], seq, n, start, last_ms)], columns=_OUT_COLS)
+        yield pd.DataFrame([session_row(key[0], seq, n, start, last_ms)], columns=_OUT_COLS)
 
     def close(self) -> None:
         pass

@@ -15,7 +15,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from pyspark.sql import functions as F  # noqa: E402
 
 from pyspark_unload_to_gcs_spark.sources import delta_log as D  # noqa: E402
-from pyspark_unload_to_gcs_spark.storage import create_exclusive  # noqa: E402
+from pyspark_unload_to_gcs_spark.storage import create_exclusive, data_files  # noqa: E402
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -956,7 +956,8 @@ def test_log_replay_matches_dict_model(spark, tmp_path_factory, steps, cp_at):
 def test_lost_commit_claim_raises_concurrent_commit_error(spark, tmp_path, monkeypatch):
     """A writer that lists the log, then finds its next commit file
     already created by another writer, raises ConcurrentCommitError
-    naming that file; the winner's commit stays the log's tip."""
+    naming that file; the winner's commit stays the log's tip, and the
+    loser leaves no data file behind that the log does not reference."""
     from pyspark_unload_to_gcs_spark.sources.versioned import ConcurrentCommitError
 
     t = str(tmp_path / "race")
@@ -977,6 +978,9 @@ def test_lost_commit_claim_raises_concurrent_commit_error(spark, tmp_path, monke
         D.write_delta_commit(df, t, commit_ms=200)
     monkeypatch.undo()
     assert [e["operation"] for e in D.table_history(t)] == ["WRITE", "WINNER"]
+    referenced, _meta = D._active_state(spark, D._read_log(t), 1)
+    assert referenced
+    assert sorted(f.rel for f in data_files(t)) == sorted(referenced)
 
 
 def test_history_probe_row_reads_the_log_once(spark, sf_dir, monkeypatch):

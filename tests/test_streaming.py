@@ -170,6 +170,36 @@ def test_stream_export_foreachbatch(spark, events_stream_dir, events_schema, tmp
     assert stats.total_rows == total
 
 
+def test_stream_export_batch_keeps_partitioning_and_manifest(spark, tmp_path):
+    """Each micro-batch is written with the whole sync config: a
+    partitioned export lands in hive ``day=`` directories under the
+    batch directory, and ``emit_manifest`` leaves a manifest that
+    validates and carries the batch's row count."""
+    from pyspark_unload_to_gcs_spark.sinks.writers import validate_manifest
+
+    batch = spark.createDataFrame(
+        [(i, f"2024-01-0{1 + i % 3}", float(i)) for i in range(12)],
+        "event_id long, day string, value double",
+    )
+    cfg = SyncConfig(
+        table="events_stream",
+        output_uri=f"file:{tmp_path}/out",
+        export_format="json",
+        computed_hash_column="row_hash",
+        partition_by=("day",),
+        emit_manifest=True,
+    )
+    stats = StreamExportStats()
+    export_batch(batch, 7, config=cfg, stats=stats)
+    days = sorted(p.rsplit("/", 1)[-1] for p in glob.glob(f"{tmp_path}/out/batch=7/day=*"))
+    assert days == ["day=2024-01-01", "day=2024-01-02", "day=2024-01-03"]
+    assert not glob.glob(f"{tmp_path}/out/batch=7/*.gz")
+    manifest = validate_manifest(f"file:{tmp_path}/out/batch=7")
+    assert manifest["row_count"] == 12
+    assert manifest["n_files"] == len(glob.glob(f"{tmp_path}/out/batch=7/day=*/*.gz"))
+    assert stats.batches == [(7, 12)]
+
+
 def test_tumbling_append_mode_emits_finalized_windows(spark, events_stream_dir, events_schema):
     """Append mode + watermark: only watermark-finalized windows emit,
     and every emitted row must equal the batch result for that window
