@@ -30,6 +30,7 @@ from pyspark_unload_to_gcs_spark.operators.similarity import (
     ivf_assign,
     norm,
 )
+from pyspark_unload_to_gcs_spark.session import barrier
 
 
 def _topk_avg(cos_list: Column, k: int) -> Column:
@@ -96,33 +97,20 @@ def margin_align_pairs(
         F.col("__n").alias("__nb"),
     )
     denom = F.col("__na") * F.col("__nb")
-    pairs = (
-        src.join(tgt, "ivf_cell")
-        .select(
+    # the pair-dot folds are the dominant cost and THREE branches
+    # consume this frame (both kNN aggregates + the scored join) — one
+    # barrier so the n²/cells candidate pass runs once, the Spark
+    # analogue of the oracle's `pairs AS MATERIALIZED`. Lazy, so
+    # building the query (plan screens, --explain) runs nothing.
+    pairs = barrier(
+        src.join(tgt, "ivf_cell").select(
             "src_id",
             "tgt_id",
             F.when(denom > 0, _pair_dot("__va", "__vb") / denom)
             .otherwise(F.lit(0.0))
             .alias("cos"),
-        )
-        # the pair-dot folds are the dominant cost and THREE branches
-        # consume this frame (both kNN aggregates + the scored join) —
-        # materialize so the n²/cells candidate pass runs once, the
-        # Spark analogue of the oracle's `pairs AS MATERIALIZED`.
-        # localCheckpoint, not persist(): a persisted frame stays in
-        # the session cacheManager until an explicit unpersist nobody
-        # here can issue (the consuming action is the caller's), which
-        # leaked one cached candidate frame per call in long-running
-        # services (ADVICE r10); checkpoint blocks free with the frame
-        # via the ContextCleaner. eager=False so merely BUILDING the
-        # DataFrame (CLI --explain, plan lint, any plan-only consumer)
-        # doesn't execute the full candidate-pair job — the blocks
-        # materialize at the caller's first action and are shared by
-        # all three branches from then on (ADVICE r11). Caveat (same
-        # as dsir_shift_report): truncated lineage means an executor
-        # loss fails the query instead of recomputing — acceptable for
-        # a mining batch job.
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     a = pairs.groupBy("src_id").agg(
         _topk_avg(F.collect_list("cos"), k).alias("__ax")

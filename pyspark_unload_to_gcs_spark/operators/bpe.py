@@ -38,7 +38,7 @@ Scale design (100 TB):
   gate, ``bpe_train_distributed`` runs the identical recurrence as
   Spark jobs: per merge, one vocab-sized hash aggregate + a top-1
   ``TakeOrderedAndProject`` (a 1-row collect, bounded) + one
-  ``replace`` map, with ``localCheckpoint`` lineage truncation every
+  ``replace`` map, with a ``session.barrier`` cutting the lineage every
   ``checkpoint_every`` iterations. Both paths share one tie rule
   (count DESC, then (a, b) lexicographic ASC) and are pinned equal in
   ``tests/test_bpe.py``.
@@ -78,6 +78,7 @@ EOW = "</w>"
 # the shared tokenization base lives in operators/text.py (the layer
 # below); re-exported here because the merge-table metadata embeds it
 from pyspark_unload_to_gcs_spark.operators.text import WORD_PATTERN, words_col  # noqa: F401
+from pyspark_unload_to_gcs_spark.session import barrier
 
 
 # --------------------------------------------------------------------------
@@ -232,21 +233,24 @@ def bpe_train_distributed(
     aggregation, top-1 via ``orderBy().limit(1)`` (a
     TakeOrderedAndProject — no global sort), then one literal
     ``F.replace`` map guarded by ``contains`` so untouched words skip
-    the rewrite. ``localCheckpoint`` every ``checkpoint_every``
+    the rewrite. A ``session.barrier`` every ``checkpoint_every``
     iterations truncates the N-deep replace lineage. The 1-row
     ``collect()`` per iteration is bounded by construction (the merge
     decision IS driver state — same posture as the k-means centroid
     collects in ``similarity.py``)."""
     from pyspark_unload_to_gcs_spark.operators.text import adjacent_pairs
 
-    # localCheckpoint at entry: the seeded states materialize once, so
-    # the first iterations don't re-run the caller's upstream lineage
-    # (a raw word_counts would otherwise re-shuffle the corpus per
-    # iteration until the first in-loop checkpoint)
-    syms = vocab_df.select(
-        seed_symbols_col(F.col("word")).alias("state"),
-        F.col("weight").cast("long").alias("weight"),
-    ).localCheckpoint()
+    # barrier at entry: the seeded states materialize once, so the
+    # first iterations don't re-run the caller's upstream lineage (a
+    # raw word_counts would otherwise re-shuffle the corpus per
+    # iteration until the first in-loop barrier)
+    syms = barrier(
+        vocab_df.select(
+            seed_symbols_col(F.col("word")).alias("state"),
+            F.col("weight").cast("long").alias("weight"),
+        ),
+        eager=True,
+    )
     merges: list[tuple[str, str]] = []
     for i in range(num_merges):
         pairs = adjacent_pairs(symbol_parts_col(F.col("state")))
@@ -272,7 +276,7 @@ def bpe_train_distributed(
             ).otherwise(F.col("state")),
         )
         if (i + 1) % checkpoint_every == 0:
-            syms = syms.localCheckpoint()
+            syms = barrier(syms, eager=True)
     return merges
 
 
@@ -290,12 +294,12 @@ def bpe_train(
     vocabulary cardinality is probed with the limit+1 early-exit trick,
     and only a vocabulary that FITS is collected; larger vocabularies
     stay distributed."""
-    # localCheckpoint BEFORE the probe: the corpus-sized explode+groupBy
+    # barrier BEFORE the probe: the corpus-sized explode+groupBy
     # runs exactly once, and the probe/collect (driver path) or the
     # per-iteration jobs (distributed path) all read the materialized
     # vocab-sized frame instead of re-shuffling the corpus (same
     # single-pass gate posture as the union-find gate in graph.py)
-    wc = word_counts(df, text_column).localCheckpoint()
+    wc = barrier(word_counts(df, text_column), eager=True)
     probe = wc.limit(driver_vocab_limit + 1).count()
     if probe <= driver_vocab_limit:
         vocab = {r["word"]: int(r["weight"]) for r in wc.collect()}

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pyspark_unload_to_gcs_spark.operators.text import normalize_text, tokens_col
+from pyspark_unload_to_gcs_spark.session import barrier
 
 
 # Analyzed-plan node names that keep the df.rdd partition probe cheap: a
@@ -285,8 +286,9 @@ def minhash_signatures(
     choose the precision/recall operating point per query).
 
     Same staging and MATERIALIZATION CONTRACT as ``signature_frame``
-    (see below): persist()+count() or write to parquet before branching
-    consumers, or CollapseProject refolds the staged HOFs."""
+    (see below): pass it through ``session.barrier`` or write it to
+    parquet before branching consumers, or CollapseProject refolds the
+    staged HOFs."""
     return (
         ensure_parallelism(df.select(F.col(id_column).alias("__id"), F.col(text_column)))
         .select("__id", token_hashes(F.col(text_column)).alias("__th"))
@@ -296,7 +298,7 @@ def minhash_signatures(
             "__sh",
             minhash_signature(F.col("__sh"), num_hashes).alias(
                 # build parameters ride along as column metadata (survives
-                # persist AND a parquet round-trip via Spark's footer
+                # a barrier AND a parquet round-trip via Spark's footer
                 # schema), so a consumer re-banding a stored index can
                 # verify it was built with the parameters it assumes
                 "__sig",
@@ -318,7 +320,7 @@ def _validate_signature_build(
     """Refuse a signature/index frame whose build metadata contradicts
     the caller's parameters. ``minhash_signatures`` / ``signature_frame``
     attach {num_hashes, shingle_n[, bands]} as column metadata (survives
-    persist and a parquet round-trip); re-banding a 32-hash frame as if
+    a barrier and a parquet round-trip); re-banding a 32-hash frame as if
     it had 64 hashes produces garbage band keys and silently misses
     duplicates, so any mismatch raises here at plan time.
 
@@ -364,13 +366,13 @@ def signature_frame(
     references it, so it is computed once per row (collapsing these
     into one select re-evaluates the token pipeline per gram position —
     see shingle_hashes_from_token_hashes docstring; 25x at sf0.1).
-    Band keys fold in before any persist because the raw signature has
+    Band keys fold in before any barrier because the raw signature has
     no other consumer (rows carry `bands` longs, not `num_hashes`).
 
     MATERIALIZATION CONTRACT: consume this frame only through a barrier
-    — write it to parquet, or persist()+count() — before branching
-    joins reference it. The staged projections above survive only until
-    the optimizer runs: without a barrier, CollapseProject refolds them
+    — write it to parquet, or pass it through ``session.barrier`` —
+    before branching joins reference it. The staged projections above
+    survive only until the optimizer runs: without a barrier, CollapseProject refolds them
     into nested HOF lambdas and the per-element re-evaluation blowup
     returns (observed as a hang, not just 25x, when the index side of
     ``match_against_index`` was left unmaterialized).
@@ -415,8 +417,8 @@ def minhash_candidate_pairs(
          array instead of strings — done here via xxhash64)
 
     ``signatures``: an already-MATERIALIZED ``minhash_signatures`` frame
-    (persisted or parquet-read) to re-band instead of re-shingling —
-    pass it when several band/threshold configurations run over the
+    (``session.barrier`` output or parquet-read) to re-band instead of
+    re-shingling — pass it when several band/threshold configurations run over the
     same corpus in one session.
 
     ``min_matching_bands``: keep only pairs colliding in at least this
@@ -462,23 +464,21 @@ def minhash_candidate_pairs(
     if signatures is None:
         # The (id, shingle-hash, signature) projection feeds four plan
         # branches (two band-join sides, two verify join-backs) plus any
-        # downstream closure (graph.dedup_clusters). Persist + eager
-        # count: without the count barrier, concurrent downstream stages
-        # race on the unpopulated cache and each recompute the pipeline
-        # (and CollapseProject would refold the staged HOFs — see the
-        # materialization contract). ~1 KB/doc, MEMORY_AND_DISK spills
-        # gracefully.
-        signatures = minhash_signatures(
-            df, id_column, text_column, shingle_n=shingle_n, num_hashes=num_hashes
-        ).persist()
-        signatures.count()
+        # downstream closure (graph.dedup_clusters), and the staged HOFs
+        # must not be refolded (the materialization contract). ~1 KB/doc.
+        signatures = barrier(
+            minhash_signatures(
+                df, id_column, text_column, shingle_n=shingle_n, num_hashes=num_hashes
+            ),
+            eager=True,
+        )
     docs = signatures
 
     # Narrow candidate generation: the band self-join carries ONLY
     # (id, band_key) — 16 bytes/row — never the shingle arrays. Both
     # join inputs are the same subplan, so Spark reuses the exchange.
-    # Band keys derive from the cached signature at read time (a few
-    # xxhash64 per row — cheap relative to the shingling they replace).
+    # Band keys derive from the materialized signature at read time (a
+    # few xxhash64 per row — cheap relative to the shingling they replace).
     banded = docs.select(
         "__id", F.explode(lsh_band_keys(F.col("__sig"), bands, rows_per_band)).alias("__band")
     )
@@ -540,7 +540,7 @@ def match_against_index(
 ) -> DataFrame:
     """Incremental near-dedup: match a NEW batch against a previously
     built corpus signature ``index`` (the output of ``signature_frame``,
-    typically persisted to parquet). Returns (new_id, index_id, jaccard)
+    typically written to parquet). Returns (new_id, index_id, jaccard)
     for every cross pair at or above the threshold.
 
     This is the production shape at 100 TB: the base corpus is shingled
@@ -553,12 +553,10 @@ def match_against_index(
     shuffles cheaply; the verify join carries shingle arrays only for
     candidate ids on both sides.
 
-    The result is materialized (localCheckpoint) before return and the
-    batch's temporary signature cache is unpersisted — per-micro-batch
-    callers (streaming foreachBatch) would otherwise leak one cached
-    frame per epoch. On a multi-node cluster where executor loss must be
-    survivable, write the result to storage instead of relying on the
-    local checkpoint.
+    The batch's signature frame passes one eager ``session.barrier``
+    (the ``signature_frame`` materialization contract); its blocks are
+    freed with the returned frame, so a per-micro-batch caller leaks
+    nothing per epoch.
     """
     # Refuse silently-wrong re-banding: if the index carries build
     # metadata (signature_frame / minhash_signatures attach it, and it
@@ -573,10 +571,14 @@ def match_against_index(
         shingle_n=shingle_n,
     )
 
-    newsig = signature_frame(
-        new_df, id_column, text_column, shingle_n=shingle_n, num_hashes=num_hashes, bands=bands
-    ).persist()
-    newsig.count()
+    # the batch signatures feed the band explode and the verify join-back
+    newsig = barrier(
+        signature_frame(
+            new_df, id_column, text_column, shingle_n=shingle_n, num_hashes=num_hashes,
+            bands=bands,
+        ),
+        eager=True,
+    )
 
     # Accept either index layout: banded (signature_frame, the parquet
     # index format) or band-free (minhash_signatures, e.g. the session's
@@ -615,19 +617,11 @@ def match_against_index(
     ).join(
         index.select(F.col("__id").alias("index_id"), F.col("__sh").alias("__sh_b")), "index_id"
     )
-    out = (
+    return (
         pairs.withColumn("jaccard", _jaccard(F.col("__sh_a"), F.col("__sh_b")))
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select("new_id", "index_id", "jaccard")
     )
-    # Materialize the (small) match result so the batch's signature
-    # cache can be released NOW — without this, every foreachBatch epoch
-    # leaves one persisted frame behind. localCheckpoint blocks are
-    # cleaned up when the result is garbage collected (ContextCleaner),
-    # unlike persist() entries which live until explicitly unpersisted.
-    out = out.localCheckpoint(eager=True)
-    newsig.unpersist()
-    return out
 
 
 def minhash_dedup(
@@ -732,6 +726,13 @@ def simhash_column(text_column: str = "text", bits: int = 64):
     return _simhash(text_column)
 
 
+def _simhash_stage(df: DataFrame, id_column: str, text_column: str) -> DataFrame:
+    """``simhash_dedup``'s (id, __simhash) projection, before its barrier."""
+    return ensure_parallelism(df.select(F.col(id_column), F.col(text_column))).select(
+        F.col(id_column), simhash_column(text_column).alias("__simhash")
+    )
+
+
 def simhash_dedup(
     df: DataFrame,
     id_column: str,
@@ -753,13 +754,8 @@ def simhash_dedup(
     # reuse is NOT guaranteed (AQE broadcast conversion or a plan-cache
     # miss late in a session re-runs the UDF per side — observed as a
     # ~2.5x swing in the bench loop). The hashed frame is 16 bytes/doc,
-    # so persist + count barrier pins the UDF to exactly one execution
-    # for the price of a trivially small cache.
-    hashed = ensure_parallelism(df.select(F.col(id_column), F.col(text_column))).select(
-        F.col(id_column), simhash_column(text_column).alias("__simhash")
-    )
-    hashed = hashed.persist()
-    hashed.count()
+    # so a barrier pins the UDF to exactly one execution cheaply.
+    hashed = barrier(_simhash_stage(df, id_column, text_column), eager=True)
     chunk_bits = 64 // bands
     mask = (1 << chunk_bits) - 1
     chunks = F.array(
@@ -901,8 +897,8 @@ def fuzzy_union_signatures(
     """MATERIALIZED ``minhash_signatures`` over ``fuzzy_text_join``'s
     side-tagged union (same even/odd id packing), for passing as its
     ``signatures`` argument when several band configurations match the
-    same two tables in one session — the shingling runs once. Persist +
-    eager count is the materialization barrier the signature contract
+    same two tables in one session — the shingling runs once. An eager
+    ``session.barrier`` is the materialization the signature contract
     requires (see ``minhash_candidate_pairs``)."""
     _require_integral_ids(left, right, id_column, caller="fuzzy_union_signatures")
     lt = left.select(
@@ -911,15 +907,16 @@ def fuzzy_union_signatures(
     rt = right.select(
         (F.col(id_column).cast("long") * 2 + 1).alias("__uid"), F.col(text_column)
     )
-    sig = minhash_signatures(
-        lt.unionByName(rt),
-        "__uid",
-        text_column,
-        shingle_n=shingle_n,
-        num_hashes=num_hashes,
-    ).persist()
-    sig.count()
-    return sig
+    return barrier(
+        minhash_signatures(
+            lt.unionByName(rt),
+            "__uid",
+            text_column,
+            shingle_n=shingle_n,
+            num_hashes=num_hashes,
+        ),
+        eager=True,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1071,6 +1068,30 @@ def _chain_window_hashes(df: DataFrame, th_col: str, k: int, out_col: str) -> Da
     return df.withColumn(out_col, F.col(acc_col))
 
 
+def _span_stage(
+    df: DataFrame, id_column: str, text_column: str, span_tokens: int
+) -> DataFrame:
+    """``repeated_span_dedup``'s staged token frame, before its barrier:
+    (__id, __toks, __wh) with __wh the rolling ``span_tokens``-window
+    hashes."""
+    # explicit whitespace class, NOT \s: Java \s includes U+000B
+    # (vertical tab) while the DuckDB oracle's RE2 \s does not, so the
+    # "identical tokenization" claim would silently diverge on VT-
+    # bearing text. The class below spells out the same
+    # five separators on both engines (\x0B written as a hex escape —
+    # Java's \v means "any vertical whitespace", not VT).
+    toks = F.when(
+        F.trim(F.coalesce(F.col(text_column), F.lit(""))) == "",
+        F.array().cast("array<string>"),
+    ).otherwise(F.split(F.trim(F.col(text_column)), r"[ \t\n\x0B\f\r]+"))
+    staged = df.select(
+        F.col(id_column).alias("__id"),
+        toks.alias("__toks"),
+    ).withColumn("__th", F.transform("__toks", lambda t: F.xxhash64(t)))
+    staged = _chain_window_hashes(staged, "__th", span_tokens, "__wh")
+    return staged.select("__id", "__toks", "__wh")
+
+
 def repeated_span_dedup(
     df: DataFrame,
     id_column: str = "doc_id",
@@ -1111,30 +1132,13 @@ def repeated_span_dedup(
          further shuffle): kept positions via an exists() over the
          (typically short) repeated-starts array.
     The staged token frame feeds two consumers (window explode +
-    final cut) and is persisted with a count barrier per the
-    materialization contract (lore #10). The cache lives until the
-    SparkSession ends (the returned frame executes lazily, so the
-    operator cannot unpersist it) — callers invoking this repeatedly in
-    one session should memoize the result per (session, input), and at
-    very large corpora write the staged frame to storage instead.
+    final cut) and passes one eager ``session.barrier`` so the rolling
+    window hashes run once; at very large corpora write it to storage
+    instead.
     """
-    # explicit whitespace class, NOT \s: Java \s includes U+000B
-    # (vertical tab) while the DuckDB oracle's RE2 \s does not, so the
-    # "identical tokenization" claim would silently diverge on VT-
-    # bearing text (r06 advice). The class below spells out the same
-    # five separators on both engines (\x0B written as a hex escape —
-    # Java's \v means "any vertical whitespace", not VT).
-    toks = F.when(
-        F.trim(F.coalesce(F.col(text_column), F.lit(""))) == "",
-        F.array().cast("array<string>"),
-    ).otherwise(F.split(F.trim(F.col(text_column)), r"[ \t\n\x0B\f\r]+"))
-    staged = df.select(
-        F.col(id_column).alias("__id"),
-        toks.alias("__toks"),
-    ).withColumn("__th", F.transform("__toks", lambda t: F.xxhash64(t)))
-    staged = _chain_window_hashes(staged, "__th", span_tokens, "__wh")
-    staged = staged.select("__id", "__toks", "__wh").persist()
-    staged.count()
+    staged = barrier(
+        _span_stage(df, id_column, text_column, span_tokens), eager=True
+    )
 
     win = staged.select(
         "__id", F.posexplode("__wh").alias("__pos0", "__h")
@@ -1496,12 +1500,11 @@ def containment_join(
         if materialize_grams:
             # multiple branches consume each gram frame (posting
             # explode + verify re-attach) and the interpreted-HOF gram
-            # build is the dominant per-pass cost — lazily checkpoint
-            # so it runs once at the caller's first action (the
-            # margin_align_pairs rationale; blocks freed by the
-            # ContextCleaner). Plan-lint consumers screen the
-            # un-checkpointed arm via registry_pipeline.PLAN_TWINS.
-            g = g.localCheckpoint(eager=False)
+            # build is the dominant per-pass cost — a lazy barrier so
+            # it runs once at the caller's first action. Plan-lint
+            # consumers screen the un-checkpointed arm via
+            # registry_pipeline.PLAN_TWINS.
+            g = barrier(g, eager=False)
         return g
 
     same = left is right and left_id == right_id

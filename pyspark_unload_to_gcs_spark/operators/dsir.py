@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from pyspark_unload_to_gcs_spark.operators.classifier import token_bucket
 from pyspark_unload_to_gcs_spark.operators.text import words_col
+from pyspark_unload_to_gcs_spark.session import barrier
 
 # Row cap for the dsir_shift_report broadcast hint on the selected-id
 # frame (ADVICE r15 — the containment gates' convention): 10M ids
@@ -307,7 +308,7 @@ def dsir_shift_report(
         df, target, num_buckets=num_buckets, text_column=text_column
     )
     if checkpoint:
-        counts_rt = counts_rt.localCheckpoint(eager=True)
+        counts_rt = barrier(counts_rt, eager=True)
     ratios = dsir_ratio_from_counts(counts_rt, num_buckets=num_buckets)
     selected = dsir_select(
         df,
@@ -319,7 +320,7 @@ def dsir_shift_report(
         ratios=ratios,
     ).select(id_column)
     if checkpoint:
-        selected = selected.localCheckpoint(eager=True)
+        selected = barrier(selected, eager=True)
     # broadcast-hint gate (ADVICE r15, same convention as the
     # containment _BROADCAST_DOC_CAP gates): k is caller-controlled,
     # and an unconditional hint would force a driver-side broadcast

@@ -11,7 +11,7 @@ round a pure DataFrame transform.
 Why not GraphX/graphframes: not available from PySpark without extra
 jars; this needs only groupBy/join and stays in the DataFrame engine.
 
-Scale notes: edges are checkpointed each round (localCheckpoint) to cut
+Scale notes: edges pass a ``session.barrier`` each round to cut
 lineage growth — an iterative plan otherwise compounds into an
 exponentially deep tree; convergence is detected with a count of
 changed edges (one action per round, unavoidable for a data-dependent
@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pyspark_unload_to_gcs_spark.session import barrier
 
 
 def _star_round(edges: DataFrame, large: bool) -> DataFrame:
@@ -94,11 +96,11 @@ def connected_components(
     convergence check is a single (count, hash-sum) aggregate rather
     than two exceptAll shuffles.
     """
-    edges = (
+    edges = barrier(
         pairs.select(F.col(src_column).alias("u"), F.col(dst_column).alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        eager=True,
     )
     n_edges = edges.count()
     spark = pairs.sparkSession
@@ -115,7 +117,7 @@ def connected_components(
     prev = fingerprint(edges)
     for _ in range(max_rounds):
         after_large = _star_round(edges, large=True)
-        edges = _star_round(after_large, large=False).localCheckpoint()
+        edges = barrier(_star_round(after_large, large=False), eager=True)
         cur = fingerprint(edges)
         # stable (count, hash-sum) => fixed point (collision odds ~2^-64)
         if cur == prev:
@@ -155,7 +157,7 @@ def pagerank(
     (|V| up to ~9e7 at the default scale).
 
     Plan (100 TB posture): edges carry their out-degree (computed once,
-    one shuffle) and are ``localCheckpoint``ed once, with the node set,
+    one shuffle) and pass one ``session.barrier``, with the node set,
     since every iteration reads them. The rank frame is |V| rows —
     orders of magnitude smaller than the edge list on real graphs — so
     when |V| fits a broadcast (``broadcast_node_limit``, known exactly
@@ -176,15 +178,12 @@ def pagerank(
     e = edges.select(src.alias("src"), dst.alias("dst"))
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     # Materialize (src, dst, outdeg) once — every iteration consumes it.
-    # localCheckpoint rather than persist: same one-job barrier, but the
-    # blocks are reference-managed (no unpersist bookkeeping for a frame
-    # the lazily-returned result still depends on).
-    edged = e.join(outdeg, on="src").localCheckpoint()
-    nodes = (
+    edged = barrier(e.join(outdeg, on="src"), eager=True)
+    nodes = barrier(
         edged.select(F.col("src").alias("node"))
         .unionByName(edged.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        eager=True,
     )
     # (node, rank) is 16 bytes/row raw, but a built HashedRelation runs
     # ~4-8x that (InternalRow + hash table overhead), and the explicit
@@ -231,7 +230,7 @@ def pagerank(
             ).cast("long").alias("rank"),
         )
         if (i + 1) % checkpoint_interval == 0 and (i + 1) < iterations:
-            ranks = ranks.localCheckpoint()
+            ranks = barrier(ranks, eager=True)
     return ranks
 
 

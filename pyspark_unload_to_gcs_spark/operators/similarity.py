@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pyspark_unload_to_gcs_spark.session import barrier
+
 
 def dot_literal(vec_col: Column, query: Sequence[float]) -> Column:
     """Dot product of a vector column with a Python-side query vector,
@@ -432,7 +434,7 @@ def ann_join(
     duplicate-id inputs emit duplicate pairs.
 
     Self-join (``left is right``, the near-dedup case): the bucketed
-    frame is materialized once (localCheckpoint) and reused for both
+    frame is materialized once (``session.barrier``) and reused for both
     join sides — the per-plane dot folds are interpreted HOF lambdas
     outside codegen, and without a barrier each plan branch would
     recompute them (2x the dominant cost; no exchange exists upstream
@@ -441,7 +443,7 @@ def ann_join(
     executor-loss-safe."""
     lb = with_lsh_bucket(left, vec_column=vec_column, dim=dim, n_planes=n_planes, seed=seed)
     if right is left:
-        lb = lb.localCheckpoint(eager=True)
+        lb = barrier(lb, eager=True)
         rb = lb
     else:
         rb = with_lsh_bucket(right, vec_column=vec_column, dim=dim, n_planes=n_planes, seed=seed)
@@ -532,7 +534,7 @@ def semantic_cluster_dedup(
     within-cell pair mass as n^1.5 rather than n^2 (the classic IVF
     sizing), at the cost of one corpus count. Recursively re-cluster
     any remaining oversized cell. The assigned frame is materialized
-    once (localCheckpoint) because the per-centroid dot folds are
+    once (``session.barrier``) because the per-centroid dot folds are
     interpreted HOF lambdas: without a barrier both join branches would
     recompute the dominant assignment cost (see ann_join).
 
@@ -545,9 +547,10 @@ def semantic_cluster_dedup(
     cents = ivf_centroids_from_sample(
         df, id_column=id_column, vec_column=vec_column, n_centroids=n_centroids
     )
-    assigned = ivf_assign(
-        df, cents, vec_column=vec_column, method=assign_method
-    ).localCheckpoint(eager=True)
+    assigned = barrier(
+        ivf_assign(df, cents, vec_column=vec_column, method=assign_method),
+        eager=True,
+    )
     # per-row norm staging: see ann_join
     l = assigned.select(
         F.col("ivf_cell"),

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyspark_unload_to_gcs_spark.session import barrier
+
 # Tiny per-language stopword lists for the n-gram/stopword heuristic
 # language-ID. Word lists are universal public knowledge.
 STOPWORDS = {
@@ -413,14 +415,12 @@ def tfidf_top_terms(
     driver collect)."""
     toks = df.select(F.col(id_column), tokens_col(F.col(text_column)).alias("__toks"))
     pairs = toks.select(id_column, F.explode("__toks").alias("term"))
-    # tf feeds BOTH docfreq and the scored join below; materialize it
-    # (localCheckpoint) so the corpus explode + (doc,term) shuffle run
-    # once instead of twice — exchange reuse across the two consumers
-    # is not guaranteed (lore #7)
-    tf = (
-        pairs.groupBy(id_column, "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=True)
+    # tf feeds BOTH docfreq and the scored join below; a barrier runs
+    # the corpus explode + (doc,term) shuffle once instead of twice —
+    # exchange reuse across the two consumers is not guaranteed (lore #7)
+    tf = barrier(
+        pairs.groupBy(id_column, "term").agg(F.count(F.lit(1)).alias("tf")),
+        eager=True,
     )
     docfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = df.select(F.countDistinct(id_column).alias("__n"))
@@ -467,17 +467,16 @@ def unigram_logprob(
     drift via intermediate-scale differences)."""
     toks = df.select(F.col(id_column), tokens_col(F.col(text_column)).alias("__toks"))
     pairs = toks.select(id_column, F.explode("__toks").alias("__term"))
-    # ONE corpus explode builds the unigram table; it is materialized
-    # (localCheckpoint — |vocab| rows, the broadcastable side) so that
+    # ONE corpus explode builds the unigram table; it passes a barrier
+    # (|vocab| rows, the broadcastable side) so that
     # the corpus total (= Σ vocab freqs) and the logprob lookup both
     # read the checkpoint instead of re-exploding the corpus — without
     # the barrier the vocab subtree appears twice in the plan and
     # exchange reuse is not guaranteed (lore #7). The remaining corpus
     # explode is the scored path itself: 2 passes total, down from 3.
-    vocab = (
-        pairs.groupBy("__term")
-        .agg(F.count(F.lit(1)).alias("__freq"))
-        .localCheckpoint(eager=True)
+    vocab = barrier(
+        pairs.groupBy("__term").agg(F.count(F.lit(1)).alias("__freq")),
+        eager=True,
     )
     total = vocab.agg(F.sum("__freq").cast("double").alias("__total"))
     lp = F.round(F.log(F.col("__freq") / F.col("__total")), 6).cast("decimal(28,12)")
@@ -514,7 +513,7 @@ def bigram_logprob(
     IEEE division at the end). Documents with < 2 tokens have no
     transitions and drop out.
 
-    Shape at scale: the train slice tokenizes ONCE (localCheckpoint —
+    Shape at scale: the train slice tokenizes ONCE (a barrier —
     the unigram and bigram count builds both read the materialization,
     lore #7; the bigram table is |bigram vocab| rows — a hash JOIN
     key, deliberately not broadcast; the unigram table broadcasts),
@@ -531,12 +530,12 @@ def bigram_logprob(
     )
     # adjacent_pairs is the ONE pair construction in the engine (BPE
     # statistics share it); fields are (a=prev, b=word)
-    train_toks = toks.filter(F.col("__train")).localCheckpoint(eager=False)
-    uni = (
+    train_toks = barrier(toks.filter(F.col("__train")), eager=False)
+    uni = barrier(
         train_toks.select(F.explode("__toks").alias("__w"))
         .groupBy("__w")
-        .agg(F.count(F.lit(1)).alias("__cw"))
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).alias("__cw")),
+        eager=True,
     )
     bg = (
         train_toks.select(

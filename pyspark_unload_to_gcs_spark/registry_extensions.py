@@ -16,7 +16,7 @@ from pyspark_unload_to_gcs_spark.operators import dedup as D
 from pyspark_unload_to_gcs_spark.operators import similarity as S
 from pyspark_unload_to_gcs_spark.operators import text as T
 from pyspark_unload_to_gcs_spark.operators.dedup import ensure_parallelism
-from pyspark_unload_to_gcs_spark.session import session_memo
+from pyspark_unload_to_gcs_spark.session import barrier, session_memo
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -47,14 +47,13 @@ def _shared_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf_dir). Every band configuration in the dedup family re-bands this
     cache instead of re-shingling the corpus (8-band standard pairs AND
     16-band high-recall ngram dedup) — the shingling is ~all the cost.
-    Persist+count here IS the materialization barrier the signature
-    frame's contract requires."""
+    The eager barrier here IS the materialization the signature frame's
+    contract requires."""
     def build():
-        sig = D.minhash_signatures(
-            _t(spark, sf_dir, "documents"), "doc_id", "text"
-        ).persist()
-        sig.count()
-        return sig
+        return barrier(
+            D.minhash_signatures(_t(spark, sf_dir, "documents"), "doc_id", "text"),
+            eager=True,
+        )
 
     return session_memo(spark, ("sig", sf_dir), build)
 
@@ -65,27 +64,30 @@ def _shared_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     and near_dup_clusters_exact (same sharing rationale as
     _shared_minhash_pairs: share the OBJECT, not an equal plan)."""
     def build():
-        return D.minhash_candidate_pairs(
-            _t(spark, sf_dir, "documents"),
-            "doc_id",
-            "text",
-            bands=32,
-            num_hashes=32,
-            jaccard_threshold=0.8,
-            signatures=_shared_signatures(spark, sf_dir),
-            min_matching_bands=12,
-        ).localCheckpoint(eager=True)
+        return barrier(
+            D.minhash_candidate_pairs(
+                _t(spark, sf_dir, "documents"),
+                "doc_id",
+                "text",
+                bands=32,
+                num_hashes=32,
+                jaccard_threshold=0.8,
+                signatures=_shared_signatures(spark, sf_dir),
+                min_matching_bands=12,
+            ),
+            eager=True,
+        )
 
     return session_memo(spark, ("pairs_exact", sf_dir), build)
 
 
 def _exact_pairs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The exact >=0.8 pair pipeline WITHOUT persist/localCheckpoint —
-    signatures built inline, nothing materialized. Exists ONLY as the
-    plan twin for the lint/digest screens (registry_pipeline.PLAN_TWINS):
-    the shared memoized frame renders as 'Scan ExistingRDD'/
-    'InMemoryTableScan', which would hide the whole minhash pipeline
-    from the BatchEvalPython/CartesianProduct screens (review r12)."""
+    """The exact >=0.8 pair pipeline WITHOUT a barrier — signatures
+    built inline, nothing materialized. Exists ONLY as the plan twin for
+    the lint/digest screens (registry_pipeline.PLAN_TWINS): the shared
+    memoized frame renders as 'Scan ExistingRDD', which would hide the
+    whole minhash pipeline from the BatchEvalPython/CartesianProduct
+    screens."""
     return D.minhash_candidate_pairs(
         _t(spark, sf_dir, "documents"),
         "doc_id",
@@ -104,7 +106,7 @@ def _shared_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE candidate-pairs DataFrame per (session, sf_dir), shared by the
     minhash family (survivors / pair list / clusters). Sharing the
     object — not just an equal plan — pins all consumers to the same
-    persisted signature frame, so reuse cannot depend on Spark's plan-
+    materialized signature frame, so reuse cannot depend on Spark's plan-
     canonicalization cache lookup (observed to miss across a long
     session, recomputing the 4x-cost signature pipeline)."""
     def build():
@@ -418,9 +420,14 @@ def incremental_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # barrier), and shared with the rest of the dedup family.
     index = _shared_signatures(spark, sf_dir).filter(F.col("__id") % 5 != 4)
     new_batch = docs.filter(F.col("doc_id") % 5 == 4)
-    out = D.match_against_index(
-        new_batch, index, "doc_id", "text",
-        bands=32, num_hashes=32, jaccard_threshold=0.7, min_matching_bands=10,
+    # the (small) match result is materialized while the row is built:
+    # a batch is matched once, and the row reads its pairs back
+    out = barrier(
+        D.match_against_index(
+            new_batch, index, "doc_id", "text",
+            bands=32, num_hashes=32, jaccard_threshold=0.7, min_matching_bands=10,
+        ),
+        eager=True,
     )
     return out.select("new_id", "index_id", F.round("jaccard", 4).alias("jaccard_r"))
 
@@ -1223,10 +1230,12 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # id when unpaired — mirroring operators/graph.py exactly. F-string-
 # shared by near_dup_clusters_exact, the leakage-safe split oracle and
 # the keep-best oracle (registry_pipeline) so the closure can never
-# desync between them; ``name`` names the cluster CTE.
+# desync between them; ``name`` names the cluster CTE. ``pairs`` is
+# MATERIALIZED: DuckDB otherwise inlines the all-pairs join at each
+# reference inside the recursive step (about twice the oracle's time).
 def _clusters_cte(name: str = "clusters") -> str:
     return f"""RECURSIVE {_SHINGLE_CTE},
-    pairs AS (
+    pairs AS MATERIALIZED (
       SELECT a.doc_id AS u, b.doc_id AS v
       FROM sh a JOIN sh b ON a.doc_id < b.doc_id
       WHERE len(list_distinct(list_concat(a.s, b.s))) > 0
@@ -1703,7 +1712,7 @@ def _incremental_semantic_match_frame(
     cents = S.ivf_centroids_from_sample(emb, n_centroids=16)
     index = S.ivf_assign(emb, cents)
     if checkpoint:
-        index = index.localCheckpoint(eager=True)
+        index = barrier(index, eager=True)
     new = emb.filter(F.col("vec_id") % 4 == 0).select(
         (F.col("vec_id") + 50000).alias("vec_id"), "embedding"
     )

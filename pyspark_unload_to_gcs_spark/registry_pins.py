@@ -23,7 +23,7 @@ from pyspark_unload_to_gcs_spark.operators import dedup as D
 from pyspark_unload_to_gcs_spark.operators import similarity as S
 from pyspark_unload_to_gcs_spark.operators import text as T
 from pyspark_unload_to_gcs_spark.registry import _t, register
-from pyspark_unload_to_gcs_spark.session import session_memo
+from pyspark_unload_to_gcs_spark.session import barrier, session_memo
 from pyspark_unload_to_gcs_spark.registry_extensions import (
     _docs,
     _DOT,
@@ -75,10 +75,8 @@ def near_dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frame so it materializes once at the row's action (opt r16; the
     # interleaved A/B on the sibling fuzzy row read min 2.40 -> 1.64 s).
     # exact is already eagerly checkpointed by _shared_exact_pairs.
-    prod = (
-        _shared_minhash_pairs(spark, sf_dir)
-        .select("id_a", "id_b")
-        .localCheckpoint(eager=False)
+    prod = barrier(
+        _shared_minhash_pairs(spark, sf_dir).select("id_a", "id_b"), eager=False
     )
     exact = _shared_exact_pairs(spark, sf_dir).select("id_a", "id_b")
     overlap = prod.join(exact, ["id_a", "id_b"], "left_semi")
@@ -117,7 +115,7 @@ def near_dedup_ngram_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both pair frames feed two branches each (own count + the semi
     # join) — lazily checkpoint so the re-band + verify runs once per
     # frame (opt r16, same A/B evidence as the fuzzy sibling row)
-    prod = (
+    prod = barrier(
         D.minhash_candidate_pairs(
             docs,
             "doc_id",
@@ -125,11 +123,10 @@ def near_dedup_ngram_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             bands=16,
             jaccard_threshold=0.7,
             signatures=_shared_signatures(spark, sf_dir),
-        )
-        .select("id_a", "id_b")
-        .localCheckpoint(eager=False)
+        ).select("id_a", "id_b"),
+        eager=False,
     )
-    exact = (
+    exact = barrier(
         D.minhash_candidate_pairs(
             docs,
             "doc_id",
@@ -139,9 +136,8 @@ def near_dedup_ngram_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             jaccard_threshold=0.7,
             signatures=_shared_signatures(spark, sf_dir),
             min_matching_bands=10,
-        )
-        .select("id_a", "id_b")
-        .localCheckpoint(eager=False)
+        ).select("id_a", "id_b"),
+        eager=False,
     )
     overlap = prod.join(exact, ["id_a", "id_b"], "left_semi")
     return (
@@ -193,12 +189,13 @@ def fuzzy_entity_join_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the re-band + verify runs once per frame (opt r16: interleaved
     # A/B on this row read min 2.40 -> 1.64 s, every pair faster,
     # values collect-equal)
-    prod = (
-        fuzzy_text_join(left, right, jaccard_threshold=0.8, signatures=sig)
-        .select("left_id", "right_id")
-        .localCheckpoint(eager=False)
+    prod = barrier(
+        fuzzy_text_join(left, right, jaccard_threshold=0.8, signatures=sig).select(
+            "left_id", "right_id"
+        ),
+        eager=False,
     )
-    exact = (
+    exact = barrier(
         fuzzy_text_join(
             left,
             right,
@@ -207,9 +204,8 @@ def fuzzy_entity_join_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             num_hashes=32,
             min_matching_bands=12,
             signatures=sig,
-        )
-        .select("left_id", "right_id")
-        .localCheckpoint(eager=False)
+        ).select("left_id", "right_id"),
+        eager=False,
     )
     overlap = prod.join(exact, ["left_id", "right_id"], "left_semi")
     return (

@@ -24,7 +24,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark_unload_to_gcs_spark.session import session_memo
+from pyspark_unload_to_gcs_spark.session import barrier, session_memo
 
 from pyspark_unload_to_gcs_spark.registry import _t, register
 
@@ -594,10 +594,10 @@ def repeated_span_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty-list array_to_string is NULL, hence the COALESCE)."""
     from pyspark_unload_to_gcs_spark.operators.dedup import repeated_span_dedup
 
-    # memoized per (session, sf_dir): the operator persists its staged
-    # token frame for the session (materialization contract), so plan
-    # probes / audits / repeated driver calls must share ONE cached
-    # frame instead of leaking one per invocation
+    # memoized per (session, sf_dir): the operator runs an eager barrier
+    # over its staged token frame while it is built, so plan probes /
+    # audits / repeated driver calls share that one job instead of
+    # paying it per invocation
     return session_memo(
         spark,
         ("span_dedup", sf_dir),
@@ -1078,7 +1078,7 @@ _PQ_M, _PQ_K, _PQ_SUB = 4, 16, 16  # m subspaces, k codes, dim 64 -> sub 16
 
 def _pq_shared(spark: SparkSession, sf_dir: str):
     """Session-shared PQ/IVF index build: the corpus coarse-assigned to
-    16 IVF cells AND encoded to m=4 PQ codes, persisted once per
+    16 IVF cells AND encoded to m=4 PQ codes, materialized once per
     (session, sf_dir) — the encode-once-query-many index pattern that
     is the entire point of PQ at 100 TB (codes are written next to the
     data; queries scan codes, never re-encode). Both registered PQ
@@ -1100,8 +1100,9 @@ def _pq_shared(spark: SparkSession, sf_dir: str):
         codebooks = S.pq_codebooks_from_sample(
             corpus, m=_PQ_M, k=_PQ_K, seeds=centroids
         )
-        enc = S.pq_encode(S.ivf_assign(corpus, centroids), codebooks).persist()
-        enc.count()
+        enc = barrier(
+            S.pq_encode(S.ivf_assign(corpus, centroids), codebooks), eager=True
+        )
         return enc, centroids, codebooks, q
 
     return session_memo(spark, ("pq_shared", sf_dir), build)
@@ -3348,7 +3349,7 @@ def _margin_align_auto_raw(
 ) -> DataFrame:
     """The UN-checkpointed auto-k mining frame — the plan that actually
     runs the mine. Plan lint/digest screen THIS (via PLAN_TWINS below);
-    the memoizing wrapper's localCheckpoint renders as an opaque
+    the memoizing wrapper's barrier renders as an opaque
     'Scan ExistingRDD' that would hide the whole mining plan from the
     anti-pattern screens."""
     import math
@@ -3381,20 +3382,20 @@ def margin_align_auto_with_method(
     Memoized per (session, sf_dir, arm) — THREE registered consumers
     share this deterministic spine (margin_align_auto itself, the
     mined-pairs retrieval eval, hard-negative mining), so the mined
-    frame is lazily localCheckpoint'ed and reused: the first consumer
+    frame passes a lazy barrier and is reused: the first consumer
     pays the mine once, the others read the (small, above-threshold)
     pair frame back — the _shared_signatures precedent, with the build
     cost landing honestly inside the first consumer's bench row."""
     def build():
-        return _margin_align_auto_raw(
-            spark, sf_dir, assign_method
-        ).localCheckpoint(eager=False)
+        return barrier(
+            _margin_align_auto_raw(spark, sf_dir, assign_method), eager=False
+        )
 
     return session_memo(spark, ("align_auto", sf_dir, assign_method), build)
 
 
 # Plan twins: for a registered query whose frame is memoized behind a
-# localCheckpoint (plan = 'Scan ExistingRDD') or built on an eagerly
+# barrier (plan = 'Scan ExistingRDD') or built on an eagerly
 # checkpointed intermediate, the twin builds the REAL plan so
 # tests/test_plan_lint.py and tools/plan_digest.py screen the hidden
 # stages for BatchEvalPython/CartesianProduct and budget drift. Sweep
@@ -4960,17 +4961,16 @@ def containment_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # micro-batches (guide §7.3/§3.3): the excerpt branch is a
     # deep HOF tree (array_join(slice(filter(split(...))))) and each
     # fold re-plans gram_sets COMPOSED over it — measured 1.2-3.4 s of
-    # pure driver planning per fold (the localCheckpoint handles plan
-    # eagerly), over half the fold's wall. A real decontamination
+    # pure driver planning per fold (the barrier plans its input
+    # at once), over half the fold's wall. A real decontamination
     # stream hands foreachBatch materialized source rows, not a lazy
     # expression over the base corpus — so materializing the batch
     # input once is both faithful and truncates every downstream plan
     # to an RDD leaf. eager=False: blocks land with the first fold's
     # first action; same rows fold either way.
-    new_batch = (
-        docs.filter(F.col("doc_id") % 5 == 4)
-        .unionByName(_planted_excerpts(docs))
-        .localCheckpoint(eager=False)
+    new_batch = barrier(
+        docs.filter(F.col("doc_id") % 5 == 4).unionByName(_planted_excerpts(docs)),
+        eager=False,
     )
     b0 = new_batch.filter(F.col("doc_id") % 2 == 0)
     b1 = new_batch.filter(F.col("doc_id") % 2 == 1)

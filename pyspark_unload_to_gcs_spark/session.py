@@ -11,7 +11,7 @@ import os
 from collections.abc import Callable, Hashable
 from typing import TypeVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -36,6 +36,43 @@ def session_memo(
     if key not in memo:
         memo[key] = build()
     return memo[key]
+
+
+def barrier(df: DataFrame, *, eager: bool) -> DataFrame:
+    """Materialize ``df`` once and return a frame that reads the result
+    back with its lineage cut. The one place in the package that calls
+    Spark's materialization API; a frame goes through it when several
+    plan branches (or several actions) read it, when an iterative loop
+    must stop its plan from growing, or when staged projections must
+    not be refolded by the optimizer.
+
+    Policy: ``df.localCheckpoint(eager)``. When the SparkContext has a
+    checkpoint directory (``spark.checkpoint.dir``, e.g. through
+    ``get_spark(extra_conf=)``), ``df.checkpoint()`` writes the blocks
+    there instead. That reliable branch is always eager, whatever
+    ``eager`` says: a lazy reliable checkpoint writes its files in a
+    second job after the first action, which computes the frame twice.
+    So with a checkpoint directory, building a frame that passes a lazy
+    barrier runs one job.
+
+    Posture: local blocks live on the executor that computed them, so
+    when that executor is lost the query fails instead of recomputing
+    (set a checkpoint directory where that must be survived). Blocks
+    are freed when the returned frame becomes unreachable (Spark's
+    ContextCleaner; reliable files too when
+    ``spark.cleaner.referenceTracking.cleanCheckpoints`` is on), so no
+    caller keeps unpersist bookkeeping. ``persist()`` is never used: a
+    persisted frame stays in the session-shared CacheManager until an
+    explicit ``unpersist()`` that a lazily returned frame cannot issue,
+    so it outlives its SparkSession, and a cached plan keeps the static
+    shuffle partition count instead of the AQE-coalesced one.
+
+    ``eager=True`` runs the job now; ``eager=False`` defers it to the
+    first action on a frame built from the result, so building a query
+    (plan screens, ``--explain``) runs nothing."""
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=eager)
 
 
 def get_spark(

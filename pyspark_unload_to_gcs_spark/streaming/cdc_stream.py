@@ -54,6 +54,7 @@ from pyspark_unload_to_gcs_spark.operators.cdc import (
     apply_changes,
     commit_changes,
 )
+from pyspark_unload_to_gcs_spark.session import barrier
 from pyspark_unload_to_gcs_spark.storage import (
     child,
     committed_dirs,
@@ -131,112 +132,108 @@ def cdf_merge_batch(
 
     spark = batch_df.sparkSession
     # several passes over the batch below (a stamps collect + one
-    # filter per version) — pin the Python-source read FIRST so the
-    # files aren't re-decoded per pass.
-    # MEASURED AND REJECTED: hash-partitioning
-    # the pinned frame by the merge key so the per-version diff joins
-    # share one exchange — interleaved A/B (5 reps, tagged fold
-    # timings) read fold min 3.25 s (as-is) vs 7.62 s (co-partitioned):
-    # a cached repartition is pinned to the STATIC shuffle partition
-    # count (AQE leaves cached plan partitioning alone), while the
-    # joins' own exchanges are AQE-coalesced to the batch's real size.
-    # At cluster scale the trade reverses only when batch bytes make
-    # shuffle volume dominate; revisit with a size gate if commits per
-    # batch grow.
-    batch_df.persist()
-    try:
-        # bounded collect: one (version, commit_ms) pair per commit in
-        # the batch — commits per micro-batch, never data rows
-        in_batch = {
-            r[0]: r[1]
-            for r in batch_df.select(*_STAMPS).distinct().collect()
-        }
-        prev_applied = _applied_watermark(state_path, batch_id)
-        history = table_history(table_path)
-        ledger = sorted((e["version"], e["commit_ms"]) for e in history)
-        # commit-time row counts (ledger stat, recorded by
-        # commit_version); None for entries written before the stat
-        n_rows_by_v = {e["version"]: e.get("n_rows") for e in history}
-        if in_batch:
-            hi = max(in_batch)
-        else:
-            # A rowless batch evidences NO versions, and the ledger read
-            # above happens at foreachBatch time — it can already contain
-            # a DATA commit that landed after this batch's offset was
-            # planned. Inferring "empty commit" from the ledger alone
-            # would diff that commit as an empty snapshot (fabricated
-            # truncation DELETEs) and the advanced watermark would make
-            # the next batch skip its real rows — silent, permanent loss.
-            # So a version is only applied from a rowless
-            # batch if its snapshot is verifiably zero-row ON DISK;
-            # apply stops at the first version with data (dense-order
-            # contract), deferring it to the batch that carries its
-            # rows. The check reads the ledger's commit-time n_rows
-            # stat — ZERO Spark jobs on a rowless micro-batch, however
-            # long the empty-commit backlog (a per-version isEmpty()
-            # loop would serialize one job per pending version inside
-            # foreachBatch); only legacy ledger entries
-            # written before the stat existed fall back to isEmpty().
-            hi = -1
-            for v, _ms in ledger:
-                if v <= prev_applied:
-                    continue
-                n = n_rows_by_v.get(v)
-                empty_on_disk = (
-                    n == 0
-                    if n is not None
-                    else _read_version(spark, table_path, v).isEmpty()
-                )
-                if empty_on_disk:
-                    hi = v
-                else:
-                    break
-        todo = [(v, ms) for v, ms in ledger if prev_applied < v <= hi]
-        if not todo:
-            return
-        base_cols = [c for c in batch_df.columns if c not in _STAMPS]
-        empty = batch_df.select(*base_cols).limit(0)
-        prev_state = read_state(spark, state_path, before=batch_id)
-        # an in-ledger version with no batch rows is an empty snapshot
-        # (its one part file has zero rows); its diff emits the
-        # truncation as DELETEs. A gap after the watermark raises in
-        # commit_changes; with no state yet, the oldest surviving
-        # version bootstraps as all-INSERTs.
-        changes = commit_changes(
-            prev_state if prev_state is not None else empty,
-            [
-                (
-                    v,
-                    ms,
-                    batch_df.filter(F.col("_commit_version") == v).select(*base_cols)
-                    if v in in_batch
-                    else empty,
-                )
-                for v, ms in todo
-            ],
-            key_columns,
-            prev_version=prev_applied if prev_applied >= 0 else None,
-        )
-        if on_changes is not None:
-            on_changes(changes, batch_id)
-        # last-change-wins per key across the batch's commits, then one
-        # apply — the streaming/merge.py algebra with the commit version
-        # as the sequence column
-        collapsed = collapse_changes(
-            changes, key_columns, "_commit_version"
-        ).drop(*_STAMPS)
-        if prev_state is None:
-            nxt = collapsed.filter(
-                F.col(EXPORT_CHANGE_TYPE_COLUMN) == INSERT
-            ).drop(EXPORT_CHANGE_TYPE_COLUMN)
-        else:
-            nxt = apply_changes(prev_state, collapsed, list(key_columns))
-        out_dir = write_state(nxt, state_path, batch_id)
-        # watermark LAST (after _SUCCESS): a crash in between replays
-        # the batch, which recomputes the identical state + marker
-        replace_text_atomic(child(out_dir, _APPLIED_MARKER), str(todo[-1][0]))
-    finally:
-        batch_df.unpersist()
+    # filter per version) — a barrier pins the Python-source read FIRST
+    # so the files aren't re-decoded per pass; lazy, so the stamps
+    # collect is the one job that reads the source.
+    # MEASURED AND REJECTED: hash-partitioning the pinned frame by the
+    # merge key so the per-version diff joins share one exchange —
+    # interleaved A/B (5 reps, tagged fold timings) read fold min 3.25 s
+    # (as-is) vs 7.62 s (co-partitioned): a pinned repartition keeps the
+    # STATIC shuffle partition count, while the joins' own exchanges
+    # are AQE-coalesced to the batch's real size. At cluster scale the
+    # trade reverses only when batch bytes make shuffle volume dominate;
+    # revisit with a size gate if commits per batch grow.
+    batch_df = barrier(batch_df, eager=False)
+    # bounded collect: one (version, commit_ms) pair per commit in
+    # the batch — commits per micro-batch, never data rows
+    in_batch = {
+        r[0]: r[1]
+        for r in batch_df.select(*_STAMPS).distinct().collect()
+    }
+    prev_applied = _applied_watermark(state_path, batch_id)
+    history = table_history(table_path)
+    ledger = sorted((e["version"], e["commit_ms"]) for e in history)
+    # commit-time row counts (ledger stat, recorded by
+    # commit_version); None for entries written before the stat
+    n_rows_by_v = {e["version"]: e.get("n_rows") for e in history}
+    if in_batch:
+        hi = max(in_batch)
+    else:
+        # A rowless batch evidences NO versions, and the ledger read
+        # above happens at foreachBatch time — it can already contain
+        # a DATA commit that landed after this batch's offset was
+        # planned. Inferring "empty commit" from the ledger alone
+        # would diff that commit as an empty snapshot (fabricated
+        # truncation DELETEs) and the advanced watermark would make
+        # the next batch skip its real rows — silent, permanent loss.
+        # So a version is only applied from a rowless
+        # batch if its snapshot is verifiably zero-row ON DISK;
+        # apply stops at the first version with data (dense-order
+        # contract), deferring it to the batch that carries its
+        # rows. The check reads the ledger's commit-time n_rows
+        # stat — ZERO Spark jobs on a rowless micro-batch, however
+        # long the empty-commit backlog (a per-version isEmpty()
+        # loop would serialize one job per pending version inside
+        # foreachBatch); only legacy ledger entries
+        # written before the stat existed fall back to isEmpty().
+        hi = -1
+        for v, _ms in ledger:
+            if v <= prev_applied:
+                continue
+            n = n_rows_by_v.get(v)
+            empty_on_disk = (
+                n == 0
+                if n is not None
+                else _read_version(spark, table_path, v).isEmpty()
+            )
+            if empty_on_disk:
+                hi = v
+            else:
+                break
+    todo = [(v, ms) for v, ms in ledger if prev_applied < v <= hi]
+    if not todo:
+        return
+    base_cols = [c for c in batch_df.columns if c not in _STAMPS]
+    empty = batch_df.select(*base_cols).limit(0)
+    prev_state = read_state(spark, state_path, before=batch_id)
+    # an in-ledger version with no batch rows is an empty snapshot
+    # (its one part file has zero rows); its diff emits the
+    # truncation as DELETEs. A gap after the watermark raises in
+    # commit_changes; with no state yet, the oldest surviving
+    # version bootstraps as all-INSERTs.
+    changes = commit_changes(
+        prev_state if prev_state is not None else empty,
+        [
+            (
+                v,
+                ms,
+                batch_df.filter(F.col("_commit_version") == v).select(*base_cols)
+                if v in in_batch
+                else empty,
+            )
+            for v, ms in todo
+        ],
+        key_columns,
+        prev_version=prev_applied if prev_applied >= 0 else None,
+    )
+    if on_changes is not None:
+        on_changes(changes, batch_id)
+    # last-change-wins per key across the batch's commits, then one
+    # apply — the streaming/merge.py algebra with the commit version
+    # as the sequence column
+    collapsed = collapse_changes(
+        changes, key_columns, "_commit_version"
+    ).drop(*_STAMPS)
+    if prev_state is None:
+        nxt = collapsed.filter(
+            F.col(EXPORT_CHANGE_TYPE_COLUMN) == INSERT
+        ).drop(EXPORT_CHANGE_TYPE_COLUMN)
+    else:
+        nxt = apply_changes(prev_state, collapsed, list(key_columns))
+    out_dir = write_state(nxt, state_path, batch_id)
+    # watermark LAST (after _SUCCESS): a crash in between replays
+    # the batch, which recomputes the identical state + marker
+    replace_text_atomic(child(out_dir, _APPLIED_MARKER), str(todo[-1][0]))
 
 
 __all__ = ["cdf_merge_batch"]

@@ -44,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyspark_unload_to_gcs_spark.session import session_memo
+from pyspark_unload_to_gcs_spark.session import barrier, session_memo
 from pyspark_unload_to_gcs_spark.storage import child, qualified_path
 
 _META_COLS = ("shingle_n", "n_buckets", "threshold_pct")
@@ -128,9 +128,9 @@ def containment_index_build(
         #
         .filter(F.size("__g") > 0)
     )
-    # one gram pass feeds grams + postings + df — checkpoint so the
+    # one gram pass feeds grams + postings + df — a barrier so the
     # interpreted-HOF build runs once (the containment_join rationale)
-    grams = grams.localCheckpoint(eager=False)
+    grams = barrier(grams, eager=False)
     if grams.isEmpty():
         raise ValueError(
             "containment_index_build: index corpus has no documents "
@@ -194,21 +194,17 @@ def containment_match_batch(
     meta = _read_meta(spark, idx)
     shingle_n, n_buckets, threshold_pct = (meta[c] for c in _META_COLS)
 
-    ga = (
-        gram_sets(
-            batch_df, id_column, text_column=text_column, shingle_n=shingle_n
-        )
+    # prefix + verify both consume the batch grams; one build
+    ga = barrier(
+        gram_sets(batch_df, id_column, text_column=text_column, shingle_n=shingle_n)
         .select(F.col(id_column).alias("id_a"), "__g")
-        .filter(F.size("__g") > 0)
-        # prefix + verify both consume the batch grams; one build
-        .localCheckpoint(eager=False)
+        .filter(F.size("__g") > 0),
+        eager=False,
     )
     df_tab = spark.read.parquet(_index_dir(idx, "gram_df"))
     # ga's id is already aliased id_a; two consumers (bucket probe +
     # candidate join)
-    prefix = rarest_prefix(ga, "id_a", df_tab, threshold_pct).localCheckpoint(
-        eager=False
-    )
+    prefix = barrier(rarest_prefix(ga, "id_a", df_tab, threshold_pct), eager=False)
 
     # partition pruning: the batch's prefix can only meet postings in
     # its own hash buckets — a bounded collect (≤ n_buckets rows, the
@@ -230,7 +226,7 @@ def containment_match_batch(
     # trick): 8-byte shuffle key, collisions only add candidates and
     # the exact verify below discards them.
     # A NORMAL micro-batch is small, and AQE can't size it through the
-    # localCheckpoint, so hint broadcast — but gate the hint on the
+    # barrier, so hint broadcast — but gate the hint on the
     # measured batch size: a replay/backfill batch covering
     # a big window would blow past maxBroadcastTableBytes or driver
     # memory and fail the stream, where size-based join selection would

@@ -46,6 +46,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyspark_unload_to_gcs_spark.session import barrier
 from pyspark_unload_to_gcs_spark.storage import child
 from pyspark_unload_to_gcs_spark.streaming.rollup import (
     read_slices,
@@ -166,7 +167,7 @@ def dedup_batch_indexed(
         else _first_seen_rows(collapsed, prev_keys, key_columns)
     )
     # two consumers (accepted write + key-version write) — one compute
-    admitted = admitted.localCheckpoint(eager=False)
+    admitted = barrier(admitted, eager=False)
     admitted.write.mode("overwrite").parquet(
         child(child(state_path, "accepted"), f"b={batch_id}")
     )

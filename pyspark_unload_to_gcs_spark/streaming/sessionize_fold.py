@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyspark_unload_to_gcs_spark.functions.timestamps import epoch_ms
+from pyspark_unload_to_gcs_spark.session import barrier
 from pyspark_unload_to_gcs_spark.storage import child, committed_dirs
 from pyspark_unload_to_gcs_spark.streaming.rollup import (
     read_slices,
@@ -155,22 +156,12 @@ def fold_batch(
         F.coalesce(F.col("__ev_max"), F.col("__st_last")).cast("long").alias("end_ms"),
         (F.col("__seg") == F.col("__max_seg")).alias("__open"),
     )
-    # two writes consume the same frame; materialize so the window/agg
-    # pipeline runs once. localCheckpoint, not persist: a
-    # CACHED plan's output partitioning is pinned to the static shuffle
-    # partition count (AQE leaves cached plans alone —
-    # canChangeCachedPlanOutputPartitioning default), so both writes
-    # emitted one tiny part-file per static partition (measured: 32
-    # files x ~2.5 KB per state version at sf0.1) and every read-back
-    # re-paid the listing + footer count (guide §6). The checkpoint
-    # materializes the AQE-FINAL plan — partitions coalesced by size —
-    # so file count tracks state bytes at every scale. Blocks are
-    # reference-managed (no unpersist bookkeeping; a foreachBatch epoch
-    # cannot leak a cached frame — the align.py localCheckpoint lore).
-    # An executor loss while the two writes run fails the batch instead
-    # of recomputing; the retry refolds from committed state, which the
-    # overwrite-by-version protocol is built for.
-    sessions = sessions.localCheckpoint()
+    # two writes consume the same frame; a barrier runs the window/agg
+    # pipeline once and keeps its AQE-coalesced partitions, so file
+    # count tracks state bytes. An executor loss while the two writes
+    # run fails the batch; the retry refolds from committed state, which
+    # the overwrite-by-version protocol is built for.
+    sessions = barrier(sessions, eager=True)
     closed = sessions.filter(~F.col("__open")).select(
         "user_id",
         "session_seq",

@@ -230,9 +230,10 @@ def test_match_against_index_rejects_mismatched_build_params(spark):
 
 
 def test_match_against_index_releases_batch_cache(spark):
-    """Per-micro-batch usage must not leak one persisted frame per epoch
-    (ADVICE r03): after the call returns, the batch signature frame is
-    no longer registered in the JVM's persistent-RDD map."""
+    """Per-micro-batch usage must not leak one persisted frame per epoch:
+    after the call returns, at most one new RDD is registered in the
+    JVM's persistent-RDD map — the barrier over the batch signatures,
+    whose blocks the returned frame reads and frees with it."""
     docs = spark.createDataFrame(
         [(i, f"token{i} alpha beta gamma delta") for i in range(10)],
         "doc_id long, text string",
@@ -245,8 +246,8 @@ def test_match_against_index_releases_batch_cache(spark):
     out = D.match_against_index(new, index, "doc_id", "text", jaccard_threshold=0.5)
     assert out.count() >= 1
     after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-    # the only new persistent entry allowed is the localCheckpoint of the
-    # (small) result itself — the batch signature cache must be gone
+    # the only new persistent entry allowed is the batch signatures'
+    # barrier, whose blocks the returned frame reads — no cached frame
     leaked = after - before
     assert len(leaked) <= 1, f"leaked persisted RDDs: {leaked}"
     index.unpersist()

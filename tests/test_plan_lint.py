@@ -22,6 +22,8 @@ from pathlib import Path
 
 import pytest
 
+from pyspark_unload_to_gcs_spark.operators import dedup as D
+from pyspark_unload_to_gcs_spark.registry_pipeline import _SPAN_K
 from tools.plan_digest import screened_queries
 
 # memoized-checkpoint queries render as 'Scan ExistingRDD' — lint their
@@ -66,3 +68,40 @@ def test_plan_lint_and_budget(spark, sf_dir, name):
         f"{name}: plan now has {bnlj} BroadcastNestedLoopJoins, budget is "
         f"{budget['bnlj']}"
     )
+
+
+def _pq_stage(spark, sf_dir):
+    from pyspark_unload_to_gcs_spark.operators import similarity as S
+    from pyspark_unload_to_gcs_spark.registry import _t
+    from pyspark_unload_to_gcs_spark.registry_pipeline import _pq_shared
+
+    _, centroids, codebooks, _ = _pq_shared(spark, sf_dir)
+    corpus = _t(spark, sf_dir, "embeddings").filter("vec_id != 0")
+    return S.pq_encode(S.ivf_assign(corpus, centroids), codebooks)
+
+
+def _docs(spark, sf_dir):
+    from pyspark_unload_to_gcs_spark.registry import _t
+
+    return _t(spark, sf_dir, "documents")
+
+
+# The frames that pass a session.barrier render downstream as
+# 'Scan ExistingRDD', so the registered plans no longer show their
+# stages; screen each one as it is before its barrier.
+_BEFORE_BARRIER = {
+    "simhash_projection": lambda s, d: D._simhash_stage(_docs(s, d), "doc_id", "text"),
+    "minhash_signatures": lambda s, d: D.minhash_signatures(_docs(s, d), "doc_id", "text"),
+    "signature_frame": lambda s, d: D.signature_frame(_docs(s, d), "doc_id", "text"),
+    "repeated_span_stage": lambda s, d: D._span_stage(_docs(s, d), "doc_id", "text", _SPAN_K),
+    "pq_encode": _pq_stage,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_BEFORE_BARRIER))
+def test_plan_lint_before_barrier(spark, sf_dir, name):
+    plan = _plan(_BEFORE_BARRIER[name](spark, sf_dir))
+    assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF in plan"
+    assert "CartesianProduct" not in plan, f"{name}: cartesian product in plan"
+    if name == "simhash_projection":
+        assert "ArrowEvalPython" in plan, f"{name}: the simhash UDF left Arrow"
