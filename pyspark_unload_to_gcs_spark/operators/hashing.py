@@ -21,7 +21,8 @@ ignore-list check degrades to a *substring* test against the raw CLI
 string (export.py:207-208 — the correct list test is overwritten), so
 with ignore "user_id updated_at" a column named "id" is wrongly
 excluded. This engine implements the intended list-membership semantics;
-``ignore_substring_compat=True`` reproduces the bug for parity testing.
+``hashed_columns(..., ignore_substring_compat=True)`` reproduces the bug
+for parity testing.
 """
 
 from __future__ import annotations
@@ -69,7 +70,6 @@ def content_hash(
     ignore_columns: Sequence[str] = (),
     *,
     method: str = "json",
-    ignore_substring_compat: bool = False,
 ) -> DataFrame:
     """Append an md5 fingerprint of every row's content.
 
@@ -78,9 +78,7 @@ def content_hash(
     """
     if not output_column:
         return df
-    cols = hashed_columns(
-        df.columns, ignore_columns, ignore_substring_compat=ignore_substring_compat
-    )
+    cols = hashed_columns(df.columns, ignore_columns)
     if method == "json":
         digest = F.md5(F.to_json(F.struct(*[F.col(c) for c in cols])))
     elif method == "concat":

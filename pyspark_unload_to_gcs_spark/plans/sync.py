@@ -12,7 +12,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from pyspark_unload_to_gcs_spark.config import SyncConfig, SyncResult, SyncType
 from pyspark_unload_to_gcs_spark.operators.cdc import (
@@ -27,6 +28,7 @@ from pyspark_unload_to_gcs_spark.operators.filters import (
 from pyspark_unload_to_gcs_spark.operators.guards import row_count_guard
 from pyspark_unload_to_gcs_spark.operators.hashing import content_hash
 from pyspark_unload_to_gcs_spark.operators.scd import latest_per_group
+from pyspark_unload_to_gcs_spark.sinks import writers
 from pyspark_unload_to_gcs_spark.sinks.writers import write_export
 from pyspark_unload_to_gcs_spark.sources.catalog import (
     current_timestamp_ms,
@@ -176,6 +178,30 @@ def _plan_cdc(spark: SparkSession, config: SyncConfig) -> PlannedSync:
     return PlannedSync(df=df, description=desc, change_capture_sync_last_commit_ms=end_ms)
 
 
+def export_frame(df: DataFrame, config: SyncConfig) -> tuple[str, int]:
+    """The export tail shared by ``run_sync`` and the streaming sink
+    (``streaming.export.export_batch``): content-hash ``df`` per
+    ``config``, write it with ``write_export``, and write the
+    ``_MANIFEST.json`` when ``emit_manifest`` is set. Returns the
+    output URI and the exported row count.
+
+    The row count rides on the write as an ``Observation``: exported-row
+    accounting with NO second scan (the reference's guard does a full
+    pre-count; export.py:38). ``content_hash`` and ``write_export`` are
+    resolved as this module's globals and ``write_manifest`` on
+    ``sinks.writers`` at call time, so a layer tracer that replaces
+    those module attributes wraps every export."""
+    obs = Observation()
+    hashed = content_hash(
+        df, config.computed_hash_column, config.computed_hash_ignore_columns
+    ).observe(obs, F.count(F.lit(1)).alias("rows"))
+    uri = write_export(hashed, config)
+    rows = obs.get["rows"]
+    if config.emit_manifest:
+        writers.write_manifest(uri, row_count=rows)
+    return uri, rows
+
+
 def run_sync(spark: SparkSession, config: SyncConfig) -> SyncResult:
     """Full pipeline: guard -> plan -> hash -> write -> checkpoint
     (the reference's ``__main__`` flow, export.py:325-337)."""
@@ -186,23 +212,7 @@ def run_sync(spark: SparkSession, config: SyncConfig) -> SyncResult:
         # limit on the wrong quantity for filtered syncs); we guard the
         # planned result, which is what actually gets exported.
         row_count_guard(planned.df, config.validate_row_count)
-    df = content_hash(
-        planned.df, config.computed_hash_column, config.computed_hash_ignore_columns
-    )
-    # Row count piggybacked on the write itself via an Observation —
-    # exported-row accounting with NO second scan (the reference's guard
-    # does a full pre-count; export.py:38).
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    obs = Observation()
-    df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-    uri = write_export(df, config)
-    rows_written = obs.get["rows"]
-    if config.emit_manifest:
-        from pyspark_unload_to_gcs_spark.sinks.writers import write_manifest
-
-        write_manifest(uri, row_count=rows_written)
+    uri, rows_written = export_frame(planned.df, config)
     return SyncResult(
         plan_description=planned.description,
         change_capture_sync_last_commit_ms=planned.change_capture_sync_last_commit_ms,

@@ -92,9 +92,8 @@ def time_based_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     granularity (cutoff=2024-01-10T00:00:00Z ms, now=2024-01-21, delay=1d
     -> upper bound 2024-01-20T00:00:00 inclusive at second granularity).
     The events fixture spans Jan 2024, so this selects a nontrivial
-    strict subset with rows outside the window on BOTH sides (the r01
-    verdict flagged the previous Mar-Sep window as a vacuous 0-row
-    pass)."""
+    strict subset with rows outside the window on BOTH sides (a window
+    outside the data would pass vacuously with 0 rows)."""
     df = time_window_filter(
         _t(spark, sf_dir, "events"),
         "ts",
@@ -396,16 +395,13 @@ def _load_extensions() -> None:
 
 # The driver's correctness pass covers the FIRST 50 registered queries,
 # so ``_PRIORITY`` (exactly 50 names) decides which rows get driver
-# evidence; every other row keeps registration order after it. The
-# rotation is ledger-driven: tools/coverage_ledger.py derives each
-# row's driver evidence from the checked-in CORRECTNESS_r*.json
-# artifacts, and tests/test_coverage_rotation.py asserts that every
-# registered query is ledger-green or inside the window, so no row
-# escapes external verification. The eight reference-parity core rows
-# stay pinned at the front. A new row goes straight to ``@register``
-# and into ``_PRIORITY`` until it has evidence, displacing the oldest
-# green; all rows stay locally oracle-verified by
-# tests/test_oracle_parity.py.
+# evidence; every other row keeps registration order after it.
+# tools/coverage_ledger.py derives each row's evidence from the
+# CORRECTNESS_r*.json artifacts and tests/test_coverage_rotation.py
+# asserts every registered query is ledger-green or inside the window.
+# The eight reference-parity core rows stay at the front; a new row
+# joins ``_PRIORITY`` until it has evidence, displacing the oldest
+# green. tests/test_oracle_parity.py checks every row locally.
 _PRIORITY: tuple[str, ...] = (
     # 1. reference-parity core
     "full_sync_non_null",

@@ -1,10 +1,10 @@
 """Driver-facing PINS for production-path behavior that was previously
-rows-only (VERDICT r04 #5/#6/#7): recall pins for the hash-seeded
+rows-only: recall pins for the hash-seeded
 near-dedup paths, a batch replay of the streaming token-budget
 admission, and the auto-k (scale-safe) SemDeDup configuration.
 
-The recall-pin trick (same one that made the ANN family driver-red-able
-in r04): the production operator's output can't be replayed in SQL
+The recall-pin trick (the one the ANN family's driver rows use): the
+production operator's output can't be replayed in SQL
 (xxhash64 seeds aren't portable), but its CARDINALITY against the
 brute-force-oracled exact pair set can — at fixture scale the
 production path provably finds every qualifying pair (miss probability
@@ -23,7 +23,7 @@ from pyspark_unload_to_gcs_spark.operators import dedup as D
 from pyspark_unload_to_gcs_spark.operators import similarity as S
 from pyspark_unload_to_gcs_spark.operators import text as T
 from pyspark_unload_to_gcs_spark.registry import _t, register
-from pyspark_unload_to_gcs_spark.session import barrier, session_memo
+from pyspark_unload_to_gcs_spark.session import barrier, scratch_dir, session_memo
 from pyspark_unload_to_gcs_spark.registry_extensions import (
     _docs,
     _DOT,
@@ -72,8 +72,7 @@ def near_dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # barrier the band-join+verify subtree executes once per branch
     # (exchange reuse is a plan-cache lookup, not a guarantee — the
     # _shared_minhash_pairs lore). Lazily checkpoint the small pair
-    # frame so it materializes once at the row's action (opt r16; the
-    # interleaved A/B on the sibling fuzzy row read min 2.40 -> 1.64 s).
+    # frame so it materializes once at the row's action.
     # exact is already eagerly checkpointed by _shared_exact_pairs.
     prod = barrier(
         _shared_minhash_pairs(spark, sf_dir).select("id_a", "id_b"), eager=False
@@ -109,12 +108,12 @@ def near_dedup_ngram_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair is (1-J^2)^16 <= 2.4e-5 at the boundary; the Spark exact side
     re-bands the shared signature cache at r=1 with a binomial
     >=10-of-32 slot pre-filter (P[Binom(32, 0.7) < 10] ~ 1e-6), the
-    same construction the r4 verdict validated for the 0.8 family.
+    same construction as the 0.8 family's pin.
     The DuckDB side brute-forces all pairs at 0.7."""
     docs = _docs(spark, sf_dir)
     # both pair frames feed two branches each (own count + the semi
     # join) — lazily checkpoint so the re-band + verify runs once per
-    # frame (opt r16, same A/B evidence as the fuzzy sibling row)
+    # frame
     prod = barrier(
         D.minhash_candidate_pairs(
             docs,
@@ -186,9 +185,7 @@ def fuzzy_entity_join_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     right = docs.filter(F.col("doc_id") % 3 != 0)
     sig = _shared_fuzzy_signatures(spark, sf_dir)
     # both pair frames feed two branches each — lazily checkpoint so
-    # the re-band + verify runs once per frame (opt r16: interleaved
-    # A/B on this row read min 2.40 -> 1.64 s, every pair faster,
-    # values collect-equal)
+    # the re-band + verify runs once per frame
     prod = barrier(
         fuzzy_text_join(left, right, jaccard_threshold=0.8, signatures=sig).select(
             "left_id", "right_id"
@@ -240,7 +237,7 @@ def events_approx_users_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     The approx arm calls THE PRODUCTION QUERY itself
     (registry_analytics.events_approx_users) — a pin that recomputed
     its own sketch would stay green while the production rsd or column
-    drifted (r05 review). The exact arm is a distinct-first plain
+    drifted. The exact arm is a distinct-first plain
     count (no Expand); the full-outer join turns a group present on
     only one side into a NULL -> FALSE (or an extra row), either of
     which breaks the driver hash."""
@@ -290,8 +287,8 @@ def rolling_actives_approx_accuracy(spark: SparkSession, sf_dir: str) -> DataFra
     constant TRUE. A day on only one side — the sketch path emitting a
     spurious window-end day, or missing an observed one — survives the
     join as an extra row or a NULL -> FALSE, either of which breaks
-    the driver hash (r05 review: the earlier inner join silently
-    dropped extra approx days). At fixture cardinalities the sketches
+    the driver hash (an inner join would silently drop extra approx
+    days). At fixture cardinalities the sketches
     are in sparse mode and exact; 5% covers dense-mode drift at scale
     without flaking."""
     from pyspark_unload_to_gcs_spark.operators.product import (
@@ -356,11 +353,11 @@ WHERE p.cum <= {_STREAM_BUDGET} - st.spent_before
 def token_budget_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING token-budget admission (streaming/budget.py
     ``admit_batch``), driver-faced as a deterministic batch replay
-    (VERDICT r04 #6 — its batch twin ``token_budget_select`` is green
-    but the greedy prefix-cut streaming semantics were pytest-only):
+    (its batch twin ``token_budget_select`` pins the batch cut; this
+    row pins the greedy per-batch prefix-cut streaming semantics):
     the documents table is split into 4 micro-batches (doc_id % 4),
     each folded through the REAL foreachBatch admission function in
-    batch order against versioned parquet state in a temp dir, and the
+    batch order against versioned parquet state in a scratch dir, and the
     final admitted corpus is returned. The oracle replays the exact
     semantics — per-batch prefix cut over the id-ordered cumulative
     token sum, budget spent only by admitted tokens — as one recursive
@@ -452,8 +449,7 @@ def semantic_dedup_auto_with_method(
 
 
 # ---------------------------------------------------------------------------
-# simhash recall pin (VERDICT r05 #2 — completes the recall-pin family;
-# the r6 window carries no rows-only slot)
+# simhash recall pin (completes the recall-pin family)
 # ---------------------------------------------------------------------------
 
 _SIMHASH_RECALL_SQL = """
@@ -470,7 +466,7 @@ def near_dedup_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall/precision pin for the PRODUCTION simhash path
     (``simhash_dedup``, hamming<=3 over 64-bit Charikar simhash with
     4-band pigeonhole candidates) — the last rows-only family member
-    without one (VERDICT r05 #2). The simhash values are blake2b-seeded
+    without one. The simhash values are blake2b-seeded
     and not SQL-replayable, so the pin plants structurally-guaranteed
     pairs instead of brute-forcing distances:
 
@@ -546,8 +542,7 @@ def near_dedup_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# writer-path roundtrip oracle (VERDICT r05 #5 — K1/K3 bytes-on-disk
-# under a driver row instead of local-test-only)
+# writer-path roundtrip oracle (K1/K3 bytes-on-disk under a driver row)
 # ---------------------------------------------------------------------------
 
 _EXPORT_ROUNDTRIP_SQL = """
@@ -565,7 +560,7 @@ WHERE c_name IS NOT NULL AND c_name != ''
 @register("export_roundtrip_hash", oracle=_EXPORT_ROUNDTRIP_SQL)
 def export_roundtrip_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's actual end-to-end job under a driver oracle
-    (VERDICT r05 #5; reference export.py:193-233): full sync with
+    (reference export.py:193-233): full sync with
     non-null filter + json-method content hash, written through
     ``write_export`` as gzip JSON-lines with maxRecordsPerFile (K1+K3),
     then read BACK from the bytes on disk and compared against a DuckDB
@@ -576,8 +571,6 @@ def export_roundtrip_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (see content_hash_json). The write is memoized per (session,
     sf_dir): eager side effect, one write per session, plan probes
     reread the same files."""
-    import tempfile
-
     from pyspark_unload_to_gcs_spark.config import ExportFormat, SyncConfig
     from pyspark_unload_to_gcs_spark.operators.filters import non_null_filter
     from pyspark_unload_to_gcs_spark.operators.hashing import content_hash
@@ -589,7 +582,7 @@ def export_roundtrip_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["c_name", "c_mktsegment"],
         )
         df = content_hash(df, "row_hash", method="json")
-        out_dir = tempfile.mkdtemp(prefix="export_roundtrip_")
+        out_dir = scratch_dir(spark, "export_roundtrip_")
         write_export(
             df,
             SyncConfig(

@@ -24,7 +24,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark_unload_to_gcs_spark.session import barrier, session_memo
+from pyspark_unload_to_gcs_spark.session import barrier, scratch_dir, session_memo
 
 from pyspark_unload_to_gcs_spark.registry import _t, register
 
@@ -1487,8 +1487,6 @@ def export_manifest_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns where Spark/DuckDB JSON serialization is byte-identical
     (content_hash_json precedent). Write memoized per (session,
     sf_dir)."""
-    import tempfile
-
     from pyspark_unload_to_gcs_spark.config import ExportFormat, SyncConfig
     from pyspark_unload_to_gcs_spark.operators.filters import non_null_filter
     from pyspark_unload_to_gcs_spark.operators.hashing import content_hash
@@ -1506,7 +1504,7 @@ def export_manifest_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["o_orderstatus", "o_orderpriority"],
         )
         df = content_hash(df, "row_hash", method="json")
-        out_dir = tempfile.mkdtemp(prefix="export_manifest_roundtrip_")
+        out_dir = scratch_dir(spark, "export_manifest_roundtrip_")
         uri = f"file:{out_dir}"
         write_export(
             df,
@@ -1553,12 +1551,10 @@ def xml_ingest_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-hashed against DuckDB reading the original parquet — element
     escaping, rowTag framing, and schema projection all sit inside the
     checked path. Write memoized per (session, sf_dir)."""
-    import tempfile
-
     from pyspark_unload_to_gcs_spark.sources.catalog import load_xml
 
     def build():
-        out_dir = tempfile.mkdtemp(prefix="xml_roundtrip_")
+        out_dir = scratch_dir(spark, "xml_roundtrip_")
         (
             _t(spark, sf_dir, "nation")
             .select(
@@ -1857,17 +1853,16 @@ def binaryfile_wav_ingest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     row additionally proves the FILE path: bytes survive the
     write/list/read roundtrip bit-exactly or the stats diverge.
 
-    FIXTURE-BUILD FS ASSUMPTION: the executor-side
-    ``open()`` writes land in a driver-created ``tempfile.mkdtemp``
-    directory, which executors can only see when they share the
-    driver's filesystem — true in local mode (this harness) but not on
-    a multi-node cluster. The guard below refuses to build the fixture
-    off local mode; at scale the same distributed write targets a
-    shared URI (HDFS/GCS/NFS) through the Hadoop FileSystem API instead
-    of a local tempdir. The INGEST side (binaryFile + pathGlobFilter)
-    is URI-agnostic already."""
+    FIXTURE-BUILD FS ASSUMPTION: the executor-side ``open()`` writes
+    land in a driver-local ``session.scratch_dir`` directory (written
+    once per session, removed with the session), which executors can
+    only see when they share the driver's filesystem — true in local
+    mode but not on a multi-node cluster. The guard below refuses to
+    build the fixture off local mode; at scale the same distributed
+    write targets a shared URI (HDFS/GCS/NFS) through the Hadoop
+    FileSystem API instead. The INGEST side (binaryFile +
+    pathGlobFilter) is URI-agnostic already."""
     import os
-    import tempfile
 
     from pyspark_unload_to_gcs_spark.operators.multimodal import (
         decode_wav,
@@ -1879,11 +1874,11 @@ def binaryfile_wav_ingest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not master.startswith("local"):
             raise RuntimeError(
                 "binaryfile_wav_ingest builds its WAV fixture in a "
-                "driver-local tempdir, which executors cannot reach on "
+                "driver-local scratch dir, which executors cannot reach on "
                 f"master={master!r}; point the fixture writer at a "
                 "shared filesystem URI before running off local mode"
             )
-        out_dir = tempfile.mkdtemp(prefix="binaryfile_wav_")
+        out_dir = scratch_dir(spark, "binaryfile_wav_")
         docs = (
             _t(spark, sf_dir, "documents")
             .select("doc_id")
@@ -1942,10 +1937,8 @@ def orc_ingest_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     type mapping (BIGINT/VARCHAR/DOUBLE), compression, and the
     vectorized ORC reader all sit inside the value-hashed path. Write
     memoized per (session, sf_dir)."""
-    import tempfile
-
     def build():
-        out_dir = tempfile.mkdtemp(prefix="orc_roundtrip_")
+        out_dir = scratch_dir(spark, "orc_roundtrip_")
         (
             _t(spark, sf_dir, "customer")
             .select(
@@ -2417,7 +2410,7 @@ def pq_index_incremental_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the warmup (billed, not hidden) and by
     tests/test_asof.py::test_pq_index_append_modes_and_untouched_cells.
 
-    Fixture builds in a driver-local tempdir (local-mode harness; at
+    Fixture builds in a driver-local session scratch dir (local mode; at
     scale the index path is a shared URI — the write/append API is
     path-agnostic)."""
     from pyspark_unload_to_gcs_spark.operators import similarity as S
@@ -2456,8 +2449,6 @@ def _pq_incr_base(spark: SparkSession, sf_dir: str):
     build — so it bills here, visibly, as warmup_pq_incr_base_sec
     (billed in the row, it cost ~7-13 s per bench loop). The row itself times what a live index repeats
     per arrival: single-vector append-only + serve."""
-    import tempfile
-
     from pyspark_unload_to_gcs_spark.operators import similarity as S
 
     def build():
@@ -2475,7 +2466,7 @@ def _pq_incr_base(spark: SparkSession, sf_dir: str):
         codebooks = S.pq_codebooks_from_sample(
             base, m=_PQ_M, k=_PQ_K, seeds=centroids
         )
-        path = tempfile.mkdtemp(prefix="pq_index_incr_") + "/index"
+        path = scratch_dir(spark, "pq_index_incr_") + "/index"
         S.pq_index_write(base, path, centroids, codebooks)
         # arrow arm bit-equal to fold (pinned in tests/test_asof.py)
         S.pq_index_append(
@@ -2644,9 +2635,7 @@ def _versioned_orders(spark: SparkSession, sf_dir: str) -> str:
     from pyspark_unload_to_gcs_spark.sources.versioned import commit_version
 
     def build():
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="versioned_orders_") + "/t"
+        path = scratch_dir(spark, "versioned_orders_") + "/t"
         for snapshot, ms in _orders_commits(spark, sf_dir):
             commit_version(snapshot, path, ms)
         return path
@@ -2675,14 +2664,12 @@ def _drain_commit_stream(spark: SparkSession, path: str, fold, name: str) -> Non
     the query — memoizing then would hand back a partially-drained
     output as the query result — so a slow drain raises,
     surfacing the stream's own error first."""
-    import tempfile
-
     from pyspark_unload_to_gcs_spark.streaming.rollup import start_fold
 
     _register_versioned_commits(spark)
     stream = spark.readStream.format("versioned_commits").option("path", path).load()
     q = start_fold(
-        stream, fold, checkpoint_dir=tempfile.mkdtemp(prefix=f"{name}_ckpt_")
+        stream, fold, checkpoint_dir=scratch_dir(spark, f"{name}_ckpt_")
     )
     if not q.awaitTermination(300):
         exc = q.exception()
@@ -2876,12 +2863,10 @@ def versioned_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL-padding, and the stream runner itself all sit inside the
     value hash. The oracle enumerates the three snapshots in closed
     form from orders."""
-    import tempfile
-
     path = _versioned_orders(spark, sf_dir)
 
     def build():
-        out_dir = tempfile.mkdtemp(prefix="versioned_stream_replay_") + "/rows"
+        out_dir = scratch_dir(spark, "versioned_stream_replay_") + "/rows"
         _drain_commit_stream(
             spark,
             path,
@@ -2921,7 +2906,6 @@ def versioned_cdf_merge_stream_replay_q(spark: SparkSession, sf_dir: str) -> Dat
     orders. Offset handling, the CDF derivation, the merge algebra,
     and the stream runner all sit inside the value hash."""
     import functools
-    import tempfile
 
     from pyspark_unload_to_gcs_spark.streaming.cdc_stream import cdf_merge_batch
     from pyspark_unload_to_gcs_spark.streaming.rollup import read_state
@@ -2929,7 +2913,7 @@ def versioned_cdf_merge_stream_replay_q(spark: SparkSession, sf_dir: str) -> Dat
     path = _versioned_orders(spark, sf_dir)
 
     def build():
-        state = tempfile.mkdtemp(prefix="versioned_cdf_merge_state_")
+        state = scratch_dir(spark, "versioned_cdf_merge_state_")
         _drain_commit_stream(
             spark,
             path,
@@ -3110,8 +3094,6 @@ def scan_prune_preflight_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputation; a stats misread or an off-by-one in the overlap
     rule flips a boolean. This is the 100 TB layout pre-flight: run it
     on a candidate partitioning BEFORE committing the rewrite."""
-    import tempfile
-
     from pyspark_unload_to_gcs_spark.operators.diagnostics import scan_prune_plan
 
     def build():
@@ -3122,7 +3104,7 @@ def scan_prune_preflight_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         # of partition dirs at x10 (fixture cost, not operator cost)
         max_key = orders.agg(F.max("o_orderkey")).first()[0]
         width = (int(max_key) + 8) // 8
-        path = tempfile.mkdtemp(prefix="scan_prune_") + "/t"
+        path = scratch_dir(spark, "scan_prune_") + "/t"
         (
             orders
             .select(
@@ -3184,9 +3166,7 @@ def dsir_incremental_scores_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def build():
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="dsir_ratio_") + "/t"
+        path = scratch_dir(spark, "dsir_ratio_") + "/t"
         dsir_ratio_write(
             _t(spark, sf_dir, "documents"),
             F.col("lang") == "fr",
@@ -3978,9 +3958,7 @@ def _rtbf_table(spark: SparkSession, sf_dir: str) -> str:
     from pyspark_unload_to_gcs_spark.sources.versioned import commit_version
 
     def build():
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="rtbf_orders_") + "/t"
+        path = scratch_dir(spark, "rtbf_orders_") + "/t"
         base = _t(spark, sf_dir, "orders").select(
             "o_orderkey",
             "o_custkey",
@@ -5021,8 +4999,6 @@ def _containment_frozen_index(spark: SparkSession, sf_dir: str) -> str:
     decontamination stream the index freezes once and every batch
     joins against it — re-freezing it inside the replay row was 20+ s
     of one-time cost billed per bench loop (the pq_index precedent)."""
-    import tempfile
-
     from pyspark_unload_to_gcs_spark.streaming.containment import (
         containment_index_build,
     )
@@ -5030,7 +5006,7 @@ def _containment_frozen_index(spark: SparkSession, sf_dir: str) -> str:
     def build():
         docs = _contain_docs(spark, sf_dir)
         index = docs.filter(F.col("doc_id") % 5 != 4)
-        path = tempfile.mkdtemp(prefix="containment_frozen_index_")
+        path = scratch_dir(spark, "containment_frozen_index_")
         containment_index_build(
             index, "doc_id", path, shingle_n=3, threshold_pct=80
         )
@@ -6722,12 +6698,10 @@ def _delta_orders(spark: SparkSession, sf_dir: str) -> str:
     per session): each later commit overwrites the one before. A
     parquet checkpoint is written at v1 so every snapshot/feed row
     ALSO exercises the checkpoint replay path."""
-    import tempfile
-
     from pyspark_unload_to_gcs_spark.sources import delta_log as DL
 
     def build():
-        path = tempfile.mkdtemp(prefix="delta_orders_") + "/t"
+        path = scratch_dir(spark, "delta_orders_") + "/t"
         for i, (snapshot, ms) in enumerate(_orders_commits(spark, sf_dir)):
             mode = "overwrite" if i else "append"
             DL.write_delta_commit(snapshot, path, commit_ms=ms, mode=mode)

@@ -9,14 +9,13 @@ tests in tests/test_bucketed.py and tests/test_layout.py).
 
 from __future__ import annotations
 
-import tempfile
 import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_unload_to_gcs_spark.registry import _t, register
-from pyspark_unload_to_gcs_spark.session import session_memo
+from pyspark_unload_to_gcs_spark.session import scratch_dir, session_memo
 from pyspark_unload_to_gcs_spark.operators import similarity as S
 
 # ---------------------------------------------------------------------------
@@ -28,12 +27,17 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Write orders + customer as bucketed catalog tables ONCE per
     (session, sf_dir) — modeling the real flow where the bucketed write
     is a one-time layout cost amortized over every later join. Tables
-    are external (path-backed) in a session temp dir."""
+    are external (path-backed) in a ``session.scratch_dir`` directory,
+    whose files are removed with the session. The catalog is shared
+    with ``newSession()`` siblings, so the table names come from that
+    directory: a sibling's build writes its own tables instead of
+    re-pointing this session's at files that go away with the
+    sibling."""
     def build():
         from pyspark_unload_to_gcs_spark.sources.bucketed import write_bucketed
 
-        tag = zlib.crc32(sf_dir.encode()) & 0xFFFFFFFF
-        base = tempfile.mkdtemp(prefix="eng_bucketed_")
+        base = scratch_dir(spark, "eng_bucketed_")
+        tag = zlib.crc32(base.encode()) & 0xFFFFFFFF
         orders_t = f"eng_orders_by_custkey_{tag:08x}"
         customer_t = f"eng_customer_by_custkey_{tag:08x}"
         write_bucketed(

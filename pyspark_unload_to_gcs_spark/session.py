@@ -8,6 +8,9 @@ test runs. Everything here is plain public Spark configuration.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+import weakref
 from collections.abc import Callable, Hashable
 from typing import TypeVar
 
@@ -36,6 +39,29 @@ def session_memo(
     if key not in memo:
         memo[key] = build()
     return memo[key]
+
+
+def scratch_dir(spark: SparkSession, prefix: str) -> str:
+    """Return a new, empty local directory named ``<prefix>...`` under
+    this session's scratch root: the one place in the package that
+    creates a temporary directory (fixture tables, replay state, stream
+    checkpoints and outputs, export round-trips).
+
+    Lifetime rule: the root is made on a session's first call (under
+    ``TMPDIR``, memoized through ``session_memo``) and removed with
+    everything in it when the ``SparkSession`` object is collected, or
+    at interpreter exit, whichever comes first. A frame that reads a
+    scratch directory holds its session, so the files outlive every
+    frame that can read them; a ``newSession()`` sibling gets its own
+    root, which goes away with the sibling."""
+
+    def make_root() -> str:
+        root = tempfile.mkdtemp(prefix="pyspark_gcs_scratch_")
+        weakref.finalize(spark, shutil.rmtree, root, True)
+        return root
+
+    root = session_memo(spark, "scratch_root", make_root)
+    return tempfile.mkdtemp(prefix=prefix, dir=root)
 
 
 def barrier(df: DataFrame, *, eager: bool) -> DataFrame:
@@ -111,12 +137,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # local[N] runs the whole engine in the driver JVM; 16g (on a
         # 128 GiB bench box, env-overridable for small hosts) gives the
-        # 200+-query loop headroom for persisted family fixtures +
-        # broadcast blocks without old-gen churn. Measured r15: the
-        # 250 vs 350 s same-code bench spread is NOT heap (a spike
-        # sitting showed guest load 4-5 with zero in-guest processes —
-        # host CPU steal); the larger heap is cheap insurance, not the
-        # variance fix.
+        # 200+-query loop headroom for family fixtures and broadcast
+        # blocks without old-gen churn. Heap size does not explain
+        # same-code bench spread (that is host CPU steal).
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))

@@ -14,12 +14,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field, replace
 
-from pyspark.sql import DataFrame, Observation
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from pyspark_unload_to_gcs_spark.config import SyncConfig
-from pyspark_unload_to_gcs_spark.operators.hashing import content_hash
-from pyspark_unload_to_gcs_spark.sinks.writers import write_export, write_manifest
+from pyspark_unload_to_gcs_spark.plans.sync import export_frame
 
 
 @dataclass
@@ -44,18 +42,11 @@ def export_batch(
     ``<output_uri>/batch=<batch_id>`` with every other setting of
     ``config`` (format, compression, partitioning, file sizing), plus a
     ``_MANIFEST.json`` with the batch's row count when ``emit_manifest``
-    is set. The row count rides on the write as an ``Observation`` (as
-    in ``plans.sync.run_sync``), so ``stats`` gets real counts with no
-    extra count job."""
-    obs = Observation()
-    hashed = content_hash(
-        batch_df, config.computed_hash_column, config.computed_hash_ignore_columns
-    ).observe(obs, F.count(F.lit(1)).alias("rows"))
+    is set, through the same export tail as ``plans.sync.run_sync``
+    (``plans.sync.export_frame``), so ``stats`` gets real counts with
+    no extra count job."""
     batch_config = replace(
         config, output_uri=f"{config.output_uri.rstrip('/')}/batch={batch_id}"
     )
-    write_export(hashed, batch_config)
-    rows = obs.get["rows"]
-    if batch_config.emit_manifest:
-        write_manifest(batch_config.output_uri, row_count=rows)
+    _uri, rows = export_frame(batch_df, batch_config)
     stats.batches.append((batch_id, rows))

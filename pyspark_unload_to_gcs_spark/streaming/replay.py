@@ -3,24 +3,25 @@
 The streaming twins' fold functions (token-budget admission, MERGE
 snapshot maintenance, incremental rollup) are exercised by registered
 queries that replay a fixed batch sequence against versioned parquet
-state in a temp dir: the same fold a live stream runs under
+state in a scratch dir: the same fold a live stream runs under
 ``rollup.start_fold``, called here once per batch, committing through
 the same ``rollup.write_state``. The folds are EAGER side effects, so a replay runs
 once per (session, key) and its read-back frame is memoized through
 ``session.session_memo``: plan-only probes (test_plan_lint, the plan
-digest) reread the same state instead of re-folding into a fresh temp
-dir. One entry per session, dropped with it; the temp dir lives as
-long as the entry, because the memoized DataFrame reads it lazily.
+digest) reread the same state instead of re-folding into a fresh
+directory. One entry per session, dropped with it. The state lives in
+a ``session.scratch_dir`` directory, removed when the session is
+collected or at interpreter exit; the memoized DataFrame reads it
+lazily and holds the session, so the files outlive every reader.
 """
 
 from __future__ import annotations
 
-import tempfile
 from collections.abc import Callable, Hashable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-from pyspark_unload_to_gcs_spark.session import session_memo
+from pyspark_unload_to_gcs_spark.session import scratch_dir, session_memo
 
 
 def replay_batches(
@@ -46,7 +47,7 @@ def replay_batches(
     )
 
     def build() -> DataFrame:
-        state = tempfile.mkdtemp(prefix=prefix)
+        state = scratch_dir(spark, prefix)
         with replay_readback_memo():
             for b, frame in enumerate(batches):
                 fold_one(frame, b, state)

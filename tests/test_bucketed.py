@@ -6,8 +6,12 @@ Spark would otherwise broadcast the small side (also shuffle-free, but
 not the layout being demonstrated).
 """
 
+import gc
+import os
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.session import _monkey_patch_RDD
 
 from pyspark_unload_to_gcs_spark.sources.bucketed import colocated_join, write_bucketed
 from pyspark_unload_to_gcs_spark.sources.catalog import load_parquet
@@ -99,3 +103,31 @@ def test_write_bucketed_validates_arguments(spark, sf_dir, tmp_path):
     with pytest.raises(ValueError, match="bucket_columns"):
         write_bucketed(df, "t_ok", bucket_columns=[],
                        num_buckets=2, path=str(tmp_path / "x"))
+
+
+def test_sibling_fixture_build_leaves_this_sessions_tables(spark, sf_dir):
+    """The catalog is shared with ``newSession()`` siblings but each
+    session's bucketed fixture files live in its own scratch root: a
+    sibling's build must write its own tables, so dropping the sibling
+    (which removes its files) leaves this session's row readable."""
+    from pyspark_unload_to_gcs_spark import registry_scale as scale
+    from pyspark_unload_to_gcs_spark.session import scratch_dir
+
+    want = sorted(map(tuple, scale.bucketed_colocated_join(spark, sf_dir).collect()))
+    mine = scale._bucketed_tables(spark, sf_dir)
+    sibling = spark.newSession()
+    _monkey_patch_RDD(spark)  # every SparkSession constructor re-points RDD.toDF
+    theirs = scale._bucketed_tables(sibling, sf_dir)
+    sibling_root = os.path.dirname(scratch_dir(sibling, "probe_"))
+    assert set(theirs).isdisjoint(mine)
+    del sibling
+    gc.collect()
+    assert not os.path.exists(sibling_root)
+    try:
+        for table in mine:  # drop this session's cached table relations
+            spark.catalog.refreshTable(table)
+        got = sorted(map(tuple, scale.bucketed_colocated_join(spark, sf_dir).collect()))
+        assert got == want and want
+    finally:
+        for table in theirs:
+            spark.sql(f"DROP TABLE IF EXISTS {table}")

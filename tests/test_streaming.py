@@ -1216,15 +1216,13 @@ def test_incremental_sessionize_reads_back_on_uri_scheme_path(spark, tmp_path):
     assert fold_all("file:" + str(tmp_path / "uri_state")) == plain
 
 
-def test_incremental_sessionize_randomized_splits_match_batch(spark):
+def test_incremental_sessionize_randomized_splits_match_batch(spark, tmp_path):
     """Seeded randomized stress for the fold semantics: random event
     multisets (duplicate timestamps, ties exactly at the gap boundary,
     users missing from middle batches) split into a random number of
     time-ordered batches must always refold to the batch answer. Same
     seeded-case style as the fuzz oracle harness — deterministic, no
     flaky search."""
-    import tempfile
-
     import numpy as np
 
     from pyspark_unload_to_gcs_spark.operators.sessions import session_stats
@@ -1251,7 +1249,7 @@ def test_incremental_sessionize_randomized_splits_match_batch(spark):
         )
         n_batches = int(rng.randint(1, 5))
         cuts = sorted(rng.choice([r[1] for r in rows], size=n_batches - 1).tolist()) if n_batches > 1 else []
-        state = tempfile.mkdtemp(prefix=f"sess_rand_{seed}_")
+        state = str(tmp_path / f"sess_rand_{seed}")
         lo = None
         ms = F.unix_millis(F.col("ts"))
         for b in range(n_batches):
