@@ -31,14 +31,19 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyspark_unload_to_gcs_spark.operators.pair_join import (
+    blocked_pairs,
+    drop_later,
+    require_build,
+)
 from pyspark_unload_to_gcs_spark.operators.text import normalize_text, tokens_col
 from pyspark_unload_to_gcs_spark.session import barrier
 
 
 # Analyzed-plan node names that keep the df.rdd partition probe cheap: a
 # scan plus narrow row-level ops. Anything else (Join/Aggregate/Window/
-# Generate/...) means the probe would plan — and under cached-branch
-# races potentially execute — the whole subtree (lore #4/#10).
+# Generate/...) means the probe would plan — and, while a cached branch
+# of the same plan is being built, possibly execute — the whole subtree.
 _NARROW_PLAN_NODES = frozenset(
     {
         "LogicalRelation",
@@ -73,13 +78,13 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     a complex plan has shuffles of its own, so its parallelism is set
     by ``spark.sql.shuffle.partitions``, not the input layout.
 
-    The gate WALKS the JVM logical-plan tree by node class name
-    (ADVICE r04: the previous rendered-tree string parse produced
-    bogus tokens for string literals containing newlines, silently
-    disabling the repartition), INCLUDING expression-held subquery
-    plans (``subqueries()``): an IN/scalar subquery's Aggregate/Join
-    lives inside the expression, not in ``children()``, and the probe
-    would plan that whole subtree too (r05 review)."""
+    The gate WALKS the JVM logical-plan tree by node class name (a
+    parse of the rendered tree string reads bogus tokens from string
+    literals that contain newlines, which would silently disable the
+    repartition), INCLUDING expression-held subquery plans
+    (``subqueries()``): an IN/scalar subquery's Aggregate/Join lives
+    inside the expression, not in ``children()``, and the probe would
+    plan that whole subtree too."""
     target = df.sparkSession.sparkContext.defaultParallelism
     nodes: set[str] = set()
     stack = [df._jdf.queryExecution().analyzed()]
@@ -226,11 +231,10 @@ def _xor_mask_fn(mask: int):
     PySpark dispatches higher-order-function lambdas on PARAMETER COUNT,
     and a two-parameter lambda (defaults included) is called as
     ``(element, index)`` — the default is silently overridden with the
-    array position. That exact bug shipped in rounds 1-3: every
-    signature slot XORed with the element index instead of its per-slot
-    mask, collapsing the 32-hash min-wise family into one
-    position-sensitive hash repeated 32 times (caught in round 4 when an
-    r=1-banding oracle query showed an impossible LSH miss)."""
+    array position. Every signature slot would then XOR with its
+    element index instead of its per-slot mask, collapsing the 32-hash
+    min-wise family into one position-sensitive hash repeated 32 times
+    (an r=1-banding oracle query shows it as an impossible LSH miss)."""
     return lambda h: h.bitwiseXOR(F.lit(mask))
 
 
@@ -308,41 +312,20 @@ def minhash_signatures(
     )
 
 
-def _validate_signature_build(
-    frame: DataFrame,
-    *,
-    caller: str,
-    num_hashes: int,
-    bands: int,
-    shingle_n: int,
-    check_bands: bool = True,
-) -> None:
-    """Refuse a signature/index frame whose build metadata contradicts
-    the caller's parameters. ``minhash_signatures`` / ``signature_frame``
-    attach {num_hashes, shingle_n[, bands]} as column metadata (survives
-    a barrier and a parquet round-trip); re-banding a 32-hash frame as if
-    it had 64 hashes produces garbage band keys and silently misses
-    duplicates, so any mismatch raises here at plan time.
-
-    ``check_bands=False`` for callers that derive band keys fresh from
-    ``__sig`` (minhash_candidate_pairs): re-banding one signature cache
-    at several band configurations is the DESIGN (lore #11), so a
-    stored ``__bands`` built at a different bands count is not an error
-    there — only num_hashes/shingle_n must match."""
-    checks = [("__sig", ("num_hashes", "shingle_n"))]
-    if check_bands:
-        checks.append(("__bands", ("num_hashes", "bands", "shingle_n")))
-    for field_name, params in checks:
-        if field_name in frame.columns:
-            meta = frame.schema[field_name].metadata or {}
-            ours = {"num_hashes": num_hashes, "bands": bands, "shingle_n": shingle_n}
-            for p in params:
-                if p in meta and int(meta[p]) != ours[p]:
-                    raise ValueError(
-                        f"{caller}: signature frame was built with {p}={int(meta[p])} "
-                        f"but the call assumes {p}={ours[p]} — matching would silently "
-                        "miss duplicates. Rebuild the frame or pass matching parameters."
-                    )
+def _rows_per_band(
+    num_hashes: int, bands: int, min_matching_bands: int = 1, *, caller: str
+) -> int:
+    """Signature rows per LSH band, refusing a banding that cannot work:
+    with ``bands > num_hashes`` every band slices zero hashes, so every
+    document gets the same band key and the candidate join turns
+    all-pairs; ``min_matching_bands`` above ``bands`` keeps no pair."""
+    if not 1 <= bands <= num_hashes:
+        raise ValueError(f"{caller}: bands={bands} must be in 1..num_hashes={num_hashes}")
+    if not 1 <= min_matching_bands <= bands:
+        raise ValueError(
+            f"{caller}: min_matching_bands={min_matching_bands} must be in 1..bands={bands}"
+        )
+    return num_hashes // bands
 
 
 def signature_frame(
@@ -379,7 +362,7 @@ def signature_frame(
     ``minhash_candidate_pairs`` and ``match_against_index`` apply the
     barrier internally for the frames they create; raw callers must do
     it themselves."""
-    rows_per_band = num_hashes // bands
+    rows_per_band = _rows_per_band(num_hashes, bands, caller="signature_frame")
     return minhash_signatures(
         df, id_column, text_column, shingle_n=shingle_n, num_hashes=num_hashes
     ).select(
@@ -448,19 +431,9 @@ def minhash_candidate_pairs(
     (default) disables capping — correctness-checked fixtures are in
     the linear regime and need none.
     """
-    rows_per_band = num_hashes // bands
-    if signatures is not None:
-        # Same refusal as match_against_index (ADVICE r05): a caller-passed
-        # signature frame built with different num_hashes/shingle_n would
-        # silently produce garbage band keys and miss duplicates.
-        _validate_signature_build(
-            signatures,
-            caller="minhash_candidate_pairs",
-            num_hashes=num_hashes,
-            bands=bands,
-            shingle_n=shingle_n,
-            check_bands=False,  # band keys derive fresh from __sig here
-        )
+    rows_per_band = _rows_per_band(
+        num_hashes, bands, min_matching_bands, caller="minhash_candidate_pairs"
+    )
     if signatures is None:
         # The (id, shingle-hash, signature) projection feeds four plan
         # branches (two band-join sides, two verify join-backs) plus any
@@ -472,14 +445,21 @@ def minhash_candidate_pairs(
             ),
             eager=True,
         )
-    docs = signatures
+    else:
+        # bands is not checked: band keys derive fresh from __sig here,
+        # and re-banding one signature cache at several band counts is
+        # the design
+        require_build(
+            signatures, "minhash_candidate_pairs", "__sig",
+            num_hashes=num_hashes, shingle_n=shingle_n,
+        )
 
     # Narrow candidate generation: the band self-join carries ONLY
     # (id, band_key) — 16 bytes/row — never the shingle arrays. Both
     # join inputs are the same subplan, so Spark reuses the exchange.
     # Band keys derive from the materialized signature at read time (a
     # few xxhash64 per row — cheap relative to the shingling they replace).
-    banded = docs.select(
+    banded = signatures.select(
         "__id", F.explode(lsh_band_keys(F.col("__sig"), bands, rows_per_band)).alias("__band")
     )
     if bucket_cap is not None:
@@ -494,35 +474,34 @@ def minhash_candidate_pairs(
             .select("__band")
         )
         banded = banded.join(F.broadcast(heavy), "__band", "left_anti")
-    cand = (
-        banded.select(F.col("__band"), F.col("__id").alias("id_a"))
-        .join(banded.select(F.col("__band"), F.col("__id").alias("id_b")), "__band")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
+    return _jaccard_pairs(
+        banded, banded, signatures, signatures, ("id_a", "id_b"),
+        ordered=True, min_shared=min_matching_bands, threshold=jaccard_threshold,
     )
-    if min_matching_bands > 1:
-        # collision multiplicity is free information from the join; the
-        # groupBy replaces the dropDuplicates shuffle 1:1
-        cand = (
-            cand.groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("__nb"))
-            .filter(F.col("__nb") >= min_matching_bands)
-            .select("id_a", "id_b")
-        )
-    else:
-        cand = cand.dropDuplicates(["id_a", "id_b"])
 
-    # Shingle arrays are joined back for candidates only (pairs are a
-    # tiny fraction of the corpus), then verified with exact Jaccard.
-    sh = docs.select("__id", "__sh")
-    pairs = (
-        cand.join(sh.select(F.col("__id").alias("id_a"), F.col("__sh").alias("__sh_a")), "id_a")
-        .join(sh.select(F.col("__id").alias("id_b"), F.col("__sh").alias("__sh_b")), "id_b")
-    )
-    return (
-        pairs.withColumn("jaccard", _jaccard(F.col("__sh_a"), F.col("__sh_b")))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
+
+def _jaccard_pairs(
+    a_banded: DataFrame, b_banded: DataFrame, a_docs: DataFrame, b_docs: DataFrame,
+    ids: tuple[str, str], *, ordered: bool, min_shared: int, threshold: float,
+) -> DataFrame:
+    """MinHash's blocked pair join: candidates from shared band keys
+    (``a_banded``/``b_banded``: ``__id``, ``__band``), then the shingle
+    arrays of ``a_docs``/``b_docs`` (``__id``, ``__sh``) attach to the
+    distinct candidates only — a tiny fraction of the corpus — for the
+    exact Jaccard verify."""
+    a, b = ids
+    return blocked_pairs(
+        a_banded.select(F.col("__band"), F.col("__id").alias(a)),
+        b_banded.select(F.col("__band"), F.col("__id").alias(b)),
+        "__band",
+        ids=ids, ordered=ordered, multi_key=True, min_shared=min_shared,
+        attach=(
+            a_docs.select(F.col("__id").alias(a), F.col("__sh").alias("__sh_a")),
+            b_docs.select(F.col("__id").alias(b), F.col("__sh").alias("__sh_b")),
+        ),
+        score="jaccard",
+        value=_jaccard(F.col("__sh_a"), F.col("__sh_b")),
+        keep=F.col("jaccard") >= threshold,
     )
 
 
@@ -551,24 +530,22 @@ def match_against_index(
     on the batch alone, it's small.) The new batch's signature frame is
     tiny relative to the index, so its band explode broadcasts or
     shuffles cheaply; the verify join carries shingle arrays only for
-    candidate ids on both sides.
+    candidate ids on both sides. ``min_matching_bands`` is the same
+    binomial pre-filter as in ``minhash_candidate_pairs``.
 
     The batch's signature frame passes one eager ``session.barrier``
     (the ``signature_frame`` materialization contract); its blocks are
     freed with the returned frame, so a per-micro-batch caller leaks
     nothing per epoch.
     """
-    # Refuse silently-wrong re-banding: if the index carries build
-    # metadata (signature_frame / minhash_signatures attach it, and it
-    # survives a parquet round-trip), the caller's parameters must match
-    # how the index was actually built — a 32-hash index re-banded as if
-    # it had 64 hashes produces garbage band keys and misses duplicates.
-    _validate_signature_build(
-        index,
-        caller="match_against_index",
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_n=shingle_n,
+    rows_per_band = _rows_per_band(
+        num_hashes, bands, min_matching_bands, caller="match_against_index"
+    )
+    # the index's build metadata (signature_frame / minhash_signatures
+    # attach it) must match the caller's parameters
+    require_build(
+        index, "match_against_index", "__sig", "__bands",
+        num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
     )
 
     # the batch signatures feed the band explode and the verify join-back
@@ -585,42 +562,14 @@ def match_against_index(
     # shared signature cache filtered to the base corpus) — band keys
     # derive from the stored signature at read time.
     if "__bands" not in index.columns:
-        rows_per_band = num_hashes // bands
         index = index.select(
             "__id", "__sh", lsh_band_keys(F.col("__sig"), bands, rows_per_band).alias("__bands")
         )
-
-    new_banded = newsig.select("__id", F.explode("__bands").alias("__band"))
-    idx_banded = index.select(
-        F.col("__id").alias("__idx_id"), F.explode("__bands").alias("__band")
-    )
-    cand = (
-        new_banded.join(idx_banded, "__band")
-        .select(F.col("__id").alias("new_id"), F.col("__idx_id").alias("index_id"))
-        .filter(F.col("new_id") != F.col("index_id"))
-    )
-    if min_matching_bands > 1:
-        # same binomial pre-filter as minhash_candidate_pairs: at the
-        # r=1 operating point the collision count estimates J*num_hashes,
-        # so requiring several matching slots removes the moderate-J
-        # candidate flood before the array-carrying verify join
-        cand = (
-            cand.groupBy("new_id", "index_id")
-            .agg(F.count(F.lit(1)).alias("__nb"))
-            .filter(F.col("__nb") >= min_matching_bands)
-            .select("new_id", "index_id")
-        )
-    else:
-        cand = cand.dropDuplicates(["new_id", "index_id"])
-    pairs = cand.join(
-        newsig.select(F.col("__id").alias("new_id"), F.col("__sh").alias("__sh_a")), "new_id"
-    ).join(
-        index.select(F.col("__id").alias("index_id"), F.col("__sh").alias("__sh_b")), "index_id"
-    )
-    return (
-        pairs.withColumn("jaccard", _jaccard(F.col("__sh_a"), F.col("__sh_b")))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("new_id", "index_id", "jaccard")
+    return _jaccard_pairs(
+        newsig.select("__id", F.explode("__bands").alias("__band")),
+        index.select("__id", F.explode("__bands").alias("__band")),
+        newsig, index, ("new_id", "index_id"),
+        ordered=False, min_shared=min_matching_bands, threshold=jaccard_threshold,
     )
 
 
@@ -644,8 +593,7 @@ def minhash_dedup(
     """
     if pairs is None:
         pairs = minhash_candidate_pairs(df, id_column, text_column, **kwargs)
-    losers = pairs.select(F.col("id_b").alias(id_column)).distinct()
-    return df.join(losers, on=id_column, how="left_anti")
+    return drop_later(df, pairs, id_column)
 
 
 # ---------------------------------------------------------------------------
@@ -745,9 +693,12 @@ def simhash_dedup(
     ``hamming_threshold`` bits of an earlier doc are dropped.
 
     Candidates via the standard pigeonhole trick: split 64 bits into
-    ``bands`` chunks — any pair within ``bands-1`` bit flips shares at
-    least one exact chunk, so an equality join on chunk values finds all
-    candidates without O(n^2)."""
+    ``bands`` chunks (1..64) — any pair within ``bands-1`` bit flips
+    shares at least one exact chunk, so an equality join on chunk values
+    finds all candidates without O(n^2)."""
+    if not 1 <= bands <= 64:
+        # a chunk without bits would give every document the same key
+        raise ValueError(f"simhash_dedup: bands={bands} must be in 1..64")
     # simhash is the expensive (Pandas-UDF) step; it feeds the two band
     # self-join sides. Exchange reuse would dedupe the computation when
     # the planner canonicalizes both sides to one subplan, but that
@@ -772,33 +723,28 @@ def simhash_dedup(
     banded = hashed.select(
         F.col(id_column).alias("__id"), F.col("__simhash"), F.explode(chunks).alias("__c")
     )
-    left = banded.select(
-        F.col("__c"), F.col("__id").alias("id_a"), F.col("__simhash").alias("h_a")
+    pairs = blocked_pairs(
+        banded.select(F.col("__c"), F.col("__id").alias("id_a"), F.col("__simhash").alias("h_a")),
+        banded.select(F.col("__c"), F.col("__id").alias("id_b"), F.col("__simhash").alias("h_b")),
+        "__c", multi_key=True, score="hamming",
+        value=F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))),
+        keep=F.col("hamming") <= hamming_threshold,
     )
-    right = banded.select(
-        F.col("__c"), F.col("__id").alias("id_b"), F.col("__simhash").alias("h_b")
-    )
-    pairs = (
-        left.join(right, "__c")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "h_a", "h_b")
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("hamming", F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))))
-        .filter(F.col("hamming") <= hamming_threshold)
-    )
-    losers = pairs.select(F.col("id_b").alias(id_column)).distinct()
     # survivors keep the original schema; the narrow hashed frame is only
     # used for candidate generation
-    return df.join(losers, on=id_column, how="left_anti")
+    return drop_later(df, pairs, id_column)
 
 
-def _require_integral_ids(
-    left: DataFrame, right: DataFrame, id_column: str, *, caller: str
-) -> None:
-    """Plan-time guard for the even/odd side-tag packing: ``id_column``
-    must be integral on both sides (values in (-2^62, 2^62) — overflow
-    fails loudly at execution under ANSI mode). A non-integral id would
-    silently cast __uid to NULL (ADVICE r05)."""
+def _side_tagged_union(
+    left: DataFrame, right: DataFrame, id_column: str, text_column: str, *, caller: str
+) -> DataFrame:
+    """``fuzzy_text_join``'s two sides as one (__uid, text) frame with
+    disjoint synthetic ids: left ids double to even, right ids to odd,
+    so a pair's sides read back from the parity without a join.
+    ``id_column`` must be integral on both sides with values in
+    (-2^62, 2^62): a non-integral id would cast __uid to NULL, so it is
+    refused here at plan time; an out-of-range value fails loudly at
+    execution under ANSI overflow checking."""
     from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
     for side, df_side in (("left", left), ("right", right)):
@@ -809,6 +755,10 @@ def _require_integral_ids(
                 "the even/odd side-tag packing requires an integral id in (-2^62, 2^62). "
                 "Map ids through an integral surrogate first."
             )
+    uid = F.col(id_column).cast("long") * 2
+    return left.select(uid.alias("__uid"), F.col(text_column)).unionByName(
+        right.select((uid + 1).alias("__uid"), F.col(text_column))
+    )
 
 
 def fuzzy_text_join(
@@ -853,15 +803,8 @@ def fuzzy_text_join(
     dense integral surrogate first (e.g. ``F.xxhash64`` with a
     collision check, or ``zipWithIndex``-style assignment).
     """
-    _require_integral_ids(left, right, id_column, caller="fuzzy_text_join")
-    lt = left.select(
-        (F.col(id_column).cast("long") * 2).alias("__uid"), F.col(text_column)
-    )
-    rt = right.select(
-        (F.col(id_column).cast("long") * 2 + 1).alias("__uid"), F.col(text_column)
-    )
     pairs = minhash_candidate_pairs(
-        lt.unionByName(rt),
+        _side_tagged_union(left, right, id_column, text_column, caller="fuzzy_text_join"),
         "__uid",
         text_column,
         shingle_n=shingle_n,
@@ -900,16 +843,11 @@ def fuzzy_union_signatures(
     same two tables in one session — the shingling runs once. An eager
     ``session.barrier`` is the materialization the signature contract
     requires (see ``minhash_candidate_pairs``)."""
-    _require_integral_ids(left, right, id_column, caller="fuzzy_union_signatures")
-    lt = left.select(
-        (F.col(id_column).cast("long") * 2).alias("__uid"), F.col(text_column)
-    )
-    rt = right.select(
-        (F.col(id_column).cast("long") * 2 + 1).alias("__uid"), F.col(text_column)
-    )
     return barrier(
         minhash_signatures(
-            lt.unionByName(rt),
+            _side_tagged_union(
+                left, right, id_column, text_column, caller="fuzzy_union_signatures"
+            ),
             "__uid",
             text_column,
             shingle_n=shingle_n,
@@ -1005,8 +943,8 @@ def _chain_window_hashes(df: DataFrame, th_col: str, k: int, out_col: str) -> Da
     rotation per combine step — equality of the combined hash is
     equality of the token window up to the usual ~positions²/2^64
     in-corpus collision odds (the same trade every hashed identity in
-    this module makes). ANSI-safe (rotate-XOR, no multiplication —
-    lore #21)."""
+    this module makes). ANSI-safe: rotate-XOR cannot overflow, where a
+    multiplicative rolling hash would raise under ANSI mode."""
     if k < 1:
         raise ValueError(f"_chain_window_hashes: k must be >= 1, got {k}")
 
@@ -1015,7 +953,7 @@ def _chain_window_hashes(df: DataFrame, th_col: str, k: int, out_col: str) -> Da
 
     def _combine_fn(r):
         # closure factory, NOT a defaulted lambda param: extra (even
-        # defaulted) params change the HOF dispatch arity — lore #12
+        # defaulted) params change the HOF dispatch arity (_xor_mask_fn)
         return lambda a, b: _rot(a, r).bitwiseXOR(b)
 
     g = F.size(F.col(th_col))
@@ -1206,17 +1144,16 @@ def edit_distance_pairs(
     Distance 0 (exact duplicates) is included by design — callers
     wanting strictly-typo pairs filter ``dist = 1``."""
     # the length gate lives IN THE PLAN (raise_error fires on the first
-    # offending row at execution) rather than as an eager pre-scan: the
-    # previous limit(1).count() probe ran a full Spark job at plan-
-    # construction time on every call — plan lint, digest, and bench
-    # all paid a corpus scan for a validation that usually passes
-    # (review finding)
+    # offending row at execution) rather than as an eager pre-scan: a
+    # limit(1).count() probe would run a full Spark job at plan-
+    # construction time on every call, so plan lint, digest and bench
+    # would all pay a corpus scan for a validation that usually passes
     guard_msg = (
         f"edit_distance_pairs: {text_column} exceeds max_length="
         f"{max_length}; this is a short-string operator - use the "
         "minhash/simhash near-dedup family for documents"
     )
-    # NULL-tolerant guard (r08 review finding): length(NULL) is NULL,
+    # NULL-tolerant guard: length(NULL) is NULL,
     # which is not TRUE, so a plain `length <= max` WHEN drops NULL
     # rows into the raise_error branch and kills the job before the
     # isNotNull() filter below can discard them. NULL text is a
@@ -1239,9 +1176,9 @@ def edit_distance_pairs(
                     # sequence(1, 0) yields DESCENDING [1, 0] (implicit
                     # step -1 when start > stop), so a zero-length
                     # string would emit two bogus variant rows built
-                    # from out-of-range substrings (r08 review
-                    # finding). An empty string has an empty deletion
-                    # neighborhood - guard to an empty index array.
+                    # from out-of-range substrings. An empty string
+                    # has an empty deletion neighborhood - guard to an
+                    # empty index array.
                     F.when(
                         F.length("__t") > 0,
                         F.sequence(F.lit(1), F.length("__t")),
@@ -1272,21 +1209,16 @@ def edit_distance_pairs(
     # strings. The re-attach joins are per-id (corpus-sized, AQE
     # broadcasts them at fixture scale) against the already-distinct
     # pair set.
-    a = variants.select(F.col("__id").alias("id_a"), "__h")
-    b = variants.select(F.col("__id").alias("id_b"), "__h")
-    pairs = (
-        a.join(b, "__h")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    texts = probe.select(F.col("__id"), F.col("__t"))
-    return (
-        pairs.join(texts.select(F.col("__id").alias("id_a"), F.col("__t").alias("__ta")), "id_a")
-        .join(texts.select(F.col("__id").alias("id_b"), F.col("__t").alias("__tb")), "id_b")
-        .withColumn("dist", F.levenshtein("__ta", "__tb").cast("long"))
-        .filter(F.col("dist") <= 1)
-        .select("id_a", "id_b", "dist")
+    return blocked_pairs(
+        variants.select(F.col("__id").alias("id_a"), "__h"),
+        variants.select(F.col("__id").alias("id_b"), "__h"),
+        "__h", multi_key=True,
+        attach=(
+            probe.select(F.col("__id").alias("id_a"), F.col("__t").alias("__ta")),
+            probe.select(F.col("__id").alias("id_b"), F.col("__t").alias("__tb")),
+        ),
+        score="dist", value=F.levenshtein("__ta", "__tb").cast("long"),
+        keep=F.col("dist") <= 1,
     )
 
 
@@ -1481,7 +1413,7 @@ def containment_join(
     # integrality matters, not just range: a float would reach the
     # interpolated `div` as a non-integral operand (cryptic plan-time
     # AnalysisException) and turn the verify gate into the float
-    # compare the docstring promises never happens (review r12)
+    # compare the docstring promises never happens
     if not isinstance(threshold_pct, int) or not (0 < threshold_pct <= 100):
         raise ValueError(
             f"containment_join: threshold_pct={threshold_pct!r} must be "

@@ -33,6 +33,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pyspark_unload_to_gcs_spark.operators.pair_join import blocked_pairs
+
 MEDIA_META_SCHEMA = StructType(
     [
         StructField("media_type", StringType()),  # image | audio | video
@@ -586,7 +588,7 @@ def _pack_above_mean_bits(sums, counts) -> int:
     evaluated in PYTHON ints: the cross-products overflow int64 for
     large inputs (a ~36-minute PCM16 clip, a ~100-megapixel image) and
     numpy would wrap SILENTLY, breaking both the exact scale-invariance
-    argument and the cross-engine replay (review r12). Shared bit-pack
+    argument and the cross-engine replay. Shared bit-pack
     of the division-free above-average rule for ``ahash_bits_from_image``
     and ``afp_bits_from_frames``; ties are 0."""
     total_sum = sum(sums)
@@ -631,8 +633,7 @@ def _hash64_map(
     (``image_ahash``, ``audio_fingerprint``): per payload, ``bits_fn``
     maps raw bytes to an int in [0, 2^64), split into the schema's
     (hi, lo) BIGINT halves; the id lands under the schema's own first
-    field name (hardcoding it would NaN-fill a differently-named id —
-    review r12)."""
+    field name (hardcoding it would NaN-fill a differently-named id)."""
     out_id = schema.fields[0].name
     hi_name, lo_name = schema.fields[1].name, schema.fields[2].name
 
@@ -671,7 +672,8 @@ def ahash_dup_pairs(
     generation (8 rows per image), one shuffle on the band key — the
     simhash/minhash banding pattern applied to perceptual hashes.
 
-    Output: (id_a, id_b, hamming), id_a < id_b."""
+    Output: (id_a, id_b, hamming), id_a < id_b. Ids must be unique
+    per row: a pair de-duplicates on its two ids."""
     if not 0 <= max_hamming < 8:
         raise ValueError(
             f"ahash_dup_pairs: max_hamming={max_hamming} must be in [0, 8) "
@@ -691,44 +693,33 @@ def ahash_dup_pairs(
                 *[
                     F.struct(
                         F.lit(k).alias("band"),
-                        (
-                            (
-                                F.col("__lo" if k < 4 else "__hi")
-                                .bitwiseAND(F.lit(255 << (8 * (k % 4))))
-                            )
-                        ).alias("byte"),
+                        F.col("__lo" if k < 4 else "__hi")
+                        .bitwiseAND(F.lit(255 << (8 * (k % 4))))
+                        .alias("byte"),
                     )
                     for k in range(8)
                 ]
             )
         ).alias("__b"),
-    ).select("__id", "__hi", "__lo", F.col("__b.band").alias("__band"), F.col("__b.byte").alias("__byte"))
-    a = bands.select(
-        F.col("__id").alias("id_a"),
-        F.col("__hi").alias("__hia"),
-        F.col("__lo").alias("__loa"),
-        "__band",
-        "__byte",
     )
-    b = bands.select(
-        F.col("__id").alias("id_b"),
-        F.col("__hi").alias("__hib"),
-        F.col("__lo").alias("__lob"),
-        "__band",
-        "__byte",
+
+    def side(i: str, hi: str, lo: str) -> DataFrame:
+        return bands.select(
+            F.col("__id").alias(i),
+            F.col("__hi").alias(hi),
+            F.col("__lo").alias(lo),
+            F.col("__b.band").alias("__band"),
+            F.col("__b.byte").alias("__byte"),
+        )
+
+    hamming = F.bit_count(F.col("__hia").bitwiseXOR(F.col("__hib"))) + F.bit_count(
+        F.col("__loa").bitwiseXOR(F.col("__lob"))
     )
-    hamming = (
-        F.bit_count(F.col("__hia").bitwiseXOR(F.col("__hib")))
-        + F.bit_count(F.col("__loa").bitwiseXOR(F.col("__lob")))
-    ).cast("long")
-    return (
-        a.join(b, ["__band", "__byte"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "__hia", "__hib", "__loa", "__lob")
-        .distinct()
-        .withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+    return blocked_pairs(
+        side("id_a", "__hia", "__loa"),
+        side("id_b", "__hib", "__lob"),
+        ["__band", "__byte"], multi_key=True,
+        score="hamming", value=hamming.cast("long"), keep=F.col("hamming") <= max_hamming,
     )
 
 

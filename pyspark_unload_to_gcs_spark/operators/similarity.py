@@ -29,6 +29,11 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pyspark_unload_to_gcs_spark.operators.pair_join import (
+    blocked_pairs,
+    drop_later,
+    require_build,
+)
 from pyspark_unload_to_gcs_spark.session import barrier
 
 
@@ -55,7 +60,7 @@ def norm(vec_col: Column) -> Column:
 def _pair_dot(a: str = "__va", b: str = "__vb") -> Column:
     """Per-candidate-pair dot product for the bucketed verify joins —
     the one HOF fold that must run per pair (norms are staged per row
-    upstream; see call sites)."""
+    upstream; see ``_cosine_pairs``)."""
     return F.aggregate(
         F.zip_with(F.col(a), F.col(b), lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -413,6 +418,35 @@ def ivf_topk(
     )
 
 
+def _cosine_pairs(
+    left: DataFrame, right: DataFrame, key: str, id_columns: tuple[str, str],
+    ids: tuple[str, str], *, vec_column: str, threshold: float, ordered: bool,
+) -> DataFrame:
+    """The vector operators' blocked pair join: candidates share the
+    one bucket or cell ``key`` each row carries, verified by exact
+    cosine. Norms are staged per ROW on each join input (the projection
+    stays on its side of the join), not recomputed per candidate PAIR —
+    the per-pair verify is one interpreted HOF fold (the dot), not
+    three. A row has one key, so a pair meets once and needs no
+    de-duplication shuffle of array-carrying pair rows."""
+
+    def side(frame: DataFrame, id_column: str, out: str, v: str, n: str) -> DataFrame:
+        return frame.select(
+            F.col(key),
+            F.col(id_column).alias(out),
+            F.col(vec_column).alias(v),
+            norm(F.col(vec_column)).alias(n),
+        )
+
+    return blocked_pairs(
+        side(left, id_columns[0], ids[0], "__va", "__na"),
+        side(right, id_columns[1], ids[1], "__vb", "__nb"),
+        key, ids=ids, ordered=ordered, score="cosine",
+        value=_pair_dot() / (F.col("__na") * F.col("__nb")),
+        keep=F.col("cosine") >= threshold,
+    )
+
+
 def ann_join(
     left: DataFrame,
     right: DataFrame,
@@ -429,9 +463,9 @@ def ann_join(
     shared LSH buckets (equality join on bucket — shuffle on a small int
     key; never a cross join).
 
-    Precondition: ids must be UNIQUE per input row on both sides —
-    pairs sharing several buckets are de-duplicated by (id, id) key, so
-    duplicate-id inputs emit duplicate pairs.
+    Precondition: ids must be UNIQUE per input row on both sides — a
+    row has one bucket and pairs are not de-duplicated, so duplicate-id
+    inputs emit duplicate pairs.
 
     Self-join (``left is right``, the near-dedup case): the bucketed
     frame is materialized once (``session.barrier``) and reused for both
@@ -447,32 +481,9 @@ def ann_join(
         rb = lb
     else:
         rb = with_lsh_bucket(right, vec_column=vec_column, dim=dim, n_planes=n_planes, seed=seed)
-    # Norms are staged per ROW on each join input (the projection stays
-    # on its side of the join), not recomputed per candidate PAIR — the
-    # per-pair verify work drops from 3 interpreted HOF folds (dot + 2
-    # norms) to 1. Same doubles, bit-identical cosines.
-    l = lb.select(
-        F.col("lsh_bucket"),
-        F.col(id_left).alias("id_a"),
-        F.col(vec_column).alias("__va"),
-        norm(F.col(vec_column)).alias("__na"),
-    )
-    r = rb.select(
-        F.col("lsh_bucket"),
-        F.col(id_right).alias("id_b"),
-        F.col(vec_column).alias("__vb"),
-        norm(F.col(vec_column)).alias("__nb"),
-    )
-    cos = _pair_dot() / (F.col("__na") * F.col("__nb"))
-    # No dropDuplicates: each row carries exactly one bucket key, so an
-    # equality join on it cannot emit the same (id_a, id_b) twice — the
-    # old defensive dedup was a full shuffle of array-carrying pair rows.
-    return (
-        l.join(r, "lsh_bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", cos)
-        .filter(F.col("cosine") >= cosine_threshold)
-        .select("id_a", "id_b", "cosine")
+    return _cosine_pairs(
+        lb, rb, "lsh_bucket", (id_left, id_right), ("id_a", "id_b"),
+        vec_column=vec_column, threshold=cosine_threshold, ordered=True,
     )
 
 
@@ -499,8 +510,7 @@ def embedding_near_dedup(
         cosine_threshold=cosine_threshold,
         seed=seed,
     )
-    losers = pairs.select(F.col("id_b").alias(id_column)).distinct()
-    return df.join(losers, on=id_column, how="left_anti")
+    return drop_later(df, pairs, id_column)
 
 
 def semantic_cluster_dedup(
@@ -551,29 +561,11 @@ def semantic_cluster_dedup(
         ivf_assign(df, cents, vec_column=vec_column, method=assign_method),
         eager=True,
     )
-    # per-row norm staging: see ann_join
-    l = assigned.select(
-        F.col("ivf_cell"),
-        F.col(id_column).alias("id_a"),
-        F.col(vec_column).alias("__va"),
-        norm(F.col(vec_column)).alias("__na"),
+    pairs = _cosine_pairs(
+        assigned, assigned, "ivf_cell", (id_column, id_column), ("id_a", "id_b"),
+        vec_column=vec_column, threshold=cosine_threshold, ordered=True,
     )
-    r = assigned.select(
-        F.col("ivf_cell"),
-        F.col(id_column).alias("id_b"),
-        F.col(vec_column).alias("__vb"),
-        norm(F.col(vec_column)).alias("__nb"),
-    )
-    cos = _pair_dot() / (F.col("__na") * F.col("__nb"))
-    losers = (
-        l.join(r, "ivf_cell")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", cos)
-        .filter(F.col("cosine") >= cosine_threshold)
-        .select(F.col("id_b").alias(id_column))
-        .distinct()
-    )
-    return df.join(losers, on=id_column, how="left_anti")
+    return drop_later(df, pairs, id_column)
 
 
 def ann_match_against_index(
@@ -613,39 +605,14 @@ def ann_match_against_index(
     index was actually built — mismatched planes silently produce
     disjoint bucket spaces and zero recall.
     """
-    if "lsh_bucket" not in index.columns:
-        raise ValueError("index must carry an lsh_bucket column (see with_lsh_bucket)")
-    meta = index.schema["lsh_bucket"].metadata or {}
-    ours = {"dim": dim, "n_planes": n_planes, "seed": seed}
-    for p, v in ours.items():
-        if p in meta and int(meta[p]) != v:
-            raise ValueError(
-                f"ann_match_against_index: index was bucketed with {p}={int(meta[p])} "
-                f"but the call assumes {p}={v} — the bucket spaces would be disjoint "
-                "and every match silently missed. Rebuild the index or pass matching "
-                "parameters."
-            )
+    require_build(
+        index, "ann_match_against_index", "lsh_bucket", required=True,
+        dim=dim, n_planes=n_planes, seed=seed,
+    )
     newb = with_lsh_bucket(new_df, vec_column=vec_column, dim=dim, n_planes=n_planes, seed=seed)
-    # per-row norm staging + no defensive pair-dedup: see ann_join
-    l = newb.select(
-        F.col("lsh_bucket"),
-        F.col(id_new).alias("new_id"),
-        F.col(vec_column).alias("__va"),
-        norm(F.col(vec_column)).alias("__na"),
-    )
-    r = index.select(
-        F.col("lsh_bucket"),
-        F.col(id_index).alias("index_id"),
-        F.col(vec_column).alias("__vb"),
-        norm(F.col(vec_column)).alias("__nb"),
-    )
-    cos = _pair_dot() / (F.col("__na") * F.col("__nb"))
-    return (
-        l.join(r, "lsh_bucket")
-        .filter(F.col("new_id") != F.col("index_id"))
-        .withColumn("cosine", cos)
-        .filter(F.col("cosine") >= cosine_threshold)
-        .select("new_id", "index_id", "cosine")
+    return _cosine_pairs(
+        newb, index, "lsh_bucket", (id_new, id_index), ("new_id", "index_id"),
+        vec_column=vec_column, threshold=cosine_threshold, ordered=False,
     )
 
 
@@ -801,38 +768,14 @@ def semantic_match_against_index(
     centroid count) must match ``len(centroids)`` — an index assigned
     under a different quantizer is a disjoint cell space and every
     match would be silently missed."""
-    if cell_column not in index.columns:
-        raise ValueError(f"index must carry {cell_column!r} (see ivf_assign)")
-    meta = index.schema[cell_column].metadata or {}
-    if "n_centroids" in meta and int(meta["n_centroids"]) != len(centroids):
-        raise ValueError(
-            f"semantic_match_against_index: index was assigned under "
-            f"n_centroids={int(meta['n_centroids'])} but the call passes "
-            f"{len(centroids)} centroids — the cell spaces would be disjoint and "
-            "every match silently missed. Rebuild the index or pass the quantizer "
-            "it was built with."
-        )
+    require_build(
+        index, "semantic_match_against_index", cell_column, required=True,
+        n_centroids=len(centroids),
+    )
     nb = ivf_assign(new_df, centroids, vec_column=vec_column, cell_column=cell_column)
-    # per-row norm staging + no defensive pair-dedup: see ann_join
-    l = nb.select(
-        F.col(cell_column),
-        F.col(id_new).alias("new_id"),
-        F.col(vec_column).alias("__va"),
-        norm(F.col(vec_column)).alias("__na"),
-    )
-    r = index.select(
-        F.col(cell_column),
-        F.col(id_index).alias("index_id"),
-        F.col(vec_column).alias("__vb"),
-        norm(F.col(vec_column)).alias("__nb"),
-    )
-    cos = _pair_dot() / (F.col("__na") * F.col("__nb"))
-    return (
-        l.join(r, cell_column)
-        .filter(F.col("new_id") != F.col("index_id"))
-        .withColumn("cosine", cos)
-        .filter(F.col("cosine") >= cosine_threshold)
-        .select("new_id", "index_id", "cosine")
+    return _cosine_pairs(
+        nb, index, cell_column, (id_new, id_index), ("new_id", "index_id"),
+        vec_column=vec_column, threshold=cosine_threshold, ordered=False,
     )
 
 

@@ -229,6 +229,37 @@ def test_match_against_index_rejects_mismatched_build_params(spark):
         D.match_against_index(new, sig, "doc_id", "text", num_hashes=64)
 
 
+def test_band_counts_that_leave_a_band_empty_are_refused(spark):
+    """With bands > num_hashes every band slices zero hashes, so every
+    document gets the same band key and the candidate join turns
+    all-pairs (40 unrelated docs gave C(40, 2) = 780 candidates);
+    min_matching_bands > bands keeps no pair at all. Both are refused
+    at plan time, and so is a simhash chunk of zero bits."""
+    docs = spark.createDataFrame(
+        [(i, f"a{i} b{i} c{i} d{i} e{i}") for i in range(40)], "doc_id long, text string"
+    )
+    with pytest.raises(ValueError, match="bands=64"):
+        D.minhash_candidate_pairs(docs, "doc_id", "text", num_hashes=32, bands=64)
+    with pytest.raises(ValueError, match="bands=0"):
+        D.minhash_candidate_pairs(docs, "doc_id", "text", bands=0)
+    with pytest.raises(ValueError, match="min_matching_bands=9"):
+        D.minhash_candidate_pairs(docs, "doc_id", "text", bands=8, min_matching_bands=9)
+    with pytest.raises(ValueError, match="min_matching_bands=0"):
+        D.minhash_candidate_pairs(docs, "doc_id", "text", min_matching_bands=0)
+    index = D.minhash_signatures(docs, "doc_id", "text")
+    with pytest.raises(ValueError, match="bands=64"):
+        D.match_against_index(docs, index, "doc_id", "text", bands=64)
+    with pytest.raises(ValueError, match="min_matching_bands=9"):
+        D.match_against_index(docs, index, "doc_id", "text", min_matching_bands=9)
+    with pytest.raises(ValueError, match="bands=64"):
+        D.fuzzy_text_join(docs, docs, bands=64)
+    with pytest.raises(ValueError, match="bands=64"):
+        D.signature_frame(docs, "doc_id", "text", bands=64)
+    for bands in (0, 65):
+        with pytest.raises(ValueError, match=f"bands={bands}"):
+            D.simhash_dedup(docs, "doc_id", "text", bands=bands)
+
+
 def test_match_against_index_releases_batch_cache(spark):
     """Per-micro-batch usage must not leak one persisted frame per epoch:
     after the call returns, at most one new RDD is registered in the

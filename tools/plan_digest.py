@@ -6,7 +6,9 @@ Python stages, and whole-stage-codegen span count. Regenerate with:
     python tools/plan_digest.py --budgets   # rewrite tests/plan_budgets.json
 
 The digest is the at-a-glance scale audit: queries are sorted with the
-most exchanges first (each Exchange is a cluster-wide shuffle at 100 TB),
+most exchanges first (each Exchange is a cluster-wide shuffle at 100 TB;
+the count includes exchanges that AQE reuses at run time, where a
+``ReusedExchange`` in the final adaptive plan runs the shuffle once),
 and any row-at-a-time Python (BatchEvalPython) or CartesianProduct would
 show in the flags column — the plan-lint test asserts neither exists.
 
