@@ -426,8 +426,8 @@ def encode_vocab(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            # positional arrays, never the input Series (lore #24:
-            # a non-default index misaligns the pd.DataFrame ctor)
+            # positional arrays, never the input Series: a non-default
+            # index misaligns the pd.DataFrame ctor
             words = pdf[word_column].to_numpy()
             if ranks is None:
                 pieces = [encode_word_py(w, merge_list) for w in words]
@@ -445,7 +445,6 @@ def bpe_encode_counts(
     merges: Sequence[tuple[str, str]],
     text_column: str = "text",
     id_column: str = "doc_id",
-    method: str = "replay",
 ) -> DataFrame:
     """Per-document BPE stats: ``(id, n_words, n_pieces)``. The corpus
     explodes to (id, word) rows JVM-side, joins the Arrow-encoded
@@ -458,7 +457,7 @@ def bpe_encode_counts(
         F.col(id_column), F.explode(words_col(F.col(text_column))).alias("word")
     )
     vocab = doc_words.select("word").distinct()
-    encoded = encode_vocab(vocab, merges, method=method).select(
+    encoded = encode_vocab(vocab, merges).select(
         "word", F.size("pieces").alias("n_pieces_word")
     )
     per_doc = (

@@ -49,8 +49,6 @@ def change_type_mapping(
     df: DataFrame,
     source_column: str = CHANGE_TYPE_COLUMN,
     output_column: str = EXPORT_CHANGE_TYPE_COLUMN,
-    *,
-    drop_source: bool = False,
 ) -> DataFrame:
     """Append ``_mp_change_type`` derived from a CDF change-type column.
 
@@ -58,8 +56,7 @@ def change_type_mapping(
     ``SELECT CASE ... END as _mp_change_type, *``).
     """
     mapped = change_type_expr(F.col(source_column))
-    out = df.select(mapped.alias(output_column), "*")
-    return out.drop(source_column) if drop_source else out
+    return df.select(mapped.alias(output_column), "*")
 
 
 def snapshot_as_inserts(df: DataFrame, output_column: str = EXPORT_CHANGE_TYPE_COLUMN) -> DataFrame:

@@ -772,7 +772,6 @@ def fuzzy_text_join(
     bands: int = 8,
     jaccard_threshold: float = 0.8,
     min_matching_bands: int = 1,
-    bucket_cap: int | None = None,
     signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Cross-table fuzzy match (entity resolution): pairs of (left id,
@@ -812,7 +811,6 @@ def fuzzy_text_join(
         bands=bands,
         jaccard_threshold=jaccard_threshold,
         min_matching_bands=min_matching_bands,
-        bucket_cap=bucket_cap,
         signatures=signatures,
     )
     # candidate pairs are (id_a < id_b); cross-side = opposite parity.

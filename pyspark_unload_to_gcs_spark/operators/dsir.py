@@ -50,9 +50,9 @@ from pyspark_unload_to_gcs_spark.operators.text import words_col
 from pyspark_unload_to_gcs_spark.session import barrier
 
 # Row cap for the dsir_shift_report broadcast hint on the selected-id
-# frame (ADVICE r15 — the containment gates' convention): 10M ids
-# ≈ 80 MB serialized, comfortably under the driver/executor broadcast
-# budget; a larger k falls back to size-based join selection.
+# frame (the containment gates' convention): 10M ids ≈ 80 MB
+# serialized, comfortably under the driver/executor broadcast budget;
+# a larger k falls back to size-based join selection.
 _BROADCAST_SELECT_CAP = 10_000_000
 
 MICRO = 1_000_000
@@ -99,9 +99,9 @@ def dsir_bucket_counts(
 ) -> DataFrame:
     """(bucket, r_cnt, t_cnt): per hashed-bigram bucket, the raw-corpus
     and target-domain occurrence counts — the single corpus pass both
-    the log-ratio model and the shift report consume (factored out in
-    the r15 optimization round so ``dsir_shift_report`` shares one
-    pass instead of re-tokenizing the corpus)."""
+    the log-ratio model and the shift report consume, so
+    ``dsir_shift_report`` shares one pass instead of re-tokenizing the
+    corpus."""
     grams = hashed_bigram_stream(
         df.withColumn("__is_target", target),
         num_buckets=num_buckets,
@@ -221,25 +221,22 @@ def dsir_select(
     num_buckets: int,
     text_column: str = "text",
     id_column: str = "doc_id",
-    normalize: bool = True,
     ratios: DataFrame | None = None,
 ) -> DataFrame:
     """Top-k documents by importance weight, ties broken on the id —
     fully deterministic, so the whole selection is value-oracle-able.
     Distributed TakeOrdered, never a single-partition window.
 
-    ``normalize=True`` (default) ranks by the PER-BIGRAM average log
-    ratio in integer micro-units (``avg_lr_micro = floor(w_micro *
-    1e6 / n_bigrams)`` — one IEEE multiply+divide+floor per document,
-    bit-identical in any engine; round(x, 9) drifted cross-engine at
-    large magnitudes): the raw sum is dominated by document length (short
+    Documents rank by the PER-BIGRAM average log ratio in integer
+    micro-units (``avg_lr_micro = floor(w_micro * 1e6 / n_bigrams)`` —
+    one IEEE multiply+divide+floor per document, bit-identical in any
+    engine; round(x, 9) drifted cross-engine at large magnitudes): the
+    raw sum is dominated by document length (short
     documents accumulate the least negative mass and win regardless
     of domain — measured: un-normalized top-k selected 14% target-
     domain docs vs 13% base rate; normalized selects 63-72%), which is
     why the paper scores fixed-length chunks. Zero-bigram documents
-    carry no evidence and are excluded from the normalized ranking.
-    ``normalize=False`` is the raw chunk-likelihood ratio for callers
-    that chunk upstream."""
+    carry no evidence and are excluded from the ranking."""
     w = dsir_weights(
         df,
         target,
@@ -248,21 +245,19 @@ def dsir_select(
         id_column=id_column,
         ratios=ratios,
     )
-    if normalize:
-        return (
-            w.filter(F.col("n_bigrams") > 0)
-            .withColumn(
-                "avg_lr_micro",
-                F.floor(
-                    F.col("w_micro").cast("double")
-                    * F.lit(1_000_000.0)
-                    / F.col("n_bigrams")
-                ).cast("long"),
-            )
-            .orderBy(F.col("avg_lr_micro").desc(), F.col(id_column))
-            .limit(k)
+    return (
+        w.filter(F.col("n_bigrams") > 0)
+        .withColumn(
+            "avg_lr_micro",
+            F.floor(
+                F.col("w_micro").cast("double")
+                * F.lit(1_000_000.0)
+                / F.col("n_bigrams")
+            ).cast("long"),
         )
-    return w.orderBy(F.col("w_micro").desc(), F.col(id_column)).limit(k)
+        .orderBy(F.col("avg_lr_micro").desc(), F.col(id_column))
+        .limit(k)
+    )
 
 
 def dsir_shift_report(
@@ -287,7 +282,7 @@ def dsir_shift_report(
 
     Booleans only — the float KL values stay internal.
 
-    Plan (optimization r15, guide §1.2/§2.3): the corpus is tokenized
+    Plan: the corpus is tokenized
     TWICE, not three times — the per-bucket (r_cnt, t_cnt) frame is
     computed once (``dsir_bucket_counts``), feeds the log-ratio model
     via arithmetic only (``dsir_ratio_from_counts`` → the production
@@ -321,8 +316,8 @@ def dsir_shift_report(
     ).select(id_column)
     if checkpoint:
         selected = barrier(selected, eager=True)
-    # broadcast-hint gate (ADVICE r15, same convention as the
-    # containment _BROADCAST_DOC_CAP gates): k is caller-controlled,
+    # broadcast-hint gate (same convention as the containment
+    # _BROADCAST_DOC_CAP gates): k is caller-controlled,
     # and an unconditional hint would force a driver-side broadcast
     # build however large the selection. At or under the cap the
     # (<= k)-row id frame broadcasts (a few MB of ids); above it the

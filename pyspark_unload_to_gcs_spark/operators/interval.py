@@ -28,7 +28,7 @@ upstream (split-at-cap) if the length distribution is heavy-tailed.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -41,7 +41,6 @@ def interval_overlap_join(
     right_start: str,
     right_end: str,
     granularity: int,
-    extra_condition: Column | None = None,
 ) -> DataFrame:
     """Join two interval frames on [start, end) overlap via a
     time-grid equi-join (module docstring). Start/end columns are
@@ -49,9 +48,7 @@ def interval_overlap_join(
     grid cell width in the same unit. Column names must be disjoint
     across the two inputs (rename upstream; this keeps the operator a
     pure plan transform with no hidden aliasing). Returns
-    left-columns + right-columns for every overlapping pair.
-    ``extra_condition`` (e.g. an equality on a tenant key) is applied
-    inside the join to prune pairs before the overlap check."""
+    left-columns + right-columns for every overlapping pair."""
     if granularity <= 0:
         raise ValueError("interval_overlap_join: granularity must be positive")
     overlap_cols = set(left.columns) & set(right.columns)
@@ -62,7 +59,7 @@ def interval_overlap_join(
         )
     if "__cell" in left.columns or "__cell" in right.columns:
         # reserved internal name: withColumn would silently clobber the
-        # caller's column and the trailing drop would erase it (review)
+        # caller's column and the trailing drop would erase it
         raise ValueError("interval_overlap_join: '__cell' is reserved")
     g = F.lit(int(granularity))
 
@@ -80,10 +77,7 @@ def interval_overlap_join(
 
     lc = cells(left, left_start, left_end)
     rc = cells(right, right_start, right_end)
-    cond = lc["__cell"] == rc["__cell"]
-    if extra_condition is not None:
-        cond = cond & extra_condition
-    joined = lc.join(rc, cond)
+    joined = lc.join(rc, lc["__cell"] == rc["__cell"])
     anchor = F.greatest(F.col(left_start), F.col(right_start))
     return (
         joined

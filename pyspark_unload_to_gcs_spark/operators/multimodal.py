@@ -58,16 +58,14 @@ DECODED_SCHEMA = StructType(
 )
 
 
-def attach_payload(
-    df: DataFrame, source_column: str, *, media_type: str = "image", fmt: str = "raw"
-) -> DataFrame:
+def attach_payload(df: DataFrame, source_column: str) -> DataFrame:
     """Build a (payload, media_meta) pair from a source column —
     deterministic fake payload = UTF-8 bytes of the source column, so
     pipelines are testable without real media files."""
     payload = F.encode(F.col(source_column), "UTF-8").cast(BinaryType())
     meta = F.struct(
-        F.lit(media_type).alias("media_type"),
-        F.lit(fmt).alias("format"),
+        F.lit("image").alias("media_type"),
+        F.lit("raw").alias("format"),
         F.octet_length(payload).cast("long").alias("byte_length"),
         F.lit(-1).cast("int").alias("width"),
         F.lit(-1).cast("int").alias("height"),

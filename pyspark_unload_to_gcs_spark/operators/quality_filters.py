@@ -23,18 +23,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pyspark_unload_to_gcs_spark.operators.text import tokens_col
+
 # --------------------------------------------------------------------------
 # Gopher document-level rules
 # --------------------------------------------------------------------------
 
 _REQUIRED_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
-
-
-def _words(text: Column) -> Column:
-    t = F.trim(text)
-    return F.when(t == "", F.array().cast("array<string>")).otherwise(
-        F.split(t, r"\s+")
-    )
 
 
 def _lines(text: Column) -> Column:
@@ -60,7 +55,7 @@ def gopher_quality_flags(
     lines START with a bullet, <=30% may END with an ellipsis, >=80%
     of words must contain an alphabetic character, and at least 2 of
     the 8 canonical English stopwords must occur)."""
-    words = _words(text)
+    words = tokens_col(text)
     n_words = F.size(words)
     n_chars_in_words = F.aggregate(
         words, F.lit(0), lambda acc, w: acc + F.length(w)
@@ -92,7 +87,8 @@ def gopher_quality_flags(
         " ",
     )
     # array_intersect, not a HOF filter: a lambda body referencing ntoks
-    # would re-evaluate the regexp pipeline per stopword (lore #1)
+    # would re-evaluate the regexp pipeline per stopword (no CSE across
+    # lambda scopes)
     stop_hits = F.size(
         F.array_intersect(ntoks, F.array(*[F.lit(w) for w in _REQUIRED_STOPWORDS]))
     )
@@ -164,7 +160,7 @@ def c4_clean(
     low = F.lower(text)
     # page_ok references the staged __kept COLUMN, not the `kept`
     # expression — embedding the expression would re-run the per-line
-    # rlike/split pipeline a second time per row (lore #1 class)
+    # rlike/split pipeline a second time per row
     page_ok = (
         (F.size(F.col("__kept")) >= min_kept_lines)
         & ~low.contains("lorem ipsum")
@@ -211,8 +207,8 @@ def gopher_repetition_profile(
       occurring more than once (count x length summed — the standard
       overlap-ignoring approximation), clamped to 1.
 
-    Scale shape (r05 rewrite): ZERO shuffle. A document's gram multiset
-    lives entirely in its own row, so the per-(doc, n) stats are
+    Scale shape: ZERO shuffle. A document's gram multiset lives
+    entirely in its own row, so the per-(doc, n) stats are
     computed ARRAY-SIDE: window identities come from a ROLLING hash
     chained across gram sizes — ``H_n[i] = rot13(H_{n-1}[i]) XOR
     th[i+n-1]`` over per-token xxhash64s, with window char lengths
@@ -251,8 +247,6 @@ def gopher_repetition_profile(
       zero-shuffle plan shape (MapInPandas instead of Project).
       The registered bench query runs this path; the oracle stays valid
       because the outputs are identical."""
-    from pyspark_unload_to_gcs_spark.operators.text import tokens_col
-
     if method not in ("fold", "arrow"):
         raise ValueError(
             f"gopher_repetition_profile: unknown method {method!r} "
@@ -346,7 +340,7 @@ def gopher_repetition_profile(
     # the only remaining fold runs over REPEATED runs — a handful per
     # document, not every window.
     # closure factory, NOT a defaulted lambda: extra (even defaulted)
-    # lambda params change the HOF dispatch arity — lore #12
+    # lambda params change the HOF dispatch arity
     def _win_struct(n: int):
         return lambda h, l: F.struct(h.alias("h"), (l + (n - 1)).alias("l"))
 
@@ -486,9 +480,9 @@ def gopher_repetition_profile(
 
 
 # --------------------------------------------------------------------------
-# Arrow-vectorized repetition core (VERDICT r05 #1 — same fold/arrow twin
-# pattern as similarity.ivf_assign: the fold path above is the
-# cross-engine-replayable reference, this is the production path)
+# Arrow-vectorized repetition core (same fold/arrow twin pattern as
+# similarity.ivf_assign: the fold path above is the cross-engine-
+# replayable reference, this is the production path)
 # --------------------------------------------------------------------------
 
 _REP_NS = sorted(TOP_NGRAM_LIMITS) + sorted(DUP_NGRAM_LIMITS)
@@ -670,8 +664,7 @@ def compression_ratio_quality(
     zlib build (version/strategy), identical across a homogeneous
     cluster but NOT a cross-engine replayable constant — so this
     operator is pinned by a Python referee in tests rather than a
-    DuckDB value oracle (contrast lore #22 sketches; same honesty rule
-    as the env-gated codecs)."""
+    DuckDB value oracle (the same rule as the env-gated codecs)."""
     if not 1 <= level <= 9:
         raise ValueError(f"compression_ratio_quality: bad zlib level {level}")
     schema_df = (
@@ -737,7 +730,7 @@ def ensemble_quality_score(
     weights. Same inputs => bit-identical score on any engine.
     Signal bound: |x| < 1e9 — the binding constraint is the MEAN's
     DECIMAL(18,9) re-quantization (9 integer digits), not the raw
-    DECIMAL(18,6) accumulator (ADVICE r13: a signal with |mean| >=
+    DECIMAL(18,6) accumulator (a signal with |mean| >=
     1e9 overflows the (18,9) cast to NULL under non-ANSI casts).
     Any sane quality signal fits; squash unbounded losses first.
     The bound is ENFORCED, not advisory: the stats leg asserts each
@@ -796,7 +789,7 @@ def ensemble_quality_score(
         std = F.round(
             F.sqrt(F.greatest(var, F.lit(0)).cast("double")), 6
         ).cast("decimal(18,6)")
-        # overflow tripwire (ADVICE r13): with >= 1 present row, a NULL
+        # overflow tripwire: with >= 1 present row, a NULL
         # mean/std can only be a DECIMAL overflow — raise a named error
         # at the stats stage instead of silently NULLing every score.
         # assert_true returns NULL when the condition holds, so the

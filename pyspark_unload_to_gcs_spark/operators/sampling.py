@@ -613,7 +613,6 @@ def split_leakage_audit(
     content_columns: list[str],
     *,
     train_fraction: float = 0.8,
-    normalize: bool = True,
 ) -> DataFrame:
     """Audit the promise ``deterministic_split`` makes: no CONTENT
     appears on both sides of the train/test boundary. The split is
@@ -653,12 +652,12 @@ def split_leakage_audit(
         split_column="__split",
     )
     cols = [F.col(c) for c in content_columns]
-    parts = [normalize_text(c) if normalize else c for c in cols]
+    parts = [normalize_text(c) for c in cols]
     contentless = cols[0].isNull() | (parts[0] == "")
     for c, p in zip(cols[1:], parts[1:]):
         contentless = contentless & (c.isNull() | (p == ""))
     key = F.when(
-        ~contentless, content_key(list(content_columns), normalize=normalize)
+        ~contentless, content_key(list(content_columns), normalize=True)
     ).otherwise(
         # \x02 sentinel, not \x00: content keys start \x01, and a NUL
         # byte would make the key un-replayable in engines that forbid
@@ -695,8 +694,6 @@ def mix_deviation_report(
     df: DataFrame,
     stratum_column: str,
     targets: dict[str, int],
-    *,
-    spark=None,
 ) -> DataFrame:
     """Post-export mixture audit — the check AFTER ``weighted_mix`` /
     ``temperature_mix`` / ``quota_temperature_mix`` ships a corpus:
@@ -733,8 +730,7 @@ def mix_deviation_report(
                 f"mix_deviation_report: target ppm for {k!r} must be "
                 f"in [0, 1e6], got {v}"
             )
-    sess = spark if spark is not None else df.sparkSession
-    tgt = sess.createDataFrame(
+    tgt = df.sparkSession.createDataFrame(
         [(k, int(v)) for k, v in targets.items()],
         f"`{stratum_column}` string, target_ppm long",
     )

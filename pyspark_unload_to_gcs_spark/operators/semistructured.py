@@ -59,21 +59,13 @@ def variant_fields(
     return out
 
 
-def variant_schema_profile(
-    df: DataFrame, variant_column: str, *, top_n: int | None = None
-) -> DataFrame:
+def variant_schema_profile(df: DataFrame, variant_column: str) -> DataFrame:
     """Schema-DRIFT monitor: group documents by their inferred variant
     schema (``schema_of_variant`` — per-document, not corpus-wide) and
     count. A telemetry pipeline alerts when a new schema string
     appears or proportions shift; one narrow map + one count
     aggregation, deterministic output (schema string + count).
     Documents that failed ``try`` parsing group under NULL."""
-    counts = (
-        df.groupBy(
-            F.schema_of_variant(F.col(variant_column)).alias("variant_schema")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-    )
-    if top_n is not None:
-        return counts.orderBy(F.desc("n_docs"), "variant_schema").limit(top_n)
-    return counts
+    return df.groupBy(
+        F.schema_of_variant(F.col(variant_column)).alias("variant_schema")
+    ).agg(F.count(F.lit(1)).cast("long").alias("n_docs"))

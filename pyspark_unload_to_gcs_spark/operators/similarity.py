@@ -869,7 +869,6 @@ def pq_topk(
     id_column: str = "vec_id",
     vec_column: str = "embedding",
     code_column: str = "pq_codes",
-    method: str = "fold",
 ) -> DataFrame:
     """Asymmetric-distance (ADC) approximate top-k: the full-precision
     query scores every code row through per-subspace lookup tables —
@@ -917,9 +916,7 @@ def pq_topk(
     enc = (
         df
         if code_column in df.columns
-        else pq_encode(
-            df, codebooks, vec_column=vec_column, code_column=code_column, method=method
-        )
+        else pq_encode(df, codebooks, vec_column=vec_column, code_column=code_column)
     )
     code_at = lambda s: F.element_at(F.col(code_column), s + 1).cast("int") + 1  # noqa: E731
     dot_expr = F.element_at(F.array(*[F.lit(v) for v in lut_dot[0]]), code_at(0))
@@ -957,7 +954,6 @@ def pq_index_write(
     vec_column: str = "embedding",
     cell_column: str = "ivf_cell",
     code_column: str = "pq_codes",
-    method: str = "fold",
 ) -> None:
     """Materialize an IVF-PQ index on disk: coarse-assign + PQ-encode
     the corpus and write ONLY (id, cell, codes) as parquet partitioned
@@ -966,13 +962,10 @@ def pq_index_write(
     query prunes to probed cell partitions via partition pruning, and
     the full vectors stay in the source table, never in the index."""
     enc = pq_encode(
-        ivf_assign(
-            df, centroids, vec_column=vec_column, cell_column=cell_column, method=method
-        ),
+        ivf_assign(df, centroids, vec_column=vec_column, cell_column=cell_column),
         codebooks,
         vec_column=vec_column,
         code_column=code_column,
-        method=method,
     )
     # Cluster by cell before the partitioned write (guide §6: hash
     # distribution before a partitionBy avoids the many-small-files
@@ -1083,7 +1076,6 @@ def ivf_drift_report(
     new_centroids: list[tuple[int, list[float]]],
     *,
     vec_column: str = "embedding",
-    method: str = "fold",
 ) -> DataFrame:
     """Index-rebuild pre-flight for the IVF/IVF-PQ family: how STALE is
     a cell-partitioned index built with ``old_centroids`` relative to a
@@ -1109,14 +1101,12 @@ def ivf_drift_report(
         old_centroids,
         vec_column=vec_column,
         cell_column="__old_cell",
-        method=method,
     )
     both = ivf_assign(
         both,
         new_centroids,
         vec_column=vec_column,
         cell_column="__new_cell",
-        method=method,
     )
     cells = both.select("__old_cell", "__new_cell")
     counts = cells.agg(

@@ -9,8 +9,10 @@ tests in tests/test_bucketed.py and tests/test_layout.py).
 
 from __future__ import annotations
 
+import weakref
 import zlib
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -23,6 +25,14 @@ from pyspark_unload_to_gcs_spark.operators import similarity as S
 # ---------------------------------------------------------------------------
 
 
+def _drop_tables(jspark, tables: tuple[str, ...]) -> None:
+    for table in tables:
+        try:
+            jspark.sql(f"DROP TABLE IF EXISTS {table}")
+        except Py4JError:  # the JVM or the session's SparkContext is gone
+            return
+
+
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Write orders + customer as bucketed catalog tables ONCE per
     (session, sf_dir) — modeling the real flow where the bucketed write
@@ -32,7 +42,9 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     with ``newSession()`` siblings, so the table names come from that
     directory: a sibling's build writes its own tables instead of
     re-pointing this session's at files that go away with the
-    sibling."""
+    sibling. The tables are dropped when the session is collected, as
+    its scratch root is, so no session finds a table whose files are
+    gone; the finalizer holds the JVM session only, never ``spark``."""
     def build():
         from pyspark_unload_to_gcs_spark.sources.bucketed import write_bucketed
 
@@ -56,6 +68,11 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             num_buckets=8,
             path=f"{base}/customer",
         )
+        drop = weakref.finalize(
+            spark, _drop_tables, spark._jsparkSession, (orders_t, customer_t)
+        )
+        # at interpreter exit the in-memory catalog goes with the JVM
+        drop.atexit = False
         return (orders_t, customer_t)
 
     return session_memo(spark, ("bucketed", sf_dir), build)

@@ -56,14 +56,13 @@ def compact_files(
     spark: SparkSession,
     path: str,
     *,
-    format: str = "parquet",
     target_file_mb: int = 128,
-    compression: str = "zstd",
 ) -> int:
-    """Compact a directory of small files into ~``target_file_mb``
-    outputs (the maintenance pass every incremental export pipeline
-    needs — micro-batch/foreachBatch sinks produce one file set per
-    epoch, and small files kill scan parallelism economics at scale).
+    """Compact a directory of small parquet files into
+    ~``target_file_mb`` zstd-compressed outputs (the maintenance pass
+    every incremental export pipeline needs — micro-batch/foreachBatch
+    sinks produce one file set per epoch, and small files kill scan
+    parallelism economics at scale).
 
     Sizing uses the actual on-disk byte size of the input, not row
     counts, so it adapts to compression ratio. Returns the new file
@@ -87,11 +86,11 @@ def compact_files(
     import uuid
 
     def _rewrite(n_files: int, out_uri: str) -> None:
-        df = spark.read.format(format).load(path)
+        df = spark.read.format("parquet").load(path)
         (
             df.repartition(n_files)
-            .write.format(format)
-            .option("compression", compression)
+            .write.format("parquet")
+            .option("compression", "zstd")
             .mode("overwrite")
             .save(out_uri)
         )
@@ -203,9 +202,8 @@ def write_clustered(
     cluster_columns: list[str],
     *,
     num_partitions: int | None = None,
-    format: str = "parquet",
 ) -> str:
-    """Write files clustered on ``cluster_columns``: a range-partition
+    """Write parquet files clustered on ``cluster_columns``: a range-partition
     shuffle (sampled split points, so skewed keys still spread) then an
     in-partition sort. Each parquet file's min/max stats for the key
     then span a narrow range, so any engine reading the output (Spark,
@@ -214,7 +212,7 @@ def write_clustered(
     table. At 100 TB this is what makes time-range queries on exported
     data read 1% of the files instead of all of them."""
     clustered_frame(df, cluster_columns, num_partitions=num_partitions).write.format(
-        format
+        "parquet"
     ).mode("overwrite").save(path)
     return path
 
@@ -273,9 +271,8 @@ def write_zordered(
     *,
     num_partitions: int | None = None,
     bits_per_column: int = 8,
-    format: str = "parquet",
 ) -> str:
-    """Write files Z-order-clustered on several columns: each file's
+    """Write parquet files Z-order-clustered on several columns: each file's
     min/max stats are narrow in EVERY cluster dimension, so predicates
     on any subset of them skip files. Use over ``write_clustered``
     when queries filter on more than one column."""
@@ -285,7 +282,7 @@ def write_zordered(
         if num_partitions
         else keyed.repartitionByRange("__zkey")
     )
-    out.sortWithinPartitions("__zkey").drop("__zkey").write.format(format).mode(
+    out.sortWithinPartitions("__zkey").drop("__zkey").write.format("parquet").mode(
         "overwrite"
     ).save(path)
     return path

@@ -49,9 +49,8 @@ def write_bucketed(
     num_buckets: int,
     sort_columns: list[str] | None = None,
     path: str | None = None,
-    format: str = "parquet",
 ) -> None:
-    """Write ``df`` as a bucketed table registered in the session
+    """Write ``df`` as a bucketed parquet table registered in the session
     catalog — EXTERNAL (path-backed) when ``path`` is given, managed
     otherwise. Overwrites any existing table of the same name. This is
     the engine's one bucketed-write implementation.
@@ -68,7 +67,7 @@ def write_bucketed(
     spark = df.sparkSession
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     writer = (
-        df.write.format(format)
+        df.write.format("parquet")
         .mode("overwrite")
         .bucketBy(num_buckets, *bucket_columns)
         .sortBy(*(sort_columns or bucket_columns))
@@ -83,9 +82,8 @@ def colocated_join(
     left_table: str,
     right_table: str,
     on: list[str],
-    how: str = "inner",
 ) -> DataFrame:
-    """Join two catalog tables by name. When both were written with
+    """Inner-join two catalog tables by name. When both were written with
     ``write_bucketed`` on ``on`` with equal bucket counts, the physical
     plan contains no Exchange on either join side (asserted in
     tests/test_bucketed.py with broadcast disabled — at toy scale Spark
@@ -93,4 +91,4 @@ def colocated_join(
     but not the layout being demonstrated)."""
     left = spark.table(_valid_identifier(left_table))
     right = spark.table(_valid_identifier(right_table))
-    return left.join(right, on=on, how=how)
+    return left.join(right, on=on)

@@ -198,45 +198,34 @@ def load_csv(
     spark: SparkSession,
     path: str,
     *,
-    schema: str | None = None,
-    header: bool = True,
-    infer: bool = False,
+    schema: str,
 ) -> DataFrame:
-    """CSV ingestion (the reverse of the K2 export path). Prefer an
-    explicit ``schema`` DDL string: ``inferSchema`` costs a FULL extra
-    pass over the data before the real read — at 100 TB that doubles
-    the scan, so inference is opt-in and meant for exploration only.
-    PERMISSIVE mode with a ``_corrupt_record`` column would be the
-    quarantine pattern; default here is strict (fail fast on bad rows,
-    matching the engine's fail-early posture)."""
-    reader = spark.read.format("csv").option("header", header).option("mode", "FAILFAST")
-    if schema is not None:
-        reader = reader.schema(schema)
-    elif infer:
-        reader = reader.option("inferSchema", True)
-    else:
-        raise ValueError("load_csv needs schema=... or infer=True (full extra pass)")
-    return reader.load(path)
+    """CSV ingestion (the reverse of the K2 export path, header row
+    included). ``schema`` is a DDL string: ``inferSchema`` would cost a
+    FULL extra pass over the data before the real read — at 100 TB that
+    doubles the scan. PERMISSIVE mode with a ``_corrupt_record`` column
+    would be the quarantine pattern; the reader is strict instead (fail
+    fast on bad rows, matching the engine's fail-early posture)."""
+    return (
+        spark.read.format("csv")
+        .option("header", True)
+        .option("mode", "FAILFAST")
+        .schema(schema)
+        .load(path)
+    )
 
 
 def load_json(
     spark: SparkSession,
     path: str,
     *,
-    schema: str | None = None,
-    infer: bool = False,
+    schema: str,
 ) -> DataFrame:
     """JSON-lines ingestion (the reverse of the K1 export path; reads
     .json and .json.gz alike — codecs come from file extensions). Same
     explicit-schema posture as load_csv: schema inference over JSON
-    samples the data with an extra pass and can mistype sparse fields,
-    so production readers pass the DDL."""
-    reader = spark.read.format("json")
-    if schema is not None:
-        reader = reader.schema(schema)
-    elif not infer:
-        raise ValueError("load_json needs schema=... or infer=True (full extra pass)")
-    return reader.load(path)
+    samples the data with an extra pass and can mistype sparse fields."""
+    return spark.read.format("json").schema(schema).load(path)
 
 
 def load_xml(
@@ -244,21 +233,19 @@ def load_xml(
     path: str,
     *,
     row_tag: str,
-    schema: str | None = None,
-    infer: bool = False,
+    schema: str,
 ) -> DataFrame:
     """XML ingestion (Spark 4 built-in XML source; the wiki-dump /
     feed-archive shape a training-corpus pipeline ingests — e.g.
     ``row_tag="page"`` over a MediaWiki export). Same explicit-schema
     FAILFAST posture as load_csv/load_json: inference costs an extra
-    pass and mistypes sparse nested fields, so production readers pass
-    the DDL. Each ``row_tag`` element becomes one row; nested elements
-    arrive as structs/arrays, attributes as ``_attr`` columns."""
-    reader = (
-        spark.read.format("xml").option("rowTag", row_tag).option("mode", "FAILFAST")
+    pass and mistypes sparse nested fields. Each ``row_tag`` element
+    becomes one row; nested elements arrive as structs/arrays,
+    attributes as ``_attr`` columns."""
+    return (
+        spark.read.format("xml")
+        .option("rowTag", row_tag)
+        .option("mode", "FAILFAST")
+        .schema(schema)
+        .load(path)
     )
-    if schema is not None:
-        reader = reader.schema(schema)
-    elif not infer:
-        raise ValueError("load_xml needs schema=... or infer=True (full extra pass)")
-    return reader.load(path)

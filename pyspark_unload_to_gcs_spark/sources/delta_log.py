@@ -475,7 +475,6 @@ def write_delta_commit(
     *,
     commit_ms: int,
     mode: str = "append",
-    operation: str | None = None,
 ) -> int:
     """Commit ``df`` to ``table`` as the next Delta version and return
     it. ``mode='append'`` adds files; ``mode='overwrite'`` also emits
@@ -558,8 +557,7 @@ def write_delta_commit(
         {
             "commitInfo": {
                 "timestamp": int(commit_ms),
-                "operation": operation
-                or ("WRITE" if version == 0 else mode.upper()),
+                "operation": "WRITE" if version == 0 else mode.upper(),
                 "operationParameters": {"mode": mode},
             }
         }

@@ -22,7 +22,7 @@ free (the fold sorts). Late cross-batch data needs the watermarked TWS
 sessionizer instead.
 
 Batch-equality: given the ordering precondition, folding batches
-b0..bn then ``finalize`` yields EXACTLY the batch
+b0..bn then ``read_sessions`` yields EXACTLY the batch
 ``operators/sessions.session_stats`` output — the gap rule
 ``new session iff ts - prev_ts > gap`` is evaluated pairwise on
 adjacent events per user, and the fold sees exactly the same adjacent
@@ -181,13 +181,10 @@ def fold_batch(
     write_state(state, state_path, batch_id)
 
 
-def read_sessions(
-    spark: SparkSession, state_path: str, *, finalize: bool = True, user_id_type: str = "long"
-) -> DataFrame:
-    """All CLOSED sessions so far; with ``finalize=True`` the open
-    state is closed as-of its last event (the availableNow end-of-input
-    flush), making the result equal to batch ``session_stats`` over
-    everything folded.
+def read_sessions(spark: SparkSession, state_path: str) -> DataFrame:
+    """All CLOSED sessions so far, plus the open state closed as-of its
+    last event (the availableNow end-of-input flush), making the result
+    equal to batch ``session_stats`` over everything folded.
 
     Consistency under a mid-fold crash: the state write is the COMMIT
     POINT of a batch (fold_batch writes closed/v=b first, state v=b
@@ -195,11 +192,8 @@ def read_sessions(
     state version — a closed/v=b left behind by a crash between the
     two writes is ignored until the retry commits v=b, preventing the
     same session appearing both closed (from the orphaned log) and
-    finalized-open (from state v=b-1).
-
-    ``user_id_type``: only used for the empty frame returned before any
-    state exists — pass the actual id type when the user column is not
-    a long (fold_batch itself is type-generic)."""
+    finalized-open (from state v=b-1). Before any state exists the
+    result is empty with a ``long`` user id."""
     committed = committed_dirs(state_path, "v")
     parts = []
     if committed:
@@ -208,26 +202,21 @@ def read_sessions(
         )
         if closed is not None:
             parts.append(closed.select(*CLOSED_COLUMNS))
-    if finalize:
-        state = read_state(spark, state_path)
-        if state is not None:
-            parts.append(
-                state.select(
-                    "user_id",
-                    "session_seq",
-                    "n_events",
-                    "start_ms",
-                    F.col("last_ms").alias("end_ms"),
-                    (F.col("last_ms") - F.col("start_ms")).alias("duration_ms"),
-                )
+    state = read_state(spark, state_path)
+    if state is not None:
+        parts.append(
+            state.select(
+                "user_id",
+                "session_seq",
+                "n_events",
+                "start_ms",
+                F.col("last_ms").alias("end_ms"),
+                (F.col("last_ms") - F.col("start_ms")).alias("duration_ms"),
             )
+        )
     if not parts:
         return spark.createDataFrame(
-            [],
-            schema=", ".join(
-                f"{c} {user_id_type if c == 'user_id' else 'long'}"
-                for c in CLOSED_COLUMNS
-            ),
+            [], schema=", ".join(f"{c} long" for c in CLOSED_COLUMNS)
         )
     out = parts[0]
     for p in parts[1:]:

@@ -12,10 +12,10 @@ reprocessing). Exactly-once across retries: version ``v=<batch_id>``
 derives only from the latest version ``< batch_id`` plus the batch
 rows, overwrite-committed (protocol shared with merge/rollup/dedup).
 
-Exactness contract (NOTES lore #22): below ``max_items_tracked``
-distinct items per group the sketch is exact, so the replay oracle is
-a plain count/rank; above it, DataSketches frequent-items error bounds
-(|err| <= stream_n / max_items_tracked) apply.
+Exactness contract: below ``max_items_tracked`` distinct items per
+group the sketch is exact, so the replay oracle is a plain count/rank;
+above it, DataSketches frequent-items error bounds (|err| <= stream_n /
+max_items_tracked) apply.
 """
 
 from __future__ import annotations
@@ -72,13 +72,12 @@ def read_topk(
     *,
     max_items_tracked: int = 4096,
     total_sentinel: int = -1,
-    before: int | None = None,
 ) -> DataFrame | None:
     """Serve (grp, rank, cnt) top-k per group plus the fold-merged
     overall row from the latest committed state — same output shape as
     the batch ``approx_topk_rollup`` (item identity excluded: rank
     order among tied counts is selection-arbitrary)."""
-    per = read_state(spark, state_path, before=before)
+    per = read_state(spark, state_path)
     if per is None:
         return None
 

@@ -65,26 +65,23 @@ def session_window_agg(
     gap: str = "30 minutes",
     watermark_delay: str = "30 minutes",
     group_columns: tuple[str, ...] = ("user_id",),
-    aggs: dict[str, str] | None = None,
 ) -> DataFrame:
-    """Session-window aggregation via the builtin ``F.session_window``
-    (gap-based, merging). Semantics match the batch
+    """Session-window event counts (``n_events``) via the builtin
+    ``F.session_window`` (gap-based, merging). Semantics match the batch
     ``operators.sessions`` construction: a session closes after ``gap``
     of inactivity; window end = last event + gap.
 
     In streaming mode this is stateful with watermark-driven eviction —
     state per open session only, the 100 TB-safe formulation.
     """
-    aggs = aggs or {"n_events": "count(1)"}
     df = with_watermark_if_streaming(df, time_column, watermark_delay)
     grouped = df.groupBy(
         F.session_window(F.col(time_column), gap).alias("__w"),
         *[F.col(c) for c in group_columns],
     )
-    out = grouped.agg(*[F.expr(expr).alias(name) for name, expr in aggs.items()])
-    return out.select(
+    return grouped.agg(F.expr("count(1)").alias("n_events")).select(
         F.unix_millis(F.col("__w.start")).alias("session_start_ms"),
         F.unix_millis(F.col("__w.end")).alias("session_end_ms"),
         *[F.col(c) for c in group_columns],
-        *[F.col(name) for name in aggs],
+        F.col("n_events"),
     )

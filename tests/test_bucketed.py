@@ -131,3 +131,23 @@ def test_sibling_fixture_build_leaves_this_sessions_tables(spark, sf_dir):
     finally:
         for table in theirs:
             spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_dropped_sibling_drops_its_bucketed_tables(spark, sf_dir):
+    """The catalog outlives every session, the bucketed fixture's files
+    do not: when a ``newSession()`` sibling is collected its scratch
+    root goes, and its tables go from the shared catalog with it, so no
+    session can read a table whose files are gone (it would read as
+    empty, with no error)."""
+    from pyspark_unload_to_gcs_spark import registry_scale as scale
+
+    sibling = spark.newSession()
+    _monkey_patch_RDD(spark)  # every SparkSession constructor re-points RDD.toDF
+    theirs = scale._bucketed_tables(sibling, sf_dir)
+    assert all(spark.catalog.tableExists(t) for t in theirs)
+    del sibling
+    gc.collect()
+    left = [t for t in theirs if spark.catalog.tableExists(t)]
+    for table in left:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+    assert not left, f"tables of a collected session still in the catalog: {left}"

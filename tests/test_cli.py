@@ -245,7 +245,7 @@ def test_load_xml_requires_schema_or_infer(spark):
 
     from pyspark_unload_to_gcs_spark.sources.catalog import load_xml
 
-    with _pytest.raises(ValueError, match="schema=|infer"):
+    with _pytest.raises(TypeError, match="schema"):
         load_xml(spark, "/tmp/nope.xml", row_tag="r")
 
 

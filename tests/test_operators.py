@@ -589,6 +589,38 @@ def test_apply_changes_rejects_missing_columns(spark):
         apply_changes(snap, bad, ["id"])
 
 
+def test_apply_changes_shuffled_anti_join_matches_broadcast(spark, sf_dir):
+    """``broadcast_changes=False`` (the valve for a backfill-sized change
+    batch) gives the default's rows on the ``cdc_apply_changes`` inputs
+    through a shuffled anti-join; the default broadcasts the touched
+    keys. Size-based broadcast is off, so only the hint can pick one."""
+    from pyspark_unload_to_gcs_spark.operators.cdc import apply_changes, snapshot_diff
+    from pyspark_unload_to_gcs_spark.registry import _cdc_snapshots
+
+    old, new = _cdc_snapshots(spark, sf_dir)
+    changes = snapshot_diff(old, new, ["o_orderkey"])
+    keys = ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        plans, rows = {}, {}
+        for broadcast in (True, False):
+            df = apply_changes(old, changes, ["o_orderkey"], broadcast_changes=broadcast)
+            rows[broadcast] = sorted(map(tuple, df.collect()))
+            plans[broadcast] = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert rows[False] == rows[True] and rows[True]
+    assert "BroadcastHashJoin" in plans[True]
+    assert "BroadcastHashJoin" not in plans[False], plans[False]
+    assert "SortMergeJoin" in plans[False] or "ShuffledHashJoin" in plans[False]
+
+
 # --- scd2_intervals ---------------------------------------------------------
 
 

@@ -252,9 +252,9 @@ def test_export_roundtrip_json_and_csv(spark, sf_dir, tmp_path):
 
     import pytest
 
-    with pytest.raises(ValueError):
+    with pytest.raises(TypeError, match="schema"):
         load_csv(spark, cdir)
-    with pytest.raises(ValueError):
+    with pytest.raises(TypeError, match="schema"):
         load_json(spark, jdir)
 
 
