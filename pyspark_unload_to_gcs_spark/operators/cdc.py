@@ -27,6 +27,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pyspark_unload_to_gcs_spark.operators.pick import orderable
+
 CHANGE_TYPE_COLUMN = "_change_type"
 EXPORT_CHANGE_TYPE_COLUMN = "_mp_change_type"
 INSERT = "INSERT"
@@ -112,26 +114,34 @@ def snapshot_diff(
     exactly like a Delta CDF update_preimage/update_postimage pair
     (reference export.py:121-126); adds/removes emit one row.
 
-    Plan: one full-outer join on the key columns + a row-content hash
-    comparison per side (md5 over the name-sorted non-key columns, the
-    same fingerprint as operators/hashing.py). One shuffle per side on
-    the key; unchanged rows are dropped before the union, so output
+    A key counts as changed when any value column IS DISTINCT FROM its
+    old value: a null-safe ``<=>`` per column, through ``to_json`` for
+    the columns ``pick.orderable`` rejects (``<=>`` on a MAP is an
+    AnalysisException). A row hash would miss collisions such as
+    ``("a|b", "c")`` vs ``("a", "b|c")``.
+
+    Plan: one full-outer join on the key columns; a literal marker per
+    side tells a missing row from an all-NULL one. One shuffle per side
+    on the key; unchanged rows are dropped before the union, so output
     size is O(changes).
     """
-    from pyspark_unload_to_gcs_spark.operators.hashing import row_hash_expr
-
     if set(old.columns) != set(new.columns):
         raise ValueError(
             f"snapshot schemas differ: {sorted(old.columns)} vs {sorted(new.columns)}"
         )
     value_cols = [c for c in old.columns if c not in key_columns]
 
-    o = old.withColumn("__h", row_hash_expr(value_cols)).alias("o")
-    n = new.withColumn("__h", row_hash_expr(value_cols)).alias("n")
+    def value(side: str, c: str) -> Column:
+        col = F.col(f"{side}.{c}")
+        return col if orderable(old.schema[c].dataType) else F.to_json(col)
+
+    o = old.withColumn("__e", F.lit(True)).alias("o")
+    n = new.withColumn("__e", F.lit(True)).alias("n")
     joined = o.join(n, on=key_columns, how="full_outer")
-    o_exists = F.col("o.__h").isNotNull()
-    n_exists = F.col("n.__h").isNotNull()
-    changed = o_exists & n_exists & (F.col("o.__h") != F.col("n.__h"))
+    o_exists = F.col("o.__e").isNotNull()
+    n_exists = F.col("n.__e").isNotNull()
+    same = [value("o", c).eqNullSafe(value("n", c)) for c in value_cols]
+    changed = o_exists & n_exists & ~reduce(Column.__and__, same, F.lit(True))
 
     deletes = joined.filter((o_exists & ~n_exists) | changed).select(
         F.lit(DELETE).alias(output_column),

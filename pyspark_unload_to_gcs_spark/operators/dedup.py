@@ -28,7 +28,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pyspark_unload_to_gcs_spark.operators.pair_join import (
@@ -36,6 +36,7 @@ from pyspark_unload_to_gcs_spark.operators.pair_join import (
     drop_later,
     require_build,
 )
+from pyspark_unload_to_gcs_spark.operators.pick import top_per_key
 from pyspark_unload_to_gcs_spark.operators.text import normalize_text, tokens_col
 from pyspark_unload_to_gcs_spark.session import barrier
 
@@ -154,12 +155,7 @@ def exact_dedup(
     # the full document text; content_key's NULL-flag encoding keeps
     # NULL distinct from '' and from a skipped column
     key = content_key(key_columns, normalize=normalize)
-    w = Window.partitionBy(key).orderBy(F.col(order_column).asc())
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return top_per_key(df, [key], [F.col(order_column).asc()])
 
 
 # ---------------------------------------------------------------------------
@@ -1353,8 +1349,7 @@ def rarest_prefix(
     time — the per-batch cost is then one batch-sized window, never a
     corpus pass)."""
     miss = 100 - threshold_pct
-    w = Window.partitionBy("id_a").orderBy("__df", "__p")
-    return (
+    postings = (
         ga.select(
             F.col(left_id).alias("id_a"),
             F.size("__g").alias("__n"),
@@ -1362,9 +1357,10 @@ def rarest_prefix(
         )
         .join(df_tab, "__p", "left")
         .withColumn("__df", F.coalesce(F.col("__df"), F.lit(0)))
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.expr(f"__rn <= (__n * {miss}) div 100 + 1"))
-        .select("id_a", "__p")
+    )
+    keep = F.expr(f"(__n * {miss}) div 100 + 1")
+    return top_per_key(postings, ["id_a"], [F.col("__df"), F.col("__p")], keep).select(
+        "id_a", "__p"
     )
 
 

@@ -54,8 +54,10 @@ def hashed_columns(
 
 def row_hash_expr(columns: Sequence[str]):
     """md5 fingerprint Column over the name-sorted ``columns`` (concat
-    method, NULL-sentinel distinct from empty string). Never NULL —
-    callers may use its nullness to detect outer-join misses."""
+    method, NULL-sentinel distinct from empty string). Never NULL. A
+    fingerprint, not an identity: ``("a|b", "c")`` and ``("a", "b|c")``
+    hash the same, as do ``"\\x00"`` and NULL, so change detection
+    compares the columns themselves (``cdc.snapshot_diff``)."""
     cols = sorted(columns)
     return F.md5(
         F.concat_ws(
@@ -75,6 +77,8 @@ def content_hash(
 
     Fully JVM-side (md5/to_json/struct are builtin expressions inside
     whole-stage codegen) — no shuffle, no UDF; scales linearly.
+    ``method="concat"`` stays on ``row_hash_expr`` because the DuckDB
+    oracles replay that exact string-and-separator hash.
     """
     if not output_column:
         return df

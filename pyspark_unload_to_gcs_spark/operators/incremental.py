@@ -23,6 +23,8 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyspark_unload_to_gcs_spark.operators.pick import top_per_key
+
 STATE_DEC = "decimal(28,6)"
 
 
@@ -88,11 +90,8 @@ def topk_state(
     incremental interactive top-k literature): any window split,
     retry, or arrival order merges to the same top-k.
     """
-    from pyspark.sql import Window
-
     staged = df.select(*keys, F.col(value_column).alias("v"), F.col(id_column).alias("id"))
-    w = Window.partitionBy(*keys).orderBy(F.col("v").desc(), F.col("id").desc())
-    bounded = staged.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k)
+    bounded = top_per_key(staged, keys, [F.col("v").desc(), F.col("id").desc()], k)
     s = F.struct(F.col("v"), F.col("id"))
     return bounded.groupBy(*keys).agg(
         F.slice(F.sort_array(F.collect_list(s), asc=False), 1, k).alias("state_topk")

@@ -26,6 +26,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyspark_unload_to_gcs_spark.operators.pick import content_order
+
 
 def interleave_bits(columns: Sequence[Column], *, bits: int = 16) -> Column:
     """Morton/Z-order key of N non-negative integer columns: bit i of
@@ -152,14 +154,13 @@ def balanced_shards(
     2. sub-stratify each bucket by a hash salt ``__s`` (``pmod(
        xxhash64(id), salt_buckets)``) so the windows below stay
        parallel even when one magnitude class holds most of the corpus
-       (the token_budget_select lesson: a window keyed by a low-
-       cardinality column alone collapses to few partitions);
+       (a window keyed by a low-cardinality column alone collapses
+       to few partitions, as in ``token_budget_select``);
     3. ``row_number`` within (bucket, salt) ordered by id — then, so
        duplicate ids with differing payloads cannot be left to shuffle
-       order (ADVICE r12), by the weight and a deterministic content
-       tie-break over every remaining column (orderable columns
-       directly, map-typed ones via ``xxhash64(to_json)``, the
-       ``_collapse_batch`` pattern) — offset by the cumulative count
+       order, by the weight and ``pick.content_order`` over every
+       remaining column (orderable columns directly, map-typed ones
+       via ``xxhash64(to_json)``) — offset by the cumulative count
        of all PRECEDING (bucket, salt) groups — a tiny groups frame,
        broadcast back — and take ``% n_shards``. Striping continues
        across group boundaries instead of restarting at shard 0, so
@@ -195,7 +196,7 @@ def balanced_shards(
     w = F.coalesce(F.col(weight_column).cast("long"), F.lit(0))
     # EXACT bucket = bit_length - 1 via the binary string: a float
     # log2 misclassifies power-of-two boundaries (floor(log2(2^48-1))
-    # evaluates to 48, not 47 — review r12), which would both break
+    # evaluates to 48, not 47), which would both break
     # the within-2x bucket invariant and diverge from integer-exact
     # replays
     b = (
@@ -232,17 +233,8 @@ def balanced_shards(
         )
         .select("__b", "__s", "__offset")
     )
-    from pyspark_unload_to_gcs_spark.streaming.dedup import _orderable
-
-    tiebreak = [
-        F.col(f.name).asc()
-        if _orderable(f.dataType)
-        else F.xxhash64(F.to_json(F.col(f.name))).asc()
-        for f in df.schema.fields
-        if f.name != id_column
-    ]
     wn = Window.partitionBy("__b", "__s").orderBy(
-        F.col(id_column).asc(), w.asc(), *tiebreak
+        F.col(id_column).asc(), w.asc(), *content_order(df, [id_column])
     )
     return (
         rows.join(F.broadcast(groups), ["__b", "__s"])
@@ -281,7 +273,7 @@ def shard_load_stats(
         "weight_sum",
         # DECIMAL(38,0) before the x1e6: a BIGINT product overflows
         # once a shard holds ~9.2e12 weight — ANSI crash, or a silent
-        # negative ppm that passes balance gates (review r12). DIV,
+        # negative ppm that passes balance gates. DIV,
         # not /-then-cast: exact integer floor division is the one
         # quotient every engine agrees on bit-for-bit (decimal true
         # division rounds HALF_UP at an engine-chosen scale before the

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyspark_unload_to_gcs_spark.operators.pick import top_per_key
+
 _HEX_DIGITS = 4
 
 
@@ -59,12 +61,7 @@ def take_per_stratum(
     by ``order_column`` (one shuffle on the strata key — the top-k-per-
     group shape). For an unbiased-but-deterministic pick, order by the
     md5 of the id instead of a natural column."""
-    w = Window.partitionBy(*strata_columns).orderBy(F.col(order_column).asc())
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= n)
-        .drop("__rn")
-    )
+    return top_per_key(df, strata_columns, [F.col(order_column).asc()], n)
 
 
 def weighted_mix(
@@ -114,7 +111,7 @@ def temperature_weights(
 
     Returns one row per stratum: (stratum, n_docs, weight).
 
-    Cross-engine float discipline (NOTES lore): ``pow`` can differ by an
+    Cross-engine float discipline: ``pow`` can differ by an
     ulp between engines, so the powered count is rounded to 6 places and
     accumulated as exact DECIMAL; the single normalizing division is
     rounded to 9 before the one cast to DOUBLE. The unpartitioned window
@@ -254,8 +251,6 @@ def quota_temperature_mix(
     frame broadcast onto the quota table (|strata| rows, broadcast),
     and one rank-within-stratum window over the data — the same single
     data shuffle a plain stratified sample costs."""
-    from pyspark.sql import Window
-
     wfn = (
         (lambda c: F.sqrt(c))
         if tau == 0.5
@@ -288,15 +283,10 @@ def quota_temperature_mix(
             .alias("__quota"),
         )
     )
-    w = Window.partitionBy(stratum_column).orderBy(
-        F.md5(F.col(id_column).cast("string")).asc(), F.col(id_column).asc()
-    )
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .join(F.broadcast(quotas), stratum_column)
-        .filter(F.col("__rn") <= F.col("__quota"))
-        .drop("__rn", "__quota")
-    )
+    order = [F.md5(F.col(id_column).cast("string")).asc(), F.col(id_column).asc()]
+    return top_per_key(
+        df.join(F.broadcast(quotas), stratum_column), [stratum_column], order, F.col("__quota")
+    ).drop("__quota")
 
 
 def domain_reweight(

@@ -17,6 +17,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyspark_unload_to_gcs_spark.operators.pick import top_per_key
+
 RANK_COLUMN = "row_num"
 
 
@@ -28,20 +30,20 @@ def latest_per_group(
     *,
     keep_rank_column: bool = False,
 ) -> DataFrame:
-    """Keep the latest row per group.
+    """Keep the latest row per group: one ``top_per_key`` pick.
 
     - ``tiebreak_columns``: extra DESC sort keys for rows with equal
       ``scd_time_column`` — the reference's bare ORDER BY is
       nondeterministic on ties; pass e.g. a primary key for stable output.
     - ``keep_rank_column=True`` reproduces the reference's leak of the
-      synthetic ``row_num`` column into the export (export.py:180-185);
-      default drops it (documented divergence, SURVEY.md §7).
+      synthetic ``row_num`` column into the export (export.py:180-185),
+      as the last column; default drops it (documented divergence,
+      SURVEY.md §7).
     """
-    order = [F.col(scd_time_column).desc()] + [F.col(c).desc() for c in tiebreak_columns]
-    w = Window.partitionBy(group_id_column).orderBy(*order)
-    ranked = df.withColumn(RANK_COLUMN, F.row_number().over(w))
-    out = ranked.filter(F.col(RANK_COLUMN) == 1)
-    return out if keep_rank_column else out.drop(RANK_COLUMN)
+    order = [F.col(c).desc() for c in (scd_time_column, *tiebreak_columns)]
+    return top_per_key(
+        df, [group_id_column], order, rank=RANK_COLUMN if keep_rank_column else None
+    )
 
 
 def scd2_intervals(

@@ -34,6 +34,7 @@ from pyspark_unload_to_gcs_spark.operators.pair_join import (
     drop_later,
     require_build,
 )
+from pyspark_unload_to_gcs_spark.operators.pick import top_per_key
 from pyspark_unload_to_gcs_spark.session import barrier
 
 
@@ -715,17 +716,14 @@ def rrf_fuse(
             .limit(top_k)
             .select(id_column, "rank_left", "rank_right", "rrf")
         )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(query_column).orderBy(
-        F.col("rrf").desc(), F.col(id_column).asc()
-    )
-    return (
-        scored.withColumn("fused_rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("fused_rank") <= top_k)
-        .select(
-            query_column, id_column, "rank_left", "rank_right", "rrf", "fused_rank"
-        )
+    order = [F.col("rrf").desc(), F.col(id_column).asc()]
+    return top_per_key(scored, [query_column], order, top_k, rank="fused_rank").select(
+        query_column,
+        id_column,
+        "rank_left",
+        "rank_right",
+        "rrf",
+        F.col("fused_rank").cast("long").alias("fused_rank"),
     )
 
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyspark_unload_to_gcs_spark.operators.pick import top_per_key
 from pyspark_unload_to_gcs_spark.session import barrier
 
 # Tiny per-language stopword lists for the n-gram/stopword heuristic
@@ -417,7 +418,7 @@ def tfidf_top_terms(
     pairs = toks.select(id_column, F.explode("__toks").alias("term"))
     # tf feeds BOTH docfreq and the scored join below; a barrier runs
     # the corpus explode + (doc,term) shuffle once instead of twice —
-    # exchange reuse across the two consumers is not guaranteed (lore #7)
+    # Spark does not promise to reuse one exchange for two consumers
     tf = barrier(
         pairs.groupBy(id_column, "term").agg(F.count(F.lit(1)).alias("tf")),
         eager=True,
@@ -436,11 +437,9 @@ def tfidf_top_terms(
             ),
         )
     )
-    w = Window.partitionBy(id_column).orderBy(F.col("tfidf").desc(), F.col("term").asc())
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= top_k)
-        .select(id_column, "term", "tf", "df", "tfidf")
+    order = [F.col("tfidf").desc(), F.col("term").asc()]
+    return top_per_key(scored, [id_column], order, top_k).select(
+        id_column, "term", "tf", "df", "tfidf"
     )
 
 
@@ -472,7 +471,7 @@ def unigram_logprob(
     # the corpus total (= Σ vocab freqs) and the logprob lookup both
     # read the checkpoint instead of re-exploding the corpus — without
     # the barrier the vocab subtree appears twice in the plan and
-    # exchange reuse is not guaranteed (lore #7). The remaining corpus
+    # Spark does not promise to reuse its exchange. The remaining corpus
     # explode is the scored path itself: 2 passes total, down from 3.
     vocab = barrier(
         pairs.groupBy("__term").agg(F.count(F.lit(1)).alias("__freq")),
@@ -515,7 +514,7 @@ def bigram_logprob(
 
     Shape at scale: the train slice tokenizes ONCE (a barrier —
     the unigram and bigram count builds both read the materialization,
-    lore #7; the bigram table is |bigram vocab| rows — a hash JOIN
+    since two consumers need not share one exchange; the bigram table is |bigram vocab| rows — a hash JOIN
     key, deliberately not broadcast; the unigram table broadcasts),
     one explode over the scored corpus joins both. An EMPTY train
     slice raises in-plan (every backoff term would otherwise come back

@@ -491,17 +491,11 @@ def top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-key window — one shuffle on the group key; with AQE the skewed
     customers split. The generalization of the reference's scd-latest
     top-1 (SURVEY.md W1/P8)."""
-    from pyspark.sql import Window
+    from pyspark_unload_to_gcs_spark.operators.pick import top_per_key
 
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
-    )
-    return (
-        _t(spark, sf_dir, "orders")
-        .select("o_custkey", "o_orderkey", "o_totalprice")
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-    )
+    orders = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderkey", "o_totalprice")
+    order = [F.col("o_totalprice").desc(), F.col("o_orderkey").asc()]
+    return top_per_key(orders, ["o_custkey"], order, 3, rank="rnk")
 
 
 @register(

@@ -3580,8 +3580,7 @@ def mined_pairs_retrieval_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     The gold labels mine on the AUTO-K quantizer + Arrow assignment
     (the margin_align_auto production posture, n^1.5 pair mass) so no
     live row carries the fixed-cell n²/8 curve."""
-    from pyspark.sql import Window
-
+    from pyspark_unload_to_gcs_spark.operators.pick import top_per_key
     from pyspark_unload_to_gcs_spark.operators.similarity import (
         _pair_dot,
         norm,
@@ -3617,14 +3616,10 @@ def mined_pairs_retrieval_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             9,
         ).alias("cos_r"),
     )
-    wv = Window.partitionBy("src_id").orderBy(
-        F.col("cos_r").desc(), F.col("doc_id").asc()
-    )
-    vrank = (
-        vscored.withColumn("rank", F.row_number().over(wv))
-        .filter(F.col("rank") <= _REVAL_TOPN)
-        .select("src_id", "doc_id", "rank")
-    )
+    vorder = [F.col("cos_r").desc(), F.col("doc_id").asc()]
+    vrank = top_per_key(
+        vscored, ["src_id"], vorder, _REVAL_TOPN, rank="rank"
+    ).select("src_id", "doc_id", "rank")
 
     # lexical arm: distinct-bigram Jaccard of the M query docs against
     # the odd-id corpus (tokens staged per the word_ngrams contract)
@@ -3654,14 +3649,10 @@ def mined_pairs_retrieval_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             9,
         ).alias("jac_r"),
     )
-    wl = Window.partitionBy("src_id").orderBy(
-        F.col("jac_r").desc(), F.col("doc_id").asc()
-    )
-    lrank = (
-        lscored.withColumn("rank", F.row_number().over(wl))
-        .filter(F.col("rank") <= _REVAL_TOPN)
-        .select("src_id", "doc_id", "rank")
-    )
+    lorder = [F.col("jac_r").desc(), F.col("doc_id").asc()]
+    lrank = top_per_key(
+        lscored, ["src_id"], lorder, _REVAL_TOPN, rank="rank"
+    ).select("src_id", "doc_id", "rank")
 
     fused = rrf_fuse(
         lrank,
@@ -4378,8 +4369,7 @@ def hard_negative_mining_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-anchor top-k is a window partitioned by anchor — no driver
     loop, no global sort, and the spine is the production auto-k
     quantizer (n^1.5), never the fixed-cell oracle posture."""
-    from pyspark.sql import Window
-
+    from pyspark_unload_to_gcs_spark.operators.pick import top_per_key
     from pyspark_unload_to_gcs_spark.operators.similarity import _pair_dot, norm
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -4414,12 +4404,9 @@ def hard_negative_mining_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cos_r"),
         )
     )
-    w = Window.partitionBy("src_id").orderBy(
-        F.col("cos_r").desc(), F.col("neg_id").asc()
-    )
-    return (
-        scored.withColumn("neg_rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("neg_rank") <= _HNEG_K)
+    order = [F.col("cos_r").desc(), F.col("neg_id").asc()]
+    return top_per_key(scored, ["src_id"], order, _HNEG_K, rank="neg_rank").withColumn(
+        "neg_rank", F.col("neg_rank").cast("long")
     )
 
 

@@ -46,6 +46,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyspark_unload_to_gcs_spark.operators.pick import content_order, top_per_key
 from pyspark_unload_to_gcs_spark.session import barrier
 from pyspark_unload_to_gcs_spark.storage import child
 from pyspark_unload_to_gcs_spark.streaming.rollup import (
@@ -72,21 +73,6 @@ def stream_exact_dedup(
     )
 
 
-def _orderable(dt) -> bool:
-    """Whether a Spark type supports ORDER BY: maps are not orderable,
-    and arrays/structs inherit unorderability from their element/field
-    types (Catalyst RowOrdering.isOrderable semantics)."""
-    from pyspark.sql import types as T
-
-    if isinstance(dt, T.MapType):
-        return False
-    if isinstance(dt, T.ArrayType):
-        return _orderable(dt.elementType)
-    if isinstance(dt, T.StructType):
-        return all(_orderable(f.dataType) for f in dt.fields)
-    return True
-
-
 def _collapse_batch(
     batch_df: DataFrame, key_columns: Sequence[str], sequence_column: str
 ) -> DataFrame:
@@ -95,27 +81,13 @@ def _collapse_batch(
     rows to shuffle order, so a foreachBatch RETRY could rewrite state
     with a DIFFERENT winner — order by every remaining column after
     the sequence (NULL seqs last: an untagged row must not beat
-    seq 0). Map-typed payloads are not orderable (AnalysisException at
-    plan time): those columns tiebreak on
-    xxhash64(to_json(col)) instead — still deterministic per row
-    content, while orderable columns keep the min-row contract."""
-    from pyspark.sql import Window
-
-    tiebreak = [
-        F.col(f.name)
-        if _orderable(f.dataType)
-        else F.xxhash64(F.to_json(F.col(f.name)))
-        for f in batch_df.schema.fields
-        if f.name not in key_columns and f.name != sequence_column
+    seq 0), through ``pick.content_order``: orderable columns keep the
+    min-row contract, map-typed ones tiebreak on their content hash."""
+    order = [
+        F.col(sequence_column).asc_nulls_last(),
+        *content_order(batch_df, [*key_columns, sequence_column]),
     ]
-    w = Window.partitionBy(*key_columns).orderBy(
-        F.col(sequence_column).asc_nulls_last(), *tiebreak
-    )
-    return (
-        batch_df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", sequence_column)
-    )
+    return top_per_key(batch_df, key_columns, order).drop(sequence_column)
 
 
 def _first_seen_rows(

@@ -34,6 +34,7 @@ from pyspark_unload_to_gcs_spark.operators.cdc import (
     INSERT,
     apply_changes,
 )
+from pyspark_unload_to_gcs_spark.operators.pick import top_per_key
 from pyspark_unload_to_gcs_spark.streaming.rollup import read_state, write_state
 
 
@@ -49,15 +50,8 @@ def collapse_changes(
     'INSERT' > 'DELETE' lexicographically, so an update's DELETE/INSERT
     pair collapses to its INSERT postimage. One hash shuffle on the key.
     """
-    from pyspark.sql import Window
-
     order = [F.col(sequence_column).desc(), F.col(change_type_column).desc()]
-    w = Window.partitionBy(*key_columns).orderBy(*order)
-    return (
-        changes.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return top_per_key(changes, key_columns, order)
 
 
 def merge_batch(

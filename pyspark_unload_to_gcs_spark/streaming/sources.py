@@ -3,10 +3,6 @@
 File-based streams are the OSS-portable equivalent of the reference's
 orchestrated incremental reads: new files arriving in a directory play
 the role of new rows past the watermark (reference export.py:159-167).
-Delta CDF streaming (``spark.readStream.format("delta")
-.option("readChangeFeed", "true")``) is the streaming twin of the batch
-CDC source in ``sources/delta.py`` and is gated behind the same
-delta-spark availability check.
 """
 
 from __future__ import annotations
@@ -42,18 +38,4 @@ def stream_rate(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
         spark.readStream.format("rate")
         .option("rowsPerSecond", str(rows_per_second))
         .load()
-    )
-
-
-def stream_delta_cdf(spark: SparkSession, table: str, starting_timestamp: str) -> DataFrame:
-    """Streaming Change Data Feed (the streaming twin of
-    ``sources.delta.change_feed``); requires delta-spark."""
-    from pyspark_unload_to_gcs_spark.sources.delta import _require_delta
-
-    _require_delta()
-    return (
-        spark.readStream.format("delta")
-        .option("readChangeFeed", "true")
-        .option("startingTimestamp", starting_timestamp)
-        .table(table)
     )

@@ -120,8 +120,27 @@ def test_latest_per_group(scd_df):
 def test_latest_per_group_rank_leak_compat(scd_df):
     # reference leaks row_num into output (export.py:180-185)
     out = latest_per_group(scd_df, "gid", "t", ["id"], keep_rank_column=True)
-    assert "row_num" in out.columns
+    assert out.columns == [*scd_df.columns, "row_num"]
     assert all(r.row_num == 1 for r in out.collect())
+
+
+@pytest.mark.parametrize(
+    "n, expected",
+    [
+        (1, {(10, "v2", 1), (20, "w2", 1)}),
+        # a per-row quota Column: group 10 keeps two rows, group 20 one
+        ("IF(gid = 10, 2, 1)", {(10, "v2", 1), (10, "v1", 2), (20, "w2", 1)}),
+    ],
+    ids=["int", "column"],
+)
+def test_top_per_key_int_and_column_n(scd_df, n, expected):
+    from pyspark_unload_to_gcs_spark.operators.pick import top_per_key
+
+    n = n if isinstance(n, int) else F.expr(n)
+    order = [F.col("t").desc(), F.col("id").desc()]
+    kept = top_per_key(scd_df, ["gid"], order, n, rank="r")
+    assert {(r.gid, r.v, r.r) for r in kept.collect()} == expected
+    assert top_per_key(scd_df, ["gid"], order, n).columns == scd_df.columns
 
 
 def test_latest_per_group_maxby_matches_window(scd_df):

@@ -123,6 +123,44 @@ def test_snapshot_diff_apply_reconstructs_new(spark, snap):
     assert new.exceptAll(rebuilt).count() == 0
 
 
+def test_snapshot_diff_compares_columns_not_a_row_hash(spark):
+    """A '|'-joined string hash with a NULL sentinel collides on keys 1
+    and 2; the null-safe column compare sees both. Map columns compare
+    through to_json (``<=>`` on a MAP does not analyze)."""
+    from pyspark_unload_to_gcs_spark.operators.cdc import snapshot_diff
+
+    schema = "k long, s string, t string, m map<string,int>"
+    old = spark.createDataFrame(
+        [
+            (1, "a|b", "c", {"x": 1}),
+            (2, "\x00", "z", {"x": 1}),
+            (3, "p", "q", {"x": 1}),
+            (4, "p", "q", {"x": 1}),
+            (5, "p", "q", {"x": 1}),
+        ],
+        schema,
+    )
+    new = spark.createDataFrame(
+        [
+            (1, "a", "b|c", {"x": 1}),  # separator moved between columns
+            (2, None, "z", {"x": 1}),  # the NULL sentinel's own string
+            (3, "p", "r", {"x": 1}),  # plain change
+            (4, "p", "q", {"x": 2}),  # map changed
+            (5, "p", "q", {"x": 1}),  # unchanged, map included
+        ],
+        schema,
+    )
+    rows = snapshot_diff(old, new, ["k"]).collect()
+    assert sorted((r._mp_change_type, r.k) for r in rows) == [
+        ("DELETE", 1), ("DELETE", 2), ("DELETE", 3), ("DELETE", 4),
+        ("INSERT", 1), ("INSERT", 2), ("INSERT", 3), ("INSERT", 4),
+    ]
+    post = {r.k: (r.s, r.t, r.m) for r in rows if r._mp_change_type == "INSERT"}
+    assert post[1] == ("a", "b|c", {"x": 1})
+    assert post[2] == (None, "z", {"x": 1})
+    assert post[4] == ("p", "q", {"x": 2})
+
+
 def test_snapshot_diff_schema_mismatch_raises(spark, snap):
     from pyspark_unload_to_gcs_spark.operators.cdc import snapshot_diff
 
